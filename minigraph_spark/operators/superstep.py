@@ -28,13 +28,17 @@ iterations make any run resumable (checkpoint.py).
 
 from __future__ import annotations
 
+import json
 import time
 from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import checkpoint as ckpt
 from ..session import iterative_confs
@@ -126,6 +130,79 @@ class SuperstepResult:
         return sum(m.elapsed_sec for m in self.metrics)
 
 
+@dataclass(frozen=True)
+class Fragment:
+    """The whole graph as one fragment, in local ids: vertex i is row i of
+    the state (sorted by vid), and edge k runs src[k] -> dst[k]. Edges are
+    sorted by (dst, src), so every float reduction over them runs in one
+    fixed order whatever order the rows arrived in."""
+
+    vid: np.ndarray
+    src: np.ndarray
+    dst: np.ndarray
+    edge_cols: dict[str, np.ndarray]
+
+
+@dataclass(frozen=True)
+class FragmentKernel:
+    """A plan's NumPy superstep for one-fragment mode (SuperstepEngine).
+
+    ``step(frag, value, cols) -> (value', active)`` is one iteration over
+    the whole graph: ``cols`` holds the state's columns besides vid, value
+    and active (e.g. PageRank's outdeg), and ``active`` marks the vertices
+    the plan's loop would mark changed. ``fixpoint=True`` declares that one
+    step reaches the fixpoint (a local min-label fixpoint), so the run
+    converges after it."""
+
+    step: Callable[[Fragment, np.ndarray, dict], tuple[np.ndarray, np.ndarray]]
+    fixpoint: bool = False
+
+
+def _fragment_fn(kernel: FragmentKernel, steps: int, stop_when_unchanged: bool):
+    """The cogroup function of one one-fragment window: build the fragment
+    from the edge rows and the state rows, run up to ``steps`` kernel
+    iterations, and return the new state. The per-iteration changed counts
+    and the converged flag ride on the first row's ``_stats`` column."""
+
+    def fn(edges: pd.DataFrame, state: pd.DataFrame) -> pd.DataFrame:
+        state = state.sort_values("vid", ignore_index=True)
+        vid = state["vid"].to_numpy(np.int64)
+        src = edges["src"].to_numpy(np.int64)
+        dst = edges["dst"].to_numpy(np.int64)
+        # edges with an endpoint outside the state carry no message, as in
+        # the loop's inner scatter join and left apply join
+        si = np.minimum(np.searchsorted(vid, src), vid.size - 1)
+        di = np.minimum(np.searchsorted(vid, dst), vid.size - 1)
+        keep = (vid[si] == src) & (vid[di] == dst)
+        si, di = si[keep], di[keep]
+        order = np.lexsort((si, di))
+        frag = Fragment(
+            vid=vid, src=si[order], dst=di[order],
+            edge_cols={
+                c: edges[c].to_numpy()[keep][order]
+                for c in edges.columns if c not in ("src", "dst")
+            },
+        )
+        cols = {
+            c: state[c].to_numpy() for c in state.columns
+            if c not in ("vid", "value", "active")
+        }
+        value = state["value"].to_numpy()
+        changed: list[int] = []
+        converged = False
+        for _ in range(steps):  # steps >= 1
+            value, active = kernel.step(frag, value, cols)
+            changed.append(int(active.sum()))
+            if kernel.fixpoint or (stop_when_unchanged and changed[-1] == 0):
+                converged = True
+                break
+        out = state.assign(value=value, active=active, _stats=None)
+        out.loc[0, "_stats"] = json.dumps([changed, converged])
+        return out
+
+    return fn
+
+
 class SuperstepEngine:
     """Generic scatter-combine-apply driver over a fixed edge table.
 
@@ -160,6 +237,31 @@ class SuperstepEngine:
         |V| rivals |E| (e.g. short transcript chains: a 256M-edge, 20-turn
         chains graph carries 269M vertices, and the deserialized state
         blocks alone exceed a 48g driver heap — measured OOM, round 4).
+
+    One-fragment mode (``one_fragment``, read-only): chosen at build time
+    when the exact edge-row count observed on the partitioning job is at
+    most TARGET_ROWS_PER_PARTITION and the caller did not pin
+    num_partitions > 1. The whole graph is then one fragment with no
+    border vertices, so PEval alone is the answer (wcc_vc_batch.cpp:139-148)
+    and a superstep needs no exchange. run() then executes a plan that
+    ships a FragmentKernel as one Spark job per window: the cached edges
+    and the state are cogrouped into ONE applyInPandas task, the kernel
+    iterates in NumPy, and the new state (same schema as the loop's:
+    vid, value, active[, outdeg]) comes back localCheckpointed. A window
+    is the whole run, or with checkpoint_dir the stretch up to the next
+    checkpoint_every boundary; snapshots, metrics.jsonl rows and
+    IterationMetrics are the loop's, one per iteration. Kernels ship with:
+
+    - undirected WCC, batch and incremental: one iteration is the local
+      min-label fixpoint (csr.make_minplus_block), so the run converges
+      after it;
+    - LPA: one iteration is one synchronous mode sweep, ties to the
+      smallest label;
+    - standard PageRank (fuse=1): one iteration is one Jacobi sweep with
+      dangling mass, stopping at max|Δ| <= tol.
+
+    Every other plan or variant (directed WCC, the minigraph PageRank
+    rule, fuse > 1, BFS, ...) runs the loop whatever the mode.
     """
 
     # size-aware parallelism: target edge rows per loop partition. At 16M+
@@ -241,10 +343,11 @@ class SuperstepEngine:
         _ids0 = self._persistent_ids()
         # keep any extra columns the caller selected (e.g. SSSP weights) —
         # scatter functions see self.edges as-is; only (src, dst) is required
-        # the size-aware-width edge count rides the prepartition
-        # materialization job as an observed metric — no separate scan of
-        # the cached E rows (guide §1.2: fewer passes)
-        _n_obs = Observation() if num_partitions is None else None
+        # the edge count (for the size-aware width and the one-fragment
+        # rule) rides the prepartition materialization job as an observed
+        # metric — no separate scan of the cached E rows (guide §1.2:
+        # fewer passes)
+        _n_obs = Observation()
         if num_partitions is None:
             # choose the INITIAL width from the optimizer's pre-shuffle size
             # estimate (guide §2.2 — derive partition counts from input
@@ -261,11 +364,14 @@ class SuperstepEngine:
             edges, n, by="src", dedup=dedup_edges, count_obs=_n_obs
         )
         self._edge_rdd_ids = self._persistent_ids() - _ids0
+        n_edges = int(_n_obs.get["n"])
+        self._one_fragment = n_edges <= self.TARGET_ROWS_PER_PARTITION and (
+            num_partitions is None or num_partitions <= 1
+        )
         if num_partitions is None:
             # corrective re-partition (one extra cached-side shuffle) only
             # when the estimated width missed the observed ideal by >2x in
             # either direction
-            n_edges = int(_n_obs.get["n"])
             ideal = max(1, min(n_max, -(-n_edges // self.TARGET_ROWS_PER_PARTITION)))
             if ideal * 2 < n or ideal > n * 2:
                 _ids1 = self._persistent_ids()
@@ -289,19 +395,6 @@ class SuperstepEngine:
             StorageLevel(True, True, False, True) if state_storage == "deser"
             else StorageLevel(True, True, False, False)
         )
-        # cadence of the two-job stats-reset round (see run()). The lazy
-        # localCheckpoint rewrites stats from the ORIGIN plan, so sizeInBytes
-        # multiplies per state reference per round (BigInteger grows
-        # ~2^(refs_per_plan * k) bits between resets) and driver-side
-        # planning slows progressively — measured on 16M-edge PageRank:
-        # reset_every=8 averaged 14.5s/iter (planning-bound spikes to 64s),
-        # reset_every=1 runs a steady 1.5s/iter. The reset's second job is a
-        # cheap V-row cache scan; always take it.
-        try:
-            _reset = int(__import__("os").environ.get("MG_STATS_RESET_EVERY", "1"))
-        except ValueError:
-            _reset = 1
-        self._stats_reset_every = max(1, _reset)
 
     # -- persistent-RDD bookkeeping -------------------------------------
     # df.unpersist() cannot free a localCheckpoint (its data lives as a
@@ -332,6 +425,12 @@ class SuperstepEngine:
             self._free_ids(getattr(self, "_edge_rdd_ids", set()))
         except Exception:
             pass
+
+    @property
+    def one_fragment(self) -> bool:
+        """True when run() executes kernel-carrying plans as one Arrow task
+        per window (see the class docstring for the rule)."""
+        return self._one_fragment
 
     def vertices(self) -> DataFrame:
         """Distinct vertex ids of the edge table (A8 analog:
@@ -374,6 +473,7 @@ class SuperstepEngine:
         stop_when_unchanged: bool = True,
         resume: bool = True,
         algo: str = "superstep",
+        kernel: FragmentKernel | None = None,
     ) -> SuperstepResult:
         """Run supersteps until fixpoint (no vertex changed) or max_iter.
 
@@ -399,14 +499,124 @@ class SuperstepEngine:
         SLOWER than fuse=1). With the co-partitioned exchange-free
         superstep plan the per-iteration fixed cost is small; default
         fuse=1 is right for all shipped plans.
+
+        kernel: the plan's FragmentKernel, the same iteration in NumPy. On
+        a one_fragment engine it replaces scatter/combiner/apply_fn (and
+        prepare, extra_agg, frontier, fuse); elsewhere it is ignored.
         """
         if extra_agg and fuse > 1:
             raise ValueError("extra_agg feeds ctx per superstep; requires fuse=1")
         with self.loop_confs():
+            if kernel is not None and self.one_fragment:
+                return self._run_fragment(
+                    init_state, kernel, max_iter, stop_when_unchanged, resume, algo
+                )
             return self._run_loop(
                 init_state, scatter, combiner, apply_fn, prepare, extra_agg,
                 frontier, max_iter, fuse, stop_when_unchanged, resume, algo,
             )
+
+    def _resume_point(self, init_state: DataFrame, resume: bool):
+        """(first iteration, its input state): the newest complete snapshot
+        + 1 when resuming from checkpoint_dir, else (0, init_state)."""
+        if resume and self.checkpoint_dir:
+            found = ckpt.load_snapshot(self.spark, self.checkpoint_dir)
+            if found is not None:
+                return found[0] + 1, found[1]
+        return 0, init_state
+
+    def _finish_window(
+        self, result: SuperstepResult, state: DataFrame, first: int,
+        changed: list[int], t0: float, converged: bool, algo: str,
+    ) -> None:
+        """Record one materialized window of len(changed) iterations
+        starting at ``first``: its durable snapshot when due, one
+        IterationMetrics (and metrics.jsonl row) per iteration, and the
+        result's state/iteration/convergence fields. ``changed`` holds -1
+        for iterations whose count was not observed (fused loop steps)."""
+        it = first + len(changed) - 1
+        checkpointed = False
+        if self.checkpoint_dir and (
+            it % self.checkpoint_every == self.checkpoint_every - 1 or converged
+        ):
+            ckpt.write_snapshot(
+                state, self.checkpoint_dir, it,
+                extra={"algo": algo, "num_changed": changed[-1]},
+            )
+            checkpointed = True
+        window_sec = time.time() - t0
+        for j, c in enumerate(changed):
+            m = IterationMetrics(
+                iteration=first + j,
+                num_active=c,
+                num_changed=c,
+                num_messages=-1,  # not counted by default (extra action)
+                elapsed_sec=window_sec / len(changed),
+                checkpointed=checkpointed and j == len(changed) - 1,
+            )
+            result.metrics.append(m)
+            if self.checkpoint_dir:
+                ckpt.append_metrics(self.checkpoint_dir, m.__dict__)
+        result.state = state
+        result.iterations = it + 1
+        result.converged = converged
+
+    def _run_fragment(
+        self,
+        init_state: DataFrame,
+        kernel: FragmentKernel,
+        max_iter: int,
+        stop_when_unchanged: bool,
+        resume: bool,
+        algo: str,
+    ) -> SuperstepResult:
+        """One-fragment mode: each window is ONE Spark job — cogroup the
+        cached edges with the state into a single applyInPandas task, run
+        the kernel there, and localCheckpoint the new state. Windows end at
+        checkpoint_every boundaries when checkpoint_dir is set (so the
+        snapshots match the loop's), else run to max_iter; every window
+        also ends at convergence."""
+        first, state = self._resume_point(init_state, resume)
+        result = SuperstepResult(state=state)
+        schema = T.StructType(
+            [T.StructField(f.name, f.dataType) for f in state.schema.fields]
+            + [T.StructField("_stats", T.StringType())]
+        )
+        key = F.lit(True)  # one group: the whole graph (an int would be an ordinal)
+        prev_ids: set = set()
+        while first < max_iter:
+            end = max_iter
+            if self.checkpoint_dir:
+                every = self.checkpoint_every
+                end = min(end, (first // every + 1) * every)
+            t0 = time.time()
+            ids_before = self._persistent_ids()
+            obs = Observation()
+            new_state = (
+                self.edges.groupBy(key)
+                .cogroup(state.groupBy(key))
+                .applyInPandas(
+                    _fragment_fn(kernel, end - first, stop_when_unchanged), schema
+                )
+                .observe(obs, F.max("_stats").alias("stats"))
+                .select(*state.columns)
+                .localCheckpoint(eager=True, storageLevel=self._state_level)
+            )
+            stats = obs.get["stats"]
+            # an empty graph has no rows to carry the stats: one iteration
+            # that changed nothing, as the loop reports it
+            changed, converged = json.loads(stats) if stats else ([0], True)
+            new_ids = self._persistent_ids() - ids_before
+            self._free_ids(prev_ids)
+            prev_ids = new_ids
+            self._finish_window(
+                result, new_state, first, changed, t0, converged, algo
+            )
+            state = new_state
+            first = result.iterations
+            if converged:
+                break
+        return result
 
     @contextmanager
     def loop_confs(self):
@@ -448,13 +658,7 @@ class SuperstepEngine:
         resume: bool,
         algo: str,
     ) -> SuperstepResult:
-        start_iter = 0
-        state = init_state
-        if resume and self.checkpoint_dir:
-            found = ckpt.load_snapshot(self.spark, self.checkpoint_dir)
-            if found is not None:
-                start_iter = found[0] + 1
-                state = found[1]
+        start_iter, state = self._resume_point(init_state, resume)
         state = state.persist(self._state_level)
 
         # Column expression trees are immutable and plan-independent, so
@@ -495,7 +699,6 @@ class SuperstepEngine:
         window_start = start_iter
         while window_start < max_iter:
             steps = min(fuse, max_iter - window_start)
-            it = window_start + steps - 1  # window-end iteration index
             t0 = time.time()
             ctx: dict = {
                 "iteration": window_start,
@@ -516,8 +719,8 @@ class SuperstepEngine:
                 agg = combine_fn(msgs)
                 new_state = apply_fn(new_state, agg, ctx)
             # Lineage + stats management, one superstep = ONE Spark job.
-            # Default (reset) path: persist the new state, attach the
-            # convergence counters as OBSERVED metrics (CollectMetrics —
+            # Persist the new state, attach the convergence counters as
+            # OBSERVED metrics (CollectMetrics —
             # accumulator-based, exactly-once per row), and let the eager
             # localCheckpoint's own materialization job deliver them: the
             # single job computes the superstep, fills the cache, stores the
@@ -531,31 +734,19 @@ class SuperstepEngine:
             # (scatter + apply + self-joins) SQUARE sizeInBytes per round —
             # the materialized InMemoryRelation re-reads the real cached
             # size and resets the BigInteger before Catalyst starts
-            # multiplying megabyte-long numbers. The non-reset path (opt-in
-            # via MG_STATS_RESET_EVERY>1) keeps the lazy-checkpoint + counts
-            # action shape, accepting stats growth between resets.
+            # multiplying megabyte-long numbers (measured on 16M-edge
+            # PageRank: resetting every 8th round averaged 14.5 s/iter with
+            # planning-bound spikes to 64 s; every round, a steady 1.5 s).
             if window_start == _EXPLAIN:
                 new_state.explain("formatted")
             ids_before = self._persistent_ids()
-            reset_round = it % self._stats_reset_every == self._stats_reset_every - 1
-            if reset_round:
-                cached = new_state.persist(self._state_level)
-                obs = Observation()
-                observed = cached.observe(
-                    obs, _n_col, _changed_col, *_extra_cols
-                )
-                new_state = observed.localCheckpoint(
-                    eager=True, storageLevel=self._state_level
-                )
-                counts = obs.get
-                cached.unpersist()
-            else:
-                new_state = new_state.localCheckpoint(
-                    eager=False, storageLevel=self._state_level
-                )
-                counts = new_state.agg(
-                    _n_col, _changed_col, *_extra_cols
-                ).collect()[0]
+            cached = new_state.persist(self._state_level)
+            obs = Observation()
+            new_state = cached.observe(
+                obs, _n_col, _changed_col, *_extra_cols
+            ).localCheckpoint(eager=True, storageLevel=self._state_level)
+            counts = obs.get
+            cached.unpersist()
             num_changed = int(counts["changed"] or 0)
             if extra_agg:
                 prev_extra = {k: counts[k] for k in extra_agg}
@@ -567,37 +758,15 @@ class SuperstepEngine:
             self._free_ids(prev_state_ids)
             prev_state_ids = new_state_ids
 
-            checkpointed = False
-            if self.checkpoint_dir and (
-                it % self.checkpoint_every == self.checkpoint_every - 1
-                or (stop_when_unchanged and num_changed == 0)
-            ):
-                ckpt.write_snapshot(
-                    new_state, self.checkpoint_dir, it,
-                    extra={"algo": algo, "num_changed": num_changed},
-                )
-                checkpointed = True
-
-            window_sec = time.time() - t0
-            for j in range(steps):
-                m = IterationMetrics(
-                    iteration=window_start + j,
-                    num_active=num_changed if j == steps - 1 else -1,
-                    num_changed=num_changed if j == steps - 1 else -1,
-                    num_messages=-1,  # not counted by default (extra action)
-                    elapsed_sec=window_sec / steps,
-                    checkpointed=checkpointed and j == steps - 1,
-                )
-                result.metrics.append(m)
-                if self.checkpoint_dir:
-                    ckpt.append_metrics(self.checkpoint_dir, m.__dict__)
-
+            # only the window's last step is observed (fused steps: -1)
+            self._finish_window(
+                result, new_state, window_start,
+                [-1] * (steps - 1) + [num_changed], t0,
+                stop_when_unchanged and num_changed == 0, algo,
+            )
             state.unpersist()
             state = new_state
-            result.state = state
-            result.iterations = it + 1
             window_start += steps
-            if stop_when_unchanged and num_changed == 0:
-                result.converged = True
+            if result.converged:
                 break
         return result

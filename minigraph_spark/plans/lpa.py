@@ -13,11 +13,44 @@ salted count-by-(dst,label) + windowless argmax in operators/partition.py
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.project import symmetrize_raw
-from ..operators.superstep import SuperstepEngine, SuperstepResult
+from ..operators.superstep import (
+    Fragment,
+    FragmentKernel,
+    SuperstepEngine,
+    SuperstepResult,
+)
+
+
+def _mode_step(frag: Fragment, value: np.ndarray, cols: dict):
+    """One-fragment LPA: one synchronous sweep. Each vertex takes the most
+    frequent label among its in-neighbours, ties to the smallest label; a
+    vertex without in-neighbours keeps its label (the mode combiner plus
+    the coalescing apply of the loop)."""
+    dst, lab = frag.dst, value[frag.src]
+    order = np.lexsort((lab, dst))
+    dst, lab = dst[order], lab[order]
+    # one run per distinct (dst, label) pair, in (dst, label) order
+    first = np.ones(dst.size, dtype=bool)
+    first[1:] = (dst[1:] != dst[:-1]) | (lab[1:] != lab[:-1])
+    starts = np.flatnonzero(first)
+    cnt = np.diff(np.append(starts, dst.size))
+    dst, lab = dst[starts], lab[starts]
+    # best pair per dst: highest count, then smallest label
+    order = np.lexsort((lab, -cnt, dst))
+    dst, lab = dst[order], lab[order]
+    best = np.ones(dst.size, dtype=bool)
+    best[1:] = dst[1:] != dst[:-1]
+    new = value.copy()
+    new[dst[best]] = lab[best]
+    return new, new != value
+
+
+_MODE_KERNEL = FragmentKernel(_mode_step)
 
 
 def run_lpa(
@@ -72,7 +105,7 @@ def run_lpa(
 
     res = eng.run(
         init, scatter=scatter, combiner="mode", apply_fn=apply_fn,
-        frontier=False, max_iter=max_iter, algo="lpa",
+        frontier=False, max_iter=max_iter, algo="lpa", kernel=_MODE_KERNEL,
     )
     if engine is None:
         eng.close()  # free owned edge blocks; caller-passed engines live on

@@ -20,10 +20,47 @@ per-iteration counts action via extra_agg — the Aggregate-hook analog
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.superstep import SuperstepEngine, SuperstepResult
+from ..operators.superstep import (
+    Fragment,
+    FragmentKernel,
+    SuperstepEngine,
+    SuperstepResult,
+)
+
+
+def _make_standard_kernel(
+    n: int, alpha: float, tol: float, weight_col: str | None,
+    personalize: list[int] | None,
+) -> FragmentKernel:
+    """One-fragment standard PageRank: one Jacobi sweep with the dangling
+    mass of the sweep's input, active where |Δ| > tol — the loop's apply,
+    term for term (weighted and personalized faces included)."""
+    seeds = None if personalize is None else np.asarray(personalize, dtype=np.int64)
+
+    def step(frag: Fragment, value: np.ndarray, cols: dict):
+        outdeg = cols["outdeg"]
+        has_out = ~np.isnan(outdeg)
+        # only sources with out-edges send, as in the loop's scatter filter
+        send = has_out[frag.src]
+        msg = value[frag.src] / outdeg[frag.src]
+        if weight_col is not None:
+            w = frag.edge_cols[weight_col].astype(np.float64)
+            send &= ~np.isnan(w)
+            msg = msg * w
+        agg = np.bincount(frag.dst[send], weights=msg[send], minlength=value.size)
+        dangling = value[~has_out].sum()
+        if seeds is None:
+            new = (1 - alpha) / n + alpha * (agg + dangling / n)
+        else:
+            p = np.isin(frag.vid, seeds) / len(seeds)
+            new = (1 - alpha) * p + alpha * (agg + dangling * p)
+        return new, np.abs(new - value) > tol
+
+    return FragmentKernel(step)
 
 
 def run_pagerank(
@@ -232,6 +269,11 @@ def run_pagerank(
         res = eng.run(
             init, scatter=scatter, combiner="sum", apply_fn=apply_fn,
             frontier=False, max_iter=max_iter, fuse=fuse, algo="pagerank",
+            kernel=(
+                _make_standard_kernel(n, alpha, tol, weight_col, personalize)
+                if fuse == 1
+                else None
+            ),
             extra_agg=(
                 {"_dangling": F.sum(F.when(F.col("outdeg").isNull(), F.col("value")))}
                 if use_ctx_dangling

@@ -25,24 +25,39 @@ def _edges(spark, seed=9):
     )
 
 
+# the small test graphs run in one-fragment mode at the default width;
+# pinning two partitions keeps the same checks on the superstep loop
+LOOP = {"num_partitions": 2}
+
+
 def _vals(state):
     return {r["vid"]: r["value"] for r in state.collect()}
 
 
-def test_pagerank_kill_and_resume(spark, tmp_path):
+def _pagerank_kill_and_resume(spark, tmp_path, engine_kwargs):
     e = _edges(spark).persist()
     ck = str(tmp_path / "pr_ck")
-    full = run_pagerank(e, tol=1e-9, max_iter=12)
+    full = run_pagerank(e, tol=1e-9, max_iter=12, engine_kwargs=engine_kwargs)
     # "killed" run: stops after 6 iterations, snapshots every 2
     run_pagerank(e, tol=1e-9, max_iter=6, checkpoint_dir=ck,
-                 engine_kwargs={"checkpoint_every": 2})
+                 engine_kwargs={"checkpoint_every": 2, **engine_kwargs})
     found = ckpt.latest(ck)
     assert found is not None and found[0] == 5
     resumed = run_pagerank(e, tol=1e-9, max_iter=12, checkpoint_dir=ck,
-                           engine_kwargs={"checkpoint_every": 2})
+                           engine_kwargs={"checkpoint_every": 2, **engine_kwargs})
+    assert resumed.iterations == 12
+    assert [m.iteration for m in resumed.metrics] == list(range(6, 12))
     a, b = _vals(full.state), _vals(resumed.state)
     assert a.keys() == b.keys()
     assert all(np.isclose(a[k], b[k], rtol=0, atol=1e-12) for k in a)
+
+
+def test_pagerank_kill_and_resume(spark, tmp_path):
+    _pagerank_kill_and_resume(spark, tmp_path, {})
+
+
+def test_pagerank_kill_and_resume_loop(spark, tmp_path):
+    _pagerank_kill_and_resume(spark, tmp_path, LOOP)
 
 
 def test_state_storage_ser_matches_deser(spark):
@@ -62,22 +77,34 @@ def test_state_storage_ser_matches_deser(spark):
     )
 
 
-def test_wcc_resume_exact(spark, tmp_path):
+def _wcc_resume_exact(spark, tmp_path, engine_kwargs):
     e = _edges(spark, seed=4).persist()
     ck = str(tmp_path / "wcc_ck")
-    full = run_wcc(e, max_iter=50)
-    run_wcc(e, max_iter=3, checkpoint_dir=ck, engine_kwargs={"checkpoint_every": 1})
+    full = run_wcc(e, max_iter=50, engine_kwargs=engine_kwargs)
+    run_wcc(e, max_iter=3, checkpoint_dir=ck,
+            engine_kwargs={"checkpoint_every": 1, **engine_kwargs})
+    newest = ckpt.latest(ck)[0]
     resumed = run_wcc(e, max_iter=50, checkpoint_dir=ck,
-                      engine_kwargs={"checkpoint_every": 1})
+                      engine_kwargs={"checkpoint_every": 1, **engine_kwargs})
     assert _vals(full.state) == _vals(resumed.state)
     assert resumed.converged
+    # resume starts right after the newest snapshot
+    assert resumed.metrics[0].iteration == newest + 1
 
 
-def test_snapshot_layout_and_lineage(spark, tmp_path):
+def test_wcc_resume_exact(spark, tmp_path):
+    _wcc_resume_exact(spark, tmp_path, {})
+
+
+def test_wcc_resume_exact_loop(spark, tmp_path):
+    _wcc_resume_exact(spark, tmp_path, LOOP)
+
+
+def _snapshot_layout_and_lineage(spark, tmp_path, engine_kwargs):
     e = _edges(spark).persist()
     ck = str(tmp_path / "lay_ck")
     run_pagerank(e, tol=1e-9, max_iter=4, checkpoint_dir=ck,
-                 engine_kwargs={"checkpoint_every": 2})
+                 engine_kwargs={"checkpoint_every": 2, **engine_kwargs})
     snaps = sorted(d for d in os.listdir(ck) if d.startswith("iter="))
     assert snaps == ["iter=00001", "iter=00003"]
     with open(os.path.join(ck, "iter=00003", "lineage.json")) as f:
@@ -89,6 +116,15 @@ def test_snapshot_layout_and_lineage(spark, tmp_path):
     )
     metrics = [json.loads(line) for line in open(os.path.join(ck, "metrics.jsonl"))]
     assert [m["iteration"] for m in metrics] == [0, 1, 2, 3]
+    assert [m["checkpointed"] for m in metrics] == [False, True, False, True]
+
+
+def test_snapshot_layout_and_lineage(spark, tmp_path):
+    _snapshot_layout_and_lineage(spark, tmp_path, {})
+
+
+def test_snapshot_layout_and_lineage_loop(spark, tmp_path):
+    _snapshot_layout_and_lineage(spark, tmp_path, LOOP)
 
 
 def test_incomplete_snapshot_ignored(spark, tmp_path):

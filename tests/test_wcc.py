@@ -47,7 +47,12 @@ def test_component_sizes(spark):
     assert sizes == {0: 3, 10: 2}
 
 
-def test_wcc_incremental_matches_batch(spark):
+# the small test graphs run in one-fragment mode at the default width;
+# pinning two partitions keeps the same checks on the superstep loop
+LOOP = {"num_partitions": 2}
+
+
+def _wcc_incremental_matches_batch(spark, engine_kwargs):
     """IncEval == PEval on the union graph (monotone min-label): split a
     random graph, converge on the base, feed the rest as a delta."""
     from minigraph_spark.plans.wcc import run_wcc_incremental
@@ -55,15 +60,24 @@ def test_wcc_incremental_matches_batch(spark):
     arr = make_rmat_edges_np(power=8, num_edges=1200, seed=11)
     mask = (arr[:, 0] + arr[:, 1]) % 4 == 0
     base, delta = arr[~mask], arr[mask]
-    prev = run_wcc(_spark_edges(spark, base))
+    prev = run_wcc(_spark_edges(spark, base), engine_kwargs=engine_kwargs)
     res = run_wcc_incremental(
-        _spark_edges(spark, base), _spark_edges(spark, delta), prev.state
+        _spark_edges(spark, base), _spark_edges(spark, delta), prev.state,
+        engine_kwargs=engine_kwargs,
     )
     assert res.converged
     assert labels_dict(res.state) == oracle.wcc_labels(arr)
 
 
-def test_wcc_incremental_touches_only_affected_region(spark):
+def test_wcc_incremental_matches_batch(spark):
+    _wcc_incremental_matches_batch(spark, {})
+
+
+def test_wcc_incremental_matches_batch_loop(spark):
+    _wcc_incremental_matches_batch(spark, LOOP)
+
+
+def _wcc_incremental_touches_only_affected_region(spark, engine_kwargs):
     """The IncEval win: a delta inside one small component must not reconverge
     the rest of the graph — total changed-vertex count stays bounded by the
     affected component, not |V|."""
@@ -74,9 +88,10 @@ def test_wcc_incremental_touches_only_affected_region(spark):
     cyc = np.array([[1000, 1001], [1001, 1002], [1002, 1003]])
     base = np.concatenate([chain, cyc])
     delta = np.array([[1003, 1000]])  # closes the cycle; chain untouched
-    prev = run_wcc(_spark_edges(spark, base))
+    prev = run_wcc(_spark_edges(spark, base), engine_kwargs=engine_kwargs)
     res = run_wcc_incremental(
-        _spark_edges(spark, base), _spark_edges(spark, delta), prev.state
+        _spark_edges(spark, base), _spark_edges(spark, delta), prev.state,
+        engine_kwargs=engine_kwargs,
     )
     assert labels_dict(res.state) == oracle.wcc_labels(np.concatenate([base, delta]))
     # only the 4 cycle vertices were ever eligible to change; the converged
@@ -84,19 +99,36 @@ def test_wcc_incremental_touches_only_affected_region(spark):
     assert sum(m.num_changed for m in res.metrics) <= 4
 
 
-def test_wcc_incremental_new_vertices(spark):
+def test_wcc_incremental_touches_only_affected_region(spark):
+    _wcc_incremental_touches_only_affected_region(spark, {})
+
+
+def test_wcc_incremental_touches_only_affected_region_loop(spark):
+    _wcc_incremental_touches_only_affected_region(spark, LOOP)
+
+
+def _wcc_incremental_new_vertices(spark, engine_kwargs):
     """Delta edges may introduce brand-new vertices (absent from
     prev_labels) and may bridge previously separate components."""
     from minigraph_spark.plans.wcc import run_wcc_incremental
 
     base = np.array([[0, 1], [10, 11]])
     delta = np.array([[1, 20], [20, 10]])  # new vertex 20 bridges the two
-    prev = run_wcc(_spark_edges(spark, base))
+    prev = run_wcc(_spark_edges(spark, base), engine_kwargs=engine_kwargs)
     res = run_wcc_incremental(
-        _spark_edges(spark, base), _spark_edges(spark, delta), prev.state
+        _spark_edges(spark, base), _spark_edges(spark, delta), prev.state,
+        engine_kwargs=engine_kwargs,
     )
     assert labels_dict(res.state) == oracle.wcc_labels(np.concatenate([base, delta]))
     assert set(labels_dict(res.state).values()) == {0}
+
+
+def test_wcc_incremental_new_vertices(spark):
+    _wcc_incremental_new_vertices(spark, {})
+
+
+def test_wcc_incremental_new_vertices_loop(spark):
+    _wcc_incremental_new_vertices(spark, LOOP)
 
 
 def test_wcc_engine_reuse(spark):
