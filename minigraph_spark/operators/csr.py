@@ -17,6 +17,11 @@ contiguous-range fragments would contract them locally,
 edge_cut_partitioner.h:251-254; hashed 64-bit vertex ids have no usable
 range locality, so the jump step replaces that).
 
+There is one superstep loop, SuperstepEngine's: run_wcc_csr and run_bfs_csr
+run the fragment kernel as the engine's scatter (fragment_scatter) with the
+min combiner and the plan's own apply, so one round is one Spark job and
+width, checkpoints, block freeing and metrics are the engine's.
+
 The local/global id dance of the reference (immutable_csr.h:319-327,
 SURVEY.md §1.4) is exactly `np.unique(..., return_inverse=True)` here.
 
@@ -28,23 +33,20 @@ idiomatic scale path for a single gather — so PageRank keeps the pure
 DataFrame plan (plans/pagerank.py) and the CSR path earns its shuffle
 savings on the propagation family.
 
-Scale: partitions hold |E|/P edges; the UDF is O(edges) memory in int64
+Scale: fragments hold |E|/P edges; the UDF is O(edges) memory in int64
 NumPy arrays (at 10^9 edges and P=2000, ~8 MB-per-column blocks). All per-row
 work is vectorized — no per-row Python anywhere (input_hint mandate).
 """
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import iterative_confs
-from .project import symmetrize
-from .superstep import IterationMetrics, SuperstepResult
+from .partition import edge_cut_pid
+from .superstep import ScatterFn, SuperstepEngine, SuperstepResult
 
 
 def build_csr_block(src: np.ndarray, dst: np.ndarray):
@@ -146,12 +148,32 @@ def make_minplus_block(delta: str | None, op: str = "min"):
     return block
 
 
-def _minlabel_block(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One fragment's PEval/IncEval for WCC: min-label sweeps to local
-    fixpoint (make_minplus_block with delta=None; kept as the named entry
-    the WCC loop and tests reference)."""
-    pdf = pdf.rename(columns={"src_label": "src_state", "dst_label": "dst_state"})
-    return make_minplus_block(None)(pdf)
+def fragment_scatter(block, pid: Column) -> ScatterFn:
+    """The SuperstepEngine scatter that runs a fragment kernel: attach the
+    current state to both endpoints of the engine's cached edges, group the
+    edges by fragment id ``pid`` (a Column over src) and let ``block`` (a
+    make_minplus_block kernel) iterate each fragment to its local fixpoint.
+    Its per-vertex results are the proposals, returned as (dst, msg) for
+    the engine's combine. Needs the whole state: run with frontier=False."""
+    src_side = (F.col("vid").alias("src"), F.col("value").alias("src_state"))
+    dst_side = (F.col("vid").alias("dst"), F.col("value").alias("dst_state"))
+    out_cols = (F.col("vid").alias("dst"), F.col("value").alias("msg"))
+
+    def scatter(edges: DataFrame, state: DataFrame, ctx: dict) -> DataFrame:
+        work = edges.join(state.select(*src_side), "src").join(
+            state.select(*dst_side), "dst"
+        )
+        return (
+            work.groupBy(pid)
+            .applyInPandas(block, schema="vid long, value long")
+            .select(*out_cols)
+        )
+
+    return scatter
+
+
+def _hash_pid(num_partitions: int) -> Column:
+    return F.pmod(F.xxhash64("src"), F.lit(num_partitions)).cast("int")
 
 
 def run_wcc_csr(
@@ -159,116 +181,42 @@ def run_wcc_csr(
     directed: bool = False,
     num_partitions: int | None = None,
     max_rounds: int = 60,
+    checkpoint_dir: str | None = None,
 ) -> SuperstepResult:
     """WCC via per-partition CSR blocks + local sub-iterations.
 
     Semantics identical to plans/wcc.run_wcc (min-label to fixpoint); far
-    fewer global rounds on long-path graphs. Each round: attach current
-    labels to both endpoints (two co-partitioned joins), applyInPandas per
-    hash(src) fragment, global min-combine, driver-side changed count.
+    fewer global rounds on long-path graphs. One SuperstepEngine run on the
+    same engine run_wcc builds: each round is fragment_scatter over
+    hash(src) fragments, the min-combine, and run_wcc's min + pointer-jump
+    apply. An undirected graph that fits one fragment takes the engine's
+    one-fragment path. num_partitions=None means the engine's width rule;
+    checkpoint_dir gives snapshots and resume as in run_wcc.
     """
-    with iterative_confs(edges.sparkSession):
-        return _run_wcc_csr(edges, directed, num_partitions, max_rounds)
-
-
-def _run_wcc_csr(
-    edges: DataFrame,
-    directed: bool,
-    num_partitions: int | None,
-    max_rounds: int,
-) -> SuperstepResult:
-    spark = edges.sparkSession
-    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    graph = edges.select("src", "dst") if directed else symmetrize(edges)
-    e = (
-        graph.withColumn("pid", F.pmod(F.xxhash64("src"), F.lit(p)).cast("int"))
-        .repartition(p, "pid")
-        .persist()
+    from ..plans.wcc import (
+        _MINLABEL_KERNEL,
+        _init_labels,
+        _make_apply_min_jump,
+        _wcc_engine,
     )
-    labels = (
-        e.select(F.col("src").alias("vid"))
-        .unionAll(e.select(F.col("dst").alias("vid")))
-        .distinct()
-        .select("vid", F.col("vid").alias("value"))
-        .persist()
-    )
-    labels.count()
 
-    result = SuperstepResult(state=labels)
-    for rnd in range(max_rounds):
-        t0 = time.time()
-        work = (
-            e.join(
-                labels.select(F.col("vid").alias("src"), F.col("value").alias("src_label")),
-                "src",
-            ).join(
-                labels.select(F.col("vid").alias("dst"), F.col("value").alias("dst_label")),
-                "dst",
-            )
-        )
-        proposals = work.groupBy("pid").applyInPandas(
-            _minlabel_block, schema="vid long, value long"
-        )
-        agg = proposals.groupBy("vid").agg(F.min("value").alias("new_value"))
-        # persisted: the pointer-jump self-join below references cand twice —
-        # unpersisted, each round would recompute the whole upstream
-        # (applyInPandas included) twice and work doubles per round
-        cand = (
-            labels.join(agg, "vid", "left")
-            .select(
-                "vid",
-                F.col("value").alias("_old"),
-                F.least(F.col("value"), F.coalesce("new_value", "value")).alias("value"),
-            )
-            .persist()
-        )
-        # pointer jump (path halving): labels are vertex ids, so chase one
-        # hop through the label forest — monotone (labels only decrease
-        # toward the component min), safe to apply every round
-        jump = cand.select(F.col("vid").alias("_jv"), F.col("value").alias("_jparent"))
-        # persist + materialize BEFORE localCheckpoint: localCheckpoint's
-        # LogicalRDD rewrites stats from the origin plan, and a self-join
-        # SQUARES sizeInBytes every round — after ~20 rounds Catalyst
-        # multiplies megabyte-sized BigIntegers for minutes per round. With
-        # the frame cached first, the rewrite reads the InMemoryRelation's
-        # REAL size instead. localCheckpoint still truncates lineage.
-        merged = (
-            cand.join(jump, cand["value"] == jump["_jv"], "left")
-            .select(
-                "vid",
-                "_old",
-                F.least(F.col("value"), F.coalesce("_jparent", "value")).alias("value"),
-            )
-            .persist()
-        )
-        changed = int(
-            merged.agg(
-                F.sum((F.col("value") < F.col("_old")).cast("long")).alias("c")
-            ).collect()[0]["c"]
-            or 0
-        )
-        truncated = merged.localCheckpoint(eager=True)
-        merged.unpersist()
-        cand.unpersist()
-        labels.unpersist()
-        labels = truncated.select("vid", "value")
-        result.state = labels
-        result.iterations = rnd + 1
-        result.metrics.append(
-            IterationMetrics(
-                iteration=rnd,
-                num_active=changed,
-                num_changed=changed,
-                num_messages=-1,
-                elapsed_sec=time.time() - t0,
-                checkpointed=False,
-            )
-        )
-        if changed == 0:
-            result.converged = True
-            break
-    e.unpersist()
-    return result
+    eng = _wcc_engine(
+        edges, directed, checkpoint_dir, {"num_partitions": num_partitions}
+    )
+    res = eng.run(
+        _init_labels(eng),
+        scatter=fragment_scatter(
+            make_minplus_block(None), _hash_pid(eng.num_partitions)
+        ),
+        combiner="min",
+        apply_fn=_make_apply_min_jump(),
+        frontier=False,
+        max_iter=max_rounds,
+        algo="wcc_csr",
+        kernel=None if directed else _MINLABEL_KERNEL,
+    )
+    eng.close()
+    return res
 
 
 def run_bfs_csr(
@@ -282,7 +230,9 @@ def run_bfs_csr(
     """BFS / min-plus SSSP via per-partition CSR blocks + local
     sub-iterations (the generalized kernel surface the WCC CSR path uses —
     reference parity: the sssp_vc_stream.cpp:103-158 inner loop running
-    inside each fragment before border exchange).
+    inside each fragment before border exchange). One SuperstepEngine run:
+    fragment_scatter, the min-combine and plans.bfs's apply, with INF64 as
+    the unreached distance.
 
     partition='hash' (default): hash(src) fragments — correct everywhere.
     partition='range': the reference's contiguous edge-cut rule
@@ -293,100 +243,42 @@ def run_bfs_csr(
 
     Unreachable vertices end with value NULL (same face as plans.bfs).
     """
-    with iterative_confs(edges.sparkSession):
-        return _run_bfs_csr(edges, root, weight_col, num_partitions, max_rounds, partition)
+    from ..plans.bfs import _make_superstep_fns
 
-
-def _run_bfs_csr(
-    edges: DataFrame,
-    root: int,
-    weight_col: str | None,
-    num_partitions: int | None,
-    max_rounds: int,
-    partition: str,
-) -> SuperstepResult:
-    spark = edges.sparkSession
-    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     cols = [F.col("src"), F.col("dst")] + (
         [F.col(weight_col).cast("long").alias("w")] if weight_col else []
     )
-    graph = edges.select(*cols)
+    eng = SuperstepEngine(edges.select(*cols), num_partitions=num_partitions)
+    p = eng.num_partitions
     if partition == "range":
-        from .partition import edge_cut_pid
-
-        nv = graph.agg(
-            (F.greatest(F.max("src"), F.max("dst")) + 1).alias("nv")
-        ).collect()[0]["nv"]
+        nv = eng.edges.agg(F.max(F.greatest("src", "dst")) + 1).first()[0]
         pid = edge_cut_pid(F.col("src"), int(nv), p)
     else:
-        pid = F.pmod(F.xxhash64("src"), F.lit(p)).cast("int")
-    e = graph.withColumn("pid", pid).repartition(p, "pid").persist()
-    state = (
-        e.select(F.col("src").alias("vid"))
-        .unionAll(e.select(F.col("dst").alias("vid")))
-        .distinct()
-        .select(
-            "vid",
-            F.when(F.col("vid") == root, F.lit(0))
-            .otherwise(F.lit(INF64))
-            .cast("long")
-            .alias("value"),
-        )
-        .persist()
+        pid = _hash_pid(p)
+    init = eng.vertices().select(
+        "vid",
+        F.when(F.col("vid") == root, F.lit(0))
+        .otherwise(F.lit(INF64))
+        .cast("long")
+        .alias("value"),
+        F.lit(True).alias("active"),
     )
-    state.count()
-    block = make_minplus_block("w" if weight_col else "unit")
-
-    result = SuperstepResult(state=state)
-    for rnd in range(max_rounds):
-        t0 = time.time()
-        work = (
-            e.join(
-                state.select(F.col("vid").alias("src"), F.col("value").alias("src_state")),
-                "src",
-            ).join(
-                state.select(F.col("vid").alias("dst"), F.col("value").alias("dst_state")),
-                "dst",
-            )
-        )
-        proposals = work.groupBy("pid").applyInPandas(block, schema="vid long, value long")
-        agg = proposals.groupBy("vid").agg(F.min("value").alias("new_value"))
-        merged = (
-            state.join(agg, "vid", "left")
-            .select(
-                "vid",
-                F.col("value").alias("_old"),
-                F.least(F.col("value"), F.coalesce("new_value", "value")).alias("value"),
-            )
-            .persist()
-        )
-        changed = int(
-            merged.agg(
-                F.sum((F.col("value") < F.col("_old")).cast("long")).alias("c")
-            ).collect()[0]["c"]
-            or 0
-        )
-        truncated = merged.localCheckpoint(eager=True)
-        merged.unpersist()
-        state.unpersist()
-        state = truncated.select("vid", "value")
-        result.state = state
-        result.iterations = rnd + 1
-        result.metrics.append(
-            IterationMetrics(
-                iteration=rnd,
-                num_active=changed,
-                num_changed=changed,
-                num_messages=-1,
-                elapsed_sec=time.time() - t0,
-                checkpointed=False,
-            )
-        )
-        if changed == 0:
-            result.converged = True
-            break
-    e.unpersist()
-    result.state = state.select(
-        "vid", F.when(F.col("value") >= INF64, F.lit(None)).otherwise(F.col("value")).alias("value")
+    res = eng.run(
+        init,
+        scatter=fragment_scatter(
+            make_minplus_block("w" if weight_col else "unit"), pid
+        ),
+        combiner="min",
+        apply_fn=_make_superstep_fns(None)[1],
+        frontier=False,
+        max_iter=max_rounds,
+        algo="bfs_csr",
     )
-    return result
+    eng.close()
+    res.state = res.state.select(
+        "vid",
+        F.when(F.col("value") >= INF64, F.lit(None))
+        .otherwise(F.col("value"))
+        .alias("value"),
+    )
+    return res

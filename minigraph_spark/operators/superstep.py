@@ -12,7 +12,9 @@ Here each superstep is:
     apply:    state' = g(state ⟕ agg)               -> (vid, value, active)
 
 all in ONE Catalyst plan with ONE data shuffle (the combine; the scatter
-join reuses the edge table's persisted hash partitioning). Convergence is a
+join reuses the edge table's persisted hash partitioning). This is the
+package's only superstep loop: the CSR fragment path (operators/csr.py) is a
+scatter of it that runs a local-fixpoint kernel per fragment. Convergence is a
 driver-side count — the Aggregate-hook analog (auto_app_base.h:56-63). The
 FSM / queues / schedulers of the reference (minigraph_sys.h:42-207) have no
 port target: Spark's DAG scheduler owns those decisions.
@@ -204,7 +206,15 @@ def _fragment_fn(kernel: FragmentKernel, steps: int, stop_when_unchanged: bool):
 
 
 class SuperstepEngine:
-    """Generic scatter-combine-apply driver over a fixed edge table.
+    """Generic scatter-combine-apply driver over a fixed edge table — the
+    one superstep loop every iterative plan runs on. A scatter is either a
+    DataFrame join (plans/wcc, bfs, lpa, pagerank) or a fragment kernel
+    (operators/csr.fragment_scatter: the edges grouped by fragment, each
+    iterated to its local fixpoint in one Arrow task, run with
+    frontier=False). One superstep is one Spark job whose eager
+    localCheckpoint cuts the lineage; the window's intermediate blocks
+    (lazy checkpoints an apply builds) and the previous state's blocks are
+    freed once it exists, so a finished run holds only its result state.
 
     Parameters
     ----------
@@ -707,6 +717,10 @@ class SuperstepEngine:
             }
             ctx["_unpersist_after"] = []  # apply_fn may cache intermediates
 
+            # snapshot BEFORE the plan is built: a lazy localCheckpoint in
+            # scatter/apply (wcc's self-join sharing) registers its RDD when
+            # it is built, not when it runs
+            ids_before = self._persistent_ids()
             new_state = state
             for j in range(steps):
                 ctx["iteration"] = window_start + j
@@ -739,7 +753,7 @@ class SuperstepEngine:
             # planning-bound spikes to 64 s; every round, a steady 1.5 s).
             if window_start == _EXPLAIN:
                 new_state.explain("formatted")
-            ids_before = self._persistent_ids()
+            ids_built = self._persistent_ids()
             cached = new_state.persist(self._state_level)
             obs = Observation()
             new_state = cached.observe(
@@ -752,9 +766,11 @@ class SuperstepEngine:
                 prev_extra = {k: counts[k] for k in extra_agg}
             for df in ctx["_unpersist_after"]:
                 df.unpersist()
-            # free the PREVIOUS superstep's state blocks now that the new
-            # state is materialized (see _persistent_ids docstring)
-            new_state_ids = self._persistent_ids() - ids_before
+            # free the window's intermediate blocks and the PREVIOUS
+            # superstep's state blocks now that the new state is
+            # materialized (see _persistent_ids docstring)
+            new_state_ids = self._persistent_ids() - ids_built
+            self._free_ids(ids_built - ids_before)
             self._free_ids(prev_state_ids)
             prev_state_ids = new_state_ids
 

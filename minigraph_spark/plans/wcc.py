@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..operators.csr import make_minplus_block
 from ..operators.project import symmetrize_raw
 from ..operators.superstep import (
+    ApplyFn,
     Fragment,
     FragmentKernel,
     SuperstepEngine,
@@ -64,18 +65,13 @@ def _make_apply_min():
     return _apply
 
 
-def _jump_cols():
-    return F.col("vid").alias("_jv"), F.col("value").alias("_jp")
-
-
-def _make_apply_min_jump():
-    """_apply_min plus one pointer-jumping (path-halving) hop: labels are
+def _with_jump(base: ApplyFn) -> ApplyFn:
+    """``base`` plus one pointer-jumping (path-halving) hop: labels are
     vertex ids, so chase label(label(v)) through a self-join. Valid because
     label(v) is always the id of a vertex whose ancestors are ancestors of v
     (transitivity), and labels only decrease — convergence drops from
     O(diameter) to O(log n) global rounds while the fixpoint is unchanged."""
-    base = _make_apply_min()
-    jv_col, jp_col = _jump_cols()
+    jv_col, jp_col = F.col("vid").alias("_jv"), F.col("value").alias("_jp")
 
     def _apply(state: DataFrame, agg: DataFrame, ctx: dict) -> DataFrame:
         # Lazy localCheckpoint, NOT persist(): the self-join references
@@ -104,44 +100,12 @@ def _make_apply_min_jump():
     return _apply
 
 
-def _hook_cols():
-    """The shared hook-phase expressions of the two hooking applies."""
-    cand_c = F.least(
-        F.col("value"), F.coalesce(F.col("agg"), F.col("value"))
-    ).alias("_c")
-    cand_old = F.col("value").alias("_old")
-    hook_pred = F.col("_c") < F.col("_old")
-    hook_key = F.col("_old").alias("vid")
-    hook_min = F.min("_c").alias("_h")
-    merged_value = F.least(
-        F.col("_c"), F.coalesce(F.col("_h"), F.col("_c"))
-    ).alias("value")
-    merged_active = (
-        (F.col("_c") < F.col("_old"))
-        | (F.col("_h").isNotNull() & (F.col("_h") < F.col("_c")))
-    ).alias("active")
-    return cand_c, cand_old, hook_pred, hook_key, hook_min, merged_value, merged_active
+def _make_apply_min_jump() -> ApplyFn:
+    return _with_jump(_make_apply_min())
 
 
-def _make_apply_min_hook():
-    """_apply_min plus SV-style hooking, without the pointer jump (run_wcc
-    hooking=True, pointer_jump=False — previously silently ignored). Same
-    fixpoint: hooks only deliver ids of ancestors-of-ancestors."""
-    cand_c, cand_old, hook_pred, hook_key, hook_min, m_val, m_act = _hook_cols()
-
-    def _apply(state: DataFrame, agg: DataFrame, ctx: dict) -> DataFrame:
-        cand = state.join(agg.withColumnRenamed("dst", "vid"), "vid", "left")
-        cand = cand.select("vid", cand_c, cand_old).localCheckpoint(
-            eager=False
-        )  # shared by hook + merge branches (see jump note)
-        hooks = cand.filter(hook_pred).groupBy(hook_key).agg(hook_min)
-        return cand.join(hooks, "vid", "left").select("vid", m_val, m_act)
-
-    return _apply
-
-
-def _make_apply_min_hook_jump():
-    """_apply_min plus Shiloach-Vishkin-style hooking plus a pointer jump.
+def _make_apply_min_hook() -> ApplyFn:
+    """_apply_min plus Shiloach-Vishkin-style hooking.
 
     Hooking routes each vertex's best candidate label to its CURRENT label
     vertex (a V-row shuffle keyed by label), so basin roots learn about
@@ -152,28 +116,26 @@ def _make_apply_min_hook_jump():
     observed 33 rounds / 24 of them single-active on a 200-conversation
     demo, vs 5 with hooking). Same fixpoint: hooks only ever deliver ids of
     ancestors-of-ancestors, which min-label may legally adopt."""
-    cand_c, cand_old, hook_pred, hook_key, hook_min, m_val, m_act = _hook_cols()
-    jv_col, jp_col = _jump_cols()
+    cand_c = F.least(
+        F.col("value"), F.coalesce(F.col("agg"), F.col("value"))
+    ).alias("_c")
+    cand_old = F.col("value").alias("_old")
+    hook_pred = F.col("_c") < F.col("_old")
+    hook_key = F.col("_old").alias("vid")
+    hook_min = F.min("_c").alias("_h")
+    m_val = F.least(F.col("_c"), F.coalesce(F.col("_h"), F.col("_c"))).alias("value")
+    m_act = (
+        (F.col("_c") < F.col("_old"))
+        | (F.col("_h").isNotNull() & (F.col("_h") < F.col("_c")))
+    ).alias("active")
 
     def _apply(state: DataFrame, agg: DataFrame, ctx: dict) -> DataFrame:
         cand = state.join(agg.withColumnRenamed("dst", "vid"), "vid", "left")
         cand = cand.select("vid", cand_c, cand_old).localCheckpoint(
             eager=False
-        )  # shared by hook + merge branches (see jump note)
+        )  # shared by hook + merge branches (see _with_jump)
         hooks = cand.filter(hook_pred).groupBy(hook_key).agg(hook_min)
-        merged = (
-            cand.join(hooks, "vid", "left")
-            .select("vid", m_val, m_act)
-            .localCheckpoint(eager=False)
-        )
-        jump = merged.select(jv_col, jp_col)
-        jumped = F.least(merged["value"], F.coalesce(jump["_jp"], merged["value"]))
-        out = merged.join(jump, merged["value"] == jump["_jv"], "left").select(
-            merged["vid"],
-            jumped.alias("value"),
-            (merged["active"] | (jumped < merged["value"])).alias("active"),
-        )
-        return out.repartition(ctx["num_partitions"], "vid")
+        return cand.join(hooks, "vid", "left").select("vid", m_val, m_act)
 
     return _apply
 
@@ -194,14 +156,36 @@ def _minlabel_step(frag: Fragment, value: np.ndarray, cols: dict):
 _MINLABEL_KERNEL = FragmentKernel(_minlabel_step, fixpoint=True)
 
 
-def _pick_apply(hooking: bool, directed: bool, pointer_jump: bool):
-    if hooking and not directed and pointer_jump:
-        return _make_apply_min_hook_jump()
-    if hooking and not directed:
-        return _make_apply_min_hook()
-    if pointer_jump:
-        return _make_apply_min_jump()
-    return _make_apply_min()
+def _pick_apply(hooking: bool, directed: bool, pointer_jump: bool) -> ApplyFn:
+    base = _make_apply_min_hook() if hooking and not directed else _make_apply_min()
+    return _with_jump(base) if pointer_jump else base
+
+
+def _wcc_engine(
+    edges: DataFrame,
+    directed: bool,
+    checkpoint_dir: str | None,
+    engine_kwargs: dict | None,
+) -> SuperstepEngine:
+    """The engine every WCC face runs on: the directed edges as given, or
+    (undirected) the symmetrized closure, deduped inside the engine's
+    one-time partitioning exchange (dedup_edges) rather than by a separate
+    distinct shuffle, with its vertex set read from src alone (symmetric)
+    — one E-scale Exchange instead of two at engine build, half the
+    distinct input at init (guide §2.4)."""
+    kw = {"checkpoint_dir": checkpoint_dir, **(engine_kwargs or {})}
+    if directed:
+        return SuperstepEngine(edges.select("src", "dst"), **kw)
+    return SuperstepEngine(
+        symmetrize_raw(edges), dedup_edges=True, symmetric=True, **kw
+    )
+
+
+def _init_labels(eng: SuperstepEngine) -> DataFrame:
+    """Every vertex labelled with its own id, all active."""
+    return eng.vertices().select(
+        "vid", F.col("vid").alias("value"), F.lit(True).alias("active")
+    )
 
 
 def run_wcc(
@@ -229,34 +213,12 @@ def run_wcc(
     hooking=True (undirected only — a hook target need not be reachable
     from the message origin under directed semantics, so it is ignored for
     directed=True) adds the SV-style V-row hook shuffle per superstep; see
-    _apply_min_hook_jump for why random vertex ids on path graphs need it.
+    _make_apply_min_hook for why random vertex ids on path graphs need it.
     hooking composes with either pointer_jump setting.
     """
-    # the symmetrized closure is deduped inside the engine's one-time
-    # partitioning exchange (dedup_edges) rather than by a separate
-    # distinct shuffle, and its vertex set is read from src alone
-    # (symmetric) — one E-scale Exchange instead of two at engine build,
-    # half the distinct input at init (guide §2.4)
-    eng = engine or (
-        SuperstepEngine(
-            edges.select("src", "dst"),
-            checkpoint_dir=checkpoint_dir,
-            **(engine_kwargs or {}),
-        )
-        if directed
-        else SuperstepEngine(
-            symmetrize_raw(edges),
-            dedup_edges=True,
-            symmetric=True,
-            checkpoint_dir=checkpoint_dir,
-            **(engine_kwargs or {}),
-        )
-    )
-    init = eng.vertices().select(
-        "vid", F.col("vid").alias("value"), F.lit(True).alias("active")
-    )
+    eng = engine or _wcc_engine(edges, directed, checkpoint_dir, engine_kwargs)
     res = eng.run(
-        init,
+        _init_labels(eng),
         scatter=_make_scatter_label(),
         combiner="min",
         apply_fn=_pick_apply(hooking, directed, pointer_jump),
@@ -306,19 +268,7 @@ def run_wcc_incremental(
     union_edges = edges.select("src", "dst").unionAll(delta_edges.select("src", "dst"))
     # engine, if passed, must hold the (symmetrized unless directed) UNION
     # graph — the caller owns the per-graph-version prepartition lifecycle
-    eng = engine or (
-        SuperstepEngine(
-            union_edges, checkpoint_dir=checkpoint_dir, **(engine_kwargs or {})
-        )
-        if directed
-        else SuperstepEngine(
-            symmetrize_raw(union_edges),
-            dedup_edges=True,
-            symmetric=True,
-            checkpoint_dir=checkpoint_dir,
-            **(engine_kwargs or {}),
-        )
-    )
+    eng = engine or _wcc_engine(union_edges, directed, checkpoint_dir, engine_kwargs)
     touched = (
         delta_edges.select(F.col("src").alias("vid"))
         .unionAll(delta_edges.select(F.col("dst").alias("vid")))

@@ -91,7 +91,7 @@ def main() -> None:
     elif args.algo == "wcc_csr":
         from minigraph_spark.operators.csr import run_wcc_csr
 
-        res = run_wcc_csr(edges, max_rounds=args.max_iter)
+        res = run_wcc_csr(edges, max_rounds=args.max_iter, checkpoint_dir=ck)
     elif args.algo == "lpa":
         res = run_lpa(edges, max_iter=args.max_iter, checkpoint_dir=ck)
     elif args.algo == "bfs":

@@ -14,6 +14,7 @@ import pandas as pd
 
 from minigraph_spark import checkpoint as ckpt
 from minigraph_spark.fixtures import make_rmat_edges_np
+from minigraph_spark.operators.csr import run_wcc_csr
 from minigraph_spark.plans.pagerank import run_pagerank
 from minigraph_spark.plans.wcc import run_wcc
 
@@ -77,27 +78,47 @@ def test_state_storage_ser_matches_deser(spark):
     )
 
 
-def _wcc_resume_exact(spark, tmp_path, engine_kwargs):
+def _wcc_resume_exact(spark, tmp_path, run, killed_at=3):
+    """``run(edges, max_iter, checkpoint_dir)`` is one WCC face; the killed
+    run stops after ``killed_at`` iterations, by which it has snapshotted."""
     e = _edges(spark, seed=4).persist()
     ck = str(tmp_path / "wcc_ck")
-    full = run_wcc(e, max_iter=50, engine_kwargs=engine_kwargs)
-    run_wcc(e, max_iter=3, checkpoint_dir=ck,
-            engine_kwargs={"checkpoint_every": 1, **engine_kwargs})
+    full = run(e, 50, None)
+    run(e, killed_at, ck)
     newest = ckpt.latest(ck)[0]
-    resumed = run_wcc(e, max_iter=50, checkpoint_dir=ck,
-                      engine_kwargs={"checkpoint_every": 1, **engine_kwargs})
+    resumed = run(e, 50, ck)
     assert _vals(full.state) == _vals(resumed.state)
     assert resumed.converged
     # resume starts right after the newest snapshot
     assert resumed.metrics[0].iteration == newest + 1
 
 
+def _run_wcc(engine_kwargs):
+    return lambda e, n, ck: run_wcc(
+        e, max_iter=n, checkpoint_dir=ck,
+        engine_kwargs={"checkpoint_every": 1, **engine_kwargs},
+    )
+
+
 def test_wcc_resume_exact(spark, tmp_path):
-    _wcc_resume_exact(spark, tmp_path, {})
+    _wcc_resume_exact(spark, tmp_path, _run_wcc({}))
 
 
 def test_wcc_resume_exact_loop(spark, tmp_path):
-    _wcc_resume_exact(spark, tmp_path, LOOP)
+    _wcc_resume_exact(spark, tmp_path, _run_wcc(LOOP))
+
+
+def test_wcc_csr_resume_exact(spark, tmp_path):
+    """The CSR path snapshots through the engine at its default cadence
+    (every 5 iterations, and at convergence), so a run capped at 5 rounds
+    always leaves one."""
+    _wcc_resume_exact(
+        spark, tmp_path,
+        lambda e, n, ck: run_wcc_csr(
+            e, num_partitions=2, max_rounds=n, checkpoint_dir=ck
+        ),
+        killed_at=5,
+    )
 
 
 def _snapshot_layout_and_lineage(spark, tmp_path, engine_kwargs):

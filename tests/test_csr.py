@@ -5,6 +5,7 @@ wcc_vc_batch.cpp:139-148)."""
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from minigraph_spark import oracle
 from minigraph_spark.fixtures import (
@@ -13,8 +14,9 @@ from minigraph_spark.fixtures import (
     make_transcripts,
     tiny7_edges,
 )
-from minigraph_spark.operators.csr import build_csr_block, run_wcc_csr
+from minigraph_spark.operators.csr import build_csr_block, run_bfs_csr, run_wcc_csr
 from minigraph_spark.operators.project import project_edges
+from minigraph_spark.operators.superstep import persistent_rdd_ids
 from minigraph_spark.plans.wcc import run_wcc
 from tests.conftest import labels_dict
 
@@ -146,3 +148,28 @@ def test_minplus_block_max_combiner():
     got_min = dict(zip(out_min["vid"], out_min["value"]))
     # directed cycle {1,2,3} contracts to 1; 10<->11 contracts to 10
     assert got_min == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+
+LEAK_CALLS = {
+    "wcc_hook_jump": lambda e: run_wcc(e, max_iter=3, engine_kwargs={"num_partitions": 4}),
+    "wcc_jump": lambda e: run_wcc(
+        e, max_iter=3, hooking=False, engine_kwargs={"num_partitions": 4}
+    ),
+    "wcc_csr": lambda e: run_wcc_csr(e, num_partitions=4, max_rounds=3),
+    "bfs_csr": lambda e: run_bfs_csr(e, root=0, num_partitions=4, max_rounds=5),
+    "wcc_one_fragment": lambda e: run_wcc(e),
+}
+
+
+@pytest.mark.parametrize("call", list(LEAK_CALLS))
+def test_run_leaves_only_result_state_blocks(spark, call):
+    """Every round's blocks are freed, the lazy checkpoints an apply builds
+    included: a finished run leaves exactly one new persistent RDD, the
+    result state's."""
+    e = _spark_edges(spark, make_rmat_edges_np(10, 3000, seed=7)).persist()
+    e.count()
+    before = persistent_rdd_ids(spark)
+    res = LEAK_CALLS[call](e)
+    assert len(persistent_rdd_ids(spark) - before) == 1, call
+    assert res.iterations >= 1
+    e.unpersist()

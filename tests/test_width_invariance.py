@@ -4,7 +4,9 @@ WCC, incremental WCC, LPA and PageRank run on one small R-MAT graph and one
 small transcript projection, at the automatic width and at explicit widths
 1, 2, 4 and 8. Auto and 1 take the one-fragment path (the whole graph in
 one Arrow task per window); 2-8 take the distributed superstep loop. Labels
-must be identical across widths and ranks must agree to 1e-9."""
+must be identical across widths and ranks must agree to 1e-9. The CSR
+fragment path (operators/csr.py) must agree with the DataFrame plans at
+every width."""
 
 import numpy as np
 import pandas as pd
@@ -12,8 +14,10 @@ import pytest
 
 from minigraph_spark import oracle
 from minigraph_spark.fixtures import make_rmat_edges_np, make_transcripts
+from minigraph_spark.operators.csr import run_bfs_csr, run_wcc_csr
 from minigraph_spark.operators.project import project_edges, symmetrize
 from minigraph_spark.operators.superstep import SuperstepEngine
+from minigraph_spark.plans.bfs import run_bfs
 from minigraph_spark.plans.lpa import run_lpa
 from minigraph_spark.plans.pagerank import run_pagerank
 from minigraph_spark.plans.wcc import run_wcc, run_wcc_incremental
@@ -81,3 +85,16 @@ def test_results_do_not_depend_on_width(spark, graph):
         # LPA sweeps and PageRank's tolerance stop count the same iterations
         assert iterations["lpa"] == ref_iters["lpa"], w
         assert iterations["pagerank"] == ref_iters["pagerank"], w
+
+
+@pytest.mark.parametrize("graph", ["rmat", "transcripts"])
+def test_csr_path_does_not_depend_on_width(spark, graph):
+    arr = _graph(spark, graph)
+    e = _frame(spark, arr).persist()
+    root = int(arr[0, 0])
+    labels = labels_dict(run_wcc(e).state)
+    assert labels == oracle.wcc_labels(arr)
+    dist = labels_dict(run_bfs(e, root).state)
+    for w in WIDTHS:
+        assert labels_dict(run_wcc_csr(e, num_partitions=w).state) == labels, w
+        assert labels_dict(run_bfs_csr(e, root, num_partitions=w).state) == dist, w
