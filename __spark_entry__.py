@@ -27,8 +27,7 @@ def entry(spark: SparkSession) -> DataFrame:
     sf0.001 (the transcript->edge projection's relational face), 20
     synchronous supersteps."""
     edges = relational.events_seq_edges(spark, "/root/testdata/sf0.001")
-    res = run_pagerank(edges, tol=1e-9, max_iter=20,
-                       engine_kwargs={"salt_skew": False})
+    res = run_pagerank(edges, tol=1e-9, max_iter=20)
     return res.state.select("vid", F.round("value", 9).alias("rank"))
 
 

@@ -7,9 +7,10 @@ Re-expresses the query semantics of SICS-Fundamental-Research-Center/MiniGraph
 - PIE-style iterative algorithms (PageRank, WCC, LPA, SSSP/BFS, coloring,
   triangle counting) as superstep scatter-combine-apply loops
   (`minigraph_spark.plans`, `minigraph_spark.operators.superstep`).
-- Graph ETL (partitioning, skew salting, CSR blocks, dense-id compaction,
-  degree statistics) as DataFrame/Arrow-UDF operators
-  (`minigraph_spark.operators`).
+- Graph ETL (partitioning, CSR blocks, dense-id compaction, degree
+  statistics) as DataFrame/Arrow-UDF operators
+  (`minigraph_spark.operators`); skew salting is a standalone operator the
+  superstep engine does not use.
 - Transcript → edge-table projection for conversation/agent transcript tables
   (`minigraph_spark.operators.project`), the engine's primary input surface.
 - Training-data-pipeline operators (dedup, similarity search, text analysis,

@@ -93,9 +93,25 @@ def latest(base_dir: str) -> tuple[int, str] | None:
     return best
 
 
-def load_snapshot(spark: SparkSession, base_dir: str) -> tuple[int, DataFrame] | None:
+def load_snapshot(
+    spark: SparkSession, base_dir: str, algo: str
+) -> tuple[int, DataFrame] | None:
+    """Newest complete snapshot -> (iteration, state), else None. A
+    snapshot whose manifest names another algo raises ValueError: its state
+    is not a valid start for this run. A manifest with no algo key loads.
+
+    Only the algo is checked, not the input: a base_dir must belong to one
+    run's input (same edges and plan parameters, e.g. BFS root), or the run
+    resumes from a state computed on another graph."""
     found = latest(base_dir)
     if found is None:
         return None
     it, path = found
+    with open(os.path.join(os.path.dirname(path), "lineage.json")) as f:
+        wrote = json.load(f).get("algo", algo)
+    if wrote != algo:
+        raise ValueError(
+            f"{base_dir} holds {wrote!r} snapshots; "
+            f"cannot resume {algo!r} from them"
+        )
     return it, spark.read.parquet(path)

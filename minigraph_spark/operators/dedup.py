@@ -241,7 +241,7 @@ def near_dup_clusters(
 
     pairs = minhash_lsh_pairs(docs, num_hashes, band_size, k, text_col)
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    labels = run_wcc(edges, engine_kwargs={"salt_skew": False}).state
+    labels = run_wcc(edges).state
     clustered = labels.select(
         F.col("vid").alias("doc_id"), F.col("value").alias("cluster")
     )

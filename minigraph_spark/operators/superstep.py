@@ -8,7 +8,7 @@ message push/pull wcc_vc_batch.cpp:42-95, combiners utility/atomic.h:30-55).
 Here each superstep is:
 
     scatter:  msgs = f(edges ⋈ active-state)        -> (dst, msg)
-    combine:  agg  = salted groupBy(dst).{min|max|sum|mode}(msg)
+    combine:  agg  = groupBy(dst).{min|max|sum|mode}(msg)
     apply:    state' = g(state ⟕ agg)               -> (vid, value, active)
 
 all in ONE Catalyst plan with ONE data shuffle (the combine; the scatter
@@ -22,10 +22,10 @@ port target: Spark's DAG scheduler owns those decisions.
 Scale design (100 TB): edges are hash-partitioned ONCE and persisted
 (prepartition_edges) so the per-iteration scatter join is co-located on the
 edge side; messages shuffle on dst with map-side partial aggregation (the
-write_min analog is exactly Catalyst's partial agg); hub vertices are salted
-(operators/partition.py); lineage is truncated every iteration via
-localCheckpoint and durable parquet snapshots every `checkpoint_every`
-iterations make any run resumable (checkpoint.py).
+write_min analog is exactly Catalyst's partial agg, which also collapses a
+hub's messages to one row per partition before the shuffle); lineage is
+truncated every iteration via localCheckpoint and durable parquet snapshots
+every `checkpoint_every` iterations make any run resumable (checkpoint.py).
 """
 
 from __future__ import annotations
@@ -44,19 +44,13 @@ from pyspark.sql import types as T
 
 from .. import checkpoint as ckpt
 from ..session import iterative_confs
-from .partition import (
-    heavy_hitters,
-    make_mode_agg,
-    make_salted_agg,
-    prepartition_edges,
-)
+from .partition import make_mode_agg, make_salted_agg, prepartition_edges
 
-# debug aid: MG_EXPLAIN=<k> prints the physical plan of superstep window k
+# debug aid: MG_EXPLAIN=<k> prints the physical plan of superstep k
 _EXPLAIN = int(__import__("os").environ.get("MG_EXPLAIN", "-1") or -1)
 
 ScatterFn = Callable[[DataFrame, DataFrame, dict], DataFrame]
 ApplyFn = Callable[[DataFrame, DataFrame, dict], DataFrame]
-PrepareFn = Callable[[DataFrame, dict], dict]
 
 
 def persistent_rdd_ids(spark) -> set:
@@ -160,7 +154,7 @@ class FragmentKernel:
     fixpoint: bool = False
 
 
-def _fragment_fn(kernel: FragmentKernel, steps: int, stop_when_unchanged: bool):
+def _fragment_fn(kernel: FragmentKernel, steps: int):
     """The cogroup function of one one-fragment window: build the fragment
     from the edge rows and the state rows, run up to ``steps`` kernel
     iterations, and return the new state. The per-iteration changed counts
@@ -195,7 +189,7 @@ def _fragment_fn(kernel: FragmentKernel, steps: int, stop_when_unchanged: bool):
         for _ in range(steps):  # steps >= 1
             value, active = kernel.step(frag, value, cols)
             changed.append(int(active.sum()))
-            if kernel.fixpoint or (stop_when_unchanged and changed[-1] == 0):
+            if kernel.fixpoint or changed[-1] == 0:
                 converged = True
                 break
         out = state.assign(value=value, active=active, _stats=None)
@@ -212,34 +206,22 @@ class SuperstepEngine:
     (operators/csr.fragment_scatter: the edges grouped by fragment, each
     iterated to its local fixpoint in one Arrow task, run with
     frontier=False). One superstep is one Spark job whose eager
-    localCheckpoint cuts the lineage; the window's intermediate blocks
+    localCheckpoint cuts the lineage; the superstep's intermediate blocks
     (lazy checkpoints an apply builds) and the previous state's blocks are
     freed once it exists, so a finished run holds only its result state.
 
     Parameters
     ----------
     edges : (src, dst) DataFrame; pre-partitioned by src and persisted here.
-    num_partitions : hash-partition count for the edge table (defaults to
-        spark.sql.shuffle.partitions).
-    salt_skew : detect hub dst keys once and salt the combine for them.
-        Default False — measured OFF-faster even on deliberately-hub-skewed
-        inputs (16M-edge R-MAT PageRank: 1.8 vs 2.4 s/iter interleaved;
-        8M-edge 20%-hub LPA: 11.8 vs 18.6 s total), because the combine's
-        map-side partial aggregation already collapses a hot key to one row
-        per partition before the shuffle; the salt machinery then only adds
-        a per-row when/isin/hash, an extra merge phase, and the engine-build
-        heavy-hitter scan. Turn on only for combiners whose phase-1 partial
-        aggregation cannot collapse rows (or message streams already
-        partitioned by dst, where the agg is single-task without it).
+    num_partitions : hash-partition count for the edge table. None (the
+        default) derives it from the edge-row count: one partition per
+        TARGET_ROWS_PER_PARTITION rows, capped at spark.sql.shuffle.partitions.
     checkpoint_dir / checkpoint_every : durable snapshot cadence; None
         disables durable snapshots (lineage is still truncated in memory).
-    lineage_cut_every : localCheckpoint cadence. Default 1 (every
-        iteration): plans that reference `state` several times (scatter +
-        apply + pointer-jump self-joins) grow the LOGICAL plan ~4x per
-        uncut round, and since every DataFrame op re-runs Catalyst
-        analysis eagerly, even 3 uncut rounds make driver-side analysis
-        the bottleneck (measured: 90% of wall time at 200+ iterations).
-        The cut itself is one cheap job over the already-cached state.
+        A run whose checkpoint_dir holds snapshots resumes from the newest
+        one, which must have been written by the same algo (else
+        ValueError). Only the algo is checked: a dir must belong to one
+        run's input, not only to one algorithm.
     state_storage : "deser" (default) stores per-iteration state blocks
         deserialized (fastest sweep; the level every BASELINE.md number was
         measured at). "ser" stores them MEMORY_AND_DISK_SER — ~3-5x smaller
@@ -267,11 +249,11 @@ class SuperstepEngine:
       after it;
     - LPA: one iteration is one synchronous mode sweep, ties to the
       smallest label;
-    - standard PageRank (fuse=1): one iteration is one Jacobi sweep with
-      dangling mass, stopping at max|Δ| <= tol.
+    - standard PageRank: one iteration is one Jacobi sweep with dangling
+      mass, stopping at max|Δ| <= tol.
 
     Every other plan or variant (directed WCC, the minigraph PageRank
-    rule, fuse > 1, BFS, ...) runs the loop whatever the mode.
+    rule, BFS, ...) runs the loop whatever the mode.
     """
 
     # size-aware parallelism: target edge rows per loop partition. At 16M+
@@ -282,9 +264,7 @@ class SuperstepEngine:
     # s/iter and WCC from 3.2 to 1.9 s/iter). The AQE-coalesce analog for
     # the fixed loop plan, decided ONCE at partition time like the
     # reference's -n fragment-count flag (tools/graph_partition.cpp).
-    TARGET_ROWS_PER_PARTITION = int(
-        __import__("os").environ.get("MG_TARGET_ROWS_PER_PARTITION", "32768") or 32768
-    )
+    TARGET_ROWS_PER_PARTITION = 32768
 
     # optimizer-estimate divisor for the pre-shuffle width choice below:
     # measured estimate/true-rows across this repo's edge inputs — parquet
@@ -316,10 +296,8 @@ class SuperstepEngine:
         self,
         edges: DataFrame,
         num_partitions: int | None = None,
-        salt_skew: bool = False,
         checkpoint_dir: str | None = None,
         checkpoint_every: int = 5,
-        lineage_cut_every: int = 1,
         state_storage: str = "deser",
         dedup_edges: bool = False,
         symmetric: bool = False,
@@ -392,10 +370,8 @@ class SuperstepEngine:
                 self._edge_rdd_ids = small_ids
                 n = ideal
         self.num_partitions = n
-        self.hot_keys = heavy_hitters(self.edges, "dst") if salt_skew else []
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = checkpoint_every
-        self.lineage_cut_every = lineage_cut_every
         if state_storage not in ("deser", "ser"):
             raise ValueError(f"state_storage must be 'deser' or 'ser', got {state_storage!r}")
         from pyspark.storagelevel import StorageLevel
@@ -475,13 +451,9 @@ class SuperstepEngine:
         scatter: ScatterFn,
         combiner: str | Callable[[DataFrame], DataFrame],
         apply_fn: ApplyFn,
-        prepare: PrepareFn | None = None,
         extra_agg: dict | None = None,
         frontier: bool = True,
         max_iter: int = 100,
-        fuse: int = 1,
-        stop_when_unchanged: bool = True,
-        resume: bool = True,
         algo: str = "superstep",
         kernel: FragmentKernel | None = None,
     ) -> SuperstepResult:
@@ -497,40 +469,25 @@ class SuperstepEngine:
         the SAME per-iteration counts action (no extra Spark job) and the
         previous iteration's values are available to scatter/apply via
         ctx[name] — the Aggregate-hook analog (auto_app_base.h:56-63) for
-        driver-side scalars like PageRank's dangling mass. Requires fuse=1.
-
-        fuse runs that many supersteps inside ONE Catalyst plan per
-        materialization, amortizing per-materialization serial costs
-        (driver analysis, job barriers, convergence collect, lineage
-        checkpoint). CAVEAT — only worthwhile when apply_fn references
-        `state` exactly once: Spark does not share non-exchange subplans,
-        so k references per step re-execute k^fuse copies of the window's
-        work (measured: fuse=5 on the 3-reference PageRank apply runs 5x
-        SLOWER than fuse=1). With the co-partitioned exchange-free
-        superstep plan the per-iteration fixed cost is small; default
-        fuse=1 is right for all shipped plans.
+        driver-side scalars like PageRank's dangling mass.
 
         kernel: the plan's FragmentKernel, the same iteration in NumPy. On
         a one_fragment engine it replaces scatter/combiner/apply_fn (and
-        prepare, extra_agg, frontier, fuse); elsewhere it is ignored.
+        extra_agg, frontier); elsewhere it is ignored.
         """
-        if extra_agg and fuse > 1:
-            raise ValueError("extra_agg feeds ctx per superstep; requires fuse=1")
         with self.loop_confs():
             if kernel is not None and self.one_fragment:
-                return self._run_fragment(
-                    init_state, kernel, max_iter, stop_when_unchanged, resume, algo
-                )
+                return self._run_fragment(init_state, kernel, max_iter, algo)
             return self._run_loop(
-                init_state, scatter, combiner, apply_fn, prepare, extra_agg,
-                frontier, max_iter, fuse, stop_when_unchanged, resume, algo,
+                init_state, scatter, combiner, apply_fn, extra_agg,
+                frontier, max_iter, algo,
             )
 
-    def _resume_point(self, init_state: DataFrame, resume: bool):
+    def _resume_point(self, init_state: DataFrame, algo: str):
         """(first iteration, its input state): the newest complete snapshot
-        + 1 when resuming from checkpoint_dir, else (0, init_state)."""
-        if resume and self.checkpoint_dir:
-            found = ckpt.load_snapshot(self.spark, self.checkpoint_dir)
+        of ``algo`` + 1 when checkpoint_dir holds one, else (0, init_state)."""
+        if self.checkpoint_dir:
+            found = ckpt.load_snapshot(self.spark, self.checkpoint_dir, algo)
             if found is not None:
                 return found[0] + 1, found[1]
         return 0, init_state
@@ -542,8 +499,7 @@ class SuperstepEngine:
         """Record one materialized window of len(changed) iterations
         starting at ``first``: its durable snapshot when due, one
         IterationMetrics (and metrics.jsonl row) per iteration, and the
-        result's state/iteration/convergence fields. ``changed`` holds -1
-        for iterations whose count was not observed (fused loop steps)."""
+        result's state/iteration/convergence fields."""
         it = first + len(changed) - 1
         checkpointed = False
         if self.checkpoint_dir and (
@@ -576,8 +532,6 @@ class SuperstepEngine:
         init_state: DataFrame,
         kernel: FragmentKernel,
         max_iter: int,
-        stop_when_unchanged: bool,
-        resume: bool,
         algo: str,
     ) -> SuperstepResult:
         """One-fragment mode: each window is ONE Spark job — cogroup the
@@ -586,7 +540,7 @@ class SuperstepEngine:
         checkpoint_every boundaries when checkpoint_dir is set (so the
         snapshots match the loop's), else run to max_iter; every window
         also ends at convergence."""
-        first, state = self._resume_point(init_state, resume)
+        first, state = self._resume_point(init_state, algo)
         result = SuperstepResult(state=state)
         schema = T.StructType(
             [T.StructField(f.name, f.dataType) for f in state.schema.fields]
@@ -605,9 +559,7 @@ class SuperstepEngine:
             new_state = (
                 self.edges.groupBy(key)
                 .cogroup(state.groupBy(key))
-                .applyInPandas(
-                    _fragment_fn(kernel, end - first, stop_when_unchanged), schema
-                )
+                .applyInPandas(_fragment_fn(kernel, end - first), schema)
                 .observe(obs, F.max("_stats").alias("stats"))
                 .select(*state.columns)
                 .localCheckpoint(eager=True, storageLevel=self._state_level)
@@ -636,7 +588,7 @@ class SuperstepEngine:
         32-task stages on every groupBy despite a 4-partition plan.
         run() wraps the whole loop in this; plans must ALSO wrap any
         DataFrame they MATERIALIZE before run() whose partitioning the
-        loop will inherit (e.g. run_pagerank's fused degree table): a
+        loop will inherit (e.g. run_pagerank's one-pass degree table): a
         table persisted at the session width feeds the loop a state
         partitioned n_session-ways while every loop exchange is
         num_partitions-ways, and EnsureRequirements then silently
@@ -659,16 +611,12 @@ class SuperstepEngine:
         scatter: ScatterFn,
         combiner: str | Callable[[DataFrame], DataFrame],
         apply_fn: ApplyFn,
-        prepare: PrepareFn | None,
         extra_agg: dict | None,
         frontier: bool,
         max_iter: int,
-        fuse: int,
-        stop_when_unchanged: bool,
-        resume: bool,
         algo: str,
     ) -> SuperstepResult:
-        start_iter, state = self._resume_point(init_state, resume)
+        start_iter, state = self._resume_point(init_state, algo)
         state = state.persist(self._state_level)
 
         # Column expression trees are immutable and plan-independent, so
@@ -686,9 +634,9 @@ class SuperstepEngine:
         if callable(combiner):
             combine_fn = combiner
         elif combiner == "mode":
-            combine_fn = make_mode_agg("dst", "msg", self.hot_keys)
+            combine_fn = make_mode_agg("dst", "msg")
         else:
-            combine_fn = make_salted_agg("dst", "msg", combiner, self.hot_keys)
+            combine_fn = make_salted_agg("dst", "msg", combiner, None)
 
         prev_extra: dict = {}
         if extra_agg:
@@ -706,32 +654,20 @@ class SuperstepEngine:
 
         result = SuperstepResult(state=state)
         prev_state_ids: set = set()  # init persist freed by state.unpersist()
-        window_start = start_iter
-        while window_start < max_iter:
-            steps = min(fuse, max_iter - window_start)
+        for it in range(start_iter, max_iter):
             t0 = time.time()
             ctx: dict = {
-                "iteration": window_start,
+                "iteration": it,
                 "num_partitions": self.num_partitions,
                 **prev_extra,
             }
-            ctx["_unpersist_after"] = []  # apply_fn may cache intermediates
-
             # snapshot BEFORE the plan is built: a lazy localCheckpoint in
             # scatter/apply (wcc's self-join sharing) registers its RDD when
             # it is built, not when it runs
             ids_before = self._persistent_ids()
-            new_state = state
-            for j in range(steps):
-                ctx["iteration"] = window_start + j
-                if prepare is not None:
-                    ctx.update(prepare(new_state, ctx))
-                src_state = (
-                    new_state.filter(_active_col) if frontier else new_state
-                )
-                msgs = scatter(self.edges, src_state, ctx)
-                agg = combine_fn(msgs)
-                new_state = apply_fn(new_state, agg, ctx)
+            src_state = state.filter(_active_col) if frontier else state
+            msgs = scatter(self.edges, src_state, ctx)
+            new_state = apply_fn(state, combine_fn(msgs), ctx)
             # Lineage + stats management, one superstep = ONE Spark job.
             # Persist the new state, attach the convergence counters as
             # OBSERVED metrics (CollectMetrics —
@@ -751,7 +687,7 @@ class SuperstepEngine:
             # multiplying megabyte-long numbers (measured on 16M-edge
             # PageRank: resetting every 8th round averaged 14.5 s/iter with
             # planning-bound spikes to 64 s; every round, a steady 1.5 s).
-            if window_start == _EXPLAIN:
+            if it == _EXPLAIN:
                 new_state.explain("formatted")
             ids_built = self._persistent_ids()
             cached = new_state.persist(self._state_level)
@@ -764,9 +700,7 @@ class SuperstepEngine:
             num_changed = int(counts["changed"] or 0)
             if extra_agg:
                 prev_extra = {k: counts[k] for k in extra_agg}
-            for df in ctx["_unpersist_after"]:
-                df.unpersist()
-            # free the window's intermediate blocks and the PREVIOUS
+            # free the superstep's intermediate blocks and the PREVIOUS
             # superstep's state blocks now that the new state is
             # materialized (see _persistent_ids docstring)
             new_state_ids = self._persistent_ids() - ids_built
@@ -774,15 +708,11 @@ class SuperstepEngine:
             self._free_ids(prev_state_ids)
             prev_state_ids = new_state_ids
 
-            # only the window's last step is observed (fused steps: -1)
             self._finish_window(
-                result, new_state, window_start,
-                [-1] * (steps - 1) + [num_changed], t0,
-                stop_when_unchanged and num_changed == 0, algo,
+                result, new_state, it, [num_changed], t0, num_changed == 0, algo
             )
             state.unpersist()
             state = new_state
-            window_start += steps
             if result.converged:
                 break
         return result

@@ -7,8 +7,9 @@ synchronous updates, ties broken by the smallest label — matches
 oracle.lpa_labels exactly.
 
 The mode combiner is not a Spark builtin with deterministic ties; it is the
-salted count-by-(dst,label) + windowless argmax in operators/partition.py
-(mode_agg) — two small shuffles, both partial-aggregated map-side.
+count-by-(dst,label) + windowless argmax in operators/partition.py
+(make_mode_agg, no salting: map-side partial aggregation absorbs hubs) —
+two small shuffles, both partial-aggregated map-side.
 """
 
 from __future__ import annotations

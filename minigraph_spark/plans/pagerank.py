@@ -12,7 +12,8 @@ per the survey's resolution, since the truncation is an artifact of its
 32-bit vdata storage, not query semantics.)
 
 Both are synchronous Jacobi sweeps: every superstep recomputes from the full
-state (frontier=False), ONE sum-shuffle per iteration, hub dst keys salted.
+state (frontier=False), ONE sum-shuffle per iteration, whose map-side partial
+aggregation collapses a hub's contributions before the exchange.
 The dangling-mass scalar (standard variant) piggybacks on the engine's
 per-iteration counts action via extra_agg — the Aggregate-hook analog
 (auto_app_base.h:56-63) at zero extra Spark jobs.
@@ -71,7 +72,6 @@ def run_pagerank(
     epsilon: float = 0.001,
     tol: float = 1e-6,
     max_iter: int = 200,
-    fuse: int = 1,
     checkpoint_dir: str | None = None,
     engine_kwargs: dict | None = None,
     engine: SuperstepEngine | None = None,
@@ -88,7 +88,7 @@ def run_pagerank(
     starts at the seeds. Standard variant only.
 
     Pass ``engine`` to reuse an already-partitioned SuperstepEngine across
-    runs — the one-time prepartition/heavy-hitter cost (the analog of the
+    runs — the one-time prepartition cost (the analog of the
     reference's graph_partition_exec step, tools/graph_partition.cpp:98-134)
     then amortizes over every run on the same graph.
 
@@ -117,7 +117,7 @@ def run_pagerank(
         )
 
     if variant == "standard":
-        # ONE fused E-row pass builds the vertex set AND the out-degree
+        # ONE E-row pass builds the vertex set AND the out-degree
         # (guide §2.4 — remove shuffles outright): previously this was a
         # distinct-count job, a second distinct inside the init plan, an
         # outdeg groupBy and a V-row join — three extra E-scale exchanges
@@ -217,17 +217,12 @@ def run_pagerank(
 
         # dangling mass via the engine's Aggregate hook (extra_agg): the sum
         # of rank over out-degree-0 vertices is evaluated in the SAME
-        # per-iteration counts action that reads convergence (zero extra
-        # Spark jobs) and fed to the next superstep as a driver-side scalar
-        # literal. The value aggregated over iteration k's state is exactly
-        # the dangling mass apply needs at iteration k+1, because apply
-        # reads the PREVIOUS state's mass. vs the old in-plan broadcast
-        # (state re-scan + SinglePartition Exchange + BroadcastExchange per
-        # superstep — plan nodes 16-23 of plans/r06/pagerank_rmat_before):
-        # same addends, same per-partition partial order, one fewer pass
-        # over V and one fewer driver barrier per iteration. Requires
-        # fuse=1 (extra_agg contract); fuse>1 keeps the in-plan scalar.
-        use_ctx_dangling = fuse == 1
+        # per-iteration job that reads convergence (zero extra Spark jobs)
+        # and fed to the next superstep as a driver-side scalar literal. The
+        # value aggregated over iteration k's state is exactly the dangling
+        # mass apply needs at iteration k+1, because apply reads the
+        # PREVIOUS state's mass.
+        _dangling_agg = F.sum(F.when(F.col("outdeg").isNull(), F.col("value")))
 
         # loop-invariant subtrees of apply (the per-iteration dangling
         # literal stays inside apply_fn; these compose around it
@@ -246,15 +241,8 @@ def run_pagerank(
 
         def apply_fn(state: DataFrame, agg: DataFrame, ctx: dict) -> DataFrame:
             joined = state.join(agg.withColumnRenamed("dst", "vid"), "vid", "left")
-            if use_ctx_dangling:
-                d = ctx.get("_dangling")
-                dangling = F.lit(float(d) if d is not None else 0.0)
-            else:
-                total = state.filter(F.col("outdeg").isNull()).agg(
-                    F.sum("value").alias("_dangling")
-                )
-                dangling = F.coalesce(F.col("_dangling"), F.lit(0.0))
-                joined = joined.crossJoin(F.broadcast(total))
+            d = ctx.get("_dangling")
+            dangling = F.lit(float(d) if d is not None else 0.0)
             if personalize is not None:
                 new_val = _lit_tele + _lit_alpha * (_coal_agg + dangling * _p_vid)
             else:
@@ -268,17 +256,9 @@ def run_pagerank(
 
         res = eng.run(
             init, scatter=scatter, combiner="sum", apply_fn=apply_fn,
-            frontier=False, max_iter=max_iter, fuse=fuse, algo="pagerank",
-            kernel=(
-                _make_standard_kernel(n, alpha, tol, weight_col, personalize)
-                if fuse == 1
-                else None
-            ),
-            extra_agg=(
-                {"_dangling": F.sum(F.when(F.col("outdeg").isNull(), F.col("value")))}
-                if use_ctx_dangling
-                else None
-            ),
+            frontier=False, max_iter=max_iter, algo="pagerank",
+            kernel=_make_standard_kernel(n, alpha, tol, weight_col, personalize),
+            extra_agg={"_dangling": _dangling_agg},
         )
         degs.unpersist()
         if engine is None:
@@ -292,7 +272,7 @@ def run_pagerank(
                 "(the minigraph rule's epsilon-gate freezes near-fixpoint "
                 "states rather than refining them)"
             )
-        # same fused vertex-set + degree pass as the standard variant, with
+        # same one-pass vertex-set + degree build as the standard variant, with
         # the roles of src/dst swapped (in-degree): one E-row exchange
         # replaces distinct + groupBy + join
         ends = eng.edges.select(
@@ -337,8 +317,7 @@ def run_pagerank(
 
         res = eng.run(
             init, scatter=scatter_mg, combiner="sum", apply_fn=apply_mg,
-            frontier=False, max_iter=max_iter, fuse=fuse,
-            algo="pagerank_minigraph",
+            frontier=False, max_iter=max_iter, algo="pagerank_minigraph",
         )
         if engine is None:
             eng.close()

@@ -256,8 +256,7 @@ def _q_pagerank_weighted(spark, sf_dir):
         "src", "dst",
         (1 + (F.col("src") * 31 + F.col("dst")) % 9).alias("w"),
     )
-    res = run_pagerank(e, tol=0.0, max_iter=3, weight_col="w",
-                       engine_kwargs={"salt_skew": False})
+    res = run_pagerank(e, tol=0.0, max_iter=3, weight_col="w")
     return res.state.select("vid", F.round("value", 6).alias("rank"))
 
 
@@ -1447,8 +1446,7 @@ def _q_assortativity(spark, sf_dir):
 
 
 def _q_pagerank3(spark, sf_dir):
-    res = run_pagerank(mod_edges(spark, sf_dir), tol=0.0, max_iter=3,
-                       engine_kwargs={"salt_skew": False})
+    res = run_pagerank(mod_edges(spark, sf_dir), tol=0.0, max_iter=3)
     return res.state.select("vid", F.round("value", 6).alias("rank"))
 
 
@@ -1456,7 +1454,6 @@ def _q_ppr3(spark, sf_dir):
     """Personalized PageRank (random walk with restart from 3 seeds), 3
     synchronous sweeps — teleport and dangling mass flow to the seeds."""
     res = run_pagerank(mod_edges(spark, sf_dir), tol=0.0, max_iter=3,
-                       engine_kwargs={"salt_skew": False},
                        personalize=list(PPR_SEEDS))
     return res.state.select("vid", F.round("value", 6).alias("rank"))
 
@@ -1468,22 +1465,18 @@ def _q_pagerank_warm_mod(spark, sf_dir):
     _pagerank_warm_sql's."""
     e = mod_edges(spark, sf_dir)
     base = e.filter((F.col("src") + F.col("dst") * 3) % 5 != 0)
-    prev = run_pagerank(base, tol=0.0, max_iter=2,
-                        engine_kwargs={"salt_skew": False})
-    res = run_pagerank(e, tol=0.0, max_iter=2, init_ranks=prev.state,
-                       engine_kwargs={"salt_skew": False})
+    prev = run_pagerank(base, tol=0.0, max_iter=2)
+    res = run_pagerank(e, tol=0.0, max_iter=2, init_ranks=prev.state)
     return res.state.select("vid", F.round("value", 6).alias("rank"))
 
 
 def _q_pagerank_minigraph3(spark, sf_dir):
-    res = run_pagerank(mod_edges(spark, sf_dir), variant="minigraph", max_iter=3,
-                       engine_kwargs={"salt_skew": False})
+    res = run_pagerank(mod_edges(spark, sf_dir), variant="minigraph", max_iter=3)
     return res.state.select("vid", F.round("value", 6).alias("rank"))
 
 
 def _q_lpa2(spark, sf_dir):
-    res = run_lpa(mod_edges(spark, sf_dir), max_iter=2,
-                  engine_kwargs={"salt_skew": False})
+    res = run_lpa(mod_edges(spark, sf_dir), max_iter=2)
     return res.state.select("vid", F.col("value").alias("label"))
 
 
@@ -1492,8 +1485,7 @@ def _q_modularity(spark, sf_dir):
     graph — the community-quality score next to the labels themselves."""
     from .plans.modularity import modularity
 
-    res = run_lpa(mod_edges(spark, sf_dir), max_iter=2,
-                  engine_kwargs={"salt_skew": False})
+    res = run_lpa(mod_edges(spark, sf_dir), max_iter=2)
     labels = res.state.select("vid", F.col("value").alias("label"))
     q = modularity(mod_edges(spark, sf_dir), labels)
     return q.select(F.round("modularity", 6).alias("modularity"))
@@ -1529,8 +1521,7 @@ def _q_conductance(spark, sf_dir):
     modularity key scores — cut / min(vol, 2m - vol) per label."""
     from .plans.modularity import conductance
 
-    res = run_lpa(mod_edges(spark, sf_dir), max_iter=2,
-                  engine_kwargs={"salt_skew": False})
+    res = run_lpa(mod_edges(spark, sf_dir), max_iter=2)
     labels = res.state.select("vid", F.col("value").alias("label"))
     phi = conductance(mod_edges(spark, sf_dir), labels)
     return phi.select("label", "cut", "vol",
@@ -1628,7 +1619,7 @@ GROUP BY g.dst
 
 
 def _q_wcc_snr(spark, sf_dir):
-    res = run_wcc(snr_edges(spark, sf_dir), engine_kwargs={"salt_skew": False})
+    res = run_wcc(snr_edges(spark, sf_dir))
     return component_sizes(res.state)
 
 
@@ -1642,7 +1633,7 @@ def _q_wcc_csr_snr(spark, sf_dir):
 def _q_bfs_mod(spark, sf_dir):
     e = mod_edges(spark, sf_dir)
     root = e.select(F.least(F.min("src"), F.min("dst")).alias("r")).collect()[0]["r"]
-    res = run_bfs(e, root=int(root), engine_kwargs={"salt_skew": False})
+    res = run_bfs(e, root=int(root))
     return res.state.filter(F.col("value").isNotNull()).select(
         "vid", F.col("value").alias("dist")
     )
@@ -1671,7 +1662,7 @@ def _q_sssp_weighted_mod(spark, sf_dir):
         "w", (F.lit(1) + (F.col("src") * 31 + F.col("dst")) % 9).cast("long")
     )
     root = e.select(F.least(F.min("src"), F.min("dst")).alias("r")).collect()[0]["r"]
-    res = run_bfs(e, root=int(root), weight_col="w", engine_kwargs={"salt_skew": False})
+    res = run_bfs(e, root=int(root), weight_col="w")
     return res.state.filter(F.col("value").isNotNull()).select(
         "vid", F.col("value").alias("dist")
     )
@@ -2523,7 +2514,7 @@ def _decode_video_real_sql(n: int = N_REAL_VIDEO, seed: int = _REAL_VIDEO_SEED) 
 def _q_coloring_mod(spark, sf_dir):
     from .plans.coloring import run_coloring
 
-    res = run_coloring(mod_edges(spark, sf_dir), engine_kwargs={"salt_skew": False})
+    res = run_coloring(mod_edges(spark, sf_dir))
     # the engine counts the final no-conflict sweep; the NumPy derivation
     # counts only rounds that changed a color — drift in either rule now
     # surfaces as THIS loud error, not a confusing 6-dp oracle mismatch
@@ -2540,8 +2531,7 @@ def _q_coloring_mod(spark, sf_dir):
 # to-convergence variants — exact oracles via deterministic unrolling
 # (see build_oracle_sql comments); also covered by NumPy oracles in pytest
 def _q_pagerank_converged(spark, sf_dir):
-    res = run_pagerank(mod_edges(spark, sf_dir), tol=1e-6, max_iter=200,
-                       engine_kwargs={"salt_skew": False})
+    res = run_pagerank(mod_edges(spark, sf_dir), tol=1e-6, max_iter=200)
     from .oracle import pagerank_converged_sweeps
 
     want = pagerank_converged_sweeps(_mod_edges_np(sf_dir))
@@ -2553,7 +2543,7 @@ def _q_pagerank_converged(spark, sf_dir):
 
 
 def _q_wcc_seq_converged(spark, sf_dir):
-    res = run_wcc(events_seq_edges(spark, sf_dir), engine_kwargs={"salt_skew": False})
+    res = run_wcc(events_seq_edges(spark, sf_dir))
     return component_sizes(res.state)
 
 
@@ -2577,9 +2567,8 @@ def _q_wcc_incremental_snr(spark, sf_dir):
         (F.col("n_nationkey").cast("long") + 100).alias("src"),
         F.col("n_regionkey").cast("long").alias("dst"),
     )
-    prev = run_wcc(sup, engine_kwargs={"salt_skew": False})
-    res = run_wcc_incremental(sup, nat, prev.state,
-                              engine_kwargs={"salt_skew": False})
+    prev = run_wcc(sup)
+    res = run_wcc_incremental(sup, nat, prev.state)
     return component_sizes(res.state)
 
 
@@ -2747,9 +2736,8 @@ def _q_bfs_decremental_mod(spark, sf_dir):
     e = mod_edges(spark, sf_dir)
     dele = e.filter((F.col("src") * 5 + F.col("dst")) % 7 == 0)
     root = e.select(F.least(F.min("src"), F.min("dst")).alias("r")).collect()[0]["r"]
-    prev = run_bfs(e, root=int(root), engine_kwargs={"salt_skew": False})
-    res = run_bfs_decremental(e, dele, prev.state, root=int(root),
-                              engine_kwargs={"salt_skew": False})
+    prev = run_bfs(e, root=int(root))
+    res = run_bfs_decremental(e, dele, prev.state, root=int(root))
     return res.state.filter(F.col("value").isNotNull()).select(
         "vid", F.col("value").alias("dist")
     )
@@ -2784,9 +2772,8 @@ def _q_wcc_decremental_snr(spark, sf_dir):
         (F.col("src") >= 100) & (F.col("src") < 125) & (F.col("dst") < 5)
         & ((F.col("src") - 100) % 5 == 2)
     )
-    prev = run_wcc(full, engine_kwargs={"salt_skew": False})
-    res = run_wcc_decremental(full, deleted, prev.state,
-                              engine_kwargs={"salt_skew": False})
+    prev = run_wcc(full)
+    res = run_wcc_decremental(full, deleted, prev.state)
     return component_sizes(res.state)
 
 
@@ -2887,10 +2874,9 @@ def _q_sssp_incremental_mod(spark, sf_dir):
     pred = (F.col("src") + F.col("dst") * 3) % 5 == 0
     base, delta = e.filter(~pred), e.filter(pred)
     root = e.select(F.least(F.min("src"), F.min("dst")).alias("r")).collect()[0]["r"]
-    prev = run_bfs(base, root=int(root), weight_col="w",
-                   engine_kwargs={"salt_skew": False})
+    prev = run_bfs(base, root=int(root), weight_col="w")
     res = run_bfs_incremental(base, delta, prev.state, root=int(root),
-                              weight_col="w", engine_kwargs={"salt_skew": False})
+                              weight_col="w")
     return res.state.filter(F.col("value").isNotNull()).select(
         "vid", F.col("value").alias("dist")
     )
@@ -2918,9 +2904,8 @@ def _q_bfs_incremental_mod(spark, sf_dir):
     delta = e.filter((F.col("src") + F.col("dst")) % 5 == 0)
     base = e.filter((F.col("src") + F.col("dst")) % 5 != 0)
     root = e.select(F.least(F.min("src"), F.min("dst")).alias("r")).collect()[0]["r"]
-    prev = run_bfs(base, root=int(root), engine_kwargs={"salt_skew": False})
-    res = run_bfs_incremental(base, delta, prev.state, root=int(root),
-                              engine_kwargs={"salt_skew": False})
+    prev = run_bfs(base, root=int(root))
+    res = run_bfs_incremental(base, delta, prev.state, root=int(root))
     return res.state.filter(F.col("value").isNotNull()).select(
         "vid", F.col("value").alias("dist")
     )

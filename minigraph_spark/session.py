@@ -32,9 +32,9 @@ class iterative_confs:
     count (measured in-sandbox: 64M-edge PageRank at local[32] runs ~6s/iter
     with AQE off vs 8-53s/iter, wildly variable, with AQE on). The loop's
     shapes are static — partition count fixed by prepartition_edges, hub skew
-    handled by explicit salting (operators/partition.py), so AQE buys nothing
-    there. This scopes AQE off for the loop and restores the session default
-    after, mirroring how the reference fixes its fragment plan once at
+    absorbed by the combine's map-side partial aggregation, so AQE buys
+    nothing there. This scopes AQE off for the loop and restores the session
+    default after, mirroring how the reference fixes its fragment plan once at
     partition time rather than re-planning per superstep
     (tools/graph_partition.cpp:98-134).
     """

@@ -4,7 +4,7 @@ plans into plans/r06/<name>_<suffix>.txt (judge deliverable: plan evidence
 for every query touched this round).
 
 For superstep algorithms the interesting plan is ONE superstep's plan — the
-engine's MG_EXPLAIN hook prints superstep window k's physical plan; this
+engine's MG_EXPLAIN hook prints superstep k's physical plan; this
 script redirects stdout around the run to the target file.
 
 Usage: python scripts/capture_plans.py <suffix> [names...]
@@ -58,7 +58,7 @@ def main() -> None:
             fh.write(text)
         print(f"wrote {path} ({len(text.splitlines())} lines)", file=sys.stderr)
 
-    # superstep window 1 = steady-state shape (window 0 still reads the init)
+    # superstep 1 = steady-state shape (superstep 0 still reads the init)
     ss._EXPLAIN = 1
     hits_mod._EXPLAIN = 1
 

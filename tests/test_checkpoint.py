@@ -15,6 +15,7 @@ import pandas as pd
 from minigraph_spark import checkpoint as ckpt
 from minigraph_spark.fixtures import make_rmat_edges_np
 from minigraph_spark.operators.csr import run_wcc_csr
+from minigraph_spark.plans.bfs import run_bfs
 from minigraph_spark.plans.pagerank import run_pagerank
 from minigraph_spark.plans.wcc import run_wcc
 
@@ -119,6 +120,29 @@ def test_wcc_csr_resume_exact(spark, tmp_path):
         ),
         killed_at=5,
     )
+
+
+def test_resume_refuses_another_algos_snapshots(spark, tmp_path):
+    """A checkpoint_dir holding WCC snapshots is not a BFS start state: the
+    BFS run must refuse it, naming both algorithms, and leave the WCC
+    snapshots resumable."""
+    import pytest
+
+    e = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11)], "src long, dst long"
+    )
+    ck = str(tmp_path / "mixed_ck")
+    run_wcc(e, checkpoint_dir=ck, engine_kwargs=LOOP)
+    newest = ckpt.latest(ck)
+    assert newest is not None
+    with pytest.raises(ValueError, match=r"'wcc'.*'bfs'"):
+        run_bfs(e, root=0, checkpoint_dir=ck, engine_kwargs=LOOP)
+    assert ckpt.latest(ck) == newest
+    assert ckpt.load_snapshot(spark, ck, "wcc")[0] == newest[0]
+    # a fresh dir resumes nothing: BFS runs from its own init
+    res = run_bfs(e, root=0, checkpoint_dir=str(tmp_path / "bfs_ck"),
+                  engine_kwargs=LOOP)
+    assert _vals(res.state) == {0: 0, 1: 1, 2: 2, 3: 3, 4: 4, 10: None, 11: None}
 
 
 def _snapshot_layout_and_lineage(spark, tmp_path, engine_kwargs):

@@ -88,7 +88,7 @@ def test_bfs_csr_matches_run_bfs_and_weighted(spark):
     e = make_rmat_edges(spark, 7, 600, seed=13)
     root = int(e.agg(F.min("src")).collect()[0][0])
     got = {r["vid"]: r["value"] for r in run_bfs_csr(e, root, num_partitions=4).state.collect()}
-    want = {r["vid"]: r["value"] for r in run_bfs(e, root, engine_kwargs={"salt_skew": False}).state.collect()}
+    want = {r["vid"]: r["value"] for r in run_bfs(e, root).state.collect()}
     assert got == want
 
     ew = e.withColumn("w", (F.lit(1) + (F.col("src") * 31 + F.col("dst")) % 9).cast("long"))
@@ -98,7 +98,7 @@ def test_bfs_csr_matches_run_bfs_and_weighted(spark):
     }
     want_w = {
         r["vid"]: r["value"]
-        for r in run_bfs(ew, root, weight_col="w", engine_kwargs={"salt_skew": False}).state.collect()
+        for r in run_bfs(ew, root, weight_col="w").state.collect()
     }
     assert got_w == want_w
 
@@ -113,7 +113,7 @@ def test_bfs_csr_range_partition_cuts_rounds_on_path(spark):
     L = 60
     path = spark.createDataFrame([(i, i + 1) for i in range(L)], "src long, dst long")
     csr = run_bfs_csr(path, root=0, num_partitions=4, partition="range")
-    plain = run_bfs(path, root=0, engine_kwargs={"salt_skew": False})
+    plain = run_bfs(path, root=0)
     got = {r["vid"]: r["value"] for r in csr.state.collect()}
     assert got == {i: i for i in range(L + 1)}
     assert csr.converged and plain.converged

@@ -201,14 +201,14 @@ def test_engine_reuse_wcc_then_lpa_and_coloring(spark):
     arr = make_rmat_edges_np(power=7, num_edges=400, seed=23)
     edges = _spark_edges(spark, arr)
 
-    eng = SuperstepEngine(symmetrize(edges), salt_skew=False)
+    eng = SuperstepEngine(symmetrize(edges))
     wcc_shared = run_wcc(edges, engine=eng)
     lpa_shared = run_lpa(edges, max_iter=5, engine=eng)
     eng.close()
     assert labels_dict(wcc_shared.state) == oracle.wcc_labels(arr)
     assert labels_dict(lpa_shared.state) == oracle.lpa_labels(arr, max_iter=5)
 
-    ceng = SuperstepEngine(canonical_edges(edges), salt_skew=False)
+    ceng = SuperstepEngine(canonical_edges(edges))
     c1 = run_coloring(edges, engine=ceng)
     c2 = run_coloring(edges, engine=ceng)
     assert labels_dict(c1.state) == labels_dict(c2.state)
@@ -281,12 +281,11 @@ def test_bfs_decremental_deep_cascade_round_cap(spark):
     k = 20
     arr = np.array([(i, i + 1) for i in range(k)], dtype=np.int64)
     edges = _spark_edges(spark, arr)
-    prev = run_bfs(edges, root=0, engine_kwargs={"salt_skew": False})
+    prev = run_bfs(edges, root=0)
     dele = _spark_edges(spark, arr[10:11])  # cut (10, 11): 9-deep cascade
     want = {i: i for i in range(11)}  # 0..10 reachable; 11..19 NULL
     for cap in (8, None):
         res = run_bfs_decremental(edges, dele, prev.state, root=0,
-                                  engine_kwargs={"salt_skew": False},
                                   max_support_rounds=cap)
         got = {k2: v for k2, v in labels_dict(res.state).items() if v is not None}
         assert got == want, f"max_support_rounds={cap}: {got}"
@@ -316,11 +315,10 @@ def test_bfs_sssp_decremental_equals_batch_on_remaining(spark):
     # unit BFS — pin BOTH code paths: fallback disabled (the localized
     # tight-parent support counting must be exact on its own) and fallback
     # forced (the batch-regret bound must produce the identical state)
-    prev = run_bfs(edges, root=root, engine_kwargs={"salt_skew": False})
+    prev = run_bfs(edges, root=root)
     want = oracle.bfs_dist(remaining, root)
     for frac in (None, 0.0, 0.5):
         res = run_bfs_decremental(edges, dele, prev.state, root=root,
-                                  engine_kwargs={"salt_skew": False},
                                   batch_fallback_fraction=frac)
         got = {k: v for k, v in labels_dict(res.state).items() if v is not None}
         assert got == want, f"batch_fallback_fraction={frac}"
@@ -329,10 +327,8 @@ def test_bfs_sssp_decremental_equals_batch_on_remaining(spark):
     wexpr = "(1 + (src * 31 + dst) % 9)"
     we = edges.selectExpr("src", "dst", f"cast({wexpr} as long) as w")
     wd = dele.selectExpr("src", "dst", f"cast({wexpr} as long) as w")
-    prev_w = run_bfs(we, root=root, weight_col="w",
-                     engine_kwargs={"salt_skew": False})
-    res_w = run_bfs_decremental(we, wd, prev_w.state, root=root, weight_col="w",
-                                engine_kwargs={"salt_skew": False})
+    prev_w = run_bfs(we, root=root, weight_col="w")
+    res_w = run_bfs_decremental(we, wd, prev_w.state, root=root, weight_col="w")
     got_w = {k: v for k, v in labels_dict(res_w.state).items() if v is not None}
     trip = [(int(s), int(d), int(1 + (s * 31 + d) % 9)) for s, d in remaining]
     assert got_w == oracle.sssp_dist(trip, root)

@@ -49,24 +49,36 @@ def test_pagerank_minigraph_rmat(spark):
     _assert_allclose(labels_dict(res.state), want)
 
 
-def test_pagerank_warm_start_matches_and_saves_iterations(spark):
+# the small test graphs run in one-fragment mode at the default width;
+# pinning two partitions keeps the same checks on the superstep loop
+LOOP = {"num_partitions": 2}
+
+
+def _pagerank_warm_start(spark, engine_kwargs):
     """IncEval-style warm start: converge on a graph, add edges, restart
     from the old ranks — same fixpoint (allclose), fewer sweeps."""
     arr = make_rmat_edges_np(power=7, num_edges=600, seed=9)
     mask = (arr[:, 0] + arr[:, 1]) % 10 == 0
     base, full = arr[~mask], arr
-    prev = run_pagerank(_spark_edges(spark, base), tol=1e-9, max_iter=300)
-    cold = run_pagerank(_spark_edges(spark, full), tol=1e-9, max_iter=300)
-    warm = run_pagerank(
-        _spark_edges(spark, full), tol=1e-9, max_iter=300, init_ranks=prev.state
-    )
+    kw = {"tol": 1e-9, "max_iter": 300, "engine_kwargs": engine_kwargs}
+    prev = run_pagerank(_spark_edges(spark, base), **kw)
+    cold = run_pagerank(_spark_edges(spark, full), **kw)
+    warm = run_pagerank(_spark_edges(spark, full), init_ranks=prev.state, **kw)
     _assert_allclose(labels_dict(warm.state), labels_dict(cold.state), atol=1e-6)
     assert warm.iterations < cold.iterations
     # the warm-started vector is still a probability distribution
     assert abs(sum(labels_dict(warm.state).values()) - 1.0) < 1e-6
 
 
-def test_pagerank_personalized_rmat(spark):
+def test_pagerank_warm_start_matches_and_saves_iterations(spark):
+    _pagerank_warm_start(spark, {})
+
+
+def test_pagerank_warm_start_matches_and_saves_iterations_loop(spark):
+    _pagerank_warm_start(spark, LOOP)
+
+
+def _pagerank_personalized(spark, engine_kwargs):
     """PPR == the NumPy random-walk-with-restart oracle: teleport and
     dangling mass flow to the seeds; non-seed mass decays to the seeds'
     neighborhoods. Also checks mass conservation and the variant guard."""
@@ -75,35 +87,47 @@ def test_pagerank_personalized_rmat(spark):
     arr = make_rmat_edges_np(power=7, num_edges=600, seed=3)
     seeds = [int(arr[0, 0]), int(arr[1, 1]), int(arr[5, 0])]
     res = run_pagerank(_spark_edges(spark, arr), tol=0.0, max_iter=4,
-                       personalize=seeds)
+                       personalize=seeds, engine_kwargs=engine_kwargs)
     want = oracle.pagerank_personalized(arr, seeds, iters=4)
     _assert_allclose(labels_dict(res.state), want)
     assert abs(sum(labels_dict(res.state).values()) - 1.0) < 1e-9
 
     with pytest.raises(ValueError, match="personalize"):
         run_pagerank(_spark_edges(spark, arr), variant="minigraph",
-                     personalize=seeds)
+                     personalize=seeds, engine_kwargs=engine_kwargs)
     with pytest.raises(ValueError, match="personalize"):
-        run_pagerank(_spark_edges(spark, arr), personalize=[])
+        run_pagerank(_spark_edges(spark, arr), personalize=[],
+                     engine_kwargs=engine_kwargs)
 
 
-def test_weighted_pagerank_uniform_weights_match_unweighted(spark):
-    import numpy as np
+def test_pagerank_personalized_rmat(spark):
+    _pagerank_personalized(spark, {})
+
+
+def test_pagerank_personalized_rmat_loop(spark):
+    _pagerank_personalized(spark, LOOP)
+
+
+def _weighted_pagerank_uniform_weights(spark, engine_kwargs):
     import pandas as pd
-
-    from minigraph_spark.fixtures import make_rmat_edges_np
-    from minigraph_spark.plans.pagerank import run_pagerank
 
     arr = make_rmat_edges_np(power=6, num_edges=300, seed=5)
     e = spark.createDataFrame(
         pd.DataFrame(arr, columns=["src", "dst"]), "src long, dst long"
     )
     ew = e.selectExpr("src", "dst", "CAST(3 AS DOUBLE) AS w")  # uniform
-    plain = {r["vid"]: r["value"]
-             for r in run_pagerank(e, tol=0.0, max_iter=4).state.collect()}
+    kw = {"tol": 0.0, "max_iter": 4, "engine_kwargs": engine_kwargs}
+    plain = {r["vid"]: r["value"] for r in run_pagerank(e, **kw).state.collect()}
     weighted = {r["vid"]: r["value"]
-                for r in run_pagerank(ew, tol=0.0, max_iter=4,
-                                      weight_col="w").state.collect()}
+                for r in run_pagerank(ew, weight_col="w", **kw).state.collect()}
     assert set(plain) == set(weighted)
     for v in plain:
         assert abs(plain[v] - weighted[v]) < 1e-12
+
+
+def test_weighted_pagerank_uniform_weights_match_unweighted(spark):
+    _weighted_pagerank_uniform_weights(spark, {})
+
+
+def test_weighted_pagerank_uniform_weights_match_unweighted_loop(spark):
+    _weighted_pagerank_uniform_weights(spark, LOOP)

@@ -191,7 +191,7 @@ def test_chain_fixture_structure_and_wcc(spark, tmp_path):
     p = ensure_chain_parquet(19 * 50, chain_len=20, directory=str(tmp_path))
     edges = spark.read.parquet(p)
     assert edges.count() == 19 * 50
-    res = run_wcc(edges, engine_kwargs={"salt_skew": False})
+    res = run_wcc(edges)
     sizes = [r["size"] for r in component_sizes(res.state).collect()]
     assert len(sizes) == 50 and set(sizes) == {20}
     # determinism: same parameters -> identical content hash

@@ -138,7 +138,7 @@ def test_wcc_engine_reuse(spark):
     from minigraph_spark.operators.superstep import SuperstepEngine
 
     arr = make_rmat_edges_np(power=7, num_edges=400, seed=17)
-    eng = SuperstepEngine(symmetrize(_spark_edges(spark, arr)), salt_skew=False)
+    eng = SuperstepEngine(symmetrize(_spark_edges(spark, arr)))
     r1 = run_wcc(_spark_edges(spark, arr), engine=eng)
     r2 = run_wcc(_spark_edges(spark, arr), engine=eng)
     assert labels_dict(r1.state) == labels_dict(r2.state) == oracle.wcc_labels(arr)
@@ -158,7 +158,7 @@ def test_engine_folds_marked_dedup_closures(spark):
     edges = _spark_edges(spark, arr)
 
     sym = symmetrize(edges)
-    eng = SuperstepEngine(sym, salt_skew=False)
+    eng = SuperstepEngine(sym)
     assert eng.symmetric  # inferred from the marker
     assert sorted(map(tuple, eng.edges.collect())) == sorted(
         map(tuple, sym.collect())
@@ -171,7 +171,7 @@ def test_engine_folds_marked_dedup_closures(spark):
     eng.close()
 
     can = canonicalize(edges)
-    ceng = SuperstepEngine(can, salt_skew=False)
+    ceng = SuperstepEngine(can)
     assert not ceng.symmetric  # canonical closures are one-directional
     assert sorted(map(tuple, ceng.edges.collect())) == sorted(
         map(tuple, can.collect())
@@ -202,9 +202,8 @@ def test_wcc_decremental_equals_batch_on_remaining(spark):
         ),
         schema="src long, dst long",
     )
-    prev = run_wcc(edges, engine_kwargs={"salt_skew": False})
-    res = run_wcc_decremental(edges, dele, prev.state,
-                              engine_kwargs={"salt_skew": False})
+    prev = run_wcc(edges)
+    res = run_wcc_decremental(edges, dele, prev.state)
 
     # NumPy ground truth on the remaining undirected edge set
     import numpy as np
