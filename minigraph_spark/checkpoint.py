@@ -9,6 +9,8 @@ vdata_only=true — the per-superstep flush) and its StatisticInfo sidecars
                                         # pruned write, the vdata_only analog
     {dir}/iter=00007/lineage.json       # iteration, counts, per-partition
                                         # row counts + value fingerprints
+                                        # + the engine's algo, edge rows,
+                                        # mode and width
     {dir}/metrics.jsonl                 # one row per iteration (appended)
 
 Any run is resumable mid-convergence: `latest(dir)` returns the newest
@@ -94,24 +96,32 @@ def latest(base_dir: str) -> tuple[int, str] | None:
 
 
 def load_snapshot(
-    spark: SparkSession, base_dir: str, algo: str
+    spark: SparkSession, base_dir: str, algo: str, edge_rows: int
 ) -> tuple[int, DataFrame] | None:
     """Newest complete snapshot -> (iteration, state), else None. A
-    snapshot whose manifest names another algo raises ValueError: its state
-    is not a valid start for this run. A manifest with no algo key loads.
+    snapshot whose manifest names another algo, or another edge-row count
+    than ``edge_rows`` (the resuming engine's), raises ValueError: its state
+    is not a valid start for this run. A manifest without either key loads.
 
-    Only the algo is checked, not the input: a base_dir must belong to one
-    run's input (same edges and plan parameters, e.g. BFS root), or the run
-    resumes from a state computed on another graph."""
+    Plan parameters are not checked: a BFS with another root over the same
+    edges resumes the old distances, so a base_dir must belong to one run's
+    input, not only to one algorithm and edge count."""
     found = latest(base_dir)
     if found is None:
         return None
     it, path = found
     with open(os.path.join(os.path.dirname(path), "lineage.json")) as f:
-        wrote = json.load(f).get("algo", algo)
+        manifest = json.load(f)
+    wrote = manifest.get("algo", algo)
     if wrote != algo:
         raise ValueError(
             f"{base_dir} holds {wrote!r} snapshots; "
             f"cannot resume {algo!r} from them"
+        )
+    rows = manifest.get("edge_rows", edge_rows)
+    if rows != edge_rows:
+        raise ValueError(
+            f"{base_dir} holds snapshots over {rows} edge rows; "
+            f"cannot resume a run over {edge_rows} edge rows from them"
         )
     return it, spark.read.parquet(path)

@@ -189,7 +189,7 @@ def run_wcc_csr(
     fewer global rounds on long-path graphs. One SuperstepEngine run on the
     same engine run_wcc builds: each round is fragment_scatter over
     hash(src) fragments, the min-combine, and run_wcc's min + pointer-jump
-    apply. An undirected graph that fits one fragment takes the engine's
+    apply. An undirected graph on a width-1 engine takes the engine's
     one-fragment path. num_partitions=None means the engine's width rule;
     checkpoint_dir gives snapshots and resume as in run_wcc.
     """

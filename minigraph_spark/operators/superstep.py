@@ -46,7 +46,8 @@ from .. import checkpoint as ckpt
 from ..session import iterative_confs
 from .partition import make_mode_agg, make_salted_agg, prepartition_edges
 
-# debug aid: MG_EXPLAIN=<k> prints the physical plan of superstep k
+# debug aid: MG_EXPLAIN=<k> prints the physical plan of superstep k (on the
+# one-fragment path, of the window that holds iteration k)
 _EXPLAIN = int(__import__("os").environ.get("MG_EXPLAIN", "-1") or -1)
 
 ScatterFn = Callable[[DataFrame, DataFrame, dict], DataFrame]
@@ -219,9 +220,10 @@ class SuperstepEngine:
     checkpoint_dir / checkpoint_every : durable snapshot cadence; None
         disables durable snapshots (lineage is still truncated in memory).
         A run whose checkpoint_dir holds snapshots resumes from the newest
-        one, which must have been written by the same algo (else
-        ValueError). Only the algo is checked: a dir must belong to one
-        run's input, not only to one algorithm.
+        one, which must have been written by the same algo over the same
+        edge-row count (else ValueError). Plan parameters are not checked:
+        a BFS from another root over the same edges still resumes the old
+        distances, so a dir must belong to one run's input.
     state_storage : "deser" (default) stores per-iteration state blocks
         deserialized (fastest sweep; the level every BASELINE.md number was
         measured at). "ser" stores them MEMORY_AND_DISK_SER — ~3-5x smaller
@@ -230,19 +232,24 @@ class SuperstepEngine:
         chains graph carries 269M vertices, and the deserialized state
         blocks alone exceed a 48g driver heap — measured OOM, round 4).
 
-    One-fragment mode (``one_fragment``, read-only): chosen at build time
-    when the exact edge-row count observed on the partitioning job is at
-    most TARGET_ROWS_PER_PARTITION and the caller did not pin
-    num_partitions > 1. The whole graph is then one fragment with no
-    border vertices, so PEval alone is the answer (wcc_vc_batch.cpp:139-148)
-    and a superstep needs no exchange. run() then executes a plan that
-    ships a FragmentKernel as one Spark job per window: the cached edges
-    and the state are cogrouped into ONE applyInPandas task, the kernel
-    iterates in NumPy, and the new state (same schema as the loop's:
-    vid, value, active[, outdeg]) comes back localCheckpointed. A window
+    One-fragment mode (``one_fragment``, read-only): exactly when the
+    engine's width is 1, chosen by the width rule or pinned. One task then
+    holds every edge, so the loop would gain no parallelism and pay one
+    job per superstep; the whole graph is one fragment with no border
+    vertices, so PEval alone is the answer (wcc_vc_batch.cpp:139-148). An
+    automatic width of 1 implies at most 2 * TARGET_ROWS_PER_PARTITION =
+    65 536 edge rows (the width rule's 2x band), which bounds the task's
+    memory; a pinned 1 or a session shuffle width of 1 has no such bound.
+    run() then executes a plan that ships a FragmentKernel as one Spark
+    job per window: the cached edges and the state are cogrouped into ONE
+    applyInPandas task, the kernel iterates in NumPy, and the new state
+    (same schema as the loop's: vid, value, active[, outdeg]) comes back
+    localCheckpointed. A window
     is the whole run, or with checkpoint_dir the stretch up to the next
     checkpoint_every boundary; snapshots, metrics.jsonl rows and
-    IterationMetrics are the loop's, one per iteration. Kernels ship with:
+    IterationMetrics are the loop's, one per iteration. Every
+    metrics.jsonl row and lineage.json records which path ran (``mode``:
+    "fragment" or "loop") and ``num_partitions``. Kernels ship with:
 
     - undirected WCC, batch and incremental: one iteration is the local
       min-label fixpoint (csr.make_minplus_block), so the run converges
@@ -331,8 +338,8 @@ class SuperstepEngine:
         _ids0 = self._persistent_ids()
         # keep any extra columns the caller selected (e.g. SSSP weights) —
         # scatter functions see self.edges as-is; only (src, dst) is required
-        # the edge count (for the size-aware width and the one-fragment
-        # rule) rides the prepartition materialization job as an observed
+        # the edge count (for the size-aware width and the snapshots' resume
+        # check) rides the prepartition materialization job as an observed
         # metric — no separate scan of the cached E rows (guide §1.2:
         # fewer passes)
         _n_obs = Observation()
@@ -353,9 +360,6 @@ class SuperstepEngine:
         )
         self._edge_rdd_ids = self._persistent_ids() - _ids0
         n_edges = int(_n_obs.get["n"])
-        self._one_fragment = n_edges <= self.TARGET_ROWS_PER_PARTITION and (
-            num_partitions is None or num_partitions <= 1
-        )
         if num_partitions is None:
             # corrective re-partition (one extra cached-side shuffle) only
             # when the estimated width missed the observed ideal by >2x in
@@ -370,6 +374,7 @@ class SuperstepEngine:
                 self._edge_rdd_ids = small_ids
                 n = ideal
         self.num_partitions = n
+        self.n_edges = n_edges
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = checkpoint_every
         if state_storage not in ("deser", "ser"):
@@ -415,8 +420,8 @@ class SuperstepEngine:
     @property
     def one_fragment(self) -> bool:
         """True when run() executes kernel-carrying plans as one Arrow task
-        per window (see the class docstring for the rule)."""
-        return self._one_fragment
+        per window: exactly when the width is 1 (see the class docstring)."""
+        return self.num_partitions == 1
 
     def vertices(self) -> DataFrame:
         """Distinct vertex ids of the edge table (A8 analog:
@@ -485,9 +490,12 @@ class SuperstepEngine:
 
     def _resume_point(self, init_state: DataFrame, algo: str):
         """(first iteration, its input state): the newest complete snapshot
-        of ``algo`` + 1 when checkpoint_dir holds one, else (0, init_state)."""
+        of ``algo`` over this engine's edge rows + 1 when checkpoint_dir
+        holds one, else (0, init_state)."""
         if self.checkpoint_dir:
-            found = ckpt.load_snapshot(self.spark, self.checkpoint_dir, algo)
+            found = ckpt.load_snapshot(
+                self.spark, self.checkpoint_dir, algo, self.n_edges
+            )
             if found is not None:
                 return found[0] + 1, found[1]
         return 0, init_state
@@ -495,19 +503,25 @@ class SuperstepEngine:
     def _finish_window(
         self, result: SuperstepResult, state: DataFrame, first: int,
         changed: list[int], t0: float, converged: bool, algo: str,
+        mode: str,
     ) -> None:
         """Record one materialized window of len(changed) iterations
         starting at ``first``: its durable snapshot when due, one
         IterationMetrics (and metrics.jsonl row) per iteration, and the
-        result's state/iteration/convergence fields."""
+        result's state/iteration/convergence fields. ``mode`` names the
+        path that ran the window ("fragment" or "loop")."""
         it = first + len(changed) - 1
         checkpointed = False
+        run_info = {"mode": mode, "num_partitions": self.num_partitions}
         if self.checkpoint_dir and (
             it % self.checkpoint_every == self.checkpoint_every - 1 or converged
         ):
             ckpt.write_snapshot(
                 state, self.checkpoint_dir, it,
-                extra={"algo": algo, "num_changed": changed[-1]},
+                extra={
+                    "algo": algo, "num_changed": changed[-1],
+                    "edge_rows": self.n_edges, **run_info,
+                },
             )
             checkpointed = True
         window_sec = time.time() - t0
@@ -522,7 +536,7 @@ class SuperstepEngine:
             )
             result.metrics.append(m)
             if self.checkpoint_dir:
-                ckpt.append_metrics(self.checkpoint_dir, m.__dict__)
+                ckpt.append_metrics(self.checkpoint_dir, {**m.__dict__, **run_info})
         result.state = state
         result.iterations = it + 1
         result.converged = converged
@@ -539,7 +553,8 @@ class SuperstepEngine:
         the kernel there, and localCheckpoint the new state. Windows end at
         checkpoint_every boundaries when checkpoint_dir is set (so the
         snapshots match the loop's), else run to max_iter; every window
-        also ends at convergence."""
+        also ends at convergence. MG_EXPLAIN=k prints the plan of the
+        window that holds iteration k."""
         first, state = self._resume_point(init_state, algo)
         result = SuperstepResult(state=state)
         schema = T.StructType(
@@ -556,13 +571,17 @@ class SuperstepEngine:
             t0 = time.time()
             ids_before = self._persistent_ids()
             obs = Observation()
-            new_state = (
+            window = (
                 self.edges.groupBy(key)
                 .cogroup(state.groupBy(key))
                 .applyInPandas(_fragment_fn(kernel, end - first), schema)
                 .observe(obs, F.max("_stats").alias("stats"))
                 .select(*state.columns)
-                .localCheckpoint(eager=True, storageLevel=self._state_level)
+            )
+            if first <= _EXPLAIN < end:
+                window.explain("formatted")
+            new_state = window.localCheckpoint(
+                eager=True, storageLevel=self._state_level
             )
             stats = obs.get["stats"]
             # an empty graph has no rows to carry the stats: one iteration
@@ -572,7 +591,8 @@ class SuperstepEngine:
             self._free_ids(prev_ids)
             prev_ids = new_ids
             self._finish_window(
-                result, new_state, first, changed, t0, converged, algo
+                result, new_state, first, changed, t0, converged, algo,
+                "fragment",
             )
             state = new_state
             first = result.iterations
@@ -709,7 +729,8 @@ class SuperstepEngine:
             prev_state_ids = new_state_ids
 
             self._finish_window(
-                result, new_state, it, [num_changed], t0, num_changed == 0, algo
+                result, new_state, it, [num_changed], t0, num_changed == 0,
+                algo, "loop",
             )
             state.unpersist()
             state = new_state

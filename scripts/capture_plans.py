@@ -4,7 +4,8 @@ plans into plans/r06/<name>_<suffix>.txt (judge deliverable: plan evidence
 for every query touched this round).
 
 For superstep algorithms the interesting plan is ONE superstep's plan — the
-engine's MG_EXPLAIN hook prints superstep k's physical plan; this
+engine's MG_EXPLAIN hook prints superstep k's physical plan (on a
+one-fragment engine, the plan of the window that holds iteration k); this
 script redirects stdout around the run to the target file.
 
 Usage: python scripts/capture_plans.py <suffix> [names...]

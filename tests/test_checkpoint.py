@@ -17,7 +17,7 @@ from minigraph_spark.fixtures import make_rmat_edges_np
 from minigraph_spark.operators.csr import run_wcc_csr
 from minigraph_spark.plans.bfs import run_bfs
 from minigraph_spark.plans.pagerank import run_pagerank
-from minigraph_spark.plans.wcc import run_wcc
+from minigraph_spark.plans.wcc import run_wcc, run_wcc_decremental
 
 
 def _edges(spark, seed=9):
@@ -138,14 +138,36 @@ def test_resume_refuses_another_algos_snapshots(spark, tmp_path):
     with pytest.raises(ValueError, match=r"'wcc'.*'bfs'"):
         run_bfs(e, root=0, checkpoint_dir=ck, engine_kwargs=LOOP)
     assert ckpt.latest(ck) == newest
-    assert ckpt.load_snapshot(spark, ck, "wcc")[0] == newest[0]
+    assert ckpt.load_snapshot(spark, ck, "wcc", 10)[0] == newest[0]
     # a fresh dir resumes nothing: BFS runs from its own init
     res = run_bfs(e, root=0, checkpoint_dir=str(tmp_path / "bfs_ck"),
                   engine_kwargs=LOOP)
     assert _vals(res.state) == {0: 0, 1: 1, 2: 2, 3: 3, 4: 4, 10: None, 11: None}
 
 
-def _snapshot_layout_and_lineage(spark, tmp_path, engine_kwargs):
+def test_resume_refuses_another_inputs_snapshots(spark, tmp_path):
+    """A checkpoint_dir holding full-graph WCC snapshots is not a start
+    state for the decremental run's subgraph WCC (6 closure rows against
+    10): it must refuse, naming both counts. A resume over the same input
+    still resumes."""
+    import pytest
+
+    e = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11)], "src long, dst long"
+    )
+    dele = spark.createDataFrame([(1, 2)], "src long, dst long")
+    ck = str(tmp_path / "input_ck")
+    prev = run_wcc(e, checkpoint_dir=ck)
+    newest = ckpt.latest(ck)
+    with pytest.raises(ValueError, match=r"10 edge rows.*6 edge rows"):
+        run_wcc_decremental(e, dele, prev.state, checkpoint_dir=ck)
+    assert ckpt.latest(ck) == newest
+    again = run_wcc(e, checkpoint_dir=ck)
+    assert again.metrics[0].iteration == newest[0] + 1
+    assert _vals(again.state) == _vals(prev.state)
+
+
+def _snapshot_layout_and_lineage(spark, tmp_path, engine_kwargs, mode):
     e = _edges(spark).persist()
     ck = str(tmp_path / "lay_ck")
     run_pagerank(e, tol=1e-9, max_iter=4, checkpoint_dir=ck,
@@ -159,17 +181,21 @@ def _snapshot_layout_and_lineage(spark, tmp_path, engine_kwargs):
     assert manifest["partitions"] and all(
         "rows" in p and "fingerprint" in p for p in manifest["partitions"]
     )
+    width = engine_kwargs.get("num_partitions", 1)
+    assert (manifest["mode"], manifest["num_partitions"]) == (mode, width)
+    assert manifest["edge_rows"] == e.count()
     metrics = [json.loads(line) for line in open(os.path.join(ck, "metrics.jsonl"))]
     assert [m["iteration"] for m in metrics] == [0, 1, 2, 3]
     assert [m["checkpointed"] for m in metrics] == [False, True, False, True]
+    assert {(m["mode"], m["num_partitions"]) for m in metrics} == {(mode, width)}
 
 
 def test_snapshot_layout_and_lineage(spark, tmp_path):
-    _snapshot_layout_and_lineage(spark, tmp_path, {})
+    _snapshot_layout_and_lineage(spark, tmp_path, {}, "fragment")
 
 
 def test_snapshot_layout_and_lineage_loop(spark, tmp_path):
-    _snapshot_layout_and_lineage(spark, tmp_path, LOOP)
+    _snapshot_layout_and_lineage(spark, tmp_path, LOOP, "loop")
 
 
 def test_incomplete_snapshot_ignored(spark, tmp_path):

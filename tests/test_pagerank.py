@@ -131,3 +131,21 @@ def test_weighted_pagerank_uniform_weights_match_unweighted(spark):
 
 def test_weighted_pagerank_uniform_weights_match_unweighted_loop(spark):
     _weighted_pagerank_uniform_weights(spark, LOOP)
+
+
+def test_explain_prints_the_fragment_window(spark, tmp_path, monkeypatch, capsys):
+    """MG_EXPLAIN=k on a one-fragment engine prints the plan of the one
+    window that holds iteration k (windows [0, 2) and [2, 4) here), and
+    nothing when no window holds it."""
+    from minigraph_spark.operators import superstep
+
+    e = _spark_edges(spark, make_rmat_edges_np(power=7, num_edges=600, seed=3))
+    kw = {"tol": 0.0, "max_iter": 4, "engine_kwargs": {"checkpoint_every": 2}}
+    monkeypatch.setattr(superstep, "_EXPLAIN", 3)
+    run_pagerank(e, checkpoint_dir=str(tmp_path / "a"), **kw)
+    out = capsys.readouterr().out
+    assert out.count("== Physical Plan ==") == 1
+    assert "FlatMapCoGroupsInPandas" in out
+    monkeypatch.setattr(superstep, "_EXPLAIN", 4)
+    run_pagerank(e, checkpoint_dir=str(tmp_path / "b"), **kw)
+    assert "== Physical Plan ==" not in capsys.readouterr().out

@@ -58,6 +58,8 @@ def _run_all(spark, arr: np.ndarray, width: int | None):
         "lpa": run_lpa(full, max_iter=4, engine=engines["closure"]),
         "pagerank": run_pagerank(full, tol=1e-7, max_iter=100, engine=engines["directed"]),
     }
+    for eng in engines.values():
+        assert eng.one_fragment == (eng.num_partitions == 1)
     modes = {name: eng.one_fragment for name, eng in engines.items()}
     values = {name: labels_dict(res.state) for name, res in out.items()}
     iterations = {name: res.iterations for name, res in out.items() if name != "wcc"}
@@ -98,3 +100,44 @@ def test_csr_path_does_not_depend_on_width(spark, graph):
     for w in WIDTHS:
         assert labels_dict(run_wcc_csr(e, num_partitions=w).state) == labels, w
         assert labels_dict(run_bfs_csr(e, root, num_partitions=w).state) == dist, w
+
+
+def test_one_partition_runs_one_fragment_above_old_row_rule(spark):
+    """One partition means one fragment at any edge count: a pinned width
+    of 1 over ~40k edge rows (above TARGET_ROWS_PER_PARTITION) runs the
+    one-fragment path, and its ranks, iteration counts and labels equal
+    the two-partition loop's and the oracle's."""
+    arr = make_rmat_edges_np(power=13, num_edges=40_000, seed=23)
+    full = _frame(spark, arr).persist()
+
+    def engines(width):
+        return {
+            "closure": SuperstepEngine(symmetrize(full), num_partitions=width),
+            "directed": SuperstepEngine(full, num_partitions=width),
+        }
+
+    one, loop = engines(1), engines(2)
+    for name in one:
+        assert one[name].one_fragment and not loop[name].one_fragment, name
+        assert one[name].n_edges > SuperstepEngine.TARGET_ROWS_PER_PARTITION, name
+    for tol, max_iter in ((0.0, 10), (1e-7, 200)):
+        got, exp = (
+            run_pagerank(full, tol=tol, max_iter=max_iter, engine=e["directed"])
+            for e in (one, loop)
+        )
+        assert got.iterations == exp.iterations, tol
+        a, b = labels_dict(got.state), labels_dict(exp.state)
+        want = oracle.pagerank_standard(arr, tol=tol, max_iter=max_iter)
+        assert a.keys() == b.keys() == want.keys()
+        np.testing.assert_allclose([a[v] for v in b], list(b.values()), rtol=0, atol=1e-9)
+        np.testing.assert_allclose([a[v] for v in want], list(want.values()), rtol=0, atol=1e-6)
+    labels = [labels_dict(run_wcc(full, engine=e["closure"]).state) for e in (one, loop)]
+    assert labels[0] == labels[1] == oracle.wcc_labels(arr)
+    labels = [
+        labels_dict(run_lpa(full, max_iter=5, engine=e["closure"]).state)
+        for e in (one, loop)
+    ]
+    assert labels[0] == labels[1] == oracle.lpa_labels(arr, max_iter=5)
+    for e in (*one.values(), *loop.values()):
+        e.close()
+    full.unpersist()
