@@ -10,7 +10,7 @@ vdata_only=true — the per-superstep flush) and its StatisticInfo sidecars
     {dir}/iter=00007/lineage.json       # iteration, counts, per-partition
                                         # row counts + value fingerprints
                                         # + the engine's algo, edge rows,
-                                        # mode and width
+                                        # edge fingerprint, mode and width
     {dir}/metrics.jsonl                 # one row per iteration (appended)
 
 Any run is resumable mid-convergence: `latest(dir)` returns the newest
@@ -96,16 +96,18 @@ def latest(base_dir: str) -> tuple[int, str] | None:
 
 
 def load_snapshot(
-    spark: SparkSession, base_dir: str, algo: str, edge_rows: int
+    spark: SparkSession, base_dir: str, algo: str, edge_rows: int,
+    edge_fingerprint: int | None,
 ) -> tuple[int, DataFrame] | None:
     """Newest complete snapshot -> (iteration, state), else None. A
-    snapshot whose manifest names another algo, or another edge-row count
-    than ``edge_rows`` (the resuming engine's), raises ValueError: its state
-    is not a valid start for this run. A manifest without either key loads.
+    snapshot whose manifest names another algo, or other edges than the
+    resuming engine's (``edge_rows``, ``edge_fingerprint``), raises
+    ValueError: its state is not a valid start for this run. A manifest
+    without one of these keys loads as far as that key goes.
 
-    Plan parameters are not checked: a BFS with another root over the same
-    edges resumes the old distances, so a base_dir must belong to one run's
-    input, not only to one algorithm and edge count."""
+    Plan parameters (a BFS root, a tolerance) are still not checked: a BFS
+    with another root over the same edges resumes the old distances, so a
+    base_dir must belong to one run, not only to one algorithm and input."""
     found = latest(base_dir)
     if found is None:
         return None
@@ -119,9 +121,11 @@ def load_snapshot(
             f"cannot resume {algo!r} from them"
         )
     rows = manifest.get("edge_rows", edge_rows)
-    if rows != edge_rows:
+    fp = manifest.get("edge_fingerprint", edge_fingerprint)
+    if (rows, fp) != (edge_rows, edge_fingerprint):
         raise ValueError(
-            f"{base_dir} holds snapshots over {rows} edge rows; "
-            f"cannot resume a run over {edge_rows} edge rows from them"
+            f"{base_dir} holds snapshots over {rows} edge rows (fingerprint "
+            f"{fp}); cannot resume a run over {edge_rows} edge rows "
+            f"(fingerprint {edge_fingerprint}) from them"
         )
     return it, spark.read.parquet(path)

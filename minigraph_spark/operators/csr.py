@@ -1,12 +1,11 @@
-"""Per-partition CSR blocks inside vectorized Arrow UDFs, with local
+"""Per-fragment CSR kernels inside vectorized Arrow UDFs, with local
 sub-iterations before each global message exchange.
 
 This is the DataFrame-native port of the reference's fragment pipeline: each
-hash partition of the edge table plays the role of a MiniGraph fragment
-(reference: minigraph/graphs/immutable_csr.h:82-164 CSR layout —
-globalid_by_index / degree / offset / edge sections built by prefix sums);
-the UDF rebuilds the same struct-of-arrays locally from Arrow buffers with
-np.unique / argsort / cumsum, then runs the PEval inner loop
+hash partition of the edge table plays the role of a MiniGraph fragment.
+The UDF lays each fragment out as a superstep.Fragment — the package's one
+CSR layout (immutable_csr.h:82-164), its local ids the np.unique inverse of
+the fragment's endpoints — and runs the PEval inner loop
 (apps/cpp/wcc_vc_batch.cpp:139-148: iterate the kernel to LOCAL fixpoint
 before exchanging border messages) so that one global shuffle round does the
 work of many. On top of the local contraction, each global round applies one
@@ -17,13 +16,12 @@ contiguous-range fragments would contract them locally,
 edge_cut_partitioner.h:251-254; hashed 64-bit vertex ids have no usable
 range locality, so the jump step replaces that).
 
-There is one superstep loop, SuperstepEngine's: run_wcc_csr and run_bfs_csr
-run the fragment kernel as the engine's scatter (fragment_scatter) with the
-min combiner and the plan's own apply, so one round is one Spark job and
-width, checkpoints, block freeing and metrics are the engine's.
-
-The local/global id dance of the reference (immutable_csr.h:319-327,
-SURVEY.md §1.4) is exactly `np.unique(..., return_inverse=True)` here.
+There is one superstep loop, SuperstepEngine's, and one kernel type,
+FragmentKernel: run_wcc_csr and run_bfs_csr run a make_minplus_kernel per
+fragment as the engine's scatter (fragment_scatter), with the min combiner
+and the plan's own apply, and pass the same kernel as the engine's
+one-fragment kernel. One round is one Spark job; width, checkpoints, block
+freeing and metrics are the engine's.
 
 Applicability: local sub-iteration is semantics-preserving only for
 idempotent, commutative, monotone combiners (min/max — WCC, directed
@@ -46,45 +44,25 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .partition import edge_cut_pid
-from .superstep import ScatterFn, SuperstepEngine, SuperstepResult
+from .superstep import (
+    Fragment,
+    FragmentKernel,
+    ScatterFn,
+    SuperstepEngine,
+    SuperstepResult,
+)
 
 
-def build_csr_block(src: np.ndarray, dst: np.ndarray):
-    """Build an in-edge CSR block from COO arrays.
-
-    Returns (verts, offsets, in_src, src_local, dst_local):
-    - verts: sorted distinct global vertex ids in the block
-    - offsets: int64[len(verts)+1] prefix-sum of in-degrees
-    - in_src: local src id of each in-edge, grouped by destination
-    - src_local/dst_local: local ids of the input COO edges
-
-    Parity: the 8-section CSR blob of the reference (immutable_csr.h:82-164)
-    minus the sections Spark makes redundant (membership bitmap, vdata/edata
-    arrays travel as DataFrame columns). localid<->globalid maps
-    (immutable_csr.h:319-327) are `verts` (local->global) and the implicit
-    `return_inverse` (global->local).
-    """
-    verts, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
-    src_local = inv[: src.size]
-    dst_local = inv[src.size :]
-    order = np.argsort(dst_local, kind="stable")
-    in_src = src_local[order]
-    indeg = np.bincount(dst_local, minlength=verts.size)
-    offsets = np.zeros(verts.size + 1, dtype=np.int64)
-    np.cumsum(indeg, out=offsets[1:])
-    return verts, offsets, in_src, src_local, dst_local
-
-
-# distances/labels never exceed this; far below int64 max so transient
+# distances never exceed this; far below int64 max so transient
 # INF + weight sums cannot overflow
 INF64 = 1 << 62
 
 
-def make_minplus_block(delta: str | None, op: str = "min"):
+def make_minplus_kernel(delta: str | None, op: str = "min") -> FragmentKernel:
     """Generic fragment kernel factory — the repo analog of the reference's
     auto-parallelized user kernel surface (auto_map.h:92-120, F(u,v) at
-    :39-43): per fragment, build the CSR block and run a vectorized
-    gather sweep to LOCAL fixpoint before emitting border proposals:
+    :39-43): a vectorized gather sweep over the fragment's in-edge CSR,
+    run to the LOCAL fixpoint (so fixpoint=True):
 
         state[v] = op(state[v], op over in-edges (state[src] + delta))
 
@@ -102,62 +80,54 @@ def make_minplus_block(delta: str | None, op: str = "min"):
     if op not in ("min", "max"):
         raise ValueError(f"op must be 'min' or 'max', got {op!r}")
     ufunc = np.minimum if op == "min" else np.maximum
+    const = {None: 0, "unit": 1}.get(delta)  # else the delta column's weights
+
+    def step(frag: Fragment, value: np.ndarray, cols: dict):
+        w = frag.edge_cols[delta].astype(np.int64) if const is None else const
+        # frag.dst is sorted: each run is one vertex's in-edge segment
+        starts = np.flatnonzero(np.diff(frag.dst, prepend=-1))
+        heads = frag.dst[starts]
+        st = value
+        # local fixpoint: gather over in-neighbors via reduceat on the
+        # CSR (the inner ActiveEMap loop, wcc_vc_batch.cpp:139-148)
+        while starts.size:
+            gathered = ufunc.reduceat(st[frag.src] + w, starts)
+            new = st.copy()
+            new[heads] = ufunc(st[heads], gathered)
+            if np.array_equal(new, st):
+                break
+            st = new
+        return st, st != value
+
+    return FragmentKernel(step, fixpoint=True)
+
+
+def fragment_scatter(kernel: FragmentKernel, pid: Column) -> ScatterFn:
+    """The SuperstepEngine scatter that runs a fragment kernel: attach the
+    current state to both endpoints of the engine's cached edges, group the
+    edges by fragment id ``pid`` (a Column over src), lay each fragment out
+    as a Fragment and run ``kernel`` (a make_minplus_kernel) on it once,
+    to its local fixpoint. Its per-vertex results are the proposals,
+    returned as (dst, msg) for the engine's combine. Needs the whole state:
+    run with frontier=False."""
+    src_side = (F.col("vid").alias("src"), F.col("value").alias("src_state"))
+    dst_side = (F.col("vid").alias("dst"), F.col("value").alias("dst_state"))
+    out_cols = (F.col("vid").alias("dst"), F.col("value").alias("msg"))
 
     def block(pdf: pd.DataFrame) -> pd.DataFrame:
         src = pdf["src"].to_numpy(np.int64)
         dst = pdf["dst"].to_numpy(np.int64)
-        sstate = pdf["src_state"].to_numpy(np.int64)
-        dstate = pdf["dst_state"].to_numpy(np.int64)
-        verts, offsets, in_src, src_local, dst_local = build_csr_block(src, dst)
-
-        # seed local state with the best incoming state per vertex
-        # (write_min/write_max analog, utility/atomic.h:30-47).
-        # Sentinel (the op's identity): labels span the FULL int64 range
-        # (xxhash64 vids can exceed 2^62), so label mode uses the int64
-        # extreme (safe: delta adds 0); distance modes use +-INF64 so
-        # transient INF + weight cannot overflow
-        if delta is None:
-            inf = np.iinfo(np.int64).max if op == "min" else np.iinfo(np.int64).min
-        else:
-            inf = INF64 if op == "min" else -INF64
-        st = np.full(verts.size, inf, dtype=np.int64)
-        ufunc.at(st, src_local, sstate)
-        ufunc.at(st, dst_local, dstate)
-
-        if delta is None:
-            w_in: np.ndarray | int = 0
-        elif delta == "unit":
-            w_in = 1
-        else:
-            order = np.argsort(dst_local, kind="stable")  # same order as in_src
-            w_in = pdf[delta].to_numpy(np.int64)[order]
-
-        indeg_nz = (offsets[1:] - offsets[:-1]) > 0
-        starts = offsets[:-1][indeg_nz]
-        # local fixpoint: gather over in-neighbors via reduceat on the
-        # CSR (the inner ActiveEMap loop, wcc_vc_batch.cpp:139-148)
-        while starts.size:
-            gathered = ufunc.reduceat(st[in_src] + w_in, starts)
-            new = st.copy()
-            new[indeg_nz] = ufunc(st[indeg_nz], gathered)
-            if np.array_equal(new, st):
-                break
-            st = new
-        return pd.DataFrame({"vid": verts, "value": st})
-
-    return block
-
-
-def fragment_scatter(block, pid: Column) -> ScatterFn:
-    """The SuperstepEngine scatter that runs a fragment kernel: attach the
-    current state to both endpoints of the engine's cached edges, group the
-    edges by fragment id ``pid`` (a Column over src) and let ``block`` (a
-    make_minplus_block kernel) iterate each fragment to its local fixpoint.
-    Its per-vertex results are the proposals, returned as (dst, msg) for
-    the engine's combine. Needs the whole state: run with frontier=False."""
-    src_side = (F.col("vid").alias("src"), F.col("value").alias("src_state"))
-    dst_side = (F.col("vid").alias("dst"), F.col("value").alias("dst_state"))
-    out_cols = (F.col("vid").alias("dst"), F.col("value").alias("msg"))
+        # global -> local ids (immutable_csr.h:319-327): the unique inverse
+        vid, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+        src_l, dst_l = inv[: src.size], inv[src.size :]
+        value = np.empty(vid.size, pdf["src_state"].dtype)
+        value[src_l] = pdf["src_state"].to_numpy()
+        value[dst_l] = pdf["dst_state"].to_numpy()
+        frag = Fragment.from_local(vid, src_l, dst_l, {
+            c: pdf[c].to_numpy() for c in pdf.columns
+            if c not in ("src", "dst", "src_state", "dst_state")
+        })
+        return pd.DataFrame({"vid": vid, "value": kernel.step(frag, value, {})[0]})
 
     def scatter(edges: DataFrame, state: DataFrame, ctx: dict) -> DataFrame:
         work = edges.join(state.select(*src_side), "src").join(
@@ -189,9 +159,10 @@ def run_wcc_csr(
     fewer global rounds on long-path graphs. One SuperstepEngine run on the
     same engine run_wcc builds: each round is fragment_scatter over
     hash(src) fragments, the min-combine, and run_wcc's min + pointer-jump
-    apply. An undirected graph on a width-1 engine takes the engine's
-    one-fragment path. num_partitions=None means the engine's width rule;
-    checkpoint_dir gives snapshots and resume as in run_wcc.
+    apply. A width-1 engine runs the same kernel once over the whole graph
+    (the engine's one-fragment path). num_partitions=None means the
+    engine's width rule; checkpoint_dir gives snapshots and resume as in
+    run_wcc.
     """
     from ..plans.wcc import (
         _MINLABEL_KERNEL,
@@ -205,15 +176,13 @@ def run_wcc_csr(
     )
     res = eng.run(
         _init_labels(eng),
-        scatter=fragment_scatter(
-            make_minplus_block(None), _hash_pid(eng.num_partitions)
-        ),
+        scatter=fragment_scatter(_MINLABEL_KERNEL, _hash_pid(eng.num_partitions)),
         combiner="min",
         apply_fn=_make_apply_min_jump(),
         frontier=False,
         max_iter=max_rounds,
         algo="wcc_csr",
-        kernel=None if directed else _MINLABEL_KERNEL,
+        kernel=_MINLABEL_KERNEL,
     )
     eng.close()
     return res
@@ -232,7 +201,8 @@ def run_bfs_csr(
     reference parity: the sssp_vc_stream.cpp:103-158 inner loop running
     inside each fragment before border exchange). One SuperstepEngine run:
     fragment_scatter, the min-combine and plans.bfs's apply, with INF64 as
-    the unreached distance.
+    the unreached distance; a width-1 engine runs the kernel once over the
+    whole graph (the engine's one-fragment path).
 
     partition='hash' (default): hash(src) fragments — correct everywhere.
     partition='range': the reference's contiguous edge-cut rule
@@ -263,16 +233,16 @@ def run_bfs_csr(
         .alias("value"),
         F.lit(True).alias("active"),
     )
+    kernel = make_minplus_kernel("w" if weight_col else "unit")
     res = eng.run(
         init,
-        scatter=fragment_scatter(
-            make_minplus_block("w" if weight_col else "unit"), pid
-        ),
+        scatter=fragment_scatter(kernel, pid),
         combiner="min",
         apply_fn=_make_superstep_fns(None)[1],
         frontier=False,
         max_iter=max_rounds,
         algo="bfs_csr",
+        kernel=kernel,
     )
     eng.close()
     res.state = res.state.select(

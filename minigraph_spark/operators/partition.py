@@ -224,10 +224,12 @@ def prepartition_edges(
     digraphs); the output rows are exactly ``edges.distinct()``.
 
     count_obs: an optional pyspark Observation; when given (requires
-    persist=True), the output row count is attached as an observed metric
-    (``count_obs.get["n"]``) and delivered by the checkpoint's own
-    materialization job — saving the caller a separate full scan of the
-    cached E rows (the SuperstepEngine size-aware-width count). The
+    persist=True), the output row count ``count_obs.get["n"]`` and row
+    fingerprint ``["fp"]`` (bit_xor of row hashes: a sum overflows under
+    ANSI; None when empty) are attached as observed metrics and delivered
+    by the checkpoint's own materialization job — saving the caller a
+    separate full scan of the cached E rows (the SuperstepEngine
+    size-aware width and resume check). The
     CollectMetrics node preserves the child's partitioning AND ordering,
     so the checkpoint still records both (verified: the scatter SMJ stays
     exchange-free and edge-side sort-free)."""
@@ -253,7 +255,8 @@ def prepartition_edges(
         if not persist:
             raise ValueError("count_obs requires persist=True (needs the "
                              "checkpoint's materialization job)")
-        out = out.observe(count_obs, F.count(F.lit(1)).alias("n"))
+        fp = F.bit_xor(F.xxhash64(*out.columns)).alias("fp")
+        out = out.observe(count_obs, F.count(F.lit(1)).alias("n"), fp)
     if persist:
         # eager localCheckpoint rather than persist: it caches the blocks
         # AND replaces the logical subtree with a compact LogicalRDD leaf

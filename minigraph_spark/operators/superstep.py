@@ -129,23 +129,41 @@ class SuperstepResult:
 
 @dataclass(frozen=True)
 class Fragment:
-    """The whole graph as one fragment, in local ids: vertex i is row i of
-    the state (sorted by vid), and edge k runs src[k] -> dst[k]. Edges are
-    sorted by (dst, src), so every float reduction over them runs in one
-    fixed order whatever order the rows arrived in."""
+    """One fragment in local ids — the package's one CSR layout
+    (immutable_csr.h:82-164): vertex i has global id vid[i] (sorted), and
+    edge k runs src[k] -> dst[k]. Edges are sorted by (dst, src), so the
+    fragment is the in-edge CSR (each vertex's in-edges are one contiguous
+    run of dst) and every float reduction over them runs in one fixed order
+    whatever order the rows arrived in."""
 
     vid: np.ndarray
     src: np.ndarray
     dst: np.ndarray
     edge_cols: dict[str, np.ndarray]
 
+    @classmethod
+    def from_local(
+        cls, vid: np.ndarray, src: np.ndarray, dst: np.ndarray,
+        edge_cols: dict[str, np.ndarray],
+    ) -> Fragment:
+        """The fragment over local ids ``src``/``dst`` into the sorted
+        ``vid``, with ``edge_cols`` in the same (unsorted) edge order: one
+        stable sort by the (dst, src) key puts the edges in CSR order."""
+        order = np.argsort(dst * vid.size + src, kind="stable")
+        return cls(
+            vid=vid, src=src[order], dst=dst[order],
+            edge_cols={c: a[order] for c, a in edge_cols.items()},
+        )
+
 
 @dataclass(frozen=True)
 class FragmentKernel:
-    """A plan's NumPy superstep for one-fragment mode (SuperstepEngine).
+    """A plan's NumPy superstep over one Fragment — the package's one
+    kernel type: SuperstepEngine's one-fragment mode runs it over the whole
+    graph, and csr.fragment_scatter runs a fixpoint kernel on each fragment.
 
     ``step(frag, value, cols) -> (value', active)`` is one iteration over
-    the whole graph: ``cols`` holds the state's columns besides vid, value
+    the fragment: ``cols`` holds the state's columns besides vid, value
     and active (e.g. PageRank's outdeg), and ``active`` marks the vertices
     the plan's loop would mark changed. ``fixpoint=True`` declares that one
     step reaches the fixpoint (a local min-label fixpoint), so the run
@@ -171,15 +189,10 @@ def _fragment_fn(kernel: FragmentKernel, steps: int):
         si = np.minimum(np.searchsorted(vid, src), vid.size - 1)
         di = np.minimum(np.searchsorted(vid, dst), vid.size - 1)
         keep = (vid[si] == src) & (vid[di] == dst)
-        si, di = si[keep], di[keep]
-        order = np.lexsort((si, di))
-        frag = Fragment(
-            vid=vid, src=si[order], dst=di[order],
-            edge_cols={
-                c: edges[c].to_numpy()[keep][order]
-                for c in edges.columns if c not in ("src", "dst")
-            },
-        )
+        frag = Fragment.from_local(vid, si[keep], di[keep], {
+            c: edges[c].to_numpy()[keep]
+            for c in edges.columns if c not in ("src", "dst")
+        })
         cols = {
             c: state[c].to_numpy() for c in state.columns
             if c not in ("vid", "value", "active")
@@ -203,7 +216,7 @@ def _fragment_fn(kernel: FragmentKernel, steps: int):
 class SuperstepEngine:
     """Generic scatter-combine-apply driver over a fixed edge table — the
     one superstep loop every iterative plan runs on. A scatter is either a
-    DataFrame join (plans/wcc, bfs, lpa, pagerank) or a fragment kernel
+    DataFrame join (plans/wcc, bfs, lpa, pagerank) or a FragmentKernel
     (operators/csr.fragment_scatter: the edges grouped by fragment, each
     iterated to its local fixpoint in one Arrow task, run with
     frontier=False). One superstep is one Spark job whose eager
@@ -221,9 +234,11 @@ class SuperstepEngine:
         disables durable snapshots (lineage is still truncated in memory).
         A run whose checkpoint_dir holds snapshots resumes from the newest
         one, which must have been written by the same algo over the same
-        edge-row count (else ValueError). Plan parameters are not checked:
-        a BFS from another root over the same edges still resumes the old
-        distances, so a dir must belong to one run's input.
+        edge rows: the same row count and the same row fingerprint (the
+        XOR of the rows' hashes, observed in the partitioning job), else
+        ValueError. Plan parameters (a BFS root, a tolerance, ...) are
+        still not checked: a BFS from another root over the same edges
+        resumes the old distances, so a dir must belong to one run.
     state_storage : "deser" (default) stores per-iteration state blocks
         deserialized (fastest sweep; the level every BASELINE.md number was
         measured at). "ser" stores them MEMORY_AND_DISK_SER — ~3-5x smaller
@@ -251,16 +266,16 @@ class SuperstepEngine:
     metrics.jsonl row and lineage.json records which path ran (``mode``:
     "fragment" or "loop") and ``num_partitions``. Kernels ship with:
 
-    - undirected WCC, batch and incremental: one iteration is the local
-      min-label fixpoint (csr.make_minplus_block), so the run converges
-      after it;
+    - WCC (directed or not; batch, incremental and CSR) and CSR BFS/SSSP:
+      one iteration is the local min-label / min-plus fixpoint
+      (csr.make_minplus_kernel), so the run converges after it;
     - LPA: one iteration is one synchronous mode sweep, ties to the
       smallest label;
     - standard PageRank: one iteration is one Jacobi sweep with dangling
       mass, stopping at max|Δ| <= tol.
 
-    Every other plan or variant (directed WCC, the minigraph PageRank
-    rule, BFS, ...) runs the loop whatever the mode.
+    Every other plan or variant (the minigraph PageRank rule, plans.bfs,
+    ...) runs the loop whatever the mode.
     """
 
     # size-aware parallelism: target edge rows per loop partition. At 16M+
@@ -339,9 +354,9 @@ class SuperstepEngine:
         # keep any extra columns the caller selected (e.g. SSSP weights) —
         # scatter functions see self.edges as-is; only (src, dst) is required
         # the edge count (for the size-aware width and the snapshots' resume
-        # check) rides the prepartition materialization job as an observed
-        # metric — no separate scan of the cached E rows (guide §1.2:
-        # fewer passes)
+        # check) and fingerprint (resume check) ride the prepartition
+        # materialization job as observed metrics — no separate scan of
+        # the cached E rows (guide §1.2: fewer passes)
         _n_obs = Observation()
         if num_partitions is None:
             # choose the INITIAL width from the optimizer's pre-shuffle size
@@ -360,6 +375,7 @@ class SuperstepEngine:
         )
         self._edge_rdd_ids = self._persistent_ids() - _ids0
         n_edges = int(_n_obs.get["n"])
+        self.edge_fingerprint = _n_obs.get["fp"]
         if num_partitions is None:
             # corrective re-partition (one extra cached-side shuffle) only
             # when the estimated width missed the observed ideal by >2x in
@@ -494,7 +510,8 @@ class SuperstepEngine:
         holds one, else (0, init_state)."""
         if self.checkpoint_dir:
             found = ckpt.load_snapshot(
-                self.spark, self.checkpoint_dir, algo, self.n_edges
+                self.spark, self.checkpoint_dir, algo, self.n_edges,
+                self.edge_fingerprint,
             )
             if found is not None:
                 return found[0] + 1, found[1]
@@ -520,7 +537,8 @@ class SuperstepEngine:
                 state, self.checkpoint_dir, it,
                 extra={
                     "algo": algo, "num_changed": changed[-1],
-                    "edge_rows": self.n_edges, **run_info,
+                    "edge_rows": self.n_edges,
+                    "edge_fingerprint": self.edge_fingerprint, **run_info,
                 },
             )
             checkpointed = True

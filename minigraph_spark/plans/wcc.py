@@ -14,20 +14,12 @@ in_visited bitmap guard, 2d_pie/auto_map.h:136).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.csr import make_minplus_block
+from ..operators.csr import make_minplus_kernel
 from ..operators.project import symmetrize_raw
-from ..operators.superstep import (
-    ApplyFn,
-    Fragment,
-    FragmentKernel,
-    SuperstepEngine,
-    SuperstepResult,
-)
+from ..operators.superstep import ApplyFn, SuperstepEngine, SuperstepResult
 
 
 # The scatter/apply builders below are FACTORIES returning closures with
@@ -140,20 +132,9 @@ def _make_apply_min_hook() -> ApplyFn:
     return _apply
 
 
-def _minlabel_step(frag: Fragment, value: np.ndarray, cols: dict):
-    """One-fragment undirected WCC: min-label to the local fixpoint of the
-    whole closure (the PEval inner loop, wcc_vc_batch.cpp:139-148) — one
-    step is the answer, so the kernel declares fixpoint=True."""
-    out = make_minplus_block(None)(pd.DataFrame({
-        "src": frag.src, "dst": frag.dst,
-        "src_state": value[frag.src], "dst_state": value[frag.dst],
-    }))
-    new = value.copy()
-    new[out["vid"].to_numpy()] = out["value"].to_numpy()
-    return new, new != value
-
-
-_MINLABEL_KERNEL = FragmentKernel(_minlabel_step, fixpoint=True)
+# directed or not: each vertex takes the min over its ancestors-or-self
+# (wcc_vc_batch.cpp:139-148) — exact from previous labels too (ancestor ids)
+_MINLABEL_KERNEL = make_minplus_kernel(None)
 
 
 def _pick_apply(hooking: bool, directed: bool, pointer_jump: bool) -> ApplyFn:
@@ -225,7 +206,7 @@ def run_wcc(
         frontier=True,
         max_iter=max_iter,
         algo="wcc_directed" if directed else "wcc",
-        kernel=None if directed else _MINLABEL_KERNEL,
+        kernel=_MINLABEL_KERNEL,
     )
     if engine is None:
         eng.close()  # free owned edge blocks; caller-passed engines live on
@@ -293,7 +274,7 @@ def run_wcc_incremental(
         frontier=True,
         max_iter=max_iter,
         algo="wcc_incremental",
-        kernel=None if directed else _MINLABEL_KERNEL,
+        kernel=_MINLABEL_KERNEL,
     )
     if engine is None:
         eng.close()

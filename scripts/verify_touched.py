@@ -30,7 +30,8 @@ DEFAULT_KEYS = [
     "pagerank3_mod", "pagerank_weighted_mod", "ppr3_mod", "pagerank_warm_mod",
     "pagerank_minigraph3_mod", "pagerank_mod_converged",
     "wcc_components_snr", "wcc_incremental_snr", "wcc_decremental_snr",
-    "wcc_seq_converged", "lpa2_mod", "modularity_lpa_mod", "conductance_lpa_mod",
+    "wcc_seq_converged", "wcc_csr_components_snr", "lpa2_mod",
+    "modularity_lpa_mod", "conductance_lpa_mod", "bfs_csr_mod",
     "bfs_mod", "sssp_weighted_mod", "bfs_incremental_mod", "bfs_decremental_mod",
     "sssp_incremental_mod", "coloring_mod", "hits3_mod",
     "anf3_kc", "nf_curve_kc", "eff_diameter_kc",

@@ -1,10 +1,12 @@
 import os
 import sys
 
+import numpy as np
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from minigraph_spark.operators.superstep import Fragment  # noqa: E402
 from minigraph_spark.session import get_spark  # noqa: E402
 
 
@@ -23,3 +25,11 @@ def spark():
 
 def labels_dict(result_df, value_col="value"):
     return {r["vid"]: r[value_col] for r in result_df.select("vid", value_col).collect()}
+
+
+def coo_fragment(src, dst):
+    """The Fragment over global (src, dst) pairs, with local ids from the
+    np.unique inverse — the layout csr.fragment_scatter builds per fragment."""
+    src, dst = np.asarray(src, np.int64), np.asarray(dst, np.int64)
+    vid, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    return Fragment.from_local(vid, inv[: src.size], inv[src.size :], {})

@@ -138,7 +138,9 @@ def test_resume_refuses_another_algos_snapshots(spark, tmp_path):
     with pytest.raises(ValueError, match=r"'wcc'.*'bfs'"):
         run_bfs(e, root=0, checkpoint_dir=ck, engine_kwargs=LOOP)
     assert ckpt.latest(ck) == newest
-    assert ckpt.load_snapshot(spark, ck, "wcc", 10)[0] == newest[0]
+    with open(os.path.join(os.path.dirname(newest[1]), "lineage.json")) as f:
+        fp = json.load(f)["edge_fingerprint"]
+    assert ckpt.load_snapshot(spark, ck, "wcc", 10, fp)[0] == newest[0]
     # a fresh dir resumes nothing: BFS runs from its own init
     res = run_bfs(e, root=0, checkpoint_dir=str(tmp_path / "bfs_ck"),
                   engine_kwargs=LOOP)
@@ -167,6 +169,26 @@ def test_resume_refuses_another_inputs_snapshots(spark, tmp_path):
     assert _vals(again.state) == _vals(prev.state)
 
 
+def test_resume_refuses_other_edges_with_the_same_row_count(spark, tmp_path):
+    """Two graphs with the same closure row count but other components: a
+    run over B must not resume from A's snapshots (the edge fingerprint
+    differs), and a run over A again still resumes."""
+    import pytest
+
+    a = spark.createDataFrame([(0, 1), (2, 3)], "src long, dst long")
+    b = spark.createDataFrame([(0, 2), (1, 3)], "src long, dst long")
+    ck = str(tmp_path / "fp_ck")
+    prev = run_wcc(a, checkpoint_dir=ck)
+    newest = ckpt.latest(ck)
+    match = r"4 edge rows \(fingerprint -?\d+\).*4 edge rows \(fingerprint"
+    with pytest.raises(ValueError, match=match):
+        run_wcc(b, checkpoint_dir=ck)
+    assert ckpt.latest(ck) == newest
+    again = run_wcc(a, checkpoint_dir=ck)
+    assert again.metrics[0].iteration == newest[0] + 1
+    assert _vals(again.state) == _vals(prev.state) == {0: 0, 1: 0, 2: 2, 3: 2}
+
+
 def _snapshot_layout_and_lineage(spark, tmp_path, engine_kwargs, mode):
     e = _edges(spark).persist()
     ck = str(tmp_path / "lay_ck")
@@ -184,6 +206,7 @@ def _snapshot_layout_and_lineage(spark, tmp_path, engine_kwargs, mode):
     width = engine_kwargs.get("num_partitions", 1)
     assert (manifest["mode"], manifest["num_partitions"]) == (mode, width)
     assert manifest["edge_rows"] == e.count()
+    assert isinstance(manifest["edge_fingerprint"], int)
     metrics = [json.loads(line) for line in open(os.path.join(ck, "metrics.jsonl"))]
     assert [m["iteration"] for m in metrics] == [0, 1, 2, 3]
     assert [m["checkpointed"] for m in metrics] == [False, True, False, True]

@@ -14,11 +14,11 @@ from minigraph_spark.fixtures import (
     make_transcripts,
     tiny7_edges,
 )
-from minigraph_spark.operators.csr import build_csr_block, run_bfs_csr, run_wcc_csr
+from minigraph_spark.operators.csr import make_minplus_kernel, run_bfs_csr, run_wcc_csr
 from minigraph_spark.operators.project import project_edges
 from minigraph_spark.operators.superstep import persistent_rdd_ids
 from minigraph_spark.plans.wcc import run_wcc
-from tests.conftest import labels_dict
+from tests.conftest import coo_fragment, labels_dict
 
 
 def _spark_edges(spark, arr):
@@ -28,13 +28,14 @@ def _spark_edges(spark, arr):
 
 
 def test_build_csr_block_tiny7():
+    """tiny7 as a Fragment: the in-edge CSR the fragment kernels gather on."""
     e = np.array(TINY7_EDGES, dtype=np.int64)
-    verts, offsets, in_src, src_l, dst_l = build_csr_block(e[:, 0], e[:, 1])
-    assert verts.tolist() == [0, 1, 2, 3, 4]
+    frag = coo_fragment(e[:, 0], e[:, 1])
+    assert frag.vid.tolist() == [0, 1, 2, 3, 4]
     # in-degrees of tiny7: 0<-1 ; 1<-3,4 ; 2<-0,4 ; 3<-0 ; 4<-3
-    assert np.diff(offsets).tolist() == [1, 2, 2, 1, 1]
+    assert np.bincount(frag.dst, minlength=5).tolist() == [1, 2, 2, 1, 1]
     # in-neighbor sets per vertex (order within a segment not significant)
-    segs = [set(in_src[offsets[i]:offsets[i + 1]].tolist()) for i in range(5)]
+    segs = [set(frag.vid[frag.src[frag.dst == i]].tolist()) for i in range(5)]
     assert segs == [{1}, {3, 4}, {0, 4}, {0}, {3}]
 
 
@@ -123,29 +124,22 @@ def test_bfs_csr_range_partition_cuts_rounds_on_path(spark):
 
 def test_minplus_block_max_combiner():
     """write_max parity: max-label propagation through the generic kernel
-    converges each fragment to the component max (pure pandas-level check,
+    converges each fragment to the component max (pure NumPy-level check,
     no Spark needed)."""
-    import numpy as np
-    import pandas as pd
-
-    from minigraph_spark.operators.csr import make_minplus_block
-
     # two components: {1,2,3} (cycle) and {10, 11}
     edges = [(1, 2), (2, 3), (3, 1), (10, 11), (11, 10)]
-    pdf = pd.DataFrame(
-        {
-            "src": [a for a, _ in edges],
-            "dst": [b for _, b in edges],
-            "src_state": [a for a, _ in edges],
-            "dst_state": [b for _, b in edges],
-        }
-    )
-    out = make_minplus_block(None, op="max")(pdf)
-    got = dict(zip(out["vid"], out["value"]))
+    frag = coo_fragment([a for a, _ in edges], [b for _, b in edges])
+
+    def run(op):
+        kernel = make_minplus_kernel(None, op=op)
+        assert kernel.fixpoint
+        value, _ = kernel.step(frag, frag.vid.copy(), {})
+        return dict(zip(frag.vid.tolist(), value.tolist()))
+
+    got = run("max")
     assert got == {1: 3, 2: 3, 3: 3, 10: 11, 11: 11}
 
-    out_min = make_minplus_block(None, op="min")(pdf)
-    got_min = dict(zip(out_min["vid"], out_min["value"]))
+    got_min = run("min")
     # directed cycle {1,2,3} contracts to 1; 10<->11 contracts to 10
     assert got_min == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 

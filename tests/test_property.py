@@ -8,7 +8,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from minigraph_spark import oracle
-from minigraph_spark.operators.csr import build_csr_block
+from minigraph_spark.operators.csr import make_minplus_kernel
+from tests.conftest import coo_fragment
 
 edges_strategy = st.lists(
     st.tuples(st.integers(0, 40), st.integers(0, 40)), min_size=1, max_size=200
@@ -20,18 +21,24 @@ edges_strategy = st.lists(
 def test_csr_block_invariants(pairs):
     src = np.array([p[0] for p in pairs], dtype=np.int64)
     dst = np.array([p[1] for p in pairs], dtype=np.int64)
-    verts, offsets, in_src, src_local, dst_local = build_csr_block(src, dst)
-    # verts: sorted distinct union of endpoints; local ids round-trip
-    assert (verts == np.unique(np.concatenate([src, dst]))).all()
-    assert (verts[src_local] == src).all() and (verts[dst_local] == dst).all()
-    # offsets: monotone prefix sums ending at |E|; slice k holds exactly the
-    # sources of k's in-edges (as a multiset)
-    assert offsets[0] == 0 and offsets[-1] == len(pairs)
-    assert (np.diff(offsets) >= 0).all()
-    for k in range(verts.size):
-        got = sorted(verts[in_src[offsets[k]: offsets[k + 1]]].tolist())
-        want = sorted(s for s, d in pairs if d == verts[k])
+    frag = coo_fragment(src, dst)
+    # vid: sorted distinct union of endpoints; local ids round-trip (the
+    # fragment's edges are the input pairs, as a multiset)
+    assert (frag.vid == np.unique(np.concatenate([src, dst]))).all()
+    assert sorted(zip(frag.vid[frag.src].tolist(), frag.vid[frag.dst].tolist())) == sorted(pairs)
+    # in-edge CSR: dst non-decreasing, so each vertex's in-edges are one
+    # segment, holding exactly the sources of its in-edges (as a multiset)
+    assert (np.diff(frag.dst) >= 0).all()
+    bounds = np.searchsorted(frag.dst, np.arange(frag.vid.size + 1))
+    for k in range(frag.vid.size):
+        got = sorted(frag.vid[frag.src[bounds[k]: bounds[k + 1]]].tolist())
+        want = sorted(s for s, d in pairs if d == frag.vid[k])
         assert got == want
+    # the min-label kernel's one step is the directed min-label fixpoint
+    value, _ = make_minplus_kernel(None).step(frag, frag.vid.copy(), {})
+    assert dict(zip(frag.vid.tolist(), value.tolist())) == oracle.directed_minlabel(
+        np.array(pairs)
+    )
 
 
 @settings(max_examples=200, deadline=None)

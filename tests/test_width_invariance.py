@@ -1,12 +1,12 @@
 """Results do not depend on the engine width.
 
-WCC, incremental WCC, LPA and PageRank run on one small R-MAT graph and one
-small transcript projection, at the automatic width and at explicit widths
-1, 2, 4 and 8. Auto and 1 take the one-fragment path (the whole graph in
-one Arrow task per window); 2-8 take the distributed superstep loop. Labels
-must be identical across widths and ranks must agree to 1e-9. The CSR
-fragment path (operators/csr.py) must agree with the DataFrame plans at
-every width."""
+WCC (undirected and directed), incremental WCC, LPA and PageRank run on
+one small R-MAT graph and one small transcript projection, at the automatic
+width and at explicit widths 1, 2, 4 and 8. Auto and 1 take the
+one-fragment path (the whole graph in one Arrow task per window); 2-8 take
+the distributed superstep loop. Labels must be identical across widths and
+ranks must agree to 1e-9. The CSR fragment path (operators/csr.py) must
+agree with the DataFrame plans at every width."""
 
 import numpy as np
 import pandas as pd
@@ -52,6 +52,7 @@ def _run_all(spark, arr: np.ndarray, width: int | None):
     prev = run_wcc(base)
     out = {
         "wcc": run_wcc(full, engine=engines["closure"]),
+        "wcc_directed": run_wcc(full, directed=True, engine=engines["directed"]),
         "wcc_incremental": run_wcc_incremental(
             base, delta, prev.state, engine=engines["closure"]
         ),
@@ -75,10 +76,14 @@ def test_results_do_not_depend_on_width(spark, graph):
     runs = {w: _run_all(spark, arr, w) for w in WIDTHS}
     _, ref, ref_iters = runs[None]
     assert ref["wcc"] == ref["wcc_incremental"] == want
+    assert ref["wcc_directed"] == oracle.directed_minlabel(arr)
     for w, (modes, values, iterations) in runs.items():
         assert set(modes.values()) == {w in (None, 1)}, (w, modes)
-        for plan in ("wcc", "wcc_incremental", "lpa"):
+        for plan in ("wcc", "wcc_directed", "wcc_incremental", "lpa"):
             assert values[plan] == ref[plan], (w, plan)
+        # directed WCC ships the min-label kernel: one fragment is one
+        # iteration, the loop takes more
+        assert (iterations["wcc_directed"] == 1) == modes["directed"], w
         got, exp = values["pagerank"], ref["pagerank"]
         assert got.keys() == exp.keys()
         np.testing.assert_allclose(
@@ -99,7 +104,11 @@ def test_csr_path_does_not_depend_on_width(spark, graph):
     dist = labels_dict(run_bfs(e, root).state)
     for w in WIDTHS:
         assert labels_dict(run_wcc_csr(e, num_partitions=w).state) == labels, w
-        assert labels_dict(run_bfs_csr(e, root, num_partitions=w).state) == dist, w
+        bfs = run_bfs_csr(e, root, num_partitions=w)
+        assert labels_dict(bfs.state) == dist, w
+        if w in (None, 1):
+            # the min-plus kernel runs the one fragment to its fixpoint
+            assert bfs.iterations == 1, w
 
 
 def test_one_partition_runs_one_fragment_above_old_row_rule(spark):
