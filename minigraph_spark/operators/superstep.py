@@ -13,11 +13,12 @@ Here each superstep is:
 
 all in ONE Catalyst plan with ONE data shuffle (the combine; the scatter
 join reuses the edge table's persisted hash partitioning). This is the
-package's only superstep loop: the CSR fragment path (operators/csr.py) is a
-scatter of it that runs a local-fixpoint kernel per fragment. Convergence is a
-driver-side count — the Aggregate-hook analog (auto_app_base.h:56-63). The
-FSM / queues / schedulers of the reference (minigraph_sys.h:42-207) have no
-port target: Spark's DAG scheduler owns those decisions.
+package's only superstep loop; at width 1 a plan's FragmentKernel runs the
+whole graph in one Arrow task instead (SuperstepEngine, one-fragment mode).
+Convergence is a driver-side count — the Aggregate-hook analog
+(auto_app_base.h:56-63). The FSM / queues / schedulers of the reference
+(minigraph_sys.h:42-207) have no port target: Spark's DAG scheduler owns
+those decisions.
 
 Scale design (100 TB): edges are hash-partitioned ONCE and persisted
 (prepartition_edges) so the per-iteration scatter join is co-located on the
@@ -160,7 +161,7 @@ class Fragment:
 class FragmentKernel:
     """A plan's NumPy superstep over one Fragment — the package's one
     kernel type: SuperstepEngine's one-fragment mode runs it over the whole
-    graph, and csr.fragment_scatter runs a fixpoint kernel on each fragment.
+    graph.
 
     ``step(frag, value, cols) -> (value', active)`` is one iteration over
     the fragment: ``cols`` holds the state's columns besides vid, value
@@ -215,12 +216,11 @@ def _fragment_fn(kernel: FragmentKernel, steps: int):
 
 class SuperstepEngine:
     """Generic scatter-combine-apply driver over a fixed edge table — the
-    one superstep loop every iterative plan runs on. A scatter is either a
-    DataFrame join (plans/wcc, bfs, lpa, pagerank) or a FragmentKernel
-    (operators/csr.fragment_scatter: the edges grouped by fragment, each
-    iterated to its local fixpoint in one Arrow task, run with
-    frontier=False). One superstep is one Spark job whose eager
-    localCheckpoint cuts the lineage; the superstep's intermediate blocks
+    one superstep loop every iterative plan runs on. A scatter is a
+    DataFrame join (plans/wcc, bfs, lpa, pagerank); at width 1 the plan's
+    FragmentKernel replaces the loop (one-fragment mode, below). One
+    superstep is one Spark job whose eager localCheckpoint cuts the
+    lineage; the superstep's intermediate blocks
     (lazy checkpoints an apply builds) and the previous state's blocks are
     freed once it exists, so a finished run holds only its result state.
 
@@ -266,16 +266,17 @@ class SuperstepEngine:
     metrics.jsonl row and lineage.json records which path ran (``mode``:
     "fragment" or "loop") and ``num_partitions``. Kernels ship with:
 
-    - WCC (directed or not; batch, incremental and CSR) and CSR BFS/SSSP:
-      one iteration is the local min-label / min-plus fixpoint
-      (csr.make_minplus_kernel), so the run converges after it;
+    - WCC (directed or not; batch and incremental) and BFS/SSSP
+      (plans.bfs.run_bfs, unit or integer weights): one iteration is the
+      local min-label / min-plus fixpoint (csr.make_minplus_kernel), so
+      the run converges after it;
     - LPA: one iteration is one synchronous mode sweep, ties to the
       smallest label;
     - standard PageRank: one iteration is one Jacobi sweep with dangling
       mass, stopping at max|Δ| <= tol.
 
-    Every other plan or variant (the minigraph PageRank rule, plans.bfs,
-    ...) runs the loop whatever the mode.
+    Every other plan or variant (the minigraph PageRank rule, BFS IncEval,
+    fractional-weight SSSP, ...) runs the loop whatever the mode.
     """
 
     # size-aware parallelism: target edge rows per loop partition. At 16M+

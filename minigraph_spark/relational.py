@@ -1640,14 +1640,12 @@ def _q_bfs_mod(spark, sf_dir):
 
 
 def _q_bfs_csr_mod(spark, sf_dir):
-    """BFS through the generalized CSR Arrow fragment path (min-plus kernel
-    with local sub-iterations) — same oracle as bfs_mod, so the driver
-    verifies kernel generality, not just WCC's min-label instance."""
-    from .operators.csr import run_bfs_csr
-
+    """BFS at a pinned engine width of 8 (the distributed superstep loop)
+    — same oracle as bfs_mod, whose automatic width may run the min-plus
+    kernel, so the two queries cover both paths of run_bfs."""
     e = mod_edges(spark, sf_dir)
     root = e.select(F.least(F.min("src"), F.min("dst")).alias("r")).collect()[0]["r"]
-    res = run_bfs_csr(e, root=int(root), num_partitions=8)
+    res = run_bfs(e, root=int(root), engine_kwargs={"num_partitions": 8})
     return res.state.filter(F.col("value").isNotNull()).select(
         "vid", F.col("value").alias("dist")
     )

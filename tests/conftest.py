@@ -29,7 +29,7 @@ def labels_dict(result_df, value_col="value"):
 
 def coo_fragment(src, dst):
     """The Fragment over global (src, dst) pairs, with local ids from the
-    np.unique inverse — the layout csr.fragment_scatter builds per fragment."""
+    np.unique inverse: a fragment for kernel tests that need no Spark."""
     src, dst = np.asarray(src, np.int64), np.asarray(dst, np.int64)
     vid, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
     return Fragment.from_local(vid, inv[: src.size], inv[src.size :], {})

@@ -1,6 +1,7 @@
-"""Arrow-UDF CSR path (operators/csr.py): the CSR-block WCC must agree
-exactly with the pure-DataFrame path and the NumPy oracle, in far fewer
-global rounds on path-shaped graphs (the PEval inner-loop payoff,
+"""The min-plus fragment kernel (operators/csr.py) and the plans that ship
+it: run_wcc_csr (run_wcc at a given width) and run_bfs must agree exactly
+with the NumPy oracle and across widths, and the kernel must reach the
+one-fragment fixpoint in one iteration (the PEval inner-loop payoff,
 wcc_vc_batch.cpp:139-148)."""
 
 import numpy as np
@@ -14,9 +15,10 @@ from minigraph_spark.fixtures import (
     make_transcripts,
     tiny7_edges,
 )
-from minigraph_spark.operators.csr import make_minplus_kernel, run_bfs_csr, run_wcc_csr
+from minigraph_spark.operators.csr import make_minplus_kernel, run_wcc_csr
 from minigraph_spark.operators.project import project_edges
 from minigraph_spark.operators.superstep import persistent_rdd_ids
+from minigraph_spark.plans.bfs import run_bfs
 from minigraph_spark.plans.wcc import run_wcc
 from tests.conftest import coo_fragment, labels_dict
 
@@ -55,9 +57,9 @@ def test_wcc_csr_matches_dataframe_path_rmat(spark):
 
 
 def test_wcc_csr_fewer_rounds_on_chains(spark):
-    """A 128-vertex path graph: the pure min-label path needs ~diameter
-    (127) global rounds; local path contraction inside CSR blocks must
-    converge in a small number of global rounds."""
+    """A 128-vertex path graph at width 8: plain min-label propagation
+    needs ~diameter (127) global rounds; run_wcc's hooking and pointer
+    jumping must converge in a small number of them."""
     n = 128
     arr = np.stack([np.arange(n - 1), np.arange(1, n)], axis=1).astype(np.int64)
     csr = run_wcc_csr(_spark_edges(spark, arr), num_partitions=8)
@@ -78,48 +80,63 @@ def test_wcc_csr_on_transcript_projection(spark):
 
 
 def test_bfs_csr_matches_run_bfs_and_weighted(spark):
-    """Generalized min-plus CSR kernel: BFS levels and weighted SSSP equal
-    the pure-DataFrame plans on a random digraph."""
+    """The min-plus kernel (auto width: one fragment) and the width-4
+    superstep loop give the same BFS levels and weighted SSSP distances on
+    a random digraph. The weight column is named ``unit``: the kernel must
+    read it, not take unit weights; and an edge with a NULL weight carries
+    no message on either path."""
     from pyspark.sql import functions as F
 
     from minigraph_spark.fixtures import make_rmat_edges
-    from minigraph_spark.operators.csr import run_bfs_csr
-    from minigraph_spark.plans.bfs import run_bfs
 
     e = make_rmat_edges(spark, 7, 600, seed=13)
     root = int(e.agg(F.min("src")).collect()[0][0])
-    got = {r["vid"]: r["value"] for r in run_bfs_csr(e, root, num_partitions=4).state.collect()}
-    want = {r["vid"]: r["value"] for r in run_bfs(e, root).state.collect()}
+    got = labels_dict(run_bfs(e, root, engine_kwargs={"num_partitions": 4}).state)
+    want = labels_dict(run_bfs(e, root).state)
     assert got == want
 
-    ew = e.withColumn("w", (F.lit(1) + (F.col("src") * 31 + F.col("dst")) % 9).cast("long"))
-    got_w = {
-        r["vid"]: r["value"]
-        for r in run_bfs_csr(ew, root, weight_col="w", num_partitions=4).state.collect()
-    }
-    want_w = {
-        r["vid"]: r["value"]
-        for r in run_bfs(ew, root, weight_col="w").state.collect()
-    }
+    weight = F.lit(1) + (F.col("src") * 31 + F.col("dst")) % 9
+    has_weight = (F.col("src") + F.col("dst")) % 7 != 0
+    ew = e.withColumn("unit", F.when(has_weight, weight).cast("long"))
+    got_w = labels_dict(
+        run_bfs(ew, root, weight_col="unit", engine_kwargs={"num_partitions": 4}).state
+    )
+    want_w = labels_dict(run_bfs(ew, root, weight_col="unit").state)
     assert got_w == want_w
 
 
 def test_bfs_csr_range_partition_cuts_rounds_on_path(spark):
-    """On a path graph with contiguous ids, range fragments (the reference's
-    edge-cut rule) contract whole runs locally: the CSR path must finish in
-    strictly fewer global rounds than the one-hop-per-superstep run_bfs."""
-    from minigraph_spark.operators.csr import run_bfs_csr
-    from minigraph_spark.plans.bfs import run_bfs
-
+    """On a 60-edge path, the one-fragment min-plus kernel (auto width)
+    reaches every distance in one iteration, strictly fewer global rounds
+    than the one-hop-per-superstep width-4 loop."""
     L = 60
     path = spark.createDataFrame([(i, i + 1) for i in range(L)], "src long, dst long")
-    csr = run_bfs_csr(path, root=0, num_partitions=4, partition="range")
-    plain = run_bfs(path, root=0)
+    csr = run_bfs(path, root=0)
+    plain = run_bfs(path, root=0, engine_kwargs={"num_partitions": 4})
     got = {r["vid"]: r["value"] for r in csr.state.collect()}
     assert got == {i: i for i in range(L + 1)}
     assert csr.converged and plain.converged
     assert csr.iterations < plain.iterations
-    assert csr.iterations <= 6  # ~num_fragments + verification round
+    assert csr.iterations == 1
+
+
+def test_bfs_fractional_weights_match_the_loop(spark):
+    """The int64 min-plus kernel runs only on integral weights: a double
+    weight column at auto width (one fragment) gives the width-2 loop's
+    distances, which the kernel's truncation would not."""
+    from pyspark.sql import functions as F
+
+    from minigraph_spark.fixtures import make_rmat_edges
+
+    e = make_rmat_edges(spark, 7, 600, seed=13).withColumn(
+        "w", F.lit(0.5) + ((F.col("src") * 31 + F.col("dst")) % 9) / 4
+    )
+    root = int(e.agg(F.min("src")).collect()[0][0])
+    auto = run_bfs(e, root, weight_col="w")
+    loop = run_bfs(e, root, weight_col="w", engine_kwargs={"num_partitions": 2})
+    got, want = labels_dict(auto.state), labels_dict(loop.state)
+    assert got == want
+    assert any(v is not None and v != int(v) for v in want.values())
 
 
 def test_minplus_block_max_combiner():
@@ -131,7 +148,7 @@ def test_minplus_block_max_combiner():
     frag = coo_fragment([a for a, _ in edges], [b for _, b in edges])
 
     def run(op):
-        kernel = make_minplus_kernel(None, op=op)
+        kernel = make_minplus_kernel(op=op)
         assert kernel.fixpoint
         value, _ = kernel.step(frag, frag.vid.copy(), {})
         return dict(zip(frag.vid.tolist(), value.tolist()))
@@ -150,7 +167,9 @@ LEAK_CALLS = {
         e, max_iter=3, hooking=False, engine_kwargs={"num_partitions": 4}
     ),
     "wcc_csr": lambda e: run_wcc_csr(e, num_partitions=4, max_rounds=3),
-    "bfs_csr": lambda e: run_bfs_csr(e, root=0, num_partitions=4, max_rounds=5),
+    "bfs_csr": lambda e: run_bfs(
+        e, root=0, max_iter=5, engine_kwargs={"num_partitions": 4}
+    ),
     "wcc_one_fragment": lambda e: run_wcc(e),
 }
 

@@ -130,6 +130,30 @@ def test_bfs_incremental_shortens_paths_and_reaches_new_vertices(spark):
     assert got == {0: 0, 1: 1, 2: 2, 3: 1, 4: 2, 9: 3}
 
 
+def test_bfs_incremental_from_snapshot_keeps_unreached_null(spark, tmp_path):
+    """A run_bfs checkpoint snapshot holds the engine's unreached distance
+    (INF64); IncEval fed that snapshot must read it as unreached, so a
+    delta edge out of the unreached vertex 5 reaches nothing: 5 and the
+    delta-only vertex 9 stay NULL, as in run_bfs on the union."""
+    from minigraph_spark import checkpoint as ckpt
+    from minigraph_spark.operators.csr import INF64
+    from minigraph_spark.plans.bfs import run_bfs_incremental
+
+    base = np.array([[0, 1], [1, 2], [5, 2]])
+    delta = np.array([[5, 9]])
+    ck = str(tmp_path / "bfs_ck")
+    run_bfs(_spark_edges(spark, base), root=0, checkpoint_dir=ck)
+    snap = spark.read.parquet(ckpt.latest(ck)[1])
+    assert labels_dict(snap)[5] == INF64
+    res = run_bfs_incremental(
+        _spark_edges(spark, base), _spark_edges(spark, delta), snap, root=0
+    )
+    union = run_bfs(_spark_edges(spark, np.concatenate([base, delta])), root=0)
+    got = labels_dict(res.state)
+    assert got == labels_dict(union.state)
+    assert got[5] is None and got[9] is None
+
+
 def test_triangle_count_incremental_matches_batch(spark):
     """IncEval triangle maintenance: dT by inclusion-exclusion over the
     delta must reproduce the batch count on the union exactly."""

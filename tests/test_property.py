@@ -35,7 +35,7 @@ def test_csr_block_invariants(pairs):
         want = sorted(s for s, d in pairs if d == frag.vid[k])
         assert got == want
     # the min-label kernel's one step is the directed min-label fixpoint
-    value, _ = make_minplus_kernel(None).step(frag, frag.vid.copy(), {})
+    value, _ = make_minplus_kernel().step(frag, frag.vid.copy(), {})
     assert dict(zip(frag.vid.tolist(), value.tolist())) == oracle.directed_minlabel(
         np.array(pairs)
     )

@@ -5,16 +5,18 @@ one small R-MAT graph and one small transcript projection, at the automatic
 width and at explicit widths 1, 2, 4 and 8. Auto and 1 take the
 one-fragment path (the whole graph in one Arrow task per window); 2-8 take
 the distributed superstep loop. Labels must be identical across widths and
-ranks must agree to 1e-9. The CSR fragment path (operators/csr.py) must
-agree with the DataFrame plans at every width."""
+ranks must agree to 1e-9. run_wcc_csr and run_bfs (unit and weighted), the
+plans that ship the min-plus kernel of operators/csr.py, must agree with
+their auto-width results at every width."""
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from minigraph_spark import oracle
 from minigraph_spark.fixtures import make_rmat_edges_np, make_transcripts
-from minigraph_spark.operators.csr import run_bfs_csr, run_wcc_csr
+from minigraph_spark.operators.csr import run_wcc_csr
 from minigraph_spark.operators.project import project_edges, symmetrize
 from minigraph_spark.operators.superstep import SuperstepEngine
 from minigraph_spark.plans.bfs import run_bfs
@@ -98,17 +100,24 @@ def test_results_do_not_depend_on_width(spark, graph):
 def test_csr_path_does_not_depend_on_width(spark, graph):
     arr = _graph(spark, graph)
     e = _frame(spark, arr).persist()
+    # pmod, not a product: transcript ids are 64-bit hashes
+    ew = e.withColumn("w", 1 + F.pmod("src", F.lit(7)) + F.pmod("dst", F.lit(3)))
     root = int(arr[0, 0])
     labels = labels_dict(run_wcc(e).state)
     assert labels == oracle.wcc_labels(arr)
-    dist = labels_dict(run_bfs(e, root).state)
+    faces = {None: e, "w": ew}
+    dist = {wc: labels_dict(run_bfs(g, root, weight_col=wc).state) for wc, g in faces.items()}
+    trip = [(s, d, 1 + s % 7 + d % 3) for s, d in arr.tolist()]
+    assert {v: d for v, d in dist[None].items() if d is not None} == oracle.bfs_dist(arr, root)
+    assert {v: d for v, d in dist["w"].items() if d is not None} == oracle.sssp_dist(trip, root)
     for w in WIDTHS:
         assert labels_dict(run_wcc_csr(e, num_partitions=w).state) == labels, w
-        bfs = run_bfs_csr(e, root, num_partitions=w)
-        assert labels_dict(bfs.state) == dist, w
-        if w in (None, 1):
-            # the min-plus kernel runs the one fragment to its fixpoint
-            assert bfs.iterations == 1, w
+        for wc, g in faces.items():
+            bfs = run_bfs(g, root, weight_col=wc, engine_kwargs={"num_partitions": w})
+            assert labels_dict(bfs.state) == dist[wc], (w, wc)
+            if w in (None, 1):
+                # the min-plus kernel runs the one fragment to its fixpoint
+                assert bfs.iterations == 1, (w, wc)
 
 
 def test_one_partition_runs_one_fragment_above_old_row_rule(spark):
