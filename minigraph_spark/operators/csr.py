@@ -1,18 +1,18 @@
-"""The min-plus fragment kernel, its unreached distance INF64, and the
-run_wcc_csr name.
+"""The min-label fragment kernel and the run_wcc_csr name.
 
-make_minplus_kernel is the FragmentKernel of the propagation family: WCC's
-min-label kernel and BFS/SSSP's min-plus kernel. It lays no layout of its
-own: it gathers over a superstep.Fragment — the package's one CSR layout
-(immutable_csr.h:82-164) — and runs the PEval inner loop to the LOCAL
-fixpoint (apps/cpp/wcc_vc_batch.cpp:139-148). SuperstepEngine runs it as
-the one-fragment path whenever the engine's width is 1; at any other width
-the plans run the DataFrame superstep loop, one exchange per round.
+make_minplus_kernel is WCC's FragmentKernel: a min-label (or max-label)
+gather over a superstep.Fragment — the package's one CSR layout
+(immutable_csr.h:82-164) — run to the LOCAL fixpoint, the PEval inner loop
+(apps/cpp/wcc_vc_batch.cpp:139-148). SuperstepEngine runs it as the
+one-fragment path whenever the engine's width is 1; at any other width
+run_wcc runs the DataFrame superstep loop, one exchange per round.
 
 Applicability: local sub-iteration is semantics-preserving only for
 idempotent, commutative, monotone combiners (min/max — WCC, directed
-min-label, BFS-class). PageRank's sum-gather must stay globally synchronous
-(one gather per superstep), so it ships its own kernel (plans/pagerank.py).
+min-label). PageRank's sum-gather must stay globally synchronous (one
+gather per superstep), so it ships its own kernel (plans/pagerank.py).
+BFS/SSSP ship none: run_bfs accepts negative weights, where a local
+fixpoint need not exist, and runs the loop at every width.
 
 All per-row work is vectorized — no per-row Python anywhere.
 """
@@ -25,43 +25,25 @@ from pyspark.sql import DataFrame
 from .superstep import Fragment, FragmentKernel, SuperstepResult
 
 
-# distances never exceed this; far below int64 max so transient
-# INF + weight sums cannot overflow
-INF64 = 1 << 62
+def make_minplus_kernel(op: str = "min") -> FragmentKernel:
+    """Label-propagation fragment kernel — the repo analog of the
+    reference's auto-parallelized user kernel surface (auto_map.h:92-120,
+    F(u,v) at :39-43): a vectorized gather sweep over the fragment's
+    in-edge CSR, run to the LOCAL fixpoint (so fixpoint=True):
 
-
-def make_minplus_kernel(delta: int | str = 0, op: str = "min") -> FragmentKernel:
-    """Generic fragment kernel factory — the repo analog of the reference's
-    auto-parallelized user kernel surface (auto_map.h:92-120, F(u,v) at
-    :39-43): a vectorized gather sweep over the fragment's in-edge CSR,
-    run to the LOCAL fixpoint (so fixpoint=True):
-
-        state[v] = op(state[v], op over in-edges (state[src] + delta))
+        state[v] = op(state[v], op over in-edges state[src])
 
     op='min'|'max' — the write_min/write_max combiner pair
-    (utility/atomic.h:30-47); delta is the edge increment:
-    an int   -> that constant per edge: 0 is min/max-label propagation
-                (components), 1 is BFS levels / longest-path-on-DAG with max
-                (sssp_vc_stream.cpp:25-28 for the min instance);
-    a str    -> the edge column of that name, read as int64 (an edge whose
-                weight is NULL carries nothing): weighted SSSP.
-
-    Any monotone idempotent (op, +) kernel is semantics-preserving under
-    local sub-iteration (module docstring); sum-gather kernels (PageRank)
-    must NOT go through this path.
+    (utility/atomic.h:30-47); the name is the (min, +) semiring's, with a
+    zero edge increment. A sweep only moves labels monotonically to
+    values already in the state, so the fixpoint loop ends.
     """
     if op not in ("min", "max"):
         raise ValueError(f"op must be 'min' or 'max', got {op!r}")
     ufunc = np.minimum if op == "min" else np.maximum
 
     def step(frag: Fragment, value: np.ndarray, cols: dict):
-        src, dst, w = frag.src, frag.dst, delta
-        if isinstance(delta, str):
-            # a NULL weight arrives as NaN; as in the loop (value + NULL is
-            # no message) its edge carries nothing
-            w = frag.edge_cols[delta]
-            ok = w == w
-            src, dst, w = src[ok], dst[ok], w[ok].astype(np.int64)
+        src, dst = frag.src, frag.dst
         # dst is sorted: each run is one vertex's in-edge segment
         starts = np.flatnonzero(np.diff(dst, prepend=-1))
         heads = dst[starts]
@@ -69,7 +51,7 @@ def make_minplus_kernel(delta: int | str = 0, op: str = "min") -> FragmentKernel
         # local fixpoint: gather over in-neighbors via reduceat on the
         # CSR (the inner ActiveEMap loop, wcc_vc_batch.cpp:139-148)
         while starts.size:
-            gathered = ufunc.reduceat(st[src] + w, starts)
+            gathered = ufunc.reduceat(st[src], starts)
             new = st.copy()
             new[heads] = ufunc(st[heads], gathered)
             if np.array_equal(new, st):

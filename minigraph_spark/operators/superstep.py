@@ -220,9 +220,9 @@ class SuperstepEngine:
     DataFrame join (plans/wcc, bfs, lpa, pagerank); at width 1 the plan's
     FragmentKernel replaces the loop (one-fragment mode, below). One
     superstep is one Spark job whose eager localCheckpoint cuts the
-    lineage; the superstep's intermediate blocks
-    (lazy checkpoints an apply builds) and the previous state's blocks are
-    freed once it exists, so a finished run holds only its result state.
+    lineage; the superstep's intermediate blocks (lazy checkpoints an
+    apply builds) and the previous state's blocks are freed once it
+    exists, so a finished run holds only its result state.
 
     Parameters
     ----------
@@ -266,17 +266,16 @@ class SuperstepEngine:
     metrics.jsonl row and lineage.json records which path ran (``mode``:
     "fragment" or "loop") and ``num_partitions``. Kernels ship with:
 
-    - WCC (directed or not; batch and incremental) and BFS/SSSP
-      (plans.bfs.run_bfs, unit or integer weights): one iteration is the
-      local min-label / min-plus fixpoint (csr.make_minplus_kernel), so
-      the run converges after it;
+    - WCC (directed or not; batch and incremental): one iteration is the
+      local min-label fixpoint (csr.make_minplus_kernel), so the run
+      converges after it;
     - LPA: one iteration is one synchronous mode sweep, ties to the
       smallest label;
     - standard PageRank: one iteration is one Jacobi sweep with dangling
       mass, stopping at max|Δ| <= tol.
 
-    Every other plan or variant (the minigraph PageRank rule, BFS IncEval,
-    fractional-weight SSSP, ...) runs the loop whatever the mode.
+    Every other plan or variant (the minigraph PageRank rule, plans.bfs,
+    ...) runs the loop whatever the mode.
     """
 
     # size-aware parallelism: target edge rows per loop partition. At 16M+

@@ -5,17 +5,13 @@ dist[src]+1) with hardcoded unit weights (:27), root dist=0 (:116-119),
 frontier loop until empty. Weighted SSSP is the same plan with msg =
 dist + weight once the edge table carries a weight column (the reference
 declares but does not support weighted input, csr_io_adapter.h:47-49).
-run_bfs also ships the min-plus FragmentKernel, so a width-1 engine runs
-the whole graph to its fixpoint in one iteration.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..operators.csr import INF64, make_minplus_kernel
 from ..operators.superstep import (
     SuperstepEngine,
     SuperstepResult,
@@ -52,13 +48,6 @@ def _make_superstep_fns(weight_col: str | None):
     return scatter, apply_fn
 
 
-def _finite(value: Column) -> Column:
-    """``value`` with run_bfs's in-engine unreached distance (INF64) read
-    as NULL: run_bfs's output, and a prev_state that is one of its
-    checkpoint snapshots."""
-    return F.when(value < INF64, value)
-
-
 def run_bfs(
     edges: DataFrame,
     root: int,
@@ -72,38 +61,23 @@ def run_bfs(
 
     Pass ``engine`` to amortize the one-time prepartition across runs on
     the same graph (same contract as run_pagerank); it must carry the
-    weight column when weight_col is set.
-
-    Inside the engine (and in checkpoint snapshots) an unreached vertex
-    holds INF64, which the min-plus kernel's int64 arithmetic needs. The
-    kernel runs (a width-1 engine: one iteration) only on integral weights
-    — unit BFS or an integer weight column; fractional weights would
-    truncate in it, so they always run the loop. Weights must not be
-    negative: the kernel would count INF64 + w < INF64 as reached."""
+    weight column when weight_col is set."""
     cols = ["src", "dst"] + ([weight_col] if weight_col else [])
     eng = engine or SuperstepEngine(edges.select(*cols), checkpoint_dir=checkpoint_dir,
                                     **(engine_kwargs or {}))
     init = eng.vertices().select(
         "vid",
-        F.when(F.col("vid") == root, F.lit(0))
-        .otherwise(F.lit(INF64))
-        .cast("long")
-        .alias("value"),
+        F.when(F.col("vid") == root, F.lit(0).cast("long")).alias("value"),
         (F.col("vid") == root).alias("active"),
-    )
-    integral = weight_col is None or isinstance(
-        eng.edges.schema[weight_col].dataType, T.IntegralType
     )
 
     scatter, apply_fn = _make_superstep_fns(weight_col)
     res = eng.run(
         init, scatter=scatter, combiner="min", apply_fn=apply_fn,
         frontier=True, max_iter=max_iter, algo="bfs",
-        kernel=make_minplus_kernel(weight_col or 1) if integral else None,
     )
     if engine is None:
         eng.close()  # free owned edge blocks; caller-passed engines live on
-    res.state = res.state.select("vid", _finite(F.col("value")).alias("value"))
     return res
 
 
@@ -125,9 +99,8 @@ def run_bfs_incremental(
     monotone under additions (new edges can only shorten paths); deletions
     can lengthen paths and require a fresh run_bfs.
 
-    prev_state is (vid, value) with NULL (or a snapshot's INF64) for
-    unreachable — run_bfs().state or a checkpoint snapshot. The output
-    covers the union graph's vertices.
+    prev_state is (vid, value) with NULL for unreachable — run_bfs().state
+    or a checkpoint snapshot. The output covers the union graph's vertices.
     """
     cols = ["src", "dst"] + ([weight_col] if weight_col else [])
     union_edges = edges.select(*cols).unionAll(delta_edges.select(*cols))
@@ -142,10 +115,7 @@ def run_bfs_incremental(
     )
     init = (
         eng.vertices()
-        .join(
-            prev_state.select("vid", _finite(F.col("value")).alias("_prev")),
-            "vid", "left",
-        )
+        .join(prev_state.select("vid", F.col("value").alias("_prev")), "vid", "left")
         .join(touched, "vid", "left")
         .select(
             "vid",
@@ -253,7 +223,7 @@ def run_bfs_decremental(
         .join(dele_keys, ["src", "dst"], "left_anti")
         .persist()
     )
-    prev = prev_state.select("vid", _finite(F.col("value")).alias("value"))
+    prev = prev_state.select("vid", "value")
     w = F.col(weight_col) if weight_col else F.lit(1)
 
     if weight_col is not None:

@@ -134,7 +134,7 @@ def _make_apply_min_hook() -> ApplyFn:
 
 # directed or not: each vertex takes the min over its ancestors-or-self
 # (wcc_vc_batch.cpp:139-148) — exact from previous labels too (ancestor ids)
-_MINLABEL_KERNEL = make_minplus_kernel(0)
+_MINLABEL_KERNEL = make_minplus_kernel()
 
 
 def _pick_apply(hooking: bool, directed: bool, pointer_jump: bool) -> ApplyFn:

@@ -1640,9 +1640,9 @@ def _q_bfs_mod(spark, sf_dir):
 
 
 def _q_bfs_csr_mod(spark, sf_dir):
-    """BFS at a pinned engine width of 8 (the distributed superstep loop)
-    — same oracle as bfs_mod, whose automatic width may run the min-plus
-    kernel, so the two queries cover both paths of run_bfs."""
+    """BFS at a pinned engine width of 8 — same oracle as bfs_mod, which
+    runs at the automatic width, so the two queries check that run_bfs's
+    distances do not depend on the width."""
     e = mod_edges(spark, sf_dir)
     root = e.select(F.least(F.min("src"), F.min("dst")).alias("r")).collect()[0]["r"]
     res = run_bfs(e, root=int(root), engine_kwargs={"num_partitions": 8})

@@ -122,6 +122,18 @@ def test_wcc_csr_resume_exact(spark, tmp_path):
     )
 
 
+def test_bfs_resume_exact(spark, tmp_path):
+    """A run_bfs snapshot stores unreached vertices as NULL; resuming from
+    it at the automatic width (one fragment) ends where the uninterrupted
+    run does, unreached vertices still NULL."""
+    def run(e, n, ck):
+        root = int(e.agg({"src": "min"}).first()[0])
+        return run_bfs(e, root, max_iter=n, checkpoint_dir=ck,
+                       engine_kwargs={"checkpoint_every": 1})
+
+    _wcc_resume_exact(spark, tmp_path, run, killed_at=2)
+
+
 def test_resume_refuses_another_algos_snapshots(spark, tmp_path):
     """A checkpoint_dir holding WCC snapshots is not a BFS start state: the
     BFS run must refuse it, naming both algorithms, and leave the WCC

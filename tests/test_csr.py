@@ -1,6 +1,6 @@
-"""The min-plus fragment kernel (operators/csr.py) and the plans that ship
-it: run_wcc_csr (run_wcc at a given width) and run_bfs must agree exactly
-with the NumPy oracle and across widths, and the kernel must reach the
+"""The min-label fragment kernel (operators/csr.py), run_wcc_csr (run_wcc
+at a given width) and run_bfs at every width: results must agree exactly
+with the NumPy oracle and across widths, and WCC's kernel must reach the
 one-fragment fixpoint in one iteration (the PEval inner-loop payoff,
 wcc_vc_batch.cpp:139-148)."""
 
@@ -80,11 +80,9 @@ def test_wcc_csr_on_transcript_projection(spark):
 
 
 def test_bfs_csr_matches_run_bfs_and_weighted(spark):
-    """The min-plus kernel (auto width: one fragment) and the width-4
-    superstep loop give the same BFS levels and weighted SSSP distances on
-    a random digraph. The weight column is named ``unit``: the kernel must
-    read it, not take unit weights; and an edge with a NULL weight carries
-    no message on either path."""
+    """The width-4 superstep loop and the automatic width give the same BFS
+    levels and weighted SSSP distances on a random digraph; an edge with a
+    NULL weight carries no message at either width."""
     from pyspark.sql import functions as F
 
     from minigraph_spark.fixtures import make_rmat_edges
@@ -97,46 +95,47 @@ def test_bfs_csr_matches_run_bfs_and_weighted(spark):
 
     weight = F.lit(1) + (F.col("src") * 31 + F.col("dst")) % 9
     has_weight = (F.col("src") + F.col("dst")) % 7 != 0
-    ew = e.withColumn("unit", F.when(has_weight, weight).cast("long"))
+    ew = e.withColumn("w", F.when(has_weight, weight).cast("long"))
     got_w = labels_dict(
-        run_bfs(ew, root, weight_col="unit", engine_kwargs={"num_partitions": 4}).state
+        run_bfs(ew, root, weight_col="w", engine_kwargs={"num_partitions": 4}).state
     )
-    want_w = labels_dict(run_bfs(ew, root, weight_col="unit").state)
+    want_w = labels_dict(run_bfs(ew, root, weight_col="w").state)
     assert got_w == want_w
 
 
 def test_bfs_csr_range_partition_cuts_rounds_on_path(spark):
-    """On a 60-edge path, the one-fragment min-plus kernel (auto width)
-    reaches every distance in one iteration, strictly fewer global rounds
-    than the one-hop-per-superstep width-4 loop."""
+    """The range-partitioned CSR scatter this test measured is gone: BFS
+    runs the frontier loop at every width, one hop per superstep. On a
+    60-edge path the automatic width and width 4 give the distances
+    {i: i} in the same L + 1 rounds (the last one finds no frontier)."""
     L = 60
     path = spark.createDataFrame([(i, i + 1) for i in range(L)], "src long, dst long")
-    csr = run_bfs(path, root=0)
-    plain = run_bfs(path, root=0, engine_kwargs={"num_partitions": 4})
-    got = {r["vid"]: r["value"] for r in csr.state.collect()}
-    assert got == {i: i for i in range(L + 1)}
-    assert csr.converged and plain.converged
-    assert csr.iterations < plain.iterations
-    assert csr.iterations == 1
+    auto = run_bfs(path, root=0)
+    wide = run_bfs(path, root=0, engine_kwargs={"num_partitions": 4})
+    assert labels_dict(auto.state) == {i: i for i in range(L + 1)}
+    assert labels_dict(wide.state) == labels_dict(auto.state)
+    assert auto.converged and wide.converged
+    assert auto.iterations == wide.iterations == L + 1
 
 
-def test_bfs_fractional_weights_match_the_loop(spark):
-    """The int64 min-plus kernel runs only on integral weights: a double
-    weight column at auto width (one fragment) gives the width-2 loop's
-    distances, which the kernel's truncation would not."""
-    from pyspark.sql import functions as F
+def test_bfs_negative_weights_do_not_depend_on_width(spark):
+    """Negative weights: a vertex reached only through an unreached one
+    stays NULL, and a negative cycle is cut by max_iter, at width 1 as in
+    the width-2 loop."""
+    def run(rows, w, max_iter):
+        e = spark.createDataFrame(rows, "src long, dst long, w long")
+        res = run_bfs(e, root=0, weight_col="w", max_iter=max_iter,
+                      engine_kwargs={"num_partitions": w})
+        return labels_dict(res.state), res.converged
 
-    from minigraph_spark.fixtures import make_rmat_edges
-
-    e = make_rmat_edges(spark, 7, 600, seed=13).withColumn(
-        "w", F.lit(0.5) + ((F.col("src") * 31 + F.col("dst")) % 9) / 4
+    probe = [(0, 1, 1), (5, 6, -3), (6, 2, 1), (1, 2, 4)]
+    assert run(probe, 1, 30) == run(probe, 2, 30) == (
+        {0: 0, 1: 1, 2: 5, 5: None, 6: None}, True
     )
-    root = int(e.agg(F.min("src")).collect()[0][0])
-    auto = run_bfs(e, root, weight_col="w")
-    loop = run_bfs(e, root, weight_col="w", engine_kwargs={"num_partitions": 2})
-    got, want = labels_dict(auto.state), labels_dict(loop.state)
-    assert got == want
-    assert any(v is not None and v != int(v) for v in want.values())
+    cycle = [(0, 1, 1), (1, 2, -2), (2, 1, 1), (2, 3, 1)]
+    got, converged = run(cycle, 1, 8)
+    assert (got, converged) == run(cycle, 2, 8)
+    assert not converged and got[0] == 0 and got[1] < 0
 
 
 def test_minplus_block_max_combiner():

@@ -131,12 +131,10 @@ def test_bfs_incremental_shortens_paths_and_reaches_new_vertices(spark):
 
 
 def test_bfs_incremental_from_snapshot_keeps_unreached_null(spark, tmp_path):
-    """A run_bfs checkpoint snapshot holds the engine's unreached distance
-    (INF64); IncEval fed that snapshot must read it as unreached, so a
-    delta edge out of the unreached vertex 5 reaches nothing: 5 and the
-    delta-only vertex 9 stay NULL, as in run_bfs on the union."""
+    """A run_bfs checkpoint snapshot is a prev_state: it stores the
+    unreached vertex 5 as NULL, so a delta edge out of 5 reaches nothing:
+    5 and the delta-only vertex 9 stay NULL, as in run_bfs on the union."""
     from minigraph_spark import checkpoint as ckpt
-    from minigraph_spark.operators.csr import INF64
     from minigraph_spark.plans.bfs import run_bfs_incremental
 
     base = np.array([[0, 1], [1, 2], [5, 2]])
@@ -144,7 +142,7 @@ def test_bfs_incremental_from_snapshot_keeps_unreached_null(spark, tmp_path):
     ck = str(tmp_path / "bfs_ck")
     run_bfs(_spark_edges(spark, base), root=0, checkpoint_dir=ck)
     snap = spark.read.parquet(ckpt.latest(ck)[1])
-    assert labels_dict(snap)[5] == INF64
+    assert labels_dict(snap)[5] is None
     res = run_bfs_incremental(
         _spark_edges(spark, base), _spark_edges(spark, delta), snap, root=0
     )

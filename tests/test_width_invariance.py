@@ -5,9 +5,10 @@ one small R-MAT graph and one small transcript projection, at the automatic
 width and at explicit widths 1, 2, 4 and 8. Auto and 1 take the
 one-fragment path (the whole graph in one Arrow task per window); 2-8 take
 the distributed superstep loop. Labels must be identical across widths and
-ranks must agree to 1e-9. run_wcc_csr and run_bfs (unit and weighted), the
-plans that ship the min-plus kernel of operators/csr.py, must agree with
-their auto-width results at every width."""
+ranks must agree to 1e-9. run_wcc_csr and run_bfs (unit and weighted) must
+agree with their auto-width results at every width, and run_wcc_csr at
+width 1 must run WCC's min-label kernel (operators/csr.py) to its fixpoint
+in one iteration."""
 
 import numpy as np
 import pandas as pd
@@ -111,13 +112,14 @@ def test_csr_path_does_not_depend_on_width(spark, graph):
     assert {v: d for v, d in dist[None].items() if d is not None} == oracle.bfs_dist(arr, root)
     assert {v: d for v, d in dist["w"].items() if d is not None} == oracle.sssp_dist(trip, root)
     for w in WIDTHS:
-        assert labels_dict(run_wcc_csr(e, num_partitions=w).state) == labels, w
+        wcc = run_wcc_csr(e, num_partitions=w)
+        assert labels_dict(wcc.state) == labels, w
+        if w in (None, 1):
+            # the min-label kernel runs the one fragment to its fixpoint
+            assert wcc.iterations == 1, w
         for wc, g in faces.items():
             bfs = run_bfs(g, root, weight_col=wc, engine_kwargs={"num_partitions": w})
             assert labels_dict(bfs.state) == dist[wc], (w, wc)
-            if w in (None, 1):
-                # the min-plus kernel runs the one fragment to its fixpoint
-                assert bfs.iterations == 1, (w, wc)
 
 
 def test_one_partition_runs_one_fragment_above_old_row_rule(spark):
