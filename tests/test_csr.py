@@ -104,9 +104,8 @@ def test_bfs_csr_matches_run_bfs_and_weighted(spark):
 
 
 def test_bfs_csr_range_partition_cuts_rounds_on_path(spark):
-    """The range-partitioned CSR scatter this test measured is gone: BFS
-    runs the frontier loop at every width, one hop per superstep. On a
-    60-edge path the automatic width and width 4 give the distances
+    """BFS runs the frontier loop at every width, one hop per superstep:
+    on a 60-edge path the automatic width and width 4 give the distances
     {i: i} in the same L + 1 rounds (the last one finds no frontier)."""
     L = 60
     path = spark.createDataFrame([(i, i + 1) for i in range(L)], "src long, dst long")
