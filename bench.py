@@ -99,18 +99,14 @@ def main() -> None:
     timed("lpa5_events", lambda: run_lpa(seq, max_iter=5).iterations)
     clear_storage(spark)
 
-    # engine amortization: WCC then LPA sharing ONE prepartitioned engine —
-    # compare against wcc_events + lpa5_events above, where each run pays
-    # its own prepartition/heavy-hitter pass
-    from minigraph_spark.operators.project import symmetrize
-    from minigraph_spark.operators.superstep import SuperstepEngine
+    # engine amortization: WCC then LPA on ONE Graph, whose closure is
+    # partitioned once — compare against wcc_events + lpa5_events above,
+    # where each run pays its own prepartition
+    from minigraph_spark.operators.superstep import Graph
 
     def _shared_engine() -> int:
-        eng = SuperstepEngine(symmetrize(seq))
-        it = run_wcc(seq, engine=eng).iterations
-        it += run_lpa(seq, max_iter=5, engine=eng).iterations
-        eng.close()
-        return it
+        with Graph(seq) as g:
+            return run_wcc(g).iterations + run_lpa(g, max_iter=5).iterations
 
     timed("wcc_plus_lpa_shared_engine", _shared_engine)
     clear_storage(spark)

@@ -44,7 +44,7 @@ def ensure_edges_parquet() -> str:
 
 
 def run_level(cores: int) -> None:
-    from minigraph_spark.operators.superstep import SuperstepEngine
+    from minigraph_spark.operators.superstep import Graph
     from minigraph_spark.plans.pagerank import run_pagerank
     from minigraph_spark.session import get_spark
 
@@ -60,15 +60,16 @@ def run_level(cores: int) -> None:
     # graph_partition_exec step (tools/graph_partition.cpp:98-134), amortized
     # over the life of the graph (report its cost separately).
     t0 = time.time()
-    eng = SuperstepEngine(rmat.select("src", "dst"))
+    g = Graph(rmat)
+    g.engine("directed")
     setup_sec = round(time.time() - t0, 3)
     # Warm-up supersteps: the first 2-3 iterations run 2-10x slower than
     # steady state (JVM C2 + whole-stage-codegen compilation), so warm up
     # before timing — the 10^9-edge target runs tens of supersteps, where
     # steady state is all that matters.
-    run_pagerank(rmat, tol=0.0, max_iter=3, engine=eng)
+    run_pagerank(g, tol=0.0, max_iter=3)
     t0 = time.time()
-    res = run_pagerank(rmat, tol=0.0, max_iter=ITERATIONS, engine=eng)
+    res = run_pagerank(g, tol=0.0, max_iter=ITERATIONS)
     sec = time.time() - t0
     iters = max(res.iterations, 1)
     # median iteration time rejects transient co-tenant spikes inside the

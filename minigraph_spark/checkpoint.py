@@ -9,8 +9,9 @@ vdata_only=true — the per-superstep flush) and its StatisticInfo sidecars
                                         # pruned write, the vdata_only analog
     {dir}/iter=00007/lineage.json       # iteration, counts, per-partition
                                         # row counts + value fingerprints
-                                        # + the engine's algo, edge rows,
-                                        # edge fingerprint, mode and width
+                                        # + the run's algo and plan params,
+                                        # edge rows, edge fingerprint, mode
+                                        # and width
     {dir}/metrics.jsonl                 # one row per iteration (appended)
 
 Any run is resumable mid-convergence: `latest(dir)` returns the newest
@@ -97,28 +98,27 @@ def latest(base_dir: str) -> tuple[int, str] | None:
 
 def load_snapshot(
     spark: SparkSession, base_dir: str, algo: str, edge_rows: int,
-    edge_fingerprint: int | None,
+    edge_fingerprint: int | None, params: dict | None = None,
 ) -> tuple[int, DataFrame] | None:
     """Newest complete snapshot -> (iteration, state), else None. A
-    snapshot whose manifest names another algo, or other edges than the
-    resuming engine's (``edge_rows``, ``edge_fingerprint``), raises
-    ValueError: its state is not a valid start for this run. A manifest
-    without one of these keys loads as far as that key goes.
-
-    Plan parameters (a BFS root, a tolerance) are still not checked: a BFS
-    with another root over the same edges resumes the old distances, so a
-    base_dir must belong to one run, not only to one algorithm and input."""
+    snapshot whose manifest names another run than the resuming one —
+    another algo, other plan ``params`` (a BFS root, PageRank's alpha), or
+    other edges (``edge_rows``, ``edge_fingerprint``) — raises ValueError:
+    its state is not a valid start for this run. A manifest without one of
+    these keys loads as far as that key goes."""
     found = latest(base_dir)
     if found is None:
         return None
     it, path = found
     with open(os.path.join(os.path.dirname(path), "lineage.json")) as f:
         manifest = json.load(f)
-    wrote = manifest.get("algo", algo)
-    if wrote != algo:
+    # params compared in their JSON form: tuples come back as lists
+    run = (algo, json.loads(json.dumps(params)))
+    wrote = (manifest.get("algo", algo), manifest.get("params", run[1]))
+    if wrote != run:
         raise ValueError(
-            f"{base_dir} holds {wrote!r} snapshots; "
-            f"cannot resume {algo!r} from them"
+            f"{base_dir} holds {wrote[0]!r} snapshots (parameters {wrote[1]}); "
+            f"cannot resume {algo!r} (parameters {run[1]}) from them"
         )
     rows = manifest.get("edge_rows", edge_rows)
     fp = manifest.get("edge_fingerprint", edge_fingerprint)

@@ -22,7 +22,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 
-from .superstep import Fragment, FragmentKernel, SuperstepResult
+from .superstep import Fragment, FragmentKernel, Graph, SuperstepResult
 
 
 def make_minplus_kernel(op: str = "min") -> FragmentKernel:
@@ -79,7 +79,5 @@ def run_wcc_csr(
     """
     from ..plans.wcc import run_wcc
 
-    return run_wcc(
-        edges, directed, max_iter=max_rounds, checkpoint_dir=checkpoint_dir,
-        engine_kwargs={"num_partitions": num_partitions},
-    )
+    with Graph(edges, num_partitions=num_partitions) as g:
+        return run_wcc(g, directed, max_iter=max_rounds, checkpoint_dir=checkpoint_dir)

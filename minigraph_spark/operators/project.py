@@ -91,20 +91,11 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     """Undirected closure: union of both directions, deduped, self-loops
     dropped (self-loop filter parity: edge_cut_partitioner.h:103).
 
-    The result carries provenance markers (`_mg_dedup_raw`, the pre-dedup
-    closure, and `_mg_symmetric`) that SuperstepEngine consumes to fold
-    the dedup into its one-time partitioning exchange and read the vertex
-    set from src alone — `SuperstepEngine(symmetrize(e))` then builds the
-    exact plan of `SuperstepEngine(symmetrize_raw(e), dedup_edges=True,
-    symmetric=True)` (one E-scale Exchange instead of two; guide §2.4).
-    The markers are inert Python attributes: any other consumer sees a
-    plain deduplicated DataFrame, and any transformation returns a new
-    DataFrame without them."""
-    raw = symmetrize_raw(edges)
-    out = raw.distinct()
-    out._mg_dedup_raw = raw
-    out._mg_symmetric = True
-    return out
+    For a consumer that needs the deduplicated DataFrame itself. A plan
+    runs on the closure through a Graph instead (superstep.Graph,
+    view="closure"), whose engine partitions symmetrize_raw(edges) and
+    folds this dedup into that one exchange."""
+    return symmetrize_raw(edges).distinct()
 
 
 def canonicalize(edges: DataFrame) -> DataFrame:
@@ -115,16 +106,9 @@ def canonicalize(edges: DataFrame) -> DataFrame:
     plans/triangles.py:46, promoted here for every canonical-closure
     consumer — guide §2.3, shuffle fewer bytes).
 
-    Carries the `_mg_dedup_raw` provenance marker (see symmetrize) so an
-    engine built directly over this closure folds the dedup into its
-    partitioning exchange; canonical closures are NOT symmetric, so no
-    `_mg_symmetric` marker."""
-    raw = edges.select(
-        F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-    ).filter(F.col("src") != F.col("dst"))
-    out = raw.distinct()
-    out._mg_dedup_raw = raw
-    return out
+    A plan runs on it through a Graph (view="canonical"), whose engine
+    folds the dedup into its partitioning exchange."""
+    return canonicalize_raw(edges).distinct()
 
 
 def symmetrize_raw(edges: DataFrame) -> DataFrame:
@@ -136,6 +120,13 @@ def symmetrize_raw(edges: DataFrame) -> DataFrame:
     fwd = edges.select("src", "dst")
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     return fwd.unionAll(rev).filter(F.col("src") != F.col("dst"))
+
+
+def canonicalize_raw(edges: DataFrame) -> DataFrame:
+    """canonicalize() without the dedup shuffle (see symmetrize_raw)."""
+    return edges.select(
+        F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
+    ).filter(F.col("src") != F.col("dst"))
 
 
 def roundtrip_check(transcripts: DataFrame) -> bool:

@@ -27,6 +27,15 @@ write_min analog is exactly Catalyst's partial agg, which also collapses a
 hub's messages to one row per partition before the shuffle); lineage is
 truncated every iteration via localCheckpoint and durable parquet snapshots
 every `checkpoint_every` iterations make any run resumable (checkpoint.py).
+
+One graph, many plans: a Graph holds an edge table and the engine settings,
+and builds each view's engine (the directed edges, the symmetrized closure,
+coloring's canonical closure) once, on first use, for every plan that runs
+on it (MiniGraph partitions once and runs every app over the resident
+fragments, minigraph_sys.h:28-207). A plan given a DataFrame builds its own
+Graph and closes it; a plan given a Graph asks it for the view it needs and
+leaves it open. A checkpoint_dir belongs to one run, so it is a run()
+argument, not an engine setting.
 """
 
 from __future__ import annotations
@@ -34,7 +43,7 @@ from __future__ import annotations
 import json
 import time
 from collections.abc import Callable
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -46,6 +55,7 @@ from pyspark.sql import types as T
 from .. import checkpoint as ckpt
 from ..session import iterative_confs
 from .partition import make_mode_agg, make_salted_agg, prepartition_edges
+from .project import canonicalize_raw, symmetrize_raw
 
 # debug aid: MG_EXPLAIN=<k> prints the physical plan of superstep k (on the
 # one-fragment path, of the window that holds iteration k)
@@ -227,18 +237,20 @@ class SuperstepEngine:
     Parameters
     ----------
     edges : (src, dst) DataFrame; pre-partitioned by src and persisted here.
+    view : which graph over ``edges`` the engine holds (VIEWS).
+        "directed" (default): the edges as given, extra columns (an SSSP
+        weight) included. "closure": both directions with self-loops
+        dropped (project.symmetrize_raw), deduped inside the one-time
+        partitioning exchange (prepartition_edges dedup=True) instead of a
+        separate distinct shuffle, with the vertex set read from src alone
+        (every vertex of a symmetric table is a src). "canonical": each
+        undirected edge once as (least, greatest) (project.canonicalize_raw),
+        deduped the same way. The two closures read only (src, dst).
     num_partitions : hash-partition count for the edge table. None (the
         default) derives it from the edge-row count: one partition per
         TARGET_ROWS_PER_PARTITION rows, capped at spark.sql.shuffle.partitions.
-    checkpoint_dir / checkpoint_every : durable snapshot cadence; None
-        disables durable snapshots (lineage is still truncated in memory).
-        A run whose checkpoint_dir holds snapshots resumes from the newest
-        one, which must have been written by the same algo over the same
-        edge rows: the same row count and the same row fingerprint (the
-        XOR of the rows' hashes, observed in the partitioning job), else
-        ValueError. Plan parameters (a BFS root, a tolerance, ...) are
-        still not checked: a BFS from another root over the same edges
-        resumes the old distances, so a dir must belong to one run.
+    checkpoint_every : durable snapshot cadence of a run with a
+        checkpoint_dir (see run()).
     state_storage : "deser" (default) stores per-iteration state blocks
         deserialized (fastest sweep; the level every BASELINE.md number was
         measured at). "ser" stores them MEMORY_AND_DISK_SER — ~3-5x smaller
@@ -254,17 +266,18 @@ class SuperstepEngine:
     vertices, so PEval alone is the answer (wcc_vc_batch.cpp:139-148). An
     automatic width of 1 implies at most 2 * TARGET_ROWS_PER_PARTITION =
     65 536 edge rows (the width rule's 2x band), which bounds the task's
-    memory; a pinned 1 or a session shuffle width of 1 has no such bound.
+    memory; a pinned 1 (or a session shuffle width of 1) has no such
+    bound: it is the caller's promise that the graph fits one task.
     run() then executes a plan that ships a FragmentKernel as one Spark
     job per window: the cached edges and the state are cogrouped into ONE
     applyInPandas task, the kernel iterates in NumPy, and the new state
     (same schema as the loop's: vid, value, active[, outdeg]) comes back
-    localCheckpointed. A window
-    is the whole run, or with checkpoint_dir the stretch up to the next
-    checkpoint_every boundary; snapshots, metrics.jsonl rows and
-    IterationMetrics are the loop's, one per iteration. Every
-    metrics.jsonl row and lineage.json records which path ran (``mode``:
-    "fragment" or "loop") and ``num_partitions``. Kernels ship with:
+    localCheckpointed. A window is the whole run, or with a checkpoint_dir
+    the stretch up to the next checkpoint_every boundary; snapshots,
+    metrics.jsonl rows and IterationMetrics are the loop's, one per
+    iteration. Every metrics.jsonl row and lineage.json records which path
+    ran (``mode``: "fragment" or "loop") and ``num_partitions``. Kernels
+    ship with:
 
     - WCC (directed or not; batch and incremental): one iteration is the
       local min-label fixpoint (csr.make_minplus_kernel), so the run
@@ -314,41 +327,30 @@ class SuperstepEngine:
             return None
         return max(1, b // SuperstepEngine.EST_BYTES_PER_ROW)
 
+    # view -> the edge table it partitions (see ``view`` above)
+    VIEWS = {
+        "directed": lambda e: e, "closure": symmetrize_raw,
+        "canonical": canonicalize_raw,
+    }
+
     def __init__(
         self,
         edges: DataFrame,
         num_partitions: int | None = None,
-        checkpoint_dir: str | None = None,
         checkpoint_every: int = 5,
         state_storage: str = "deser",
-        dedup_edges: bool = False,
-        symmetric: bool = False,
+        view: str = "directed",
     ):
-        """dedup_edges=True folds an exact (src, dst) dedup into the
-        one-time partitioning exchange (prepartition_edges dedup contract) —
-        pass a NON-deduplicated closure (operators/project.symmetrize_raw)
-        and skip the separate distinct shuffle. symmetric=True declares that
-        the edge table contains both directions of every edge (an undirected
-        closure), letting vertices() read the vertex set from src alone —
-        half the distinct's input and no union."""
+        if view not in self.VIEWS:
+            raise ValueError(f"view must be one of {list(self.VIEWS)}, got {view!r}")
+        if state_storage not in ("deser", "ser"):
+            raise ValueError(f"state_storage must be 'deser' or 'ser', got {state_storage!r}")
         spark = edges.sparkSession
         n_max = int(spark.conf.get("spark.sql.shuffle.partitions"))
         n = num_partitions or n_max
         self.spark = spark
-        # provenance markers from project.symmetrize / project.canonicalize:
-        # the input IS `raw.distinct()`, so fold the dedup into the
-        # partitioning exchange (prepartition dedup contract: exactly
-        # `.distinct()`'s rows) instead of executing the distinct as its
-        # own E-scale exchange, and — for symmetrize — read the vertex set
-        # from src alone. Makes externally-composed engines (e.g.
-        # SuperstepEngine(symmetrize(e))) build the same one-exchange plan
-        # the in-package plans get via symmetrize_raw + dedup_edges=True.
-        _raw = getattr(edges, "_mg_dedup_raw", None)
-        if _raw is not None and not dedup_edges:
-            symmetric = symmetric or getattr(edges, "_mg_symmetric", False)
-            edges = _raw
-            dedup_edges = True
-        self.symmetric = symmetric
+        self.view = view
+        edges = self.VIEWS[view](edges)
         self._verts: DataFrame | None = None
         _ids0 = self._persistent_ids()
         # keep any extra columns the caller selected (e.g. SSSP weights) —
@@ -371,7 +373,7 @@ class SuperstepEngine:
             if _est is not None:
                 n = max(1, min(n_max, -(-_est // self.TARGET_ROWS_PER_PARTITION)))
         self.edges = prepartition_edges(
-            edges, n, by="src", dedup=dedup_edges, count_obs=_n_obs
+            edges, n, by="src", dedup=view != "directed", count_obs=_n_obs
         )
         self._edge_rdd_ids = self._persistent_ids() - _ids0
         n_edges = int(_n_obs.get["n"])
@@ -391,10 +393,7 @@ class SuperstepEngine:
                 n = ideal
         self.num_partitions = n
         self.n_edges = n_edges
-        self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = checkpoint_every
-        if state_storage not in ("deser", "ser"):
-            raise ValueError(f"state_storage must be 'deser' or 'ser', got {state_storage!r}")
         from pyspark.storagelevel import StorageLevel
 
         # (useDisk, useMemory, useOffHeap, deserialized)
@@ -441,11 +440,11 @@ class SuperstepEngine:
 
     def vertices(self) -> DataFrame:
         """Distinct vertex ids of the edge table (A8 analog:
-        tools/get_statistics.cpp:71-90 bitmap popcount). On a symmetric
-        engine every vertex appears as a src, so the src column alone is
-        the vertex set — half the distinct input, no union."""
+        tools/get_statistics.cpp:71-90 bitmap popcount). On the closure
+        view every vertex appears as a src, so the src column alone is the
+        vertex set — half the distinct input, no union."""
         if self._verts is None:
-            if self.symmetric:
+            if self.view == "closure":
                 v = self.edges.select(F.col("src").alias("vid")).distinct()
             else:
                 v = (
@@ -475,8 +474,9 @@ class SuperstepEngine:
         extra_agg: dict | None = None,
         frontier: bool = True,
         max_iter: int = 100,
-        algo: str = "superstep",
+        algo: str | tuple[str, dict] = "superstep",
         kernel: FragmentKernel | None = None,
+        checkpoint_dir: str | None = None,
     ) -> SuperstepResult:
         """Run supersteps until fixpoint (no vertex changed) or max_iter.
 
@@ -495,23 +495,41 @@ class SuperstepEngine:
         kernel: the plan's FragmentKernel, the same iteration in NumPy. On
         a one_fragment engine it replaces scatter/combiner/apply_fn (and
         extra_agg, frontier); elsewhere it is ignored.
+
+        checkpoint_dir: where this run writes durable snapshots (every
+        checkpoint_every iterations and at convergence) and metrics.jsonl;
+        None disables them (lineage is still truncated in memory). It
+        belongs to this run, not to the engine: runs of other plans on a
+        shared engine take their own dirs. A dir that holds snapshots
+        resumes from the newest one, which must name the same run:
+        ``algo`` (a name, or (name, plan parameters) — e.g. a BFS root;
+        parameters that only decide where a run stops, such as a tolerance
+        or max_iter, stay out so a run can resume with others) and the
+        same edge rows (their count and fingerprint, the XOR of the rows'
+        hashes observed in the partitioning job), else ValueError.
         """
+        name, params = (algo, None) if isinstance(algo, str) else algo
+        run_id = {"algo": name, "params": params}
         with self.loop_confs():
             if kernel is not None and self.one_fragment:
-                return self._run_fragment(init_state, kernel, max_iter, algo)
+                return self._run_fragment(
+                    init_state, kernel, max_iter, run_id, checkpoint_dir
+                )
             return self._run_loop(
                 init_state, scatter, combiner, apply_fn, extra_agg,
-                frontier, max_iter, algo,
+                frontier, max_iter, run_id, checkpoint_dir,
             )
 
-    def _resume_point(self, init_state: DataFrame, algo: str):
+    def _resume_point(
+        self, init_state: DataFrame, run_id: dict, checkpoint_dir: str | None
+    ):
         """(first iteration, its input state): the newest complete snapshot
-        of ``algo`` over this engine's edge rows + 1 when checkpoint_dir
-        holds one, else (0, init_state)."""
-        if self.checkpoint_dir:
+        of the run ``run_id`` over this engine's edge rows + 1 when
+        checkpoint_dir holds one, else (0, init_state)."""
+        if checkpoint_dir:
             found = ckpt.load_snapshot(
-                self.spark, self.checkpoint_dir, algo, self.n_edges,
-                self.edge_fingerprint,
+                self.spark, checkpoint_dir, run_id["algo"], self.n_edges,
+                self.edge_fingerprint, run_id["params"],
             )
             if found is not None:
                 return found[0] + 1, found[1]
@@ -519,8 +537,8 @@ class SuperstepEngine:
 
     def _finish_window(
         self, result: SuperstepResult, state: DataFrame, first: int,
-        changed: list[int], t0: float, converged: bool, algo: str,
-        mode: str,
+        changed: list[int], t0: float, converged: bool, run_id: dict,
+        mode: str, checkpoint_dir: str | None,
     ) -> None:
         """Record one materialized window of len(changed) iterations
         starting at ``first``: its durable snapshot when due, one
@@ -530,13 +548,13 @@ class SuperstepEngine:
         it = first + len(changed) - 1
         checkpointed = False
         run_info = {"mode": mode, "num_partitions": self.num_partitions}
-        if self.checkpoint_dir and (
+        if checkpoint_dir and (
             it % self.checkpoint_every == self.checkpoint_every - 1 or converged
         ):
             ckpt.write_snapshot(
-                state, self.checkpoint_dir, it,
+                state, checkpoint_dir, it,
                 extra={
-                    "algo": algo, "num_changed": changed[-1],
+                    **run_id, "num_changed": changed[-1],
                     "edge_rows": self.n_edges,
                     "edge_fingerprint": self.edge_fingerprint, **run_info,
                 },
@@ -553,8 +571,8 @@ class SuperstepEngine:
                 checkpointed=checkpointed and j == len(changed) - 1,
             )
             result.metrics.append(m)
-            if self.checkpoint_dir:
-                ckpt.append_metrics(self.checkpoint_dir, {**m.__dict__, **run_info})
+            if checkpoint_dir:
+                ckpt.append_metrics(checkpoint_dir, {**m.__dict__, **run_info})
         result.state = state
         result.iterations = it + 1
         result.converged = converged
@@ -564,7 +582,8 @@ class SuperstepEngine:
         init_state: DataFrame,
         kernel: FragmentKernel,
         max_iter: int,
-        algo: str,
+        run_id: dict,
+        checkpoint_dir: str | None,
     ) -> SuperstepResult:
         """One-fragment mode: each window is ONE Spark job — cogroup the
         cached edges with the state into a single applyInPandas task, run
@@ -573,7 +592,7 @@ class SuperstepEngine:
         snapshots match the loop's), else run to max_iter; every window
         also ends at convergence. MG_EXPLAIN=k prints the plan of the
         window that holds iteration k."""
-        first, state = self._resume_point(init_state, algo)
+        first, state = self._resume_point(init_state, run_id, checkpoint_dir)
         result = SuperstepResult(state=state)
         schema = T.StructType(
             [T.StructField(f.name, f.dataType) for f in state.schema.fields]
@@ -583,7 +602,7 @@ class SuperstepEngine:
         prev_ids: set = set()
         while first < max_iter:
             end = max_iter
-            if self.checkpoint_dir:
+            if checkpoint_dir:
                 every = self.checkpoint_every
                 end = min(end, (first // every + 1) * every)
             t0 = time.time()
@@ -609,8 +628,8 @@ class SuperstepEngine:
             self._free_ids(prev_ids)
             prev_ids = new_ids
             self._finish_window(
-                result, new_state, first, changed, t0, converged, algo,
-                "fragment",
+                result, new_state, first, changed, t0, converged, run_id,
+                "fragment", checkpoint_dir,
             )
             state = new_state
             first = result.iterations
@@ -652,9 +671,10 @@ class SuperstepEngine:
         extra_agg: dict | None,
         frontier: bool,
         max_iter: int,
-        algo: str,
+        run_id: dict,
+        checkpoint_dir: str | None,
     ) -> SuperstepResult:
-        start_iter, state = self._resume_point(init_state, algo)
+        start_iter, state = self._resume_point(init_state, run_id, checkpoint_dir)
         state = state.persist(self._state_level)
 
         # Column expression trees are immutable and plan-independent, so
@@ -748,10 +768,89 @@ class SuperstepEngine:
 
             self._finish_window(
                 result, new_state, it, [num_changed], t0, num_changed == 0,
-                algo, "loop",
+                run_id, "loop", checkpoint_dir,
             )
             state.unpersist()
             state = new_state
             if result.converged:
                 break
         return result
+
+
+class Graph:
+    """One edge table and the engine settings every plan over it shares —
+    the package's graph handle (MiniGraph partitions a graph once and runs
+    every app over the resident fragments, minigraph_sys.h:28-207).
+
+    Each view's SuperstepEngine (see SuperstepEngine ``view``) is built on
+    first use and kept until close(), so plans that need the same view
+    share one partitioning exchange: run_wcc and run_lpa both run on the
+    closure, run_pagerank and run_bfs on the directed edges, run_coloring on
+    the canonical closure. The directed view holds the plan's columns,
+    (src, dst) or (src, dst, weight_col), one engine per column set. A plan
+    given a Graph asks it for the view it needs, so it cannot run on the
+    wrong one, and leaves it open; a plan given a DataFrame builds a Graph
+    and closes it. A Graph is a context manager that closes on exit.
+
+    Parameters
+    ----------
+    edges : the edge table, with (src, dst) and any weight column a plan
+        reads.
+    num_partitions : the engines' width; None (the default) applies the
+        width rule (SuperstepEngine.TARGET_ROWS_PER_PARTITION). At width 1
+        kernel-carrying plans hold the whole graph in one Arrow task. The
+        width rule picks 1 only up to 65 536 edge rows, which bounds that
+        task's memory by rows, not bytes; a pinned 1 has no bound at all
+        and is the caller's promise that the graph fits one task.
+    checkpoint_every, state_storage : as SuperstepEngine's.
+    """
+
+    def __init__(
+        self,
+        edges: DataFrame,
+        num_partitions: int | None = None,
+        checkpoint_every: int = 5,
+        state_storage: str = "deser",
+    ):
+        self.edges = edges
+        self.num_partitions = num_partitions
+        self.checkpoint_every = checkpoint_every
+        self.state_storage = state_storage
+        self._engines: dict[tuple, SuperstepEngine] = {}
+
+    def engine(self, view: str = "directed", weight_col: str | None = None) -> SuperstepEngine:
+        """The engine of ``view`` (with ``weight_col`` on the directed
+        view), built on the first call and shared by every later one."""
+        key = (view, weight_col)
+        if key not in self._engines:
+            cols = ["src", "dst"] + ([weight_col] if weight_col else [])
+            self._engines[key] = SuperstepEngine(
+                self.edges.select(*cols), self.num_partitions,
+                self.checkpoint_every, self.state_storage, view=view,
+            )
+        return self._engines[key]
+
+    def with_edges(self, edges: DataFrame) -> Graph:
+        """A new handle over ``edges`` with this one's settings, no engine
+        built yet — the next graph version for IncEval, or a subgraph."""
+        return Graph(edges, self.num_partitions, self.checkpoint_every, self.state_storage)
+
+    def close(self) -> None:
+        """Free every engine this handle built; results already returned
+        are unaffected. The handle builds afresh if used again."""
+        for eng in self._engines.values():
+            eng.close()
+        self._engines.clear()
+
+    def __enter__(self) -> Graph:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+
+def as_graph(edges: DataFrame | Graph):
+    """A plan's handle, as a context manager: a Graph is used as given and
+    left open; a DataFrame gets a Graph with the default settings that is
+    closed on exit."""
+    return nullcontext(edges) if isinstance(edges, Graph) else Graph(edges)

@@ -98,19 +98,13 @@ def _make_superstep_fns():
     return _scatter, _combine, _apply
 
 
-def run_anf(
-    edges: DataFrame,
-    depth: int = 3,
-    engine: SuperstepEngine | None = None,
-) -> SuperstepResult:
+def run_anf(edges: DataFrame, depth: int = 3) -> SuperstepResult:
     """Ball sketches of {u : dist(v, u) <= depth} along OUT-edges. Returns
     state (vid, value = array<int> of 16 registers).
 
-    A caller-passed ``engine`` must be built over the REVERSED edge table
-    (messages flow dst -> src: N(v, d+1) = {v} ∪ ⋃_{v->w} N(w, d))."""
-    eng = engine or SuperstepEngine(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    The engine holds the REVERSED edge table (messages flow dst -> src:
+    N(v, d+1) = {v} ∪ ⋃_{v->w} N(w, d))."""
+    eng = _reversed_engine(edges)
     init = eng.vertices().select(
         "vid", _vid_registers(F.col("vid")).alias("value"),
         F.lit(True).alias("active"),
@@ -120,9 +114,14 @@ def run_anf(
         init, scatter=scatter, combiner=combine, apply_fn=apply_fn,
         frontier=True, max_iter=depth, algo="anf",
     )
-    if engine is None:
-        eng.close()
+    eng.close()
     return res
+
+
+def _reversed_engine(edges: DataFrame) -> SuperstepEngine:
+    return SuperstepEngine(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
 
 
 def est_expr(value_col: Column) -> Column:
@@ -150,7 +149,7 @@ def anf_estimates(state: DataFrame) -> DataFrame:
 
 
 def neighborhood_function(
-    edges: DataFrame, max_depth: int = 4, engine: SuperstepEngine | None = None
+    edges: DataFrame, max_depth: int = 4
 ) -> list[tuple[int, float]]:
     """[(d, NF(d))] for d = 1..max_depth: the estimated number of REACHABLE
     (ordered) pairs within distance d — sum of per-vertex ball estimates.
@@ -161,12 +160,9 @@ def neighborhood_function(
     rounded to 6 dp and summed in DECIMAL so the total is order-independent
     and bit-identical to the SQL oracle. Once the frontier empties the ball
     equals the exact closure and the curve goes flat; remaining depths
-    reuse the scalar without more Spark jobs.
-
-    A caller-passed ``engine`` must be over the REVERSED edges (run_anf)."""
-    eng = engine or SuperstepEngine(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    reuse the scalar without more Spark jobs. The engine holds the
+    REVERSED edges, as run_anf's."""
+    eng = _reversed_engine(edges)
     state = eng.vertices().select(
         "vid", _vid_registers(F.col("vid")).alias("value"),
         F.lit(True).alias("active"),
@@ -191,8 +187,7 @@ def neighborhood_function(
             if res.metrics and res.metrics[-1].num_changed == 0:
                 done = True
         curve.append((d, nf))
-    if engine is None:
-        eng.close()
+    eng.close()
     return curve
 
 

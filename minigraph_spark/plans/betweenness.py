@@ -34,23 +34,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.superstep import (
-    SuperstepEngine,
+    Graph,
+    as_graph,
     free_rdd_ids,
     persistent_rdd_ids,
 )
 from .bfs import run_bfs
 
 
-def _source_dependencies(
-    eng: SuperstepEngine, edges: DataFrame, s: int
-) -> tuple[DataFrame, set]:
+def _source_dependencies(g: Graph, s: int) -> tuple[DataFrame, set]:
     """((vid, delta), checkpoint block ids) — Brandes dependencies of
     source s, vertices at dist >= 1 only (the source's own row is excluded
     by convention). The caller frees the returned block ids once the
     accumulated result is materialized."""
-    spark = edges.sparkSession
+    spark = g.edges.sparkSession
     dist = (
-        run_bfs(edges, root=s, engine=eng)
+        run_bfs(g, root=s)
         .state.filter(F.col("value").isNotNull())
         .select("vid", F.col("value").alias("dist"))
         .persist()
@@ -63,7 +62,7 @@ def _source_dependencies(
         # (ADVICE r3).
         dist.unpersist()
         return spark.createDataFrame([], "vid long, delta double"), set()
-    e = eng.edges  # prepartitioned, persisted
+    e = g.engine().edges  # prepartitioned, persisted
 
     # Every level materializes via EAGER localCheckpoint, not persist: each
     # level's plan references the previous level, so on a deep (chain-like)
@@ -149,9 +148,8 @@ def _source_dependencies(
 
 
 def landmark_betweenness(
-    edges: DataFrame,
+    edges: DataFrame | Graph,
     seeds: list[int],
-    engine: SuperstepEngine | None = None,
 ) -> DataFrame:
     """(vid, betweenness): Σ over probe sources of the Brandes dependency
     delta_s(vid) — the sampled directed betweenness estimator. Vertices
@@ -159,20 +157,17 @@ def landmark_betweenness(
     any probe are absent."""
     if len(set(seeds)) != len(seeds) or not seeds:
         raise ValueError("seeds must be non-empty and duplicate-free")
-    spark = edges.sparkSession
-    eng = engine or SuperstepEngine(edges.select("src", "dst"))
-    per_seed = [_source_dependencies(eng, edges, s) for s in seeds]
-    acc = per_seed[0][0]
-    for df, _ in per_seed[1:]:
-        acc = acc.unionAll(df)
-    out = (
-        acc.groupBy("vid")
-        .agg(F.sum("delta").alias("betweenness"))
-        .persist()
-    )
-    out.count()
+    with as_graph(edges) as g:
+        per_seed = [_source_dependencies(g, s) for s in seeds]
+        acc = per_seed[0][0]
+        for df, _ in per_seed[1:]:
+            acc = acc.unionAll(df)
+        out = (
+            acc.groupBy("vid")
+            .agg(F.sum("delta").alias("betweenness"))
+            .persist()
+        )
+        out.count()
     for _, ids in per_seed:
-        free_rdd_ids(spark, ids)
-    if engine is None:
-        eng.close()
+        free_rdd_ids(g.edges.sparkSession, ids)
     return out

@@ -13,8 +13,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.superstep import (
+    Graph,
     SuperstepEngine,
     SuperstepResult,
+    as_graph,
     free_rdd_ids,
     persistent_rdd_ids,
 )
@@ -48,49 +50,52 @@ def _make_superstep_fns(weight_col: str | None):
     return scatter, apply_fn
 
 
+def _run_minplus(
+    eng: SuperstepEngine, init: DataFrame, root: int, max_iter: int,
+    weight_col: str | None, checkpoint_dir: str | None, algo: str,
+) -> SuperstepResult:
+    """Run the min-plus loop from ``init``; a resume refuses snapshots of
+    another root or weight column."""
+    scatter, apply_fn = _make_superstep_fns(weight_col)
+    return eng.run(
+        init, scatter=scatter, combiner="min", apply_fn=apply_fn,
+        frontier=True, max_iter=max_iter, checkpoint_dir=checkpoint_dir,
+        algo=(algo, {"root": int(root), "weight_col": weight_col}),
+    )
+
+
 def run_bfs(
-    edges: DataFrame,
+    edges: DataFrame | Graph,
     root: int,
     max_iter: int = 10_000,
     weight_col: str | None = None,
     checkpoint_dir: str | None = None,
-    engine_kwargs: dict | None = None,
-    engine: SuperstepEngine | None = None,
 ) -> SuperstepResult:
     """Returns state (vid, value=distance); unreachable vertices have NULL.
 
-    Pass ``engine`` to amortize the one-time prepartition across runs on
-    the same graph (same contract as run_pagerank); it must carry the
-    weight column when weight_col is set."""
-    cols = ["src", "dst"] + ([weight_col] if weight_col else [])
-    eng = engine or SuperstepEngine(edges.select(*cols), checkpoint_dir=checkpoint_dir,
-                                    **(engine_kwargs or {}))
-    init = eng.vertices().select(
-        "vid",
-        F.when(F.col("vid") == root, F.lit(0).cast("long")).alias("value"),
-        (F.col("vid") == root).alias("active"),
-    )
-
-    scatter, apply_fn = _make_superstep_fns(weight_col)
-    res = eng.run(
-        init, scatter=scatter, combiner="min", apply_fn=apply_fn,
-        frontier=True, max_iter=max_iter, algo="bfs",
-    )
-    if engine is None:
-        eng.close()  # free owned edge blocks; caller-passed engines live on
-    return res
+    Runs on the graph's directed view, (src, dst[, weight_col]); pass a
+    Graph to amortize the one-time prepartition across runs on the same
+    graph (e.g. BFS from several roots)."""
+    with as_graph(edges) as g:
+        eng = g.engine("directed", weight_col)
+        init = eng.vertices().select(
+            "vid",
+            F.when(F.col("vid") == root, F.lit(0).cast("long")).alias("value"),
+            (F.col("vid") == root).alias("active"),
+        )
+        return _run_minplus(
+            eng, init, root, max_iter, weight_col, checkpoint_dir, "bfs"
+        )
 
 
 def run_bfs_incremental(
-    edges: DataFrame,
+    edges: DataFrame | Graph,
     delta_edges: DataFrame,
     prev_state: DataFrame,
     root: int,
     max_iter: int = 10_000,
     weight_col: str | None = None,
     checkpoint_dir: str | None = None,
-    engine_kwargs: dict | None = None,
-    engine: SuperstepEngine | None = None,
 ) -> SuperstepResult:
     """IncEval for BFS/SSSP under edge ADDITIONS (see
     plans/wcc.py::run_wcc_incremental for the PEval/IncEval framing):
@@ -101,19 +106,35 @@ def run_bfs_incremental(
 
     prev_state is (vid, value) with NULL for unreachable — run_bfs().state
     or a checkpoint snapshot. The output covers the union graph's vertices.
+    ``edges`` is the graph before the delta; a Graph passes its settings on
+    to the union graph (Graph.with_edges), whose engine this run builds and
+    closes.
     """
     cols = ["src", "dst"] + ([weight_col] if weight_col else [])
-    union_edges = edges.select(*cols).unionAll(delta_edges.select(*cols))
-    # engine, if passed, must hold the UNION edge table (incl. weight_col)
-    eng = engine or SuperstepEngine(union_edges, checkpoint_dir=checkpoint_dir,
-                                    **(engine_kwargs or {}))
+    with as_graph(edges) as g, g.with_edges(
+        g.edges.select(*cols).unionAll(delta_edges.select(*cols))
+    ) as union:
+        eng = union.engine("directed", weight_col)
+        init = _incremental_init(eng, delta_edges, prev_state, root)
+        return _run_minplus(
+            eng, init, root, max_iter, weight_col, checkpoint_dir,
+            "bfs_incremental",
+        )
+
+
+def _incremental_init(
+    eng: SuperstepEngine, delta_edges: DataFrame, prev_state: DataFrame,
+    root: int,
+) -> DataFrame:
+    """The union graph's vertices with their previous distances; delta
+    endpoints at a finite distance, and the root, active."""
     touched = (
         delta_edges.select(F.col("src").alias("vid"))
         .unionAll(delta_edges.select(F.col("dst").alias("vid")))
         .distinct()
         .withColumn("_touched", F.lit(True))
     )
-    init = (
+    return (
         eng.vertices()
         .join(prev_state.select("vid", F.col("value").alias("_prev")), "vid", "left")
         .join(touched, "vid", "left")
@@ -131,25 +152,15 @@ def run_bfs_incremental(
         )
     )
 
-    scatter, apply_fn = _make_superstep_fns(weight_col)
-    res = eng.run(
-        init, scatter=scatter, combiner="min", apply_fn=apply_fn,
-        frontier=True, max_iter=max_iter, algo="bfs_incremental",
-    )
-    if engine is None:
-        eng.close()
-    return res
-
 
 def run_bfs_decremental(
-    edges: DataFrame,
+    edges: DataFrame | Graph,
     deleted_edges: DataFrame,
     prev_state: DataFrame,
     root: int,
     max_iter: int = 10_000,
     weight_col: str | None = None,
     checkpoint_dir: str | None = None,
-    engine_kwargs: dict | None = None,
     batch_fallback_fraction: float | None = 0.5,
     max_support_rounds: int | None = 8,
 ) -> SuperstepResult:
@@ -212,17 +223,22 @@ def run_bfs_decremental(
     raises the cap to ``max_iter`` (the cascade, like every superstep loop
     here, is never unbounded); a chain deeper than max_iter then still
     falls back to the batch recompute rather than looping forever.
+
+    A Graph passes its settings on to the remaining graph's run
+    (Graph.with_edges).
     """
+    g = edges if isinstance(edges, Graph) else Graph(edges)
     cols = ["src", "dst"] + ([weight_col] if weight_col else [])
     dele_keys = deleted_edges.select("src", "dst").distinct()
     # persist: the closure loop below semi-joins against `remaining` every
     # round — without this the E-row anti-join recomputes per round (the
     # same reason run_wcc_decremental persists its canonical base table)
     remaining = (
-        edges.select(*cols)
+        g.edges.select(*cols)
         .join(dele_keys, ["src", "dst"], "left_anti")
         .persist()
     )
+    rest = g.with_edges(remaining)
     prev = prev_state.select("vid", "value")
     w = F.col(weight_col) if weight_col else F.lit(1)
 
@@ -230,11 +246,11 @@ def run_bfs_decremental(
         minw = remaining.agg(F.min(weight_col).alias("m")).collect()[0]["m"]
         if minw is not None and minw <= 0:
             # zero/negative weights break the tight-parent induction
-            res = run_bfs(
-                remaining, root=root, max_iter=max_iter,
-                weight_col=weight_col, checkpoint_dir=checkpoint_dir,
-                engine_kwargs=engine_kwargs,
-            )
+            with rest:
+                res = run_bfs(
+                    rest, root=root, max_iter=max_iter,
+                    weight_col=weight_col, checkpoint_dir=checkpoint_dir,
+                )
             remaining.unpersist()
             return res
 
@@ -274,7 +290,7 @@ def run_bfs_decremental(
     # driver time by round 8 and crawled for hours at 64M edges), and the
     # previous round's blocks are freed explicitly because unpersist() is
     # a no-op on localCheckpoints.
-    spark = edges.sparkSession
+    spark = g.edges.sparkSession
     _pre_ids = persistent_rdd_ids(spark)
     visited = seeds.localCheckpoint(eager=True)
     visited_ids = persistent_rdd_ids(spark) - _pre_ids
@@ -327,16 +343,15 @@ def run_bfs_decremental(
         # a partial affected set would leave stale distances in place, so
         # the only exact option is the fresh batch run
         free_rdd_ids(spark, visited_ids)
-        res = run_bfs(
-            remaining, root=root, max_iter=max_iter,
-            weight_col=weight_col, checkpoint_dir=checkpoint_dir,
-            engine_kwargs=engine_kwargs,
-        )
+        with rest:
+            res = run_bfs(
+                rest, root=root, max_iter=max_iter,
+                weight_col=weight_col, checkpoint_dir=checkpoint_dir,
+            )
         remaining.unpersist()
         return res
 
-    eng = SuperstepEngine(remaining, checkpoint_dir=checkpoint_dir,
-                          **(engine_kwargs or {}))
+    eng = rest.engine("directed", weight_col)
     affected = visited.withColumn("_aff", F.lit(True))
     boundary = (
         eng.edges.join(
@@ -370,12 +385,10 @@ def run_bfs_decremental(
         )
     )
 
-    scatter, apply_fn = _make_superstep_fns(weight_col)
-    res = eng.run(
-        init, scatter=scatter, combiner="min", apply_fn=apply_fn,
-        frontier=True, max_iter=max_iter, algo="bfs_decremental",
+    res = _run_minplus(
+        eng, init, root, max_iter, weight_col, checkpoint_dir, "bfs_decremental"
     )
     free_rdd_ids(spark, visited_ids)
     remaining.unpersist()
-    eng.close()
+    rest.close()
     return res

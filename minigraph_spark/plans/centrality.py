@@ -5,8 +5,8 @@ and off the table at web scale; the landmark estimate — sum of reciprocal
 distances from a small probe set — is the standard production stand-in,
 e.g. for crawl-frontier prioritization).
 
-Scale shape: one SuperstepEngine prepartition amortized across ALL seeds
-(the engine-reuse contract from run_pagerank/run_bfs); each seed is a
+Scale shape: one Graph's directed engine amortized across ALL seeds (one
+prepartition); each seed is a
 frontier BFS, O(diameter) supersteps, one E-row scatter + V-row combine
 per superstep. Seeds run sequentially — k landmark BFS's cost ~k times one
 BFS, not k times the prepartition. The distance union is V·k rows, tiny
@@ -19,7 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.superstep import (
-    SuperstepEngine,
+    Graph,
+    as_graph,
     free_rdd_ids,
     persistent_rdd_ids,
     tracked_local_checkpoint,
@@ -28,9 +29,8 @@ from .bfs import run_bfs
 
 
 def landmark_distances(
-    edges: DataFrame,
+    edges: DataFrame | Graph,
     seeds: list[int],
-    engine: SuperstepEngine | None = None,
     max_iter: int = 10_000,
 ) -> DataFrame:
     """(vid, seed, dist) for every vertex REACHABLE from each seed (the
@@ -38,24 +38,22 @@ def landmark_distances(
     distances along edge direction — symmetrize first for undirected."""
     if len(set(seeds)) != len(seeds) or not seeds:
         raise ValueError("seeds must be non-empty and duplicate-free")
-    eng = engine or SuperstepEngine(edges.select("src", "dst"))
     parts = []
-    for s in seeds:
-        st = run_bfs(edges, root=s, engine=eng, max_iter=max_iter).state
-        parts.append(
-            st.filter(F.col("value").isNotNull()).select(
-                "vid",
-                F.lit(s).cast("long").alias("seed"),
-                F.col("value").alias("dist"),
+    with as_graph(edges) as g:
+        for s in seeds:
+            st = run_bfs(g, root=s, max_iter=max_iter).state
+            parts.append(
+                st.filter(F.col("value").isNotNull()).select(
+                    "vid",
+                    F.lit(s).cast("long").alias("seed"),
+                    F.col("value").alias("dist"),
+                )
             )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    out = out.persist()
-    out.count()
-    if engine is None:
-        eng.close()
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionAll(p)
+        out = out.persist()
+        out.count()
     return out
 
 
@@ -86,7 +84,7 @@ def run_eigenvector(
     _pre = persistent_rdd_ids(spark)
     with iterative_confs(spark):
         # dedup folded into the one-time partitioning exchange (the
-        # engine's dedup_edges device) - one E-scale Exchange, not two
+        # closure view's device) - one E-scale Exchange, not two
         und = prepartition_edges(
             symmetrize_raw(edges), n_part, by="src", dedup=True
         )
@@ -143,9 +141,8 @@ def run_eigenvector(
 
 
 def closeness_centrality(
-    edges: DataFrame,
+    edges: DataFrame | Graph,
     seeds: list[int],
-    engine: SuperstepEngine | None = None,
 ) -> DataFrame:
     """(vid, n_probes, closeness): landmark-estimated closeness — for each
     vertex, the number of probes that reach it and n_probes / sum of their
@@ -153,7 +150,7 @@ def closeness_centrality(
     reached by no probe, and probe self-rows, are absent). Estimates the
     inverse mean distance FROM the probe set, the crawl-side analog of
     harmonic centrality's per-target sum."""
-    d = landmark_distances(edges, seeds, engine=engine)
+    d = landmark_distances(edges, seeds)
     out = (
         d.filter(F.col("dist") > 0)
         .groupBy("vid")
@@ -169,15 +166,14 @@ def closeness_centrality(
 
 
 def harmonic_centrality(
-    edges: DataFrame,
+    edges: DataFrame | Graph,
     seeds: list[int],
-    engine: SuperstepEngine | None = None,
 ) -> DataFrame:
     """(vid, harmonic): landmark-estimated harmonic centrality — the sum of
     1/d(seed, vid) over seeds that reach vid (self-distances excluded, the
     textbook convention). Exact over the probe set; an unbiased sample of
     the true harmonic centrality when seeds are drawn uniformly."""
-    d = landmark_distances(edges, seeds, engine=engine)
+    d = landmark_distances(edges, seeds)
     out = (
         d.filter(F.col("dist") > 0)
         .groupBy("vid")

@@ -19,36 +19,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.project import canonicalize
-from ..operators.superstep import SuperstepEngine, SuperstepResult
-
-
-def canonical_edges(edges: DataFrame) -> DataFrame:
-    """Undirected simple closure with each edge kept once as (min, max) —
-    the edge table run_coloring's engine expects."""
-    return canonicalize(edges)
+from ..operators.superstep import Graph, SuperstepResult, as_graph
 
 
 def run_coloring(
-    edges: DataFrame,
+    edges: DataFrame | Graph,
     max_iter: int = 100,
     checkpoint_dir: str | None = None,
-    engine_kwargs: dict | None = None,
-    engine: SuperstepEngine | None = None,
 ) -> SuperstepResult:
     """Returns state (vid, value=color) with no two adjacent vertices equal.
 
-    Pass ``engine`` to amortize the prepartition across runs — NOTE it must
-    hold the CANONICAL (src < dst) closure, not the symmetrized one WCC/LPA
-    use (each conflicting edge must be seen once, messaging its smaller
-    endpoint); build it with SuperstepEngine(canonical_edges(edges))."""
-    eng = engine or SuperstepEngine(
-        canonical_edges(edges), checkpoint_dir=checkpoint_dir,
-        **(engine_kwargs or {})
-    )
-    # endpoints of the canonical closure = every non-isolated vertex
-    init = eng.vertices().select(
-        "vid", F.lit(0).cast("long").alias("value"), F.lit(True).alias("active")
-    )
+    Runs on the graph's canonical (src < dst) closure view, not the
+    symmetrized one WCC/LPA use: each conflicting edge must be seen once,
+    messaging its smaller endpoint."""
 
     def scatter(e: DataFrame, state: DataFrame, ctx: dict) -> DataFrame:
         cs = state.select(F.col("vid").alias("src"), F.col("value").alias("c_src"))
@@ -69,18 +52,22 @@ def run_coloring(
             bumped.alias("active"),
         )
 
-    res = eng.run(
-        init,
-        scatter=scatter,
-        combiner="sum",
-        apply_fn=apply_fn,
-        frontier=False,  # conflicts can involve non-changed endpoints
-        max_iter=max_iter,
-        algo="coloring",
-    )
-    if engine is None:
-        eng.close()  # free owned edge blocks; caller-passed engines live on
-    return res
+    with as_graph(edges) as g:
+        eng = g.engine("canonical")
+        # endpoints of the canonical closure = every non-isolated vertex
+        init = eng.vertices().select(
+            "vid", F.lit(0).cast("long").alias("value"), F.lit(True).alias("active")
+        )
+        return eng.run(
+            init,
+            scatter=scatter,
+            combiner="sum",
+            apply_fn=apply_fn,
+            frontier=False,  # conflicts can involve non-changed endpoints
+            max_iter=max_iter,
+            algo="coloring",
+            checkpoint_dir=checkpoint_dir,
+        )
 
 
 def coloring_conflicts(edges: DataFrame, colors: DataFrame) -> int:

@@ -18,12 +18,12 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.project import symmetrize_raw
 from ..operators.superstep import (
     Fragment,
     FragmentKernel,
-    SuperstepEngine,
+    Graph,
     SuperstepResult,
+    as_graph,
 )
 
 
@@ -55,11 +55,9 @@ _MODE_KERNEL = FragmentKernel(_mode_step)
 
 
 def run_lpa(
-    edges: DataFrame,
+    edges: DataFrame | Graph,
     max_iter: int = 20,
     checkpoint_dir: str | None = None,
-    engine_kwargs: dict | None = None,
-    engine: SuperstepEngine | None = None,
 ) -> SuperstepResult:
     """Synchronous LPA on the undirected simple closure.
 
@@ -67,26 +65,11 @@ def run_lpa(
     structures under synchronous updates; max_iter bounds that, matching the
     oracle's fixed-sweep semantics.
 
-    Pass ``engine`` (built over the SYMMETRIZED graph — the same closure
-    run_wcc uses, so a WCC engine is directly reusable) to amortize the
-    one-time prepartition/heavy-hitter cost across algorithms on the same
-    graph; same contract as run_pagerank/run_wcc.
+    Runs on the graph's closure view, the engine run_wcc uses: pass one
+    Graph to both and the closure is partitioned once. The combiner is
+    mode, so the closure must be exactly deduplicated; the closure view's
+    dedup (prepartition_edges dedup=True) is exact.
     """
-    # dedup folded into the engine's partitioning exchange + src-only
-    # vertex set — same device as run_wcc (the combiner is mode, so the
-    # closure MUST be exactly deduplicated; prepartition_edges(dedup=True)
-    # is exact)
-    eng = engine or SuperstepEngine(
-        symmetrize_raw(edges),
-        dedup_edges=True,
-        symmetric=True,
-        checkpoint_dir=checkpoint_dir,
-        **(engine_kwargs or {}),
-    )
-    init = eng.vertices().select(
-        "vid", F.col("vid").alias("value"), F.lit(True).alias("active")
-    )
-
     # loop-invariant Column trees built once, not per superstep (see
     # superstep._run_loop note on the per-iteration py4j floor)
     _vid_as_src = F.col("vid").alias("src")
@@ -104,10 +87,13 @@ def run_lpa(
         joined = state.join(agg.withColumnRenamed("dst", "vid"), "vid", "left")
         return joined.select("vid", _value_col, _active_col)
 
-    res = eng.run(
-        init, scatter=scatter, combiner="mode", apply_fn=apply_fn,
-        frontier=False, max_iter=max_iter, algo="lpa", kernel=_MODE_KERNEL,
-    )
-    if engine is None:
-        eng.close()  # free owned edge blocks; caller-passed engines live on
-    return res
+    with as_graph(edges) as g:
+        eng = g.engine("closure")
+        init = eng.vertices().select(
+            "vid", F.col("vid").alias("value"), F.lit(True).alias("active")
+        )
+        return eng.run(
+            init, scatter=scatter, combiner="mode", apply_fn=apply_fn,
+            frontier=False, max_iter=max_iter, algo="lpa", kernel=_MODE_KERNEL,
+            checkpoint_dir=checkpoint_dir,
+        )

@@ -28,8 +28,10 @@ from pyspark.sql import functions as F
 from ..operators.superstep import (
     Fragment,
     FragmentKernel,
+    Graph,
     SuperstepEngine,
     SuperstepResult,
+    as_graph,
 )
 
 
@@ -65,7 +67,7 @@ def _make_standard_kernel(
 
 
 def run_pagerank(
-    edges: DataFrame,
+    edges: DataFrame | Graph,
     variant: str = "standard",
     alpha: float = 0.85,
     gamma: float = 0.01,
@@ -73,8 +75,6 @@ def run_pagerank(
     tol: float = 1e-6,
     max_iter: int = 200,
     checkpoint_dir: str | None = None,
-    engine_kwargs: dict | None = None,
-    engine: SuperstepEngine | None = None,
     init_ranks: DataFrame | None = None,
     personalize: list[int] | None = None,
     weight_col: str | None = None,
@@ -87,10 +87,15 @@ def run_pagerank(
     flow to the seeds uniformly instead of to all vertices, and the walk
     starts at the seeds. Standard variant only.
 
-    Pass ``engine`` to reuse an already-partitioned SuperstepEngine across
-    runs — the one-time prepartition cost (the analog of the
-    reference's graph_partition_exec step, tools/graph_partition.cpp:98-134)
-    then amortizes over every run on the same graph.
+    Runs on the graph's directed view, (src, dst[, weight_col]). Pass a
+    Graph to reuse its engine across runs — the one-time prepartition cost
+    (the analog of the reference's graph_partition_exec step,
+    tools/graph_partition.cpp:98-134) then amortizes over every run on the
+    same graph.
+
+    A resume (checkpoint_dir) refuses snapshots of another variant, alpha,
+    gamma, epsilon, personalize or weight_col; tol and max_iter only decide
+    where a run stops, so they may change.
 
     Pass ``init_ranks`` (vid, value — e.g. a previous run's state or a
     checkpoint snapshot) to warm-start the standard variant across graph
@@ -99,10 +104,8 @@ def run_pagerank(
     near-fixpoint start just needs far fewer sweeps; new vertices seed at
     1/n and the vector is renormalized to sum 1 in-plan).
     """
-    cols = ["src", "dst"] + ([weight_col] if weight_col else [])
-    eng = engine or SuperstepEngine(
-        edges.select(*cols), checkpoint_dir=checkpoint_dir, **(engine_kwargs or {})
-    )
+    if variant not in ("standard", "minigraph"):
+        raise ValueError(f"unknown variant {variant!r}")
     if weight_col is not None and variant != "standard":
         raise ValueError("weight_col applies to the standard variant only")
 
@@ -115,212 +118,229 @@ def run_pagerank(
             "personalize requires the standard variant and a non-empty, "
             "duplicate-free seed list (p normalizes by len(seeds))"
         )
-
-    if variant == "standard":
-        # ONE E-row pass builds the vertex set AND the out-degree
-        # (guide §2.4 — remove shuffles outright): previously this was a
-        # distinct-count job, a second distinct inside the init plan, an
-        # outdeg groupBy and a V-row join — three extra E-scale exchanges
-        # per run. Union src-endpoints (carrying the degree contribution)
-        # with dst-endpoints (carrying a null/zero contribution) and group
-        # once by vid; sum() skips nulls, so a vertex seen only as dst
-        # aggregates to NULL = dangling, exactly the old left-join-miss
-        # rule, and a src group's addend order is unchanged (the null
-        # partials merge as no-ops), keeping the float results bit-stable.
-        if weight_col is not None:
-            # weighted mode: contributions split by edge weight / total
-            # out-weight instead of 1 / out-degree. A source whose weights
-            # sum to <= 0 cannot split rank mass (value / outdeg would be
-            # Inf/NaN and propagate silently) — treat it as dangling
-            # (outdeg NULL), the same rule an out-degree-0 vertex gets in
-            # unweighted mode (ADVICE r3)
-            ends = eng.edges.select(
-                F.col("src").alias("vid"),
-                F.col(weight_col).cast("double").alias("_d"),
-            ).unionAll(
-                eng.edges.select(
-                    F.col("dst").alias("vid"),
-                    F.lit(None).cast("double").alias("_d"),
-                )
-            )
-            degs = ends.groupBy("vid").agg(F.sum("_d").alias("_deg"))
-            outdeg_expr = F.when(F.col("_deg") > 0.0, F.col("_deg"))
-        else:
-            ends = eng.edges.select(
-                F.col("src").alias("vid"), F.lit(1).alias("_d")
-            ).unionAll(
-                eng.edges.select(F.col("dst").alias("vid"), F.lit(0).alias("_d"))
-            )
-            degs = ends.groupBy("vid").agg(F.sum("_d").alias("_deg"))
-            # count-of-out-edges semantics: >0 means has out-edges; the
-            # 0-count (dst-only) vertex maps to NULL = dangling
-            outdeg_expr = F.when(F.col("_deg") > 0, F.col("_deg"))
-        # persist AND materialize under the engine's loop scope: degs'
-        # groupBy exchange decides the partitioning the init state (and
-        # thus every later superstep's state) inherits, and persist()
-        # compiles the cached physical plan with the conf active AT CALL
-        # TIME — at the session width it would mismatch the engine's
-        # size-aware count and EnsureRequirements would then re-shuffle
-        # the co-partitioned join sides every superstep (caught via
-        # plans/r06: a 16-partition loop against a 32-partition state
-        # re-exchanged the edge table per iteration)
-        with eng.loop_confs():
-            degs = degs.persist()
-            # clamp: an empty edge table has zero vertices; the loop then
-            # converges immediately on the empty state instead of dividing
-            # by 0
-            n = max(degs.count(), 1)
-        # teleport distribution: uniform 1/n, or concentrated on the seeds.
-        # p is an expression over vid (literal IN-list), re-evaluated inside
-        # apply each sweep — WSCG-side, no extra join or state column.
-        if personalize is not None:
-            p_of = lambda vid_col: F.when(  # noqa: E731
-                vid_col.isin(personalize), F.lit(1.0 / len(personalize))
-            ).otherwise(F.lit(0.0))
-        else:
-            p_of = lambda vid_col: F.lit(1.0 / n)  # noqa: E731
-        if init_ranks is not None:
-            seeded = degs.join(
-                init_ranks.select("vid", F.col("value").alias("_prev")), "vid", "left"
-            ).select("vid", "_deg", F.coalesce("_prev", F.lit(1.0 / n)).alias("_r"))
-            # renormalize in-plan (1-row broadcast, setup-only): vertex
-            # churn across graph versions leaves the carried-over mass
-            # summing to != 1
-            total = seeded.agg(F.sum("_r").alias("_t"))
-            start_val = F.col("_r") / F.col("_t")
-            seeded = seeded.crossJoin(F.broadcast(total))
-        else:
-            seeded = degs.select("vid", "_deg", p_of(F.col("vid")).alias("_r"))
-            start_val = F.col("_r")
-        init = seeded.select(
-            "vid",
-            start_val.alias("value"),
-            F.lit(True).alias("active"),
-            outdeg_expr.cast("double").alias("outdeg"),
+    if init_ranks is not None and variant != "standard":
+        raise ValueError(
+            "init_ranks warm start applies to the standard variant only "
+            "(the minigraph rule's epsilon-gate freezes near-fixpoint "
+            "states rather than refining them)"
         )
-
-        # loop-invariant Column trees built ONCE (not per superstep): plan
-        # construction is a py4j roundtrip per expression node, a fixed
-        # driver cost each iteration (see superstep._run_loop note)
-        _has_out = F.col("outdeg").isNotNull()
-        _vid_as_src = F.col("vid").alias("src")
-        _c_col = (F.col("value") / F.col("outdeg")).alias("c")
-        _msg_col = (
-            (F.col("c") * F.col(weight_col).cast("double")).alias("msg")
-            if weight_col is not None
-            else F.col("c").alias("msg")
-        )
-
-        def scatter(e: DataFrame, state: DataFrame, ctx: dict) -> DataFrame:
-            contrib = state.filter(_has_out).select(_vid_as_src, _c_col)
-            return e.join(contrib, "src").select("dst", _msg_col)
-
-        # dangling mass via the engine's Aggregate hook (extra_agg): the sum
-        # of rank over out-degree-0 vertices is evaluated in the SAME
-        # per-iteration job that reads convergence (zero extra Spark jobs)
-        # and fed to the next superstep as a driver-side scalar literal. The
-        # value aggregated over iteration k's state is exactly the dangling
-        # mass apply needs at iteration k+1, because apply reads the
-        # PREVIOUS state's mass.
-        _dangling_agg = F.sum(F.when(F.col("outdeg").isNull(), F.col("value")))
-
-        # loop-invariant subtrees of apply (the per-iteration dangling
-        # literal stays inside apply_fn; these compose around it
-        # unchanged — the expression tree is identical to the inline form)
-        _coal_agg = F.coalesce(F.col("agg"), F.lit(0.0))
-        _val_col = F.col("value")
-        _lit_alpha = F.lit(alpha)
-        if personalize is not None:
-            _p_vid = p_of(F.col("vid"))
-            _lit_tele = F.lit(1 - alpha) * _p_vid
-        else:
-            # keep the uniform-teleport arithmetic EXACTLY as before
-            # ((1-alpha)/n folded driver-side): the 6-dp oracles are
-            # bit-sensitive to re-associating these float ops
-            _lit_tele = F.lit((1 - alpha) / n)
-
-        def apply_fn(state: DataFrame, agg: DataFrame, ctx: dict) -> DataFrame:
-            joined = state.join(agg.withColumnRenamed("dst", "vid"), "vid", "left")
-            d = ctx.get("_dangling")
-            dangling = F.lit(float(d) if d is not None else 0.0)
-            if personalize is not None:
-                new_val = _lit_tele + _lit_alpha * (_coal_agg + dangling * _p_vid)
-            else:
-                new_val = _lit_tele + _lit_alpha * (_coal_agg + dangling / n)
-            return joined.select(
-                "vid",
-                new_val.alias("value"),
-                (F.abs(new_val - _val_col) > tol).alias("active"),
-                "outdeg",
+    if personalize is not None:
+        personalize = [int(v) for v in personalize]  # JSON-able run params
+    with as_graph(edges) as g:
+        eng = g.engine("directed", weight_col)
+        if variant == "standard":
+            return _run_standard(
+                eng, alpha, tol, max_iter, checkpoint_dir, init_ranks,
+                personalize, weight_col,
             )
+        return _run_minigraph(eng, gamma, epsilon, max_iter, checkpoint_dir)
 
-        res = eng.run(
-            init, scatter=scatter, combiner="sum", apply_fn=apply_fn,
-            frontier=False, max_iter=max_iter, algo="pagerank",
-            kernel=_make_standard_kernel(n, alpha, tol, weight_col, personalize),
-            extra_agg={"_dangling": _dangling_agg},
-        )
-        degs.unpersist()
-        if engine is None:
-            eng.close()  # free owned edge blocks; caller-passed engines live on
-        return res
 
-    if variant == "minigraph":
-        if init_ranks is not None:
-            raise ValueError(
-                "init_ranks warm start applies to the standard variant only "
-                "(the minigraph rule's epsilon-gate freezes near-fixpoint "
-                "states rather than refining them)"
-            )
-        # same one-pass vertex-set + degree build as the standard variant, with
-        # the roles of src/dst swapped (in-degree): one E-row exchange
-        # replaces distinct + groupBy + join
+def _run_standard(
+    eng: SuperstepEngine, alpha: float, tol: float, max_iter: int,
+    checkpoint_dir: str | None, init_ranks: DataFrame | None,
+    personalize: list[int] | None, weight_col: str | None,
+) -> SuperstepResult:
+    # ONE E-row pass builds the vertex set AND the out-degree
+    # (guide §2.4 — remove shuffles outright): previously this was a
+    # distinct-count job, a second distinct inside the init plan, an
+    # outdeg groupBy and a V-row join — three extra E-scale exchanges
+    # per run. Union src-endpoints (carrying the degree contribution)
+    # with dst-endpoints (carrying a null/zero contribution) and group
+    # once by vid; sum() skips nulls, so a vertex seen only as dst
+    # aggregates to NULL = dangling, exactly the old left-join-miss
+    # rule, and a src group's addend order is unchanged (the null
+    # partials merge as no-ops), keeping the float results bit-stable.
+    if weight_col is not None:
+        # weighted mode: contributions split by edge weight / total
+        # out-weight instead of 1 / out-degree. A source whose weights
+        # sum to <= 0 cannot split rank mass (value / outdeg would be
+        # Inf/NaN and propagate silently) — treat it as dangling
+        # (outdeg NULL), the same rule an out-degree-0 vertex gets in
+        # unweighted mode (ADVICE r3)
         ends = eng.edges.select(
-            F.col("dst").alias("vid"), F.lit(1).alias("_d")
+            F.col("src").alias("vid"),
+            F.col(weight_col).cast("double").alias("_d"),
         ).unionAll(
-            eng.edges.select(F.col("src").alias("vid"), F.lit(0).alias("_d"))
-        )
-        init = (
-            ends.groupBy("vid")
-            .agg(F.sum("_d").alias("_deg"))
-            .select(
-                "vid",
-                F.lit(1.0).alias("value"),
-                F.lit(True).alias("active"),
-                F.when(F.col("_deg") > 0, F.col("_deg"))
-                .cast("double")
-                .alias("indeg"),
+            eng.edges.select(
+                F.col("dst").alias("vid"),
+                F.lit(None).cast("double").alias("_d"),
             )
         )
-
-        # loop-invariant Column trees, built once (see standard variant)
-        _vid_as_src = F.col("vid").alias("src")
-        _msg_col = F.col("value").alias("msg")
-        _nxt = F.when(
-            F.col("indeg").isNotNull(),
-            F.lit(gamma) * F.col("agg") / F.col("indeg"),
-        ).otherwise(F.col("value"))
-        _changed = (F.col("value") - _nxt) * (F.col("value") - _nxt) > F.lit(epsilon)
-        _value_col = F.when(_changed, _nxt).otherwise(F.col("value")).alias("value")
-        _active_col = _changed.alias("active")
-
-        def scatter_mg(e: DataFrame, state: DataFrame, ctx: dict) -> DataFrame:
-            return e.join(state.select(_vid_as_src, "value"), "src").select(
-                "dst", _msg_col
-            )
-
-        def apply_mg(state: DataFrame, agg: DataFrame, ctx: dict) -> DataFrame:
-            return (
-                state.join(agg.withColumnRenamed("dst", "vid"), "vid", "left")
-                .select("vid", _value_col, _active_col, "indeg")
-            )
-
-        res = eng.run(
-            init, scatter=scatter_mg, combiner="sum", apply_fn=apply_mg,
-            frontier=False, max_iter=max_iter, algo="pagerank_minigraph",
+        degs = ends.groupBy("vid").agg(F.sum("_d").alias("_deg"))
+        outdeg_expr = F.when(F.col("_deg") > 0.0, F.col("_deg"))
+    else:
+        ends = eng.edges.select(
+            F.col("src").alias("vid"), F.lit(1).alias("_d")
+        ).unionAll(
+            eng.edges.select(F.col("dst").alias("vid"), F.lit(0).alias("_d"))
         )
-        if engine is None:
-            eng.close()
-        return res
+        degs = ends.groupBy("vid").agg(F.sum("_d").alias("_deg"))
+        # count-of-out-edges semantics: >0 means has out-edges; the
+        # 0-count (dst-only) vertex maps to NULL = dangling
+        outdeg_expr = F.when(F.col("_deg") > 0, F.col("_deg"))
+    # persist AND materialize under the engine's loop scope: degs'
+    # groupBy exchange decides the partitioning the init state (and
+    # thus every later superstep's state) inherits, and persist()
+    # compiles the cached physical plan with the conf active AT CALL
+    # TIME — at the session width it would mismatch the engine's
+    # size-aware count and EnsureRequirements would then re-shuffle
+    # the co-partitioned join sides every superstep (caught via
+    # plans/r06: a 16-partition loop against a 32-partition state
+    # re-exchanged the edge table per iteration)
+    with eng.loop_confs():
+        degs = degs.persist()
+        # clamp: an empty edge table has zero vertices; the loop then
+        # converges immediately on the empty state instead of dividing
+        # by 0
+        n = max(degs.count(), 1)
+    # teleport distribution: uniform 1/n, or concentrated on the seeds.
+    # p is an expression over vid (literal IN-list), re-evaluated inside
+    # apply each sweep — WSCG-side, no extra join or state column.
+    if personalize is not None:
+        p_of = lambda vid_col: F.when(  # noqa: E731
+            vid_col.isin(personalize), F.lit(1.0 / len(personalize))
+        ).otherwise(F.lit(0.0))
+    else:
+        p_of = lambda vid_col: F.lit(1.0 / n)  # noqa: E731
+    if init_ranks is not None:
+        seeded = degs.join(
+            init_ranks.select("vid", F.col("value").alias("_prev")), "vid", "left"
+        ).select("vid", "_deg", F.coalesce("_prev", F.lit(1.0 / n)).alias("_r"))
+        # renormalize in-plan (1-row broadcast, setup-only): vertex
+        # churn across graph versions leaves the carried-over mass
+        # summing to != 1
+        total = seeded.agg(F.sum("_r").alias("_t"))
+        start_val = F.col("_r") / F.col("_t")
+        seeded = seeded.crossJoin(F.broadcast(total))
+    else:
+        seeded = degs.select("vid", "_deg", p_of(F.col("vid")).alias("_r"))
+        start_val = F.col("_r")
+    init = seeded.select(
+        "vid",
+        start_val.alias("value"),
+        F.lit(True).alias("active"),
+        outdeg_expr.cast("double").alias("outdeg"),
+    )
 
-    raise ValueError(f"unknown variant {variant!r}")
+    # loop-invariant Column trees built ONCE (not per superstep): plan
+    # construction is a py4j roundtrip per expression node, a fixed
+    # driver cost each iteration (see superstep._run_loop note)
+    _has_out = F.col("outdeg").isNotNull()
+    _vid_as_src = F.col("vid").alias("src")
+    _c_col = (F.col("value") / F.col("outdeg")).alias("c")
+    _msg_col = (
+        (F.col("c") * F.col(weight_col).cast("double")).alias("msg")
+        if weight_col is not None
+        else F.col("c").alias("msg")
+    )
+
+    def scatter(e: DataFrame, state: DataFrame, ctx: dict) -> DataFrame:
+        contrib = state.filter(_has_out).select(_vid_as_src, _c_col)
+        return e.join(contrib, "src").select("dst", _msg_col)
+
+    # dangling mass via the engine's Aggregate hook (extra_agg): the sum
+    # of rank over out-degree-0 vertices is evaluated in the SAME
+    # per-iteration job that reads convergence (zero extra Spark jobs)
+    # and fed to the next superstep as a driver-side scalar literal. The
+    # value aggregated over iteration k's state is exactly the dangling
+    # mass apply needs at iteration k+1, because apply reads the
+    # PREVIOUS state's mass.
+    _dangling_agg = F.sum(F.when(F.col("outdeg").isNull(), F.col("value")))
+
+    # loop-invariant subtrees of apply (the per-iteration dangling
+    # literal stays inside apply_fn; these compose around it
+    # unchanged — the expression tree is identical to the inline form)
+    _coal_agg = F.coalesce(F.col("agg"), F.lit(0.0))
+    _val_col = F.col("value")
+    _lit_alpha = F.lit(alpha)
+    if personalize is not None:
+        _p_vid = p_of(F.col("vid"))
+        _lit_tele = F.lit(1 - alpha) * _p_vid
+    else:
+        # keep the uniform-teleport arithmetic EXACTLY as before
+        # ((1-alpha)/n folded driver-side): the 6-dp oracles are
+        # bit-sensitive to re-associating these float ops
+        _lit_tele = F.lit((1 - alpha) / n)
+
+    def apply_fn(state: DataFrame, agg: DataFrame, ctx: dict) -> DataFrame:
+        joined = state.join(agg.withColumnRenamed("dst", "vid"), "vid", "left")
+        d = ctx.get("_dangling")
+        dangling = F.lit(float(d) if d is not None else 0.0)
+        if personalize is not None:
+            new_val = _lit_tele + _lit_alpha * (_coal_agg + dangling * _p_vid)
+        else:
+            new_val = _lit_tele + _lit_alpha * (_coal_agg + dangling / n)
+        return joined.select(
+            "vid",
+            new_val.alias("value"),
+            (F.abs(new_val - _val_col) > tol).alias("active"),
+            "outdeg",
+        )
+
+    res = eng.run(
+        init, scatter=scatter, combiner="sum", apply_fn=apply_fn,
+        frontier=False, max_iter=max_iter,
+        algo=("pagerank", {"alpha": alpha, "personalize": personalize,
+                           "weight_col": weight_col}),
+        kernel=_make_standard_kernel(n, alpha, tol, weight_col, personalize),
+        extra_agg={"_dangling": _dangling_agg},
+        checkpoint_dir=checkpoint_dir,
+    )
+    degs.unpersist()
+    return res
+
+
+def _run_minigraph(
+    eng: SuperstepEngine, gamma: float, epsilon: float, max_iter: int,
+    checkpoint_dir: str | None,
+) -> SuperstepResult:
+    # same one-pass vertex-set + degree build as the standard variant, with
+    # the roles of src/dst swapped (in-degree): one E-row exchange
+    # replaces distinct + groupBy + join
+    ends = eng.edges.select(
+        F.col("dst").alias("vid"), F.lit(1).alias("_d")
+    ).unionAll(
+        eng.edges.select(F.col("src").alias("vid"), F.lit(0).alias("_d"))
+    )
+    init = (
+        ends.groupBy("vid")
+        .agg(F.sum("_d").alias("_deg"))
+        .select(
+            "vid",
+            F.lit(1.0).alias("value"),
+            F.lit(True).alias("active"),
+            F.when(F.col("_deg") > 0, F.col("_deg"))
+            .cast("double")
+            .alias("indeg"),
+        )
+    )
+
+    # loop-invariant Column trees, built once (see standard variant)
+    _vid_as_src = F.col("vid").alias("src")
+    _msg_col = F.col("value").alias("msg")
+    _nxt = F.when(
+        F.col("indeg").isNotNull(),
+        F.lit(gamma) * F.col("agg") / F.col("indeg"),
+    ).otherwise(F.col("value"))
+    _changed = (F.col("value") - _nxt) * (F.col("value") - _nxt) > F.lit(epsilon)
+    _value_col = F.when(_changed, _nxt).otherwise(F.col("value")).alias("value")
+    _active_col = _changed.alias("active")
+
+    def scatter_mg(e: DataFrame, state: DataFrame, ctx: dict) -> DataFrame:
+        return e.join(state.select(_vid_as_src, "value"), "src").select(
+            "dst", _msg_col
+        )
+
+    def apply_mg(state: DataFrame, agg: DataFrame, ctx: dict) -> DataFrame:
+        return (
+            state.join(agg.withColumnRenamed("dst", "vid"), "vid", "left")
+            .select("vid", _value_col, _active_col, "indeg")
+        )
+
+    return eng.run(
+        init, scatter=scatter_mg, combiner="sum", apply_fn=apply_mg,
+        frontier=False, max_iter=max_iter,
+        algo=("pagerank_minigraph", {"gamma": gamma, "epsilon": epsilon}),
+        checkpoint_dir=checkpoint_dir,
+    )

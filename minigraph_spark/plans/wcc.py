@@ -18,8 +18,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.csr import make_minplus_kernel
-from ..operators.project import symmetrize_raw
-from ..operators.superstep import ApplyFn, SuperstepEngine, SuperstepResult
+from ..operators.project import canonicalize
+from ..operators.superstep import (
+    ApplyFn,
+    Graph,
+    SuperstepEngine,
+    SuperstepResult,
+    as_graph,
+)
 
 
 # The scatter/apply builders below are FACTORIES returning closures with
@@ -92,10 +98,6 @@ def _with_jump(base: ApplyFn) -> ApplyFn:
     return _apply
 
 
-def _make_apply_min_jump() -> ApplyFn:
-    return _with_jump(_make_apply_min())
-
-
 def _make_apply_min_hook() -> ApplyFn:
     """_apply_min plus Shiloach-Vishkin-style hooking.
 
@@ -137,29 +139,11 @@ def _make_apply_min_hook() -> ApplyFn:
 _MINLABEL_KERNEL = make_minplus_kernel()
 
 
-def _pick_apply(hooking: bool, directed: bool, pointer_jump: bool) -> ApplyFn:
-    base = _make_apply_min_hook() if hooking and not directed else _make_apply_min()
-    return _with_jump(base) if pointer_jump else base
-
-
-def _wcc_engine(
-    edges: DataFrame,
-    directed: bool,
-    checkpoint_dir: str | None,
-    engine_kwargs: dict | None,
-) -> SuperstepEngine:
-    """The engine every WCC face runs on: the directed edges as given, or
-    (undirected) the symmetrized closure, deduped inside the engine's
-    one-time partitioning exchange (dedup_edges) rather than by a separate
-    distinct shuffle, with its vertex set read from src alone (symmetric)
-    — one E-scale Exchange instead of two at engine build, half the
-    distinct input at init (guide §2.4)."""
-    kw = {"checkpoint_dir": checkpoint_dir, **(engine_kwargs or {})}
-    if directed:
-        return SuperstepEngine(edges.select("src", "dst"), **kw)
-    return SuperstepEngine(
-        symmetrize_raw(edges), dedup_edges=True, symmetric=True, **kw
-    )
+def _pick_apply(directed: bool) -> ApplyFn:
+    """Min-label plus one pointer-jumping hop per superstep; undirected runs
+    also hook (a hook target need not be reachable from the message origin
+    under directed semantics)."""
+    return _with_jump(_make_apply_min() if directed else _make_apply_min_hook())
 
 
 def _init_labels(eng: SuperstepEngine) -> DataFrame:
@@ -170,60 +154,45 @@ def _init_labels(eng: SuperstepEngine) -> DataFrame:
 
 
 def run_wcc(
-    edges: DataFrame,
+    edges: DataFrame | Graph,
     directed: bool = False,
     max_iter: int = 200,
-    pointer_jump: bool = True,
-    hooking: bool = True,
     checkpoint_dir: str | None = None,
-    engine_kwargs: dict | None = None,
-    engine: SuperstepEngine | None = None,
 ) -> SuperstepResult:
     """Min-label propagation; returns state (vid, value=component label).
 
-    Pass ``engine`` (built over the SYMMETRIZED graph unless directed=True)
-    to amortize the one-time prepartition across runs on the same graph,
-    same contract as run_pagerank.
+    directed=False (default): true WCC on the graph's closure view.
+    directed=True: the reference's literal directed min-label fixpoint on
+    the directed view. Both add a path-halving hop per superstep (same
+    fixpoint, O(log n) rounds instead of O(diameter)); undirected runs also
+    hook — see _make_apply_min_hook for why random vertex ids on path
+    graphs need it.
 
-    directed=False (default): true WCC on the symmetrized graph.
-    directed=True: the reference's literal directed min-label fixpoint
-    (valid for pointer_jump too: ancestors of ancestors are ancestors).
-    pointer_jump=True adds a path-halving hop per superstep — same fixpoint,
-    O(log n) rounds instead of O(diameter); turn off for the literal
-    one-hop-per-superstep reference parity behavior.
-    hooking=True (undirected only — a hook target need not be reachable
-    from the message origin under directed semantics, so it is ignored for
-    directed=True) adds the SV-style V-row hook shuffle per superstep; see
-    _make_apply_min_hook for why random vertex ids on path graphs need it.
-    hooking composes with either pointer_jump setting.
+    Pass a Graph to share its engine with other plans on the same graph
+    (run_lpa runs on the same closure).
     """
-    eng = engine or _wcc_engine(edges, directed, checkpoint_dir, engine_kwargs)
-    res = eng.run(
-        _init_labels(eng),
-        scatter=_make_scatter_label(),
-        combiner="min",
-        apply_fn=_pick_apply(hooking, directed, pointer_jump),
-        frontier=True,
-        max_iter=max_iter,
-        algo="wcc_directed" if directed else "wcc",
-        kernel=_MINLABEL_KERNEL,
-    )
-    if engine is None:
-        eng.close()  # free owned edge blocks; caller-passed engines live on
-    return res
+    with as_graph(edges) as g:
+        eng = g.engine("directed" if directed else "closure")
+        return eng.run(
+            _init_labels(eng),
+            scatter=_make_scatter_label(),
+            combiner="min",
+            apply_fn=_pick_apply(directed),
+            frontier=True,
+            max_iter=max_iter,
+            algo="wcc_directed" if directed else "wcc",
+            kernel=_MINLABEL_KERNEL,
+            checkpoint_dir=checkpoint_dir,
+        )
 
 
 def run_wcc_incremental(
-    edges: DataFrame,
+    edges: DataFrame | Graph,
     delta_edges: DataFrame,
     prev_labels: DataFrame,
     directed: bool = False,
     max_iter: int = 200,
-    pointer_jump: bool = True,
-    hooking: bool = True,
     checkpoint_dir: str | None = None,
-    engine_kwargs: dict | None = None,
-    engine: SuperstepEngine | None = None,
 ) -> SuperstepResult:
     """IncEval for WCC under edge ADDITIONS: re-converge the label fixpoint
     starting from a previous converged state, activating only the region the
@@ -245,18 +214,40 @@ def run_wcc_incremental(
     split a component, which min-label cannot observe from a converged
     state; re-run run_wcc for deletions (the reference's IncEval has the
     same monotone-class restriction).
+
+    ``edges`` is the graph before the delta; a Graph passes its settings
+    on to the union graph (Graph.with_edges), whose engine this run builds
+    and closes.
     """
-    union_edges = edges.select("src", "dst").unionAll(delta_edges.select("src", "dst"))
-    # engine, if passed, must hold the (symmetrized unless directed) UNION
-    # graph — the caller owns the per-graph-version prepartition lifecycle
-    eng = engine or _wcc_engine(union_edges, directed, checkpoint_dir, engine_kwargs)
+    with as_graph(edges) as g, g.with_edges(
+        g.edges.select("src", "dst").unionAll(delta_edges.select("src", "dst"))
+    ) as union:
+        eng = union.engine("directed" if directed else "closure")
+        return eng.run(
+            _incremental_init(eng, delta_edges, prev_labels),
+            scatter=_make_scatter_label(),
+            combiner="min",
+            apply_fn=_pick_apply(directed),
+            frontier=True,
+            max_iter=max_iter,
+            algo="wcc_incremental",
+            kernel=_MINLABEL_KERNEL,
+            checkpoint_dir=checkpoint_dir,
+        )
+
+
+def _incremental_init(
+    eng: SuperstepEngine, delta_edges: DataFrame, prev_labels: DataFrame
+) -> DataFrame:
+    """The union graph's vertices with their previous labels (new ones
+    labelled with their own id); delta endpoints and new vertices active."""
     touched = (
         delta_edges.select(F.col("src").alias("vid"))
         .unionAll(delta_edges.select(F.col("dst").alias("vid")))
         .distinct()
         .withColumn("_touched", F.lit(True))
     )
-    init = (
+    return (
         eng.vertices()
         .join(prev_labels.select("vid", F.col("value").alias("_prev")), "vid", "left")
         .join(touched, "vid", "left")
@@ -266,30 +257,14 @@ def run_wcc_incremental(
             (F.col("_touched").isNotNull() | F.col("_prev").isNull()).alias("active"),
         )
     )
-    res = eng.run(
-        init,
-        scatter=_make_scatter_label(),
-        combiner="min",
-        apply_fn=_pick_apply(hooking, directed, pointer_jump),
-        frontier=True,
-        max_iter=max_iter,
-        algo="wcc_incremental",
-        kernel=_MINLABEL_KERNEL,
-    )
-    if engine is None:
-        eng.close()
-    return res
 
 
 def run_wcc_decremental(
-    edges: DataFrame,
+    edges: DataFrame | Graph,
     deleted_edges: DataFrame,
     prev_labels: DataFrame,
     max_iter: int = 200,
-    pointer_jump: bool = True,
-    hooking: bool = True,
     checkpoint_dir: str | None = None,
-    engine_kwargs: dict | None = None,
 ) -> SuperstepResult:
     """IncEval for WCC under edge DELETIONS — the non-monotone direction the
     reference's IncEval cannot do (run_wcc_incremental's docstring; the
@@ -314,18 +289,13 @@ def run_wcc_decremental(
     analog of the IncEval win (a daily unlink-delta on a 10^12-edge link
     graph touches a vanishing fraction of components; everything else is a
     V-row anti-join and no scatter work at all).
-    """
-    def canon(df: DataFrame) -> DataFrame:
-        return (
-            df.select(
-                F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-            )
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
 
-    base = canon(edges).persist()
-    dele = canon(deleted_edges)
+    A Graph passes its settings on to the affected subgraph's run
+    (Graph.with_edges).
+    """
+    g = edges if isinstance(edges, Graph) else Graph(edges)
+    base = canonicalize(g.edges).persist()
+    dele = canonicalize(deleted_edges)
     removed = dele.join(base, ["src", "dst"], "left_semi")
     remaining = base.join(dele, ["src", "dst"], "left_anti")
     lab = prev_labels.select("vid", F.col("value").alias("label"))
@@ -346,10 +316,8 @@ def run_wcc_decremental(
         .join(affected_labels, "label", "left_semi")
         .select("src", "dst")
     )
-    res = run_wcc(
-        sub, max_iter=max_iter, pointer_jump=pointer_jump, hooking=hooking,
-        checkpoint_dir=checkpoint_dir, engine_kwargs=engine_kwargs,
-    )
+    with g.with_edges(sub) as affected:
+        res = run_wcc(affected, max_iter=max_iter, checkpoint_dir=checkpoint_dir)
     recomputed = res.state.select("vid", "value")
     unaffected = (
         prev_labels.select("vid", "value")

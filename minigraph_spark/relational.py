@@ -44,6 +44,7 @@ from .operators.dedup import (
     text_fingerprint,
 )
 from .operators.similarity import cosine_topk, cosine_topk_ivf, cosine_topk_lsh
+from .operators.superstep import Graph
 from .operators.textops import lang_id, quality_score, token_count, token_stats
 from .plans.bfs import run_bfs
 from .plans.lpa import run_lpa
@@ -1645,7 +1646,8 @@ def _q_bfs_csr_mod(spark, sf_dir):
     distances do not depend on the width."""
     e = mod_edges(spark, sf_dir)
     root = e.select(F.least(F.min("src"), F.min("dst")).alias("r")).collect()[0]["r"]
-    res = run_bfs(e, root=int(root), engine_kwargs={"num_partitions": 8})
+    with Graph(e, num_partitions=8) as g:
+        res = run_bfs(g, root=int(root))
     return res.state.filter(F.col("value").isNotNull()).select(
         "vid", F.col("value").alias("dist")
     )

@@ -77,6 +77,7 @@ def _pr_resume_phase(args) -> None:
     """One JVM of the pr_resume protocol (subprocess target; see run_pr_resume)."""
     import json
 
+    from minigraph_spark.operators.superstep import Graph
     from minigraph_spark.plans.pagerank import run_pagerank
 
     spark = _spark(f"prres_{args.phase}_p{args.power}", args.shuffle,
@@ -86,13 +87,13 @@ def _pr_resume_phase(args) -> None:
     if args.phase == "interrupt":
         # the "kill": a to-convergence run stopped after 2 sweeps, snapshot
         # every sweep — exactly what a preempted spark-submit leaves behind
-        r = run_pagerank(rmat, tol=1e-6, max_iter=2, checkpoint_dir=args.ck_dir,
-                         engine_kwargs={"checkpoint_every": 1})
+        r = run_pagerank(Graph(rmat, checkpoint_every=1), tol=1e-6, max_iter=2,
+                         checkpoint_dir=args.ck_dir)
     elif args.phase == "resume":
         # fresh JVM, same checkpoint dir: load_snapshot restores the newest
         # complete snapshot and the loop continues to the fixpoint
-        r = run_pagerank(rmat, tol=1e-6, max_iter=200, checkpoint_dir=args.ck_dir,
-                         engine_kwargs={"checkpoint_every": 1})
+        r = run_pagerank(Graph(rmat, checkpoint_every=1), tol=1e-6, max_iter=200,
+                         checkpoint_dir=args.ck_dir)
     else:  # control: uninterrupted run to the same tolerance
         r = run_pagerank(rmat, tol=1e-6, max_iter=200)
     wall = time.time() - t0
@@ -182,7 +183,7 @@ def run_pr_resume(args) -> None:
 
 
 def run_pr(args, converged: bool) -> None:
-    from minigraph_spark.operators.superstep import SuperstepEngine
+    from minigraph_spark.operators.superstep import Graph
     from minigraph_spark.plans.pagerank import run_pagerank
 
     spark = _spark(f"pr_p{args.power}", args.shuffle)
@@ -190,17 +191,17 @@ def run_pr(args, converged: bool) -> None:
     n = rmat.count()
     print(f"edges {n}; {_load()}", flush=True)
     t0 = time.time()
-    eng = SuperstepEngine(rmat.select("src", "dst"))
-    run_pagerank(rmat, tol=0.0, max_iter=1, engine=eng)  # prepartition + JIT warm
+    g = Graph(rmat)
+    run_pagerank(g, tol=0.0, max_iter=1)  # prepartition + JIT warm
     print(f"setup+warm-iter: {time.time() - t0:.0f}s; {_load()}", flush=True)
     t0 = time.time()
     if converged:
-        r = run_pagerank(rmat, tol=1e-6, max_iter=200, engine=eng)
+        r = run_pagerank(g, tol=1e-6, max_iter=200)
         print(f"converged={r.converged} in {r.iterations} sweeps", flush=True)
     else:
-        r = run_pagerank(rmat, tol=0.0, max_iter=args.max_iter, engine=eng)
+        r = run_pagerank(g, tol=0.0, max_iter=args.max_iter)
     _iter_report(n, r.metrics, time.time() - t0, "pagerank")
-    eng.close()
+    g.close()
     spark.stop()
 
 
@@ -550,11 +551,12 @@ def run_wcc_dec(args) -> None:
     volume, not |E| (on an R-MAT graph the giant component IS most of the
     volume, so the honest expectation is 'delta wall <= batch wall', with
     the big win on the untouched-component share; both walls print)."""
+    from minigraph_spark.operators.superstep import Graph
     from minigraph_spark.plans.wcc import run_wcc, run_wcc_decremental
 
     spark = _spark(f"wcc_dec_p{args.power}", args.shuffle, zstd=args.zstd)
-    ekw = {"state_storage": "ser"} if args.state_ser else None
     rmat = spark.read.parquet(args.path)
+    g = Graph(rmat, state_storage="ser" if args.state_ser else "deser")
     n = rmat.count()
     delta = rmat.filter(
         F.pmod(F.xxhash64("src", "dst"), F.lit(args.delta_mod)) == 0
@@ -563,12 +565,12 @@ def run_wcc_dec(args) -> None:
     print(f"edges {n}; deleting {n_del} (~{100 * n_del / n:.2f}%); {_load()}",
           flush=True)
     t0 = time.time()
-    prev = run_wcc(rmat, engine_kwargs=ekw)
+    prev = run_wcc(g)
     batch_wall = time.time() - t0
     print(f"batch wcc: {batch_wall:.0f}s, {len(prev.metrics)} supersteps; "
           f"{_load()}", flush=True)
     t0 = time.time()
-    dec = run_wcc_decremental(rmat, delta, prev.state, engine_kwargs=ekw)
+    dec = run_wcc_decremental(g, delta, prev.state)
     dec.state.count()
     dec_wall = time.time() - t0
     print(f"decremental wcc ({100 / args.delta_mod:g}% delta): {dec_wall:.0f}s "

@@ -15,7 +15,9 @@ import pandas as pd
 from minigraph_spark import checkpoint as ckpt
 from minigraph_spark.fixtures import make_rmat_edges_np
 from minigraph_spark.operators.csr import run_wcc_csr
+from minigraph_spark.operators.superstep import Graph
 from minigraph_spark.plans.bfs import run_bfs
+from minigraph_spark.plans.lpa import run_lpa
 from minigraph_spark.plans.pagerank import run_pagerank
 from minigraph_spark.plans.wcc import run_wcc, run_wcc_decremental
 
@@ -36,17 +38,18 @@ def _vals(state):
     return {r["vid"]: r["value"] for r in state.collect()}
 
 
-def _pagerank_kill_and_resume(spark, tmp_path, engine_kwargs):
+def _pagerank_kill_and_resume(spark, tmp_path, kw):
     e = _edges(spark).persist()
     ck = str(tmp_path / "pr_ck")
-    full = run_pagerank(e, tol=1e-9, max_iter=12, engine_kwargs=engine_kwargs)
+    with Graph(e, **kw) as g:
+        full = run_pagerank(g, tol=1e-9, max_iter=12)
     # "killed" run: stops after 6 iterations, snapshots every 2
-    run_pagerank(e, tol=1e-9, max_iter=6, checkpoint_dir=ck,
-                 engine_kwargs={"checkpoint_every": 2, **engine_kwargs})
+    with Graph(e, checkpoint_every=2, **kw) as g:
+        run_pagerank(g, tol=1e-9, max_iter=6, checkpoint_dir=ck)
     found = ckpt.latest(ck)
     assert found is not None and found[0] == 5
-    resumed = run_pagerank(e, tol=1e-9, max_iter=12, checkpoint_dir=ck,
-                           engine_kwargs={"checkpoint_every": 2, **engine_kwargs})
+    with Graph(e, checkpoint_every=2, **kw) as g:
+        resumed = run_pagerank(g, tol=1e-9, max_iter=12, checkpoint_dir=ck)
     assert resumed.iterations == 12
     assert [m.iteration for m in resumed.metrics] == list(range(6, 12))
     a, b = _vals(full.state), _vals(resumed.state)
@@ -67,11 +70,11 @@ def test_state_storage_ser_matches_deser(spark):
     be a pure storage-level change: identical results to the default."""
     e = _edges(spark, seed=6).persist()
     a = run_wcc(e)
-    b = run_wcc(e, engine_kwargs={"state_storage": "ser"})
+    with Graph(e, state_storage="ser") as g:
+        b = run_wcc(g)
+        pb = run_pagerank(g, tol=1e-9, max_iter=12)
     assert _vals(a.state) == _vals(b.state)
     pa = run_pagerank(e, tol=1e-9, max_iter=12)
-    pb = run_pagerank(e, tol=1e-9, max_iter=12,
-                      engine_kwargs={"state_storage": "ser"})
     va, vb = _vals(pa.state), _vals(pb.state)
     assert va.keys() == vb.keys()
     assert all(
@@ -94,11 +97,12 @@ def _wcc_resume_exact(spark, tmp_path, run, killed_at=3):
     assert resumed.metrics[0].iteration == newest + 1
 
 
-def _run_wcc(engine_kwargs):
-    return lambda e, n, ck: run_wcc(
-        e, max_iter=n, checkpoint_dir=ck,
-        engine_kwargs={"checkpoint_every": 1, **engine_kwargs},
-    )
+def _run_wcc(kw):
+    def run(e, n, ck):
+        with Graph(e, checkpoint_every=1, **kw) as g:
+            return run_wcc(g, max_iter=n, checkpoint_dir=ck)
+
+    return run
 
 
 def test_wcc_resume_exact(spark, tmp_path):
@@ -128,8 +132,8 @@ def test_bfs_resume_exact(spark, tmp_path):
     run does, unreached vertices still NULL."""
     def run(e, n, ck):
         root = int(e.agg({"src": "min"}).first()[0])
-        return run_bfs(e, root, max_iter=n, checkpoint_dir=ck,
-                       engine_kwargs={"checkpoint_every": 1})
+        with Graph(e, checkpoint_every=1) as g:
+            return run_bfs(g, root, max_iter=n, checkpoint_dir=ck)
 
     _wcc_resume_exact(spark, tmp_path, run, killed_at=2)
 
@@ -144,18 +148,19 @@ def test_resume_refuses_another_algos_snapshots(spark, tmp_path):
         [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11)], "src long, dst long"
     )
     ck = str(tmp_path / "mixed_ck")
-    run_wcc(e, checkpoint_dir=ck, engine_kwargs=LOOP)
+    g = Graph(e, **LOOP)
+    run_wcc(g, checkpoint_dir=ck)
     newest = ckpt.latest(ck)
     assert newest is not None
     with pytest.raises(ValueError, match=r"'wcc'.*'bfs'"):
-        run_bfs(e, root=0, checkpoint_dir=ck, engine_kwargs=LOOP)
+        run_bfs(g, root=0, checkpoint_dir=ck)
     assert ckpt.latest(ck) == newest
     with open(os.path.join(os.path.dirname(newest[1]), "lineage.json")) as f:
         fp = json.load(f)["edge_fingerprint"]
     assert ckpt.load_snapshot(spark, ck, "wcc", 10, fp)[0] == newest[0]
     # a fresh dir resumes nothing: BFS runs from its own init
-    res = run_bfs(e, root=0, checkpoint_dir=str(tmp_path / "bfs_ck"),
-                  engine_kwargs=LOOP)
+    res = run_bfs(g, root=0, checkpoint_dir=str(tmp_path / "bfs_ck"))
+    g.close()
     assert _vals(res.state) == {0: 0, 1: 1, 2: 2, 3: 3, 4: 4, 10: None, 11: None}
 
 
@@ -201,11 +206,77 @@ def test_resume_refuses_other_edges_with_the_same_row_count(spark, tmp_path):
     assert _vals(again.state) == _vals(prev.state) == {0: 0, 1: 0, 2: 2, 3: 2}
 
 
-def _snapshot_layout_and_lineage(spark, tmp_path, engine_kwargs, mode):
+def test_resume_refuses_other_plan_parameters(spark, tmp_path):
+    """A resume names its run by the plan parameters that change the
+    answer: a BFS from another root, or a PageRank with another alpha,
+    over the same edges must refuse the old snapshots. A changed tol only
+    moves where a run stops, so it resumes; so does a manifest written
+    before parameters were recorded."""
+    import pytest
+
+    g = Graph(_edges(spark, seed=5).persist(), checkpoint_every=1)
+    d = str(tmp_path / "bfs_ck")
+    run_bfs(g, 0, checkpoint_dir=d, max_iter=2)
+    with pytest.raises(ValueError, match="parameters"):
+        run_bfs(g, 5, checkpoint_dir=d)
+    with pytest.raises(ValueError, match="parameters"):
+        run_bfs(g.edges.withColumn("w", g.edges["src"] * 0 + 1), 0,
+                weight_col="w", checkpoint_dir=d)
+    newest = ckpt.latest(d)
+    lineage = os.path.join(os.path.dirname(newest[1]), "lineage.json")
+    with open(lineage) as f:
+        manifest = json.load(f)
+    assert manifest["params"] == {"root": 0, "weight_col": None}
+    del manifest["params"]
+    with open(lineage, "w") as f:
+        json.dump(manifest, f)
+    assert run_bfs(g, 0, checkpoint_dir=d).metrics[0].iteration == newest[0] + 1
+
+    d = str(tmp_path / "pr_ck")
+    run_pagerank(g, tol=1e-9, max_iter=2, checkpoint_dir=d)
+    with pytest.raises(ValueError, match="parameters"):
+        run_pagerank(g, alpha=0.5, tol=1e-9, max_iter=4, checkpoint_dir=d)
+    resumed = run_pagerank(g, tol=1e-6, max_iter=4, checkpoint_dir=d)
+    assert resumed.metrics[0].iteration == 2
+    g.close()
+
+
+def test_one_graph_shares_its_closure_and_runs_own_their_dirs(
+    spark, tmp_path, monkeypatch
+):
+    """run_wcc and run_lpa on one Graph partition the closure once, and
+    each run's checkpoint_dir holds only its own algo's snapshots."""
+    from minigraph_spark.operators import superstep
+
+    calls = []
+    orig = superstep.prepartition_edges
+
+    def counted(*args, **kwargs):
+        calls.append(kwargs.get("dedup"))
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(superstep, "prepartition_edges", counted)
+    e = _edges(spark, seed=8).persist()
+    d1, d2 = str(tmp_path / "wcc"), str(tmp_path / "lpa")
+    with Graph(e, checkpoint_every=1, **LOOP) as g:
+        wcc = run_wcc(g, checkpoint_dir=d1)
+        lpa = run_lpa(g, max_iter=3, checkpoint_dir=d2)
+    assert calls == [True]  # one dedup-folded exchange, no other
+    assert _vals(wcc.state) == _vals(run_wcc(e).state)
+    assert _vals(lpa.state) == _vals(run_lpa(e, max_iter=3).state)
+    for d, algo in ((d1, "wcc"), (d2, "lpa")):
+        snaps = [n for n in os.listdir(d) if n.startswith("iter=")]
+        assert snaps
+        for n in snaps:
+            with open(os.path.join(d, n, "lineage.json")) as f:
+                assert json.load(f)["algo"] == algo
+
+
+def _snapshot_layout_and_lineage(spark, tmp_path, kw, mode):
     e = _edges(spark).persist()
     ck = str(tmp_path / "lay_ck")
-    run_pagerank(e, tol=1e-9, max_iter=4, checkpoint_dir=ck,
-                 engine_kwargs={"checkpoint_every": 2, **engine_kwargs})
+    with Graph(e, checkpoint_every=2, **kw) as g:
+        run_pagerank(g, tol=1e-9, max_iter=4, checkpoint_dir=ck)
     snaps = sorted(d for d in os.listdir(ck) if d.startswith("iter="))
     assert snaps == ["iter=00001", "iter=00003"]
     with open(os.path.join(ck, "iter=00003", "lineage.json")) as f:
@@ -215,7 +286,7 @@ def _snapshot_layout_and_lineage(spark, tmp_path, engine_kwargs, mode):
     assert manifest["partitions"] and all(
         "rows" in p and "fingerprint" in p for p in manifest["partitions"]
     )
-    width = engine_kwargs.get("num_partitions", 1)
+    width = kw.get("num_partitions", 1)
     assert (manifest["mode"], manifest["num_partitions"]) == (mode, width)
     assert manifest["edge_rows"] == e.count()
     assert isinstance(manifest["edge_fingerprint"], int)
@@ -236,8 +307,8 @@ def test_snapshot_layout_and_lineage_loop(spark, tmp_path):
 def test_incomplete_snapshot_ignored(spark, tmp_path):
     e = _edges(spark).persist()
     ck = str(tmp_path / "inc_ck")
-    run_pagerank(e, tol=1e-9, max_iter=2, checkpoint_dir=ck,
-                 engine_kwargs={"checkpoint_every": 2})
+    with Graph(e, checkpoint_every=2) as g:
+        run_pagerank(g, tol=1e-9, max_iter=2, checkpoint_dir=ck)
     assert ckpt.latest(ck)[0] == 1
     # a torn snapshot (no lineage.json commit marker) must be skipped
     os.makedirs(os.path.join(ck, "iter=00009", "state.parquet"), exist_ok=True)

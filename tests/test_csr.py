@@ -17,7 +17,7 @@ from minigraph_spark.fixtures import (
 )
 from minigraph_spark.operators.csr import make_minplus_kernel, run_wcc_csr
 from minigraph_spark.operators.project import project_edges
-from minigraph_spark.operators.superstep import persistent_rdd_ids
+from minigraph_spark.operators.superstep import Graph, persistent_rdd_ids
 from minigraph_spark.plans.bfs import run_bfs
 from minigraph_spark.plans.wcc import run_wcc
 from tests.conftest import coo_fragment, labels_dict
@@ -89,16 +89,16 @@ def test_bfs_csr_matches_run_bfs_and_weighted(spark):
 
     e = make_rmat_edges(spark, 7, 600, seed=13)
     root = int(e.agg(F.min("src")).collect()[0][0])
-    got = labels_dict(run_bfs(e, root, engine_kwargs={"num_partitions": 4}).state)
+    with Graph(e, num_partitions=4) as g:
+        got = labels_dict(run_bfs(g, root).state)
     want = labels_dict(run_bfs(e, root).state)
     assert got == want
 
     weight = F.lit(1) + (F.col("src") * 31 + F.col("dst")) % 9
     has_weight = (F.col("src") + F.col("dst")) % 7 != 0
     ew = e.withColumn("w", F.when(has_weight, weight).cast("long"))
-    got_w = labels_dict(
-        run_bfs(ew, root, weight_col="w", engine_kwargs={"num_partitions": 4}).state
-    )
+    with Graph(ew, num_partitions=4) as g:
+        got_w = labels_dict(run_bfs(g, root, weight_col="w").state)
     want_w = labels_dict(run_bfs(ew, root, weight_col="w").state)
     assert got_w == want_w
 
@@ -110,7 +110,8 @@ def test_bfs_csr_range_partition_cuts_rounds_on_path(spark):
     L = 60
     path = spark.createDataFrame([(i, i + 1) for i in range(L)], "src long, dst long")
     auto = run_bfs(path, root=0)
-    wide = run_bfs(path, root=0, engine_kwargs={"num_partitions": 4})
+    with Graph(path, num_partitions=4) as g:
+        wide = run_bfs(g, root=0)
     assert labels_dict(auto.state) == {i: i for i in range(L + 1)}
     assert labels_dict(wide.state) == labels_dict(auto.state)
     assert auto.converged and wide.converged
@@ -123,8 +124,8 @@ def test_bfs_negative_weights_do_not_depend_on_width(spark):
     the width-2 loop."""
     def run(rows, w, max_iter):
         e = spark.createDataFrame(rows, "src long, dst long, w long")
-        res = run_bfs(e, root=0, weight_col="w", max_iter=max_iter,
-                      engine_kwargs={"num_partitions": w})
+        with Graph(e, num_partitions=w) as g:
+            res = run_bfs(g, root=0, weight_col="w", max_iter=max_iter)
         return labels_dict(res.state), res.converged
 
     probe = [(0, 1, 1), (5, 6, -3), (6, 2, 1), (1, 2, 4)]
@@ -159,15 +160,21 @@ def test_minplus_block_max_combiner():
     assert got_min == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
+def _at_width_4(run):
+    """``run`` on a width-4 Graph over the edges, closed afterwards."""
+    def call(e):
+        with Graph(e, num_partitions=4) as g:
+            return run(g)
+
+    return call
+
+
 LEAK_CALLS = {
-    "wcc_hook_jump": lambda e: run_wcc(e, max_iter=3, engine_kwargs={"num_partitions": 4}),
-    "wcc_jump": lambda e: run_wcc(
-        e, max_iter=3, hooking=False, engine_kwargs={"num_partitions": 4}
-    ),
+    "wcc_hook_jump": _at_width_4(lambda g: run_wcc(g, max_iter=3)),
+    # directed WCC runs min-label + jump without hooking
+    "wcc_jump": _at_width_4(lambda g: run_wcc(g, directed=True, max_iter=3)),
     "wcc_csr": lambda e: run_wcc_csr(e, num_partitions=4, max_rounds=3),
-    "bfs_csr": lambda e: run_bfs(
-        e, root=0, max_iter=5, engine_kwargs={"num_partitions": 4}
-    ),
+    "bfs_csr": _at_width_4(lambda g: run_bfs(g, root=0, max_iter=5)),
     "wcc_one_fragment": lambda e: run_wcc(e),
 }
 

@@ -207,35 +207,25 @@ def test_triangle_count_incremental_all_new(spark):
 
 
 def test_engine_reuse_wcc_then_lpa_and_coloring(spark):
-    """One prepartitioned engine serves WCC then LPA (both run on the
-    symmetrized closure), and coloring reuses its own canonical-closure
-    engine — results identical to standalone runs (run_pagerank's engine
-    contract, now API-symmetric across all plans)."""
-    from minigraph_spark.operators.project import symmetrize
-    from minigraph_spark.operators.superstep import SuperstepEngine
-    from minigraph_spark.plans.coloring import (
-        canonical_edges,
-        coloring_conflicts,
-        run_coloring,
-    )
+    """One Graph serves WCC then LPA (both on its closure view, one
+    engine) and coloring twice (its canonical view) — results identical to
+    standalone runs."""
+    from minigraph_spark.operators.superstep import Graph
+    from minigraph_spark.plans.coloring import coloring_conflicts, run_coloring
     from minigraph_spark.plans.wcc import run_wcc
 
     arr = make_rmat_edges_np(power=7, num_edges=400, seed=23)
     edges = _spark_edges(spark, arr)
 
-    eng = SuperstepEngine(symmetrize(edges))
-    wcc_shared = run_wcc(edges, engine=eng)
-    lpa_shared = run_lpa(edges, max_iter=5, engine=eng)
-    eng.close()
+    with Graph(edges) as g:
+        wcc_shared = run_wcc(g)
+        lpa_shared = run_lpa(g, max_iter=5)
+        c1 = run_coloring(g)
+        c2 = run_coloring(g)
     assert labels_dict(wcc_shared.state) == oracle.wcc_labels(arr)
     assert labels_dict(lpa_shared.state) == oracle.lpa_labels(arr, max_iter=5)
-
-    ceng = SuperstepEngine(canonical_edges(edges))
-    c1 = run_coloring(edges, engine=ceng)
-    c2 = run_coloring(edges, engine=ceng)
     assert labels_dict(c1.state) == labels_dict(c2.state)
     assert coloring_conflicts(edges, c1.state) == 0
-    ceng.close()
 
 
 def test_triangle_count_bucketed_equals_unbucketed(spark):

@@ -2,6 +2,7 @@ import numpy as np
 
 from minigraph_spark import oracle
 from minigraph_spark.fixtures import TINY7_EDGES, make_rmat_edges_np, tiny7_edges
+from minigraph_spark.operators.superstep import Graph
 from minigraph_spark.plans.wcc import component_sizes, run_wcc
 from tests.conftest import labels_dict
 
@@ -52,7 +53,7 @@ def test_component_sizes(spark):
 LOOP = {"num_partitions": 2}
 
 
-def _wcc_incremental_matches_batch(spark, engine_kwargs):
+def _wcc_incremental_matches_batch(spark, graph_kw):
     """IncEval == PEval on the union graph (monotone min-label): split a
     random graph, converge on the base, feed the rest as a delta."""
     from minigraph_spark.plans.wcc import run_wcc_incremental
@@ -60,11 +61,9 @@ def _wcc_incremental_matches_batch(spark, engine_kwargs):
     arr = make_rmat_edges_np(power=8, num_edges=1200, seed=11)
     mask = (arr[:, 0] + arr[:, 1]) % 4 == 0
     base, delta = arr[~mask], arr[mask]
-    prev = run_wcc(_spark_edges(spark, base), engine_kwargs=engine_kwargs)
-    res = run_wcc_incremental(
-        _spark_edges(spark, base), _spark_edges(spark, delta), prev.state,
-        engine_kwargs=engine_kwargs,
-    )
+    with Graph(_spark_edges(spark, base), **graph_kw) as g:
+        prev = run_wcc(g)
+        res = run_wcc_incremental(g, _spark_edges(spark, delta), prev.state)
     assert res.converged
     assert labels_dict(res.state) == oracle.wcc_labels(arr)
 
@@ -77,7 +76,7 @@ def test_wcc_incremental_matches_batch_loop(spark):
     _wcc_incremental_matches_batch(spark, LOOP)
 
 
-def _wcc_incremental_touches_only_affected_region(spark, engine_kwargs):
+def _wcc_incremental_touches_only_affected_region(spark, graph_kw):
     """The IncEval win: a delta inside one small component must not reconverge
     the rest of the graph — total changed-vertex count stays bounded by the
     affected component, not |V|."""
@@ -88,11 +87,9 @@ def _wcc_incremental_touches_only_affected_region(spark, engine_kwargs):
     cyc = np.array([[1000, 1001], [1001, 1002], [1002, 1003]])
     base = np.concatenate([chain, cyc])
     delta = np.array([[1003, 1000]])  # closes the cycle; chain untouched
-    prev = run_wcc(_spark_edges(spark, base), engine_kwargs=engine_kwargs)
-    res = run_wcc_incremental(
-        _spark_edges(spark, base), _spark_edges(spark, delta), prev.state,
-        engine_kwargs=engine_kwargs,
-    )
+    with Graph(_spark_edges(spark, base), **graph_kw) as g:
+        prev = run_wcc(g)
+        res = run_wcc_incremental(g, _spark_edges(spark, delta), prev.state)
     assert labels_dict(res.state) == oracle.wcc_labels(np.concatenate([base, delta]))
     # only the 4 cycle vertices were ever eligible to change; the converged
     # chain must contribute zero churn across all supersteps
@@ -107,18 +104,16 @@ def test_wcc_incremental_touches_only_affected_region_loop(spark):
     _wcc_incremental_touches_only_affected_region(spark, LOOP)
 
 
-def _wcc_incremental_new_vertices(spark, engine_kwargs):
+def _wcc_incremental_new_vertices(spark, graph_kw):
     """Delta edges may introduce brand-new vertices (absent from
     prev_labels) and may bridge previously separate components."""
     from minigraph_spark.plans.wcc import run_wcc_incremental
 
     base = np.array([[0, 1], [10, 11]])
     delta = np.array([[1, 20], [20, 10]])  # new vertex 20 bridges the two
-    prev = run_wcc(_spark_edges(spark, base), engine_kwargs=engine_kwargs)
-    res = run_wcc_incremental(
-        _spark_edges(spark, base), _spark_edges(spark, delta), prev.state,
-        engine_kwargs=engine_kwargs,
-    )
+    with Graph(_spark_edges(spark, base), **graph_kw) as g:
+        prev = run_wcc(g)
+        res = run_wcc_incremental(g, _spark_edges(spark, delta), prev.state)
     assert labels_dict(res.state) == oracle.wcc_labels(np.concatenate([base, delta]))
     assert set(labels_dict(res.state).values()) == {0}
 
@@ -132,54 +127,39 @@ def test_wcc_incremental_new_vertices_loop(spark):
 
 
 def test_wcc_engine_reuse(spark):
-    """run_wcc(engine=...) amortizes the prepartition across runs on the
-    same graph (run_pagerank's contract); the caller owns the engine."""
-    from minigraph_spark.operators.project import symmetrize
-    from minigraph_spark.operators.superstep import SuperstepEngine
-
+    """run_wcc on a Graph amortizes the prepartition across runs on the
+    same graph: both runs use the handle's one closure engine, which the
+    caller closes."""
     arr = make_rmat_edges_np(power=7, num_edges=400, seed=17)
-    eng = SuperstepEngine(symmetrize(_spark_edges(spark, arr)))
-    r1 = run_wcc(_spark_edges(spark, arr), engine=eng)
-    r2 = run_wcc(_spark_edges(spark, arr), engine=eng)
+    with Graph(_spark_edges(spark, arr)) as g:
+        r1 = run_wcc(g)
+        eng = g.engine("closure")
+        r2 = run_wcc(g)
+        assert g.engine("closure") is eng
     assert labels_dict(r1.state) == labels_dict(r2.state) == oracle.wcc_labels(arr)
-    eng.close()
 
 
 def test_engine_folds_marked_dedup_closures(spark):
-    """SuperstepEngine consumes the provenance markers set by
-    project.symmetrize / project.canonicalize: the separate distinct
-    exchange is replaced by the dedup-folded prepartition (row-identical
-    by the prepartition dedup contract) and symmetrize additionally
-    implies symmetric=True (src-only vertex set)."""
+    """A Graph's closure and canonical views fold the dedup into the
+    engine's partitioning exchange: their rows equal project.symmetrize /
+    project.canonicalize (the prepartition dedup contract), the closure
+    reads its vertex set from src alone, and both vertex sets are every
+    endpoint of a non-loop edge."""
     from minigraph_spark.operators.project import canonicalize, symmetrize
-    from minigraph_spark.operators.superstep import SuperstepEngine
 
     arr = make_rmat_edges_np(power=6, num_edges=200, seed=23)
     edges = _spark_edges(spark, arr)
+    want_vids = sorted({s for s, d in arr if s != d} | {d for s, d in arr if s != d})
 
-    sym = symmetrize(edges)
-    eng = SuperstepEngine(sym)
-    assert eng.symmetric  # inferred from the marker
-    assert sorted(map(tuple, eng.edges.collect())) == sorted(
-        map(tuple, sym.collect())
-    )
-    # vertex set from src alone must still equal the full endpoint set
-    vids = sorted(r["vid"] for r in eng.vertices().collect())
-    assert vids == sorted(
-        {s for s, d in arr if s != d} | {d for s, d in arr if s != d}
-    )
-    eng.close()
-
-    can = canonicalize(edges)
-    ceng = SuperstepEngine(can)
-    assert not ceng.symmetric  # canonical closures are one-directional
-    assert sorted(map(tuple, ceng.edges.collect())) == sorted(
-        map(tuple, can.collect())
-    )
-    ceng.close()
-
-    # a transformed frame loses the marker: no accidental folding
-    assert not hasattr(sym.select("src", "dst"), "_mg_dedup_raw")
+    with Graph(edges) as g:
+        for view, closure in (("closure", symmetrize), ("canonical", canonicalize)):
+            eng = g.engine(view)
+            assert eng.view == view
+            assert sorted(map(tuple, eng.edges.collect())) == sorted(
+                map(tuple, closure(edges).collect())
+            ), view
+            vids = sorted(r["vid"] for r in eng.vertices().collect())
+            assert vids == want_vids, view
 
 
 def test_wcc_decremental_equals_batch_on_remaining(spark):

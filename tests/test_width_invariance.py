@@ -18,8 +18,8 @@ from pyspark.sql import functions as F
 from minigraph_spark import oracle
 from minigraph_spark.fixtures import make_rmat_edges_np, make_transcripts
 from minigraph_spark.operators.csr import run_wcc_csr
-from minigraph_spark.operators.project import project_edges, symmetrize
-from minigraph_spark.operators.superstep import SuperstepEngine
+from minigraph_spark.operators.project import project_edges
+from minigraph_spark.operators.superstep import Graph, SuperstepEngine
 from minigraph_spark.plans.bfs import run_bfs
 from minigraph_spark.plans.lpa import run_lpa
 from minigraph_spark.plans.pagerank import run_pagerank
@@ -43,32 +43,28 @@ def _graph(spark, name: str) -> np.ndarray:
 
 
 def _run_all(spark, arr: np.ndarray, width: int | None):
-    """Every plan at one width, on engines built here so their mode can be
-    read back; returns ({engine: one_fragment}, {plan: vid -> value})."""
-    kw = {} if width is None else {"num_partitions": width}
+    """Every plan at one width, on one Graph per graph version so the
+    engines' mode can be read back; returns ({view: one_fragment},
+    {plan: vid -> value}, {plan: iterations})."""
     mask = np.arange(len(arr)) % 5 == 0
     full, base, delta = _frame(spark, arr), _frame(spark, arr[~mask]), _frame(spark, arr[mask])
-    engines = {
-        "closure": SuperstepEngine(symmetrize(full), **kw),
-        "directed": SuperstepEngine(full, **kw),
-    }
     prev = run_wcc(base)
-    out = {
-        "wcc": run_wcc(full, engine=engines["closure"]),
-        "wcc_directed": run_wcc(full, directed=True, engine=engines["directed"]),
-        "wcc_incremental": run_wcc_incremental(
-            base, delta, prev.state, engine=engines["closure"]
-        ),
-        "lpa": run_lpa(full, max_iter=4, engine=engines["closure"]),
-        "pagerank": run_pagerank(full, tol=1e-7, max_iter=100, engine=engines["directed"]),
-    }
-    for eng in engines.values():
-        assert eng.one_fragment == (eng.num_partitions == 1)
-    modes = {name: eng.one_fragment for name, eng in engines.items()}
+    with Graph(full, num_partitions=width) as g:
+        out = {
+            "wcc": run_wcc(g),
+            "wcc_directed": run_wcc(g, directed=True),
+            "wcc_incremental": run_wcc_incremental(
+                g.with_edges(base), delta, prev.state
+            ),
+            "lpa": run_lpa(g, max_iter=4),
+            "pagerank": run_pagerank(g, tol=1e-7, max_iter=100),
+        }
+        engines = {view: g.engine(view) for view in ("closure", "directed")}
+        for eng in engines.values():
+            assert eng.one_fragment == (eng.num_partitions == 1)
+        modes = {name: eng.one_fragment for name, eng in engines.items()}
     values = {name: labels_dict(res.state) for name, res in out.items()}
     iterations = {name: res.iterations for name, res in out.items() if name != "wcc"}
-    for eng in engines.values():
-        eng.close()
     return modes, values, iterations
 
 
@@ -118,7 +114,8 @@ def test_csr_path_does_not_depend_on_width(spark, graph):
             # the min-label kernel runs the one fragment to its fixpoint
             assert wcc.iterations == 1, w
         for wc, g in faces.items():
-            bfs = run_bfs(g, root, weight_col=wc, engine_kwargs={"num_partitions": w})
+            with Graph(g, num_partitions=w) as pinned:
+                bfs = run_bfs(pinned, root, weight_col=wc)
             assert labels_dict(bfs.state) == dist[wc], (w, wc)
 
 
@@ -130,34 +127,22 @@ def test_one_partition_runs_one_fragment_above_old_row_rule(spark):
     arr = make_rmat_edges_np(power=13, num_edges=40_000, seed=23)
     full = _frame(spark, arr).persist()
 
-    def engines(width):
-        return {
-            "closure": SuperstepEngine(symmetrize(full), num_partitions=width),
-            "directed": SuperstepEngine(full, num_partitions=width),
-        }
-
-    one, loop = engines(1), engines(2)
-    for name in one:
-        assert one[name].one_fragment and not loop[name].one_fragment, name
-        assert one[name].n_edges > SuperstepEngine.TARGET_ROWS_PER_PARTITION, name
+    one, loop = Graph(full, num_partitions=1), Graph(full, num_partitions=2)
+    for view in ("closure", "directed"):
+        assert one.engine(view).one_fragment and not loop.engine(view).one_fragment, view
+        assert one.engine(view).n_edges > SuperstepEngine.TARGET_ROWS_PER_PARTITION, view
     for tol, max_iter in ((0.0, 10), (1e-7, 200)):
-        got, exp = (
-            run_pagerank(full, tol=tol, max_iter=max_iter, engine=e["directed"])
-            for e in (one, loop)
-        )
+        got, exp = (run_pagerank(g, tol=tol, max_iter=max_iter) for g in (one, loop))
         assert got.iterations == exp.iterations, tol
         a, b = labels_dict(got.state), labels_dict(exp.state)
         want = oracle.pagerank_standard(arr, tol=tol, max_iter=max_iter)
         assert a.keys() == b.keys() == want.keys()
         np.testing.assert_allclose([a[v] for v in b], list(b.values()), rtol=0, atol=1e-9)
         np.testing.assert_allclose([a[v] for v in want], list(want.values()), rtol=0, atol=1e-6)
-    labels = [labels_dict(run_wcc(full, engine=e["closure"]).state) for e in (one, loop)]
+    labels = [labels_dict(run_wcc(g).state) for g in (one, loop)]
     assert labels[0] == labels[1] == oracle.wcc_labels(arr)
-    labels = [
-        labels_dict(run_lpa(full, max_iter=5, engine=e["closure"]).state)
-        for e in (one, loop)
-    ]
+    labels = [labels_dict(run_lpa(g, max_iter=5).state) for g in (one, loop)]
     assert labels[0] == labels[1] == oracle.lpa_labels(arr, max_iter=5)
-    for e in (*one.values(), *loop.values()):
-        e.close()
+    one.close()
+    loop.close()
     full.unpersist()
