@@ -30,12 +30,12 @@ every `checkpoint_every` iterations make any run resumable (checkpoint.py).
 
 One graph, many plans: a Graph holds an edge table and the engine settings,
 and builds each view's engine (the directed edges, the symmetrized closure,
-coloring's canonical closure) once, on first use, for every plan that runs
-on it (MiniGraph partitions once and runs every app over the resident
-fragments, minigraph_sys.h:28-207). A plan given a DataFrame builds its own
-Graph and closes it; a plan given a Graph asks it for the view it needs and
-leaves it open. A checkpoint_dir belongs to one run, so it is a run()
-argument, not an engine setting.
+the canonical closure of coloring and the triangle count) once, on first
+use, for every plan that runs on it (MiniGraph partitions once and runs
+every app over the resident fragments, minigraph_sys.h:28-207). A plan
+given a DataFrame builds its own Graph and closes it; a plan given a Graph
+asks it for the view it needs and leaves it open. A checkpoint_dir belongs
+to one run, so it is a run() argument, not an engine setting.
 """
 
 from __future__ import annotations
@@ -288,7 +288,9 @@ class SuperstepEngine:
       mass, stopping at max|Δ| <= tol.
 
     Every other plan or variant (the minigraph PageRank rule, plans.bfs,
-    ...) runs the loop whatever the mode.
+    ...) runs the loop whatever the mode. plans.triangles.triangle_count,
+    which runs no supersteps, reads the mode of the canonical view too: at
+    width 1 it counts in one Arrow task over the cached edges.
     """
 
     # size-aware parallelism: target edge rows per loop partition. At 16M+
@@ -785,12 +787,14 @@ class Graph:
     Each view's SuperstepEngine (see SuperstepEngine ``view``) is built on
     first use and kept until close(), so plans that need the same view
     share one partitioning exchange: run_wcc and run_lpa both run on the
-    closure, run_pagerank and run_bfs on the directed edges, run_coloring on
-    the canonical closure. The directed view holds the plan's columns,
-    (src, dst) or (src, dst, weight_col), one engine per column set. A plan
-    given a Graph asks it for the view it needs, so it cannot run on the
-    wrong one, and leaves it open; a plan given a DataFrame builds a Graph
-    and closes it. A Graph is a context manager that closes on exit.
+    closure, run_pagerank and run_bfs on the directed edges, run_coloring,
+    triangle_count and transitivity on the canonical closure (the triangle
+    count reads its cached rows: one NumPy task at width 1, the intersect
+    plan above). The directed view holds the plan's columns, (src, dst) or
+    (src, dst, weight_col), one engine per column set. A plan given a Graph
+    asks it for the view it needs, so it cannot run on the wrong one, and
+    leaves it open; a plan given a DataFrame builds a Graph and closes it.
+    A Graph is a context manager that closes on exit.
 
     Parameters
     ----------

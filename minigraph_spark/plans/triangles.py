@@ -1,64 +1,60 @@
 """Triangle counting — degree-oriented adjacency intersection (SURVEY.md §2.4).
 
 No reference app exists (README lists it as future work); the north rule
-requires it. Two formulations:
+requires it. triangle_count runs on the graph handle's canonical view
+(superstep.Graph, view "canonical": each undirected edge once as
+(least, greatest), self-loops dropped, deduped inside the engine's one
+partitioning exchange), with one path per width, chosen by the same width
+rule as PEval:
 
-- intersect (default): orient each undirected edge low-rank -> high-rank
-  (rank = (degree, vid)), build per-vertex oriented adjacency arrays, and
-  for every oriented edge (u, v) count |adj(u) ∩ adj(v)| via JVM-side
-  `array_intersect`. Each triangle a<b<c is counted exactly once, on its
-  (a, b) edge. The quadratic sum_v deg_out(v)^2 volume rides *inside* row
-  arrays (two E-row joins) instead of being materialized as a shuffled
-  wedge table — measured 10x over the wedge join on a 2M-edge R-MAT
-  (140M wedges -> 0 wedge rows).
-- wedge: the textbook two-self-join (kept for cross-checking; it is the
-  oracle_sql formulation, so DuckDB validates the intersect path against
-  the relational one).
+- width 1 (one fragment): the whole count is one Arrow task over the
+  engine's cached edges. In NumPy: rank every vertex by (degree, vid),
+  orient each edge low-rank -> high-rank into a superstep.Fragment (its
+  (dst, src) sort is the oriented out-CSR), and test every wedge (a pair
+  of one vertex's oriented out-neighbors) against the sorted edge keys
+  with searchsorted, WEDGE_CHUNK wedges at a time. Each triangle a<b<c
+  (by rank) is the one wedge (b, c) at a, so it is counted exactly once.
+- width > 1 (intersect): orient the engine's rows low-rank -> high-rank
+  in Spark (orient), build per-vertex oriented adjacency arrays, and for
+  every oriented edge (u, v) count |adj(u) ∩ adj(v)| via JVM-side
+  `array_intersect`. The quadratic sum_v deg_out(v)^2 volume rides
+  *inside* row arrays (two E-row joins) instead of being materialized as a
+  shuffled wedge table — measured 10x over the wedge join on a 2M-edge
+  R-MAT (140M wedges -> 0 wedge rows).
 
 Degree orientation bounds oriented out-degree at O(sqrt(|E|)) on power-law
 graphs — the standard skew defense at 100 TB; residual hub rows are split
-by AQE skew-join handling.
+by AQE skew-join handling. The DataFrame helpers below (oriented_edges,
+per_vertex_triangles, clustering_coefficients) serve the per-vertex plans,
+ktruss and linkpred.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.project import canonicalize
+from ..operators.superstep import Fragment, Graph, as_graph
 
-def oriented_edges(
-    edges: DataFrame, by_degree: bool = True, materialize: bool = False
-) -> DataFrame:
-    """Undirected simple closure, each edge kept once, oriented
-    low-rank -> high-rank where rank = (degree, vid) when by_degree.
+# wedges tested per NumPy step of the one-fragment count: the task's working
+# memory is a few int64 arrays of this length, whatever the oriented degrees
+WEDGE_CHUNK = 1 << 20
 
-    materialize=True persists + counts the result and scopes a persist of
-    the canonical closure across its two consumers (degree agg + the
-    orientation join) — without it the E-row distinct recomputes per
-    branch, measured ~2x on the end-to-end count.
 
-    The closure is canonicalized (least, greatest) BEFORE distinct, so the
-    dedup shuffle carries E rows, not the 2E symmetrized rows of the naive
-    union — and the two degree joins downstream ride the same E-row set
-    (degrees come from an explode of both endpoints, whose 2E rows collapse
-    map-side in the partial agg). At 256M edges this halves the dominant
-    shuffle volumes; orientation swaps columns in-row, so no filter ever
-    discards half the join output."""
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+def orient(canon: DataFrame, by_degree: bool = True, materialize: bool = False) -> DataFrame:
+    """The canonical closure ``canon`` (deduped rows with src < dst)
+    oriented low-rank -> high-rank, where rank = (degree, vid) when
+    by_degree; without by_degree the rows already are, and ``canon`` is
+    returned as is.
+
+    Degrees come from an explode of both endpoints, whose 2E rows collapse
+    map-side in the partial agg, and the two degree joins ride the E-row
+    set; orientation swaps columns in-row, so no filter ever discards half
+    the join output. materialize=True persists + counts the result."""
     if not by_degree:
-        # canonical rows already satisfy src < dst
-        if materialize:
-            canon = canon.persist()
-            canon.count()
         return canon
-    if materialize:
-        canon = canon.persist()
     deg = (
         canon.select(F.explode(F.array("src", "dst")).alias("v"))
         .groupBy("v")
@@ -78,7 +74,31 @@ def oriented_edges(
     if materialize:
         out = out.persist()
         out.count()
-        canon.unpersist()
+    return out
+
+
+def oriented_edges(
+    edges: DataFrame, by_degree: bool = True, materialize: bool = False
+) -> DataFrame:
+    """Undirected simple closure, each edge kept once, oriented
+    low-rank -> high-rank where rank = (degree, vid) when by_degree:
+    project.canonicalize, then orient.
+
+    materialize=True persists + counts the result and scopes a persist of
+    the canonical closure across its two consumers (degree agg + the
+    orientation join) — without it the E-row distinct recomputes per
+    branch, measured ~2x on the end-to-end count. The closure is
+    canonicalized (least, greatest) BEFORE distinct, so the dedup shuffle
+    carries E rows, not the 2E symmetrized rows of the naive union."""
+    canon = canonicalize(edges)
+    if not materialize:
+        return orient(canon, by_degree)
+    canon = canon.persist()
+    if not by_degree:
+        canon.count()
+        return canon
+    out = orient(canon, by_degree, materialize=True)
+    canon.unpersist()
     return out
 
 
@@ -103,59 +123,119 @@ def _edge_intersections(e: DataFrame, adj: DataFrame | None = None) -> DataFrame
     )
 
 
+def _count_fragment(src: np.ndarray, dst: np.ndarray, by_degree: bool, chunk: int) -> int:
+    """Triangles of the canonical edge rows (src < dst, no duplicates) in
+    NumPy: the one-fragment count (see the module docstring), testing at
+    most ``chunk`` wedges per step."""
+    m = src.size
+    if m == 0:
+        return 0
+    vid, local = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    n = vid.size
+    s, d = local[:m], local[m:]
+    deg = np.bincount(local, minlength=n) if by_degree else np.zeros(n, np.int64)
+    rank = np.empty(n, np.int64)
+    rank[np.lexsort((np.arange(n), deg))] = np.arange(n)  # (degree, vid) order
+    swap = rank[d] < rank[s]
+    # dst = the low-rank end, so each vertex's oriented out-neighbors are
+    # one run of the fragment's rows, sorted by local id
+    frag = Fragment.from_local(
+        vid, src=np.where(swap, s, d), dst=np.where(swap, d, s), edge_cols={}
+    )
+    keys = np.sort(s * n + d)  # every edge as (smaller, larger) local id
+    # row k pairs with its later row-mates k+1 .. end-1 of its run
+    after = np.searchsorted(frag.dst, frag.dst, side="right") - 1 - np.arange(m)
+    last = np.cumsum(after)  # wedges of rows 0..k
+    found = 0
+    for w0 in range(0, int(last[-1]), chunk):
+        w = np.arange(w0, min(w0 + chunk, int(last[-1])))
+        k = np.searchsorted(last, w, side="right")
+        mate = k + 1 + w - (last[k] - after[k])
+        q = frag.src[k] * n + frag.src[mate]  # frag.src[k] < frag.src[mate]
+        at = np.minimum(np.searchsorted(keys, q), m - 1)
+        found += int(np.count_nonzero(keys[at] == q))
+    return found
+
+
+def _count_one_fragment(eng, by_degree: bool) -> int:
+    """The one-fragment count: one Arrow task over the width-1 engine's
+    cached edges. They are one partition (coalesce(1) is then a no-op that
+    keeps the count whole), so mapInArrow needs no exchange: 0.30 s against
+    0.35 s for applyInPandas on a constant key, on 43k canonical R-MAT
+    edges at local[4] (medians of 7 alternated runs)."""
+    chunk = WEDGE_CHUNK  # read here, so the task sees the current value
+
+    def fn(batches):
+        import pyarrow as pa
+
+        t = pa.Table.from_batches(list(batches), schema=pa.schema(
+            [("src", pa.int64()), ("dst", pa.int64())]
+        ))
+        n = _count_fragment(
+            t.column("src").to_numpy(), t.column("dst").to_numpy(), by_degree, chunk
+        )
+        yield pa.RecordBatch.from_pydict({"num_triangles": [n]})
+
+    rows = eng.edges.coalesce(1).mapInArrow(fn, "num_triangles long").collect()
+    return sum(r[0] for r in rows)
+
+
+def _count_intersect(e: DataFrame, src_buckets: int) -> int:
+    """The width > 1 count over the oriented edges ``e``: one intersect
+    pass, or src_buckets sequential passes (see triangle_count)."""
+    if src_buckets <= 1:
+        return int(_edge_intersections(e).agg(
+            F.coalesce(F.sum(F.size("cs")), F.lit(0)).cast("long")
+        ).collect()[0][0])
+    adj = e.groupBy("src").agg(F.collect_list("dst").alias("nbrs")).persist()
+    adj.count()
+    total = 0
+    bucket = F.pmod(F.xxhash64("src"), F.lit(src_buckets))
+    for b in range(src_buckets):
+        part = _edge_intersections(e.filter(bucket == b), adj).agg(
+            F.coalesce(F.sum(F.size("cs")), F.lit(0)).cast("long")
+        )
+        total += int(part.collect()[0][0])
+    adj.unpersist()
+    return total
+
+
 def triangle_count(
-    edges: DataFrame, by_degree: bool = True, method: str = "intersect",
-    src_buckets: int = 1,
+    edges: DataFrame | Graph, by_degree: bool = True, src_buckets: int = 1,
 ) -> DataFrame:
     """One-row DataFrame (num_triangles). Exact on the undirected closure.
 
-    The aggregate is taken eagerly (one row) so the oriented edge cache can
-    be freed before returning — previously every call leaked an E-row
-    persist for the session lifetime.
+    Counts on the canonical view of ``edges`` (a Graph shares it with
+    run_coloring and transitivity; a DataFrame gets its own handle, closed
+    here): in one Arrow task when that view is one fragment (width 1), else
+    with the intersect plan over the view's rows (see the module
+    docstring). by_degree=False orients by vid alone. The count is taken
+    eagerly, so no oriented edge cache outlives the call.
 
-    src_buckets > 1 chunks the intersection pass by hash bucket of the
-    oriented edge's src: the adjacency-array table is built ONCE (E longs
-    total, persisted), then each bucket joins only its ~E/B edge slice
-    against it and contributes a partial sum. Peak shuffle/spill of the
-    array-shipping join — the sum_v deg_out(v)^2 volume that ENOSPC'd the
-    256M-edge run at ~77 GB projected vs ~54 GB free — drops to ~1/B while
-    total work stays flat (B cheap scans of the cached inputs). Each
-    oriented edge lands in exactly one bucket, so the sum is exact. This is
-    the per-node-disk knob a 100 TB deployment sets from
-    spill_budget >= wedge_volume/B; B driver-side loop rounds are bounded
-    and tiny (one count job each), not a per-row driver loop."""
-    e = oriented_edges(edges, by_degree, materialize=True)
-    if method == "intersect" and src_buckets > 1:
-        adj = e.groupBy("src").agg(F.collect_list("dst").alias("nbrs")).persist()
-        adj.count()
-        total = 0
-        bucket = F.pmod(F.xxhash64("src"), F.lit(src_buckets))
-        for b in range(src_buckets):
-            part = _edge_intersections(e.filter(bucket == b), adj).agg(
-                F.coalesce(F.sum(F.size("cs")), F.lit(0)).cast("long").alias("t")
-            )
-            total += int(part.collect()[0]["t"])
-        adj.unpersist()
-        e.unpersist()
-        return edges.sparkSession.createDataFrame(
-            [(int(total),)], "num_triangles long"
-        )
-    if method == "intersect":
-        out = _edge_intersections(e).agg(
-            F.coalesce(F.sum(F.size("cs")), F.lit(0)).cast("long").alias("num_triangles")
-        )
-    elif method == "wedge":
-        ab = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        bc = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-        ac = e.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-        out = ab.join(bc, "b").join(ac, ["a", "c"]).agg(
-            F.count(F.lit(1)).alias("num_triangles")
-        )
-    else:
-        raise ValueError(f"unknown method: {method}")
-    n = out.collect()[0]["num_triangles"]
-    e.unpersist()
-    return edges.sparkSession.createDataFrame([(int(n),)], "num_triangles long")
+    src_buckets applies to the width > 1 plan only. src_buckets > 1 chunks
+    the intersection pass by hash bucket of the oriented edge's src: the
+    adjacency-array table is built ONCE (E longs total, persisted), then
+    each bucket joins only its ~E/B edge slice against it and contributes a
+    partial sum. Peak shuffle/spill of the array-shipping join — the
+    sum_v deg_out(v)^2 volume that ENOSPC'd the 256M-edge run at ~77 GB
+    projected vs ~54 GB free — drops to ~1/B while total work stays flat
+    (B cheap scans of the cached inputs). Each oriented edge lands in
+    exactly one bucket, so the sum is exact. This is the per-node-disk knob
+    a 100 TB deployment sets from spill_budget >= wedge_volume/B; B
+    driver-side loop rounds are bounded and tiny (one count job each), not
+    a per-row driver loop. The one-fragment count needs no such knob: it
+    tests WEDGE_CHUNK wedges at a time."""
+    with as_graph(edges) as g:
+        eng = g.engine("canonical")
+        if eng.one_fragment:
+            n = _count_one_fragment(eng, by_degree)
+        else:
+            # the engine's rows are already the deduped canonical closure
+            e = orient(eng.edges, by_degree, materialize=True)
+            n = _count_intersect(e, src_buckets)
+            if by_degree:
+                e.unpersist()
+    return eng.spark.createDataFrame([(n,)], "num_triangles long")
 
 
 def triangle_count_incremental(
@@ -277,35 +357,38 @@ def clustering_coefficients(
     return out
 
 
-def transitivity(edges: DataFrame, src_buckets: int = 1) -> DataFrame:
+def transitivity(edges: DataFrame | Graph, src_buckets: int = 1) -> DataFrame:
     """One row (num_triangles, num_wedges, transitivity): the global
     clustering coefficient 3T / W with W = sum_v deg(v)*(deg(v)-1)/2 wedges
-    on the simple undirected closure; 0.0 on a wedge-free graph."""
-    canon = oriented_edges(edges, by_degree=False, materialize=True)
-    t = triangle_count(canon, src_buckets=src_buckets)
-    w = (
-        canon.select(F.explode(F.array("src", "dst")).alias("vid"))
-        .groupBy("vid")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .agg(
-            (F.sum(F.col("deg") * (F.col("deg") - 1)) / 2)
-            .cast("long")
-            .alias("num_wedges")
+    on the simple undirected closure; 0.0 on a wedge-free graph.
+
+    The wedge degrees and triangle_count read one canonical view of
+    ``edges`` (one partitioning exchange); src_buckets is triangle_count's."""
+    with as_graph(edges) as g:
+        canon = g.engine("canonical").edges
+        t = triangle_count(g, src_buckets=src_buckets)
+        w = (
+            canon.select(F.explode(F.array("src", "dst")).alias("vid"))
+            .groupBy("vid")
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .agg(
+                (F.sum(F.col("deg") * (F.col("deg") - 1)) / 2)
+                .cast("long")
+                .alias("num_wedges")
+            )
         )
-    )
-    out = t.crossJoin(w).select(
-        "num_triangles",
-        "num_wedges",
-        F.when(
-            F.col("num_wedges") > 0,
-            3.0 * F.col("num_triangles") / F.col("num_wedges"),
+        out = t.crossJoin(w).select(
+            "num_triangles",
+            "num_wedges",
+            F.when(
+                F.col("num_wedges") > 0,
+                3.0 * F.col("num_triangles") / F.col("num_wedges"),
+            )
+            .otherwise(F.lit(0.0))
+            .alias("transitivity"),
         )
-        .otherwise(F.lit(0.0))
-        .alias("transitivity"),
-    )
-    rows = out.collect()  # 1 row — frees the closure cache before returning
-    canon.unpersist()
-    return edges.sparkSession.createDataFrame(
+        rows = out.collect()  # 1 row, read before the handle closes
+    return canon.sparkSession.createDataFrame(
         rows, "num_triangles long, num_wedges long, transitivity double"
     )
 

@@ -34,7 +34,8 @@ DEFAULT_KEYS = [
     "modularity_lpa_mod", "conductance_lpa_mod", "bfs_csr_mod",
     "bfs_mod", "sssp_weighted_mod", "bfs_incremental_mod", "bfs_decremental_mod",
     "sssp_incremental_mod", "coloring_mod", "hits3_mod",
-    "anf3_kc", "nf_curve_kc", "eff_diameter_kc",
+    "anf3_kc", "nf_curve_kc", "eff_diameter_kc", "triangle_count_mod",
+    "transitivity_mod", "clustering_mod", "triangle_count_incremental_mod",
 ]
 
 

@@ -230,13 +230,126 @@ def test_engine_reuse_wcc_then_lpa_and_coloring(spark):
 
 def test_triangle_count_bucketed_equals_unbucketed(spark):
     """src_buckets chunking is exact: every oriented edge lands in exactly
-    one hash bucket, so partial sums equal the one-pass count."""
+    one hash bucket, so partial sums equal the one-pass count. The buckets
+    split the width > 1 plan, so the pinned width-2 handle runs them; at
+    the automatic width (one fragment here) src_buckets changes nothing."""
+    from minigraph_spark.operators.superstep import Graph
+
     arr = make_rmat_edges_np(power=9, num_edges=4000, seed=31)
     edges = _spark_edges(spark, arr)
     want = oracle.triangle_count(arr)
     one = triangle_count(edges).collect()[0]["num_triangles"]
     buck = triangle_count(edges, src_buckets=4).collect()[0]["num_triangles"]
     assert one == buck == want
+    with Graph(edges, num_partitions=2) as g:
+        assert not g.engine("canonical").one_fragment
+        for b in (1, 4):
+            assert _num_triangles(g, src_buckets=b) == want, b
+
+
+def _num_triangles(edges, **kw) -> int:
+    return triangle_count(edges, **kw).collect()[0]["num_triangles"]
+
+
+def _clique(vs):
+    return [(a, b) for a in vs for b in vs if a < b]
+
+
+def test_triangles_one_fragment_degenerate(spark):
+    """The one-task count at width 1 on inputs the canonical view must
+    normalize: no rows, self-loops only, duplicates in both orientations,
+    K4, and a hub (a 20-leaf star) joined to a 5-clique, whose degree
+    order differs from its id order."""
+    from minigraph_spark.operators.superstep import Graph
+
+    cases = {
+        "empty": ([], 0),
+        "self_loops": ([(1, 1), (2, 2), (2, 2)], 0),
+        "both_orientations": (
+            [(0, 1), (1, 0), (1, 2), (2, 1), (0, 2), (2, 0), (0, 1), (3, 3)], 1
+        ),
+        "k4": (_clique(range(4)), 4),
+        "hub_star_clique": (
+            [(100, v) for v in range(25)] + _clique(range(20, 25)), 10 + 10
+        ),
+    }
+    for name, (pairs, want) in cases.items():
+        if pairs:
+            edges = _spark_edges(spark, np.array(pairs, np.int64))
+            assert oracle.triangle_count(np.array(pairs)) == want, name
+        else:
+            edges = spark.createDataFrame([], schema="src long, dst long")
+        with Graph(edges, num_partitions=1) as g:
+            assert g.engine("canonical").one_fragment, name
+            for by_degree in (True, False):
+                assert _num_triangles(g, by_degree=by_degree) == want, (name, by_degree)
+
+
+def test_triangles_one_fragment_chunk_boundaries(spark, monkeypatch):
+    """Wedge chunks far smaller than the wedge count, with boundaries
+    inside one vertex's row, still count every wedge exactly once."""
+    from minigraph_spark.operators.superstep import Graph
+    from minigraph_spark.plans import triangles
+
+    arr = make_rmat_edges_np(power=7, num_edges=800, seed=13)
+    want = oracle.triangle_count(arr)
+    with Graph(_spark_edges(spark, arr), num_partitions=1) as g:
+        for chunk in (1, 7, 1000):
+            monkeypatch.setattr(triangles, "WEDGE_CHUNK", chunk)
+            for by_degree in (True, False):
+                assert _num_triangles(g, by_degree=by_degree) == want, (chunk, by_degree)
+    # the same NumPy count without Spark, on random multigraph closures
+    rng = np.random.default_rng(5)
+    for _ in range(50):
+        a = rng.integers(0, 12, size=(rng.integers(1, 60), 2)) * 7919 - 3
+        a = a[a[:, 0] != a[:, 1]]
+        canon = np.unique(np.sort(a, axis=1), axis=0)
+        for by_degree in (True, False):
+            got = triangles._count_fragment(canon[:, 0], canon[:, 1], by_degree, 3)
+            assert got == (oracle.triangle_count(a) if len(a) else 0)
+
+
+def test_triangles_one_fragment_skips_oriented_edges(spark, monkeypatch):
+    """At width 1 the count orients inside its one task: neither the
+    DataFrame orientation nor the canonicalize + orient helper runs."""
+    from minigraph_spark.operators.superstep import Graph
+    from minigraph_spark.plans import triangles
+
+    def boom(*a, **k):
+        raise AssertionError("DataFrame orientation at width 1")
+
+    monkeypatch.setattr(triangles, "oriented_edges", boom)
+    monkeypatch.setattr(triangles, "orient", boom)
+    arr = make_rmat_edges_np(power=7, num_edges=500, seed=11)
+    with Graph(_spark_edges(spark, arr), num_partitions=1) as g:
+        assert _num_triangles(g) == oracle.triangle_count(arr)
+
+
+def test_coloring_and_triangles_share_one_partitioning(spark, monkeypatch):
+    """run_coloring then triangle_count (and transitivity) on one Graph
+    read one canonical engine: prepartition_edges runs once."""
+    from minigraph_spark.operators import superstep
+    from minigraph_spark.operators.superstep import Graph
+    from minigraph_spark.plans.coloring import coloring_conflicts, run_coloring
+    from minigraph_spark.plans.triangles import transitivity
+
+    calls = []
+    orig = superstep.prepartition_edges
+
+    def counting(*a, **k):
+        calls.append(k.get("dedup"))
+        return orig(*a, **k)
+
+    monkeypatch.setattr(superstep, "prepartition_edges", counting)
+    arr = make_rmat_edges_np(power=7, num_edges=400, seed=23)
+    edges = _spark_edges(spark, arr)
+    want = oracle.triangle_count(arr)
+    with Graph(edges) as g:
+        colors = run_coloring(g)
+        assert _num_triangles(g) == want
+        assert transitivity(g).collect()[0]["num_triangles"] == want
+    assert calls == [True]
+    assert coloring_conflicts(edges, colors.state) == 0
 
 
 def test_kcore_matches_numpy_oracle(spark):

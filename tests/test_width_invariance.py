@@ -1,14 +1,16 @@
 """Results do not depend on the engine width.
 
-WCC (undirected and directed), incremental WCC, LPA and PageRank run on
-one small R-MAT graph and one small transcript projection, at the automatic
-width and at explicit widths 1, 2, 4 and 8. Auto and 1 take the
-one-fragment path (the whole graph in one Arrow task per window); 2-8 take
-the distributed superstep loop. Labels must be identical across widths and
-ranks must agree to 1e-9. run_wcc_csr and run_bfs (unit and weighted) must
-agree with their auto-width results at every width, and run_wcc_csr at
-width 1 must run WCC's min-label kernel (operators/csr.py) to its fixpoint
-in one iteration."""
+WCC (undirected and directed), incremental WCC, LPA, PageRank and the
+triangle count run on one small R-MAT graph and one small transcript
+projection, at the automatic width and at explicit widths 1, 2, 4 and 8.
+Auto and 1 take the one-fragment path (the whole graph in one Arrow task
+per window, or one task for the triangle count); 2-8 take the distributed
+superstep loop (the intersect plan for triangles). Labels must be identical
+across widths, ranks must agree to 1e-9, and the triangle count must equal
+the oracle's with and without degree ordering. run_wcc_csr and run_bfs
+(unit and weighted) must agree with their auto-width results at every
+width, and run_wcc_csr at width 1 must run WCC's min-label kernel
+(operators/csr.py) to its fixpoint in one iteration."""
 
 import numpy as np
 import pandas as pd
@@ -23,6 +25,7 @@ from minigraph_spark.operators.superstep import Graph, SuperstepEngine
 from minigraph_spark.plans.bfs import run_bfs
 from minigraph_spark.plans.lpa import run_lpa
 from minigraph_spark.plans.pagerank import run_pagerank
+from minigraph_spark.plans.triangles import triangle_count
 from minigraph_spark.plans.wcc import run_wcc, run_wcc_incremental
 from tests.conftest import labels_dict
 
@@ -45,7 +48,8 @@ def _graph(spark, name: str) -> np.ndarray:
 def _run_all(spark, arr: np.ndarray, width: int | None):
     """Every plan at one width, on one Graph per graph version so the
     engines' mode can be read back; returns ({view: one_fragment},
-    {plan: vid -> value}, {plan: iterations})."""
+    {plan: vid -> value}, {plan: iterations}). The triangle count's entry
+    in the values is {by_degree: count}."""
     mask = np.arange(len(arr)) % 5 == 0
     full, base, delta = _frame(spark, arr), _frame(spark, arr[~mask]), _frame(spark, arr[mask])
     prev = run_wcc(base)
@@ -59,12 +63,17 @@ def _run_all(spark, arr: np.ndarray, width: int | None):
             "lpa": run_lpa(g, max_iter=4),
             "pagerank": run_pagerank(g, tol=1e-7, max_iter=100),
         }
-        engines = {view: g.engine(view) for view in ("closure", "directed")}
+        triangles = {
+            bd: triangle_count(g, by_degree=bd).collect()[0]["num_triangles"]
+            for bd in (True, False)
+        }
+        engines = {view: g.engine(view) for view in ("closure", "directed", "canonical")}
         for eng in engines.values():
             assert eng.one_fragment == (eng.num_partitions == 1)
         modes = {name: eng.one_fragment for name, eng in engines.items()}
     values = {name: labels_dict(res.state) for name, res in out.items()}
     iterations = {name: res.iterations for name, res in out.items() if name != "wcc"}
+    values["triangles"] = triangles
     return modes, values, iterations
 
 
@@ -72,6 +81,7 @@ def _run_all(spark, arr: np.ndarray, width: int | None):
 def test_results_do_not_depend_on_width(spark, graph):
     arr = _graph(spark, graph)
     want = oracle.wcc_labels(arr)
+    want_triangles = oracle.triangle_count(arr)
     runs = {w: _run_all(spark, arr, w) for w in WIDTHS}
     _, ref, ref_iters = runs[None]
     assert ref["wcc"] == ref["wcc_incremental"] == want
@@ -80,6 +90,7 @@ def test_results_do_not_depend_on_width(spark, graph):
         assert set(modes.values()) == {w in (None, 1)}, (w, modes)
         for plan in ("wcc", "wcc_directed", "wcc_incremental", "lpa"):
             assert values[plan] == ref[plan], (w, plan)
+        assert values["triangles"] == {True: want_triangles, False: want_triangles}, w
         # directed WCC ships the min-label kernel: one fragment is one
         # iteration, the loop takes more
         assert (iterations["wcc_directed"] == 1) == modes["directed"], w
