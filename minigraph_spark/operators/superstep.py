@@ -329,6 +329,21 @@ class SuperstepEngine:
             return None
         return max(1, b // SuperstepEngine.EST_BYTES_PER_ROW)
 
+    @classmethod
+    def estimated_width(cls, edges: DataFrame) -> int:
+        """The width rule's first choice for an edge table, read from the
+        optimizer's pre-shuffle size estimate (guide §2.2 — derive partition
+        counts from input size) so small graphs shuffle ONCE at (near-)final
+        width instead of the wide-shuffle-then-downsize double pass:
+        ceil(rows / TARGET_ROWS_PER_PARTITION), capped at the session's
+        shuffle width, which is also the answer when the size is unknown.
+        Runs no Spark job."""
+        n_max = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        est = cls._estimate_rows(edges)
+        if est is None:
+            return n_max
+        return max(1, min(n_max, -(-est // cls.TARGET_ROWS_PER_PARTITION)))
+
     # view -> the edge table it partitions (see ``view`` above)
     VIEWS = {
         "directed": lambda e: e, "closure": symmetrize_raw,
@@ -349,7 +364,6 @@ class SuperstepEngine:
             raise ValueError(f"state_storage must be 'deser' or 'ser', got {state_storage!r}")
         spark = edges.sparkSession
         n_max = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        n = num_partitions or n_max
         self.spark = spark
         self.view = view
         edges = self.VIEWS[view](edges)
@@ -362,18 +376,11 @@ class SuperstepEngine:
         # materialization job as observed metrics — no separate scan of
         # the cached E rows (guide §1.2: fewer passes)
         _n_obs = Observation()
-        if num_partitions is None:
-            # choose the INITIAL width from the optimizer's pre-shuffle size
-            # estimate (guide §2.2 — derive partition counts from input
-            # size): small graphs then shuffle ONCE at (near-)final width
-            # instead of the wide-shuffle-then-downsize double pass. The
-            # exact observed count below corrects the choice only when the
-            # estimate was badly off — width is a performance knob with a
-            # wide plateau, so a second full E-row shuffle is only worth
-            # paying outside a 2x band of the ideal.
-            _est = self._estimate_rows(edges)
-            if _est is not None:
-                n = max(1, min(n_max, -(-_est // self.TARGET_ROWS_PER_PARTITION)))
+        # the exact observed count below corrects the estimated width only
+        # when the estimate was badly off — width is a performance knob with
+        # a wide plateau, so a second full E-row shuffle is only worth
+        # paying outside a 2x band of the ideal
+        n = num_partitions or self.estimated_width(edges)
         self.edges = prepartition_edges(
             edges, n, by="src", dedup=view != "directed", count_obs=_n_obs
         )
@@ -789,11 +796,13 @@ class Graph:
     share one partitioning exchange: run_wcc and run_lpa both run on the
     closure, run_pagerank and run_bfs on the directed edges, run_coloring,
     triangle_count and transitivity on the canonical closure (the triangle
-    count reads its cached rows: one NumPy task at width 1, the intersect
-    plan above). The directed view holds the plan's columns, (src, dst) or
-    (src, dst, weight_col), one engine per column set. A plan given a Graph
-    asks it for the view it needs, so it cannot run on the wrong one, and
-    leaves it open; a plan given a DataFrame builds a Graph and closes it.
+    count reads its cached rows only at width 1, as one NumPy task; above it
+    the intersect plan orients the edges itself, so the count asks width()
+    before it builds the engine). The directed view holds the plan's
+    columns, (src, dst) or (src, dst, weight_col), one engine per column
+    set. A plan given a Graph asks it for the view it needs, so it cannot
+    run on the wrong one, and leaves it open; a plan given a DataFrame
+    builds a Graph and closes it.
     A Graph is a context manager that closes on exit.
 
     Parameters
@@ -833,6 +842,20 @@ class Graph:
                 self.checkpoint_every, self.state_storage, view=view,
             )
         return self._engines[key]
+
+    def width(self, view: str) -> int:
+        """The width of ``view``'s engine, without building it: the built
+        engine's, else the pinned num_partitions, else the width rule's
+        estimate (SuperstepEngine.estimated_width; an engine built later
+        may correct it by its exact count). A plan whose path above width 1
+        needs no engine reads this before paying the partitioning
+        exchange."""
+        eng = self._engines.get((view, None))
+        if eng is not None:
+            return eng.num_partitions
+        return self.num_partitions or SuperstepEngine.estimated_width(
+            SuperstepEngine.VIEWS[view](self.edges.select("src", "dst"))
+        )
 
     def with_edges(self, edges: DataFrame) -> Graph:
         """A new handle over ``edges`` with this one's settings, no engine

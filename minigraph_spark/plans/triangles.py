@@ -1,26 +1,32 @@
 """Triangle counting — degree-oriented adjacency intersection (SURVEY.md §2.4).
 
 No reference app exists (README lists it as future work); the north rule
-requires it. triangle_count runs on the graph handle's canonical view
-(superstep.Graph, view "canonical": each undirected edge once as
-(least, greatest), self-loops dropped, deduped inside the engine's one
-partitioning exchange), with one path per width, chosen by the same width
+requires it. triangle_count takes a DataFrame or a superstep.Graph and
+picks one path per width of the graph's canonical view (view "canonical":
+each undirected edge once as (least, greatest), self-loops dropped,
+deduped inside the engine's one partitioning exchange), by the same width
 rule as PEval:
 
 - width 1 (one fragment): the whole count is one Arrow task over the
-  engine's cached edges. In NumPy: rank every vertex by (degree, vid),
-  orient each edge low-rank -> high-rank into a superstep.Fragment (its
-  (dst, src) sort is the oriented out-CSR), and test every wedge (a pair
-  of one vertex's oriented out-neighbors) against the sorted edge keys
-  with searchsorted, WEDGE_CHUNK wedges at a time. Each triangle a<b<c
-  (by rank) is the one wedge (b, c) at a, so it is counted exactly once.
-- width > 1 (intersect): orient the engine's rows low-rank -> high-rank
-  in Spark (orient), build per-vertex oriented adjacency arrays, and for
-  every oriented edge (u, v) count |adj(u) ∩ adj(v)| via JVM-side
-  `array_intersect`. The quadratic sum_v deg_out(v)^2 volume rides
-  *inside* row arrays (two E-row joins) instead of being materialized as a
-  shuffled wedge table — measured 10x over the wedge join on a 2M-edge
-  R-MAT (140M wedges -> 0 wedge rows).
+  canonical engine's cached edges. In NumPy: rank every vertex by
+  (degree, vid), orient each edge low-rank -> high-rank into a
+  superstep.Fragment (its (dst, src) sort is the oriented out-CSR), and
+  test every wedge (a pair of one vertex's oriented out-neighbors) against
+  the sorted edge keys with searchsorted, WEDGE_CHUNK wedges at a time.
+  Each triangle a<b<c (by rank) is the one wedge (b, c) at a, so it is
+  counted exactly once.
+- width > 1 (intersect): no engine is built (Graph.width reads the width
+  rule's estimate). oriented_edges canonicalizes, dedups and orients the
+  edges low-rank -> high-rank in Spark, then per-vertex oriented adjacency
+  arrays are built and for every oriented edge (u, v) |adj(u) ∩ adj(v)| is
+  counted via JVM-side `array_intersect`. The quadratic sum_v deg_out(v)^2
+  volume rides *inside* row arrays (two E-row joins) instead of being
+  materialized as a shuffled wedge table — measured 10x over the wedge
+  join on a 2M-edge R-MAT (140M wedges -> 0 wedge rows). Orienting the
+  canonical engine's rows instead was measured slower on that graph
+  (bench.py's triangles_rmat on 4 cores, median of 10 interleaved runs:
+  28.9 s -> 37.5 s): the engine's exchange does not pay for itself in a
+  plan that reshuffles anyway.
 
 Degree orientation bounds oriented out-degree at O(sqrt(|E|)) on power-law
 graphs — the standard skew defense at 100 TB; residual hub rows are split
@@ -43,18 +49,33 @@ from ..operators.superstep import Fragment, Graph, as_graph
 WEDGE_CHUNK = 1 << 20
 
 
-def orient(canon: DataFrame, by_degree: bool = True, materialize: bool = False) -> DataFrame:
-    """The canonical closure ``canon`` (deduped rows with src < dst)
-    oriented low-rank -> high-rank, where rank = (degree, vid) when
-    by_degree; without by_degree the rows already are, and ``canon`` is
-    returned as is.
+def oriented_edges(
+    edges: DataFrame, by_degree: bool = True, materialize: bool = False
+) -> DataFrame:
+    """Undirected simple closure, each edge kept once, oriented
+    low-rank -> high-rank where rank = (degree, vid) when by_degree.
 
-    Degrees come from an explode of both endpoints, whose 2E rows collapse
-    map-side in the partial agg, and the two degree joins ride the E-row
-    set; orientation swaps columns in-row, so no filter ever discards half
-    the join output. materialize=True persists + counts the result."""
+    materialize=True persists + counts the result and scopes a persist of
+    the canonical closure across its two consumers (degree agg + the
+    orientation join) — without it the E-row distinct recomputes per
+    branch, measured ~2x on the end-to-end count.
+
+    The closure is canonicalized (least, greatest) BEFORE distinct
+    (project.canonicalize), so the dedup shuffle carries E rows, not the 2E
+    symmetrized rows of the naive union — and the two degree joins
+    downstream ride the same E-row set (degrees come from an explode of both
+    endpoints, whose 2E rows collapse map-side in the partial agg).
+    Orientation swaps columns in-row, so no filter ever discards half the
+    join output."""
+    canon = canonicalize(edges)
     if not by_degree:
+        # canonical rows already satisfy src < dst
+        if materialize:
+            canon = canon.persist()
+            canon.count()
         return canon
+    if materialize:
+        canon = canon.persist()
     deg = (
         canon.select(F.explode(F.array("src", "dst")).alias("v"))
         .groupBy("v")
@@ -74,31 +95,7 @@ def orient(canon: DataFrame, by_degree: bool = True, materialize: bool = False) 
     if materialize:
         out = out.persist()
         out.count()
-    return out
-
-
-def oriented_edges(
-    edges: DataFrame, by_degree: bool = True, materialize: bool = False
-) -> DataFrame:
-    """Undirected simple closure, each edge kept once, oriented
-    low-rank -> high-rank where rank = (degree, vid) when by_degree:
-    project.canonicalize, then orient.
-
-    materialize=True persists + counts the result and scopes a persist of
-    the canonical closure across its two consumers (degree agg + the
-    orientation join) — without it the E-row distinct recomputes per
-    branch, measured ~2x on the end-to-end count. The closure is
-    canonicalized (least, greatest) BEFORE distinct, so the dedup shuffle
-    carries E rows, not the 2E symmetrized rows of the naive union."""
-    canon = canonicalize(edges)
-    if not materialize:
-        return orient(canon, by_degree)
-    canon = canon.persist()
-    if not by_degree:
-        canon.count()
-        return canon
-    out = orient(canon, by_degree, materialize=True)
-    canon.unpersist()
+        canon.unpersist()
     return out
 
 
@@ -159,10 +156,11 @@ def _count_fragment(src: np.ndarray, dst: np.ndarray, by_degree: bool, chunk: in
 
 def _count_one_fragment(eng, by_degree: bool) -> int:
     """The one-fragment count: one Arrow task over the width-1 engine's
-    cached edges. They are one partition (coalesce(1) is then a no-op that
-    keeps the count whole), so mapInArrow needs no exchange: 0.30 s against
-    0.35 s for applyInPandas on a constant key, on 43k canonical R-MAT
-    edges at local[4] (medians of 7 alternated runs)."""
+    cached edges. They are one partition, so mapInArrow needs no exchange:
+    0.30 s against 0.35 s for applyInPandas on a constant key, on 43k
+    canonical R-MAT edges at local[4] (medians of 7 alternated runs). The
+    ids are cast to long on the way in: the view keeps the input's id type
+    (int ids from sources.edgelist.retype_ids, int parquet)."""
     chunk = WEDGE_CHUNK  # read here, so the task sees the current value
 
     def fn(batches):
@@ -176,8 +174,9 @@ def _count_one_fragment(eng, by_degree: bool) -> int:
         )
         yield pa.RecordBatch.from_pydict({"num_triangles": [n]})
 
-    rows = eng.edges.coalesce(1).mapInArrow(fn, "num_triangles long").collect()
-    return sum(r[0] for r in rows)
+    ids = eng.edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
+    rows = ids.mapInArrow(fn, "num_triangles long").collect()
+    return rows[0][0] if rows else 0  # an empty view returns no row
 
 
 def _count_intersect(e: DataFrame, src_buckets: int) -> int:
@@ -205,10 +204,11 @@ def triangle_count(
 ) -> DataFrame:
     """One-row DataFrame (num_triangles). Exact on the undirected closure.
 
-    Counts on the canonical view of ``edges`` (a Graph shares it with
-    run_coloring and transitivity; a DataFrame gets its own handle, closed
-    here): in one Arrow task when that view is one fragment (width 1), else
-    with the intersect plan over the view's rows (see the module
+    A Graph shares its canonical view with run_coloring and transitivity;
+    a DataFrame gets its own handle, closed here. When that view is one
+    fragment (width 1) the count is one Arrow task over its cached edges;
+    above width 1 it is the intersect plan over oriented_edges, and no
+    engine is built unless the Graph already holds one (see the module
     docstring). by_degree=False orients by vid alone. The count is taken
     eagerly, so no oriented edge cache outlives the call.
 
@@ -226,16 +226,13 @@ def triangle_count(
     a per-row driver loop. The one-fragment count needs no such knob: it
     tests WEDGE_CHUNK wedges at a time."""
     with as_graph(edges) as g:
-        eng = g.engine("canonical")
-        if eng.one_fragment:
-            n = _count_one_fragment(eng, by_degree)
+        if g.width("canonical") == 1 and g.engine("canonical").one_fragment:
+            n = _count_one_fragment(g.engine("canonical"), by_degree)
         else:
-            # the engine's rows are already the deduped canonical closure
-            e = orient(eng.edges, by_degree, materialize=True)
+            e = oriented_edges(g.edges, by_degree, materialize=True)
             n = _count_intersect(e, src_buckets)
-            if by_degree:
-                e.unpersist()
-    return eng.spark.createDataFrame([(n,)], "num_triangles long")
+            e.unpersist()
+    return g.edges.sparkSession.createDataFrame([(n,)], "num_triangles long")
 
 
 def triangle_count_incremental(
@@ -362,8 +359,10 @@ def transitivity(edges: DataFrame | Graph, src_buckets: int = 1) -> DataFrame:
     clustering coefficient 3T / W with W = sum_v deg(v)*(deg(v)-1)/2 wedges
     on the simple undirected closure; 0.0 on a wedge-free graph.
 
-    The wedge degrees and triangle_count read one canonical view of
-    ``edges`` (one partitioning exchange); src_buckets is triangle_count's."""
+    The wedge degrees read the canonical view of ``edges``, which
+    triangle_count shares at width 1 (one partitioning exchange in all;
+    above width 1 the count orients the edges itself); src_buckets is
+    triangle_count's."""
     with as_graph(edges) as g:
         canon = g.engine("canonical").edges
         t = triangle_count(g, src_buckets=src_buckets)

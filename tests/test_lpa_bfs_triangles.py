@@ -4,7 +4,8 @@ from minigraph_spark import oracle
 from minigraph_spark.fixtures import TINY7_EDGES, make_rmat_edges_np, tiny7_edges
 from minigraph_spark.plans.bfs import run_bfs
 from minigraph_spark.plans.lpa import run_lpa
-from minigraph_spark.plans.triangles import per_vertex_triangles, triangle_count
+from minigraph_spark.plans.triangles import per_vertex_triangles, transitivity, triangle_count
+from minigraph_spark.sources.edgelist import retype_ids
 from tests.conftest import labels_dict
 
 
@@ -283,6 +284,11 @@ def test_triangles_one_fragment_degenerate(spark):
             assert g.engine("canonical").one_fragment, name
             for by_degree in (True, False):
                 assert _num_triangles(g, by_degree=by_degree) == want, (name, by_degree)
+    # int ids (the P8 retype projection) count the same at the automatic width
+    k4 = retype_ids(_spark_edges(spark, np.array(_clique(range(4)), np.int64)), "int")
+    assert dict(k4.dtypes)["src"] == "int"
+    assert _num_triangles(k4) == 4
+    assert transitivity(k4).collect()[0]["transitivity"] == 1.0
 
 
 def test_triangles_one_fragment_chunk_boundaries(spark, monkeypatch):
@@ -310,8 +316,8 @@ def test_triangles_one_fragment_chunk_boundaries(spark, monkeypatch):
 
 
 def test_triangles_one_fragment_skips_oriented_edges(spark, monkeypatch):
-    """At width 1 the count orients inside its one task: neither the
-    DataFrame orientation nor the canonicalize + orient helper runs."""
+    """At width 1 the count orients inside its one task: the DataFrame
+    orientation never runs."""
     from minigraph_spark.operators.superstep import Graph
     from minigraph_spark.plans import triangles
 
@@ -319,10 +325,38 @@ def test_triangles_one_fragment_skips_oriented_edges(spark, monkeypatch):
         raise AssertionError("DataFrame orientation at width 1")
 
     monkeypatch.setattr(triangles, "oriented_edges", boom)
-    monkeypatch.setattr(triangles, "orient", boom)
     arr = make_rmat_edges_np(power=7, num_edges=500, seed=11)
     with Graph(_spark_edges(spark, arr), num_partitions=1) as g:
         assert _num_triangles(g) == oracle.triangle_count(arr)
+
+
+def test_triangles_above_width_one_build_no_engine(spark, monkeypatch):
+    """Above width 1 the intersect plan orients the edges itself, so the
+    count partitions no canonical view, unless the Graph already holds
+    one; Graph.width agrees with the engine built afterwards."""
+    from minigraph_spark.operators import superstep
+    from minigraph_spark.operators.superstep import Graph
+
+    calls = []
+    orig = superstep.prepartition_edges
+
+    def counting(*a, **k):
+        calls.append(k.get("dedup"))
+        return orig(*a, **k)
+
+    monkeypatch.setattr(superstep, "prepartition_edges", counting)
+    arr = make_rmat_edges_np(power=7, num_edges=500, seed=11)
+    want = oracle.triangle_count(arr)
+    edges = _spark_edges(spark, arr)
+    with Graph(edges, num_partitions=2) as g:
+        assert g.width("canonical") == 2
+        assert _num_triangles(g) == want
+        assert calls == []
+    with Graph(edges) as g:
+        w = g.width("canonical")
+        assert _num_triangles(g) == want
+        assert calls == [True]  # auto width 1 here: the one-task count
+        assert g.engine("canonical").num_partitions == w == 1
 
 
 def test_coloring_and_triangles_share_one_partitioning(spark, monkeypatch):
@@ -331,7 +365,6 @@ def test_coloring_and_triangles_share_one_partitioning(spark, monkeypatch):
     from minigraph_spark.operators import superstep
     from minigraph_spark.operators.superstep import Graph
     from minigraph_spark.plans.coloring import coloring_conflicts, run_coloring
-    from minigraph_spark.plans.triangles import transitivity
 
     calls = []
     orig = superstep.prepartition_edges
@@ -473,7 +506,7 @@ def test_clustering_known_values(spark):
     # kite: triangle {0,1,2} plus pendant 2-3 —
     # lcc: 0,1 = 1.0; 2 = 2*1/(3*2) = 1/3; 3 = 0 (deg 1)
     edges = _spark_edges(spark, [(0, 1), (1, 2), (0, 2), (2, 3)])
-    from minigraph_spark.plans.triangles import clustering_coefficients, transitivity
+    from minigraph_spark.plans.triangles import clustering_coefficients
 
     cc = clustering_coefficients(edges)
     got = {r["vid"]: (r["deg"], r["triangles"], round(r["lcc"], 9))
