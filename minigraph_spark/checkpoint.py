@@ -1,4 +1,4 @@
-"""Per-iteration vertex-state snapshots with per-partition lineage.
+"""Per-iteration vertex-state snapshots with a one-job lineage manifest.
 
 Maps the reference's vdata-only checkpoint writes
 (reference: utility/io/csr_io_adapter.h:426-489, WriteCSR2CSRBin with
@@ -7,19 +7,24 @@ vdata_only=true — the per-superstep flush) and its StatisticInfo sidecars
 
     {dir}/iter=00007/state.parquet      # (vid, value[, ...]) only — column-
                                         # pruned write, the vdata_only analog
-    {dir}/iter=00007/lineage.json       # iteration, counts, per-partition
-                                        # row counts + value fingerprints
-                                        # + the run's algo and plan params,
-                                        # edge rows, edge fingerprint, mode
-                                        # and width
+    {dir}/iter=00007/lineage.json       # iteration, num_rows, fingerprint
+                                        # (XOR of the rows' hashes),
+                                        # converged, the run's algo and plan
+                                        # params, edge rows, edge
+                                        # fingerprint, mode and width
     {dir}/metrics.jsonl                 # one row per iteration (appended)
+
+A snapshot is ONE Spark job: the row count and the fingerprint are observed
+metrics of the parquet write itself (no read-back, no second scan).
 
 Any run is resumable mid-convergence: `latest(dir)` returns the newest
 complete snapshot (a snapshot is complete iff its lineage.json exists —
-written last). Parquet is used as the snapshot format in-sandbox; the layout
-(immutable snapshot dirs + manifest sidecar) is Iceberg-shaped so swapping
-the writer for `.writeTo(...).createOrReplace()` on a real catalog is local
-to this module.
+written last). A snapshot marked ``converged`` of a plan whose kernel is a
+fixpoint (SuperstepEngine.run) is the answer itself, so a resume returns it
+and runs nothing. Parquet is used as the snapshot format in-sandbox; the
+layout (immutable snapshot dirs + manifest sidecar) is Iceberg-shaped so
+swapping the writer for `.writeTo(...).createOrReplace()` on a real catalog
+is local to this module.
 """
 
 from __future__ import annotations
@@ -28,7 +33,7 @@ import json
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -39,32 +44,26 @@ def _iter_dir(base: str, iteration: int) -> str:
 def write_snapshot(
     state: DataFrame, base_dir: str, iteration: int, extra: dict | None = None
 ) -> dict:
-    """Write the vertex state and its lineage manifest; returns the manifest."""
+    """Write the vertex state and its lineage manifest; returns the manifest.
+    One Spark job: the row count and the order-insensitive fingerprint ride
+    the parquet write as observed metrics."""
     d = _iter_dir(base_dir, iteration)
-    state.write.mode("overwrite").parquet(os.path.join(d, "state.parquet"))
-    # per-partition lineage: row count + order-insensitive value fingerprint
-    # per physical partition of the snapshot just written
-    snap = state.sparkSession.read.parquet(os.path.join(d, "state.parquet"))
-    per_part = (
-        snap.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            # XOR-fold of row hashes: order-insensitive and overflow-free
-            # (sum would overflow LongType under ANSI mode)
-            F.bit_xor(F.xxhash64(*[F.col(c).cast("string") for c in snap.columns])).alias(
-                "fingerprint"
-            ),
-        )
-        .collect()
-    )
+    obs = Observation()
+    state.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        # XOR-fold of row hashes: order-insensitive and overflow-free
+        # (sum would overflow LongType under ANSI mode)
+        F.bit_xor(F.xxhash64(*[F.col(c).cast("string") for c in state.columns])).alias(
+            "fingerprint"
+        ),
+    ).write.mode("overwrite").parquet(os.path.join(d, "state.parquet"))
+    stats = obs.get
+    fp = stats["fingerprint"]  # NULL over no rows
     manifest = {
         "iteration": iteration,
-        "num_rows": int(sum(r["rows"] for r in per_part)),
-        "partitions": [
-            {"pid": int(r["_pid"]), "rows": int(r["rows"]), "fingerprint": int(r["fingerprint"])}
-            for r in sorted(per_part, key=lambda r: r["_pid"])
-        ],
+        "num_rows": int(stats["rows"]),
+        "fingerprint": None if fp is None else int(fp),
         **(extra or {}),
     }
     # lineage.json written last = commit marker
@@ -99,8 +98,9 @@ def latest(base_dir: str) -> tuple[int, str] | None:
 def load_snapshot(
     spark: SparkSession, base_dir: str, algo: str, edge_rows: int,
     edge_fingerprint: int | None, params: dict | None = None,
-) -> tuple[int, DataFrame] | None:
-    """Newest complete snapshot -> (iteration, state), else None. A
+) -> tuple[int, DataFrame, bool] | None:
+    """Newest complete snapshot -> (iteration, state, converged), else
+    None; ``converged`` is False for a manifest that does not record it. A
     snapshot whose manifest names another run than the resuming one —
     another algo, other plan ``params`` (a BFS root, PageRank's alpha), or
     other edges (``edge_rows``, ``edge_fingerprint``) — raises ValueError:
@@ -128,4 +128,4 @@ def load_snapshot(
             f"{fp}); cannot resume a run over {edge_rows} edge rows "
             f"(fingerprint {edge_fingerprint}) from them"
         )
-    return it, spark.read.parquet(path)
+    return it, spark.read.parquet(path), bool(manifest.get("converged"))

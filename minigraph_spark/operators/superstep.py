@@ -178,7 +178,9 @@ class FragmentKernel:
     and active (e.g. PageRank's outdeg), and ``active`` marks the vertices
     the plan's loop would mark changed. ``fixpoint=True`` declares that one
     step reaches the fixpoint (a local min-label fixpoint), so the run
-    converges after it."""
+    converges after it, and that the plan's converged state depends on no
+    stopping parameter: run() returns a converged snapshot of such a plan
+    as the answer, with no window (see run()'s checkpoint_dir)."""
 
     step: Callable[[Fragment, np.ndarray, dict], tuple[np.ndarray, np.ndarray]]
     fixpoint: bool = False
@@ -516,33 +518,41 @@ class SuperstepEngine:
         or max_iter, stay out so a run can resume with others) and the
         same edge rows (their count and fingerprint, the XOR of the rows'
         hashes observed in the partitioning job), else ValueError.
+
+        A newest snapshot that records ``converged`` of a plan whose kernel
+        declares ``fixpoint=True`` (the WCC family) is the answer for any
+        max_iter, since a min-label fixpoint has no stopping parameter: the
+        run returns it as SuperstepResult(state=<snapshot>,
+        iterations=<its iteration> + 1, converged=True, metrics=[]) and
+        runs no window and writes no snapshot. That state reads the
+        snapshot's parquet files, so it stays valid as long as
+        checkpoint_dir does. Any other plan (PageRank, whose convergence
+        depends on the tol a resume may change; LPA; BFS) resumes with a
+        window, as does a manifest without ``converged``.
         """
         name, params = (algo, None) if isinstance(algo, str) else algo
         run_id = {"algo": name, "params": params}
         with self.loop_confs():
+            first, state = 0, init_state
+            found = checkpoint_dir and ckpt.load_snapshot(
+                self.spark, checkpoint_dir, name, self.n_edges,
+                self.edge_fingerprint, params,
+            )
+            if found:
+                it, state, converged = found
+                if converged and kernel is not None and kernel.fixpoint:
+                    return SuperstepResult(
+                        state=state, iterations=it + 1, converged=True
+                    )
+                first = it + 1
             if kernel is not None and self.one_fragment:
                 return self._run_fragment(
-                    init_state, kernel, max_iter, run_id, checkpoint_dir
+                    first, state, kernel, max_iter, run_id, checkpoint_dir
                 )
             return self._run_loop(
-                init_state, scatter, combiner, apply_fn, extra_agg,
+                first, state, scatter, combiner, apply_fn, extra_agg,
                 frontier, max_iter, run_id, checkpoint_dir,
             )
-
-    def _resume_point(
-        self, init_state: DataFrame, run_id: dict, checkpoint_dir: str | None
-    ):
-        """(first iteration, its input state): the newest complete snapshot
-        of the run ``run_id`` over this engine's edge rows + 1 when
-        checkpoint_dir holds one, else (0, init_state)."""
-        if checkpoint_dir:
-            found = ckpt.load_snapshot(
-                self.spark, checkpoint_dir, run_id["algo"], self.n_edges,
-                self.edge_fingerprint, run_id["params"],
-            )
-            if found is not None:
-                return found[0] + 1, found[1]
-        return 0, init_state
 
     def _finish_window(
         self, result: SuperstepResult, state: DataFrame, first: int,
@@ -555,6 +565,9 @@ class SuperstepEngine:
         result's state/iteration/convergence fields. ``mode`` names the
         path that ran the window ("fragment" or "loop")."""
         it = first + len(changed) - 1
+        # the window's own time: the snapshot write below is parquet I/O,
+        # not superstep work
+        window_sec = time.time() - t0
         checkpointed = False
         run_info = {"mode": mode, "num_partitions": self.num_partitions}
         if checkpoint_dir and (
@@ -564,12 +577,11 @@ class SuperstepEngine:
                 state, checkpoint_dir, it,
                 extra={
                     **run_id, "num_changed": changed[-1],
-                    "edge_rows": self.n_edges,
+                    "converged": converged, "edge_rows": self.n_edges,
                     "edge_fingerprint": self.edge_fingerprint, **run_info,
                 },
             )
             checkpointed = True
-        window_sec = time.time() - t0
         for j, c in enumerate(changed):
             m = IterationMetrics(
                 iteration=first + j,
@@ -588,7 +600,8 @@ class SuperstepEngine:
 
     def _run_fragment(
         self,
-        init_state: DataFrame,
+        first: int,
+        state: DataFrame,
         kernel: FragmentKernel,
         max_iter: int,
         run_id: dict,
@@ -600,8 +613,8 @@ class SuperstepEngine:
         checkpoint_every boundaries when checkpoint_dir is set (so the
         snapshots match the loop's), else run to max_iter; every window
         also ends at convergence. MG_EXPLAIN=k prints the plan of the
-        window that holds iteration k."""
-        first, state = self._resume_point(init_state, run_id, checkpoint_dir)
+        window that holds iteration k. The run starts at iteration
+        ``first`` from ``state`` (run() resolves the resume point)."""
         result = SuperstepResult(state=state)
         schema = T.StructType(
             [T.StructField(f.name, f.dataType) for f in state.schema.fields]
@@ -673,7 +686,8 @@ class SuperstepEngine:
 
     def _run_loop(
         self,
-        init_state: DataFrame,
+        start_iter: int,
+        state: DataFrame,
         scatter: ScatterFn,
         combiner: str | Callable[[DataFrame], DataFrame],
         apply_fn: ApplyFn,
@@ -683,7 +697,6 @@ class SuperstepEngine:
         run_id: dict,
         checkpoint_dir: str | None,
     ) -> SuperstepResult:
-        start_iter, state = self._resume_point(init_state, run_id, checkpoint_dir)
         state = state.persist(self._state_level)
 
         # Column expression trees are immutable and plan-independent, so

@@ -68,14 +68,19 @@ def oriented_edges(
     Orientation swaps columns in-row, so no filter ever discards half the
     join output."""
     canon = canonicalize(edges)
+    return _orient(canon.persist() if materialize else canon, by_degree, materialize)
+
+
+def _orient(canon: DataFrame, by_degree: bool, materialize: bool) -> DataFrame:
+    """oriented_edges over rows that are already canonical (src < dst) and
+    deduped. With materialize=True, ``canon`` must be persisted: the result
+    is persisted and counted, and ``canon`` released once the oriented rows
+    exist (it IS the result when not by_degree)."""
     if not by_degree:
         # canonical rows already satisfy src < dst
         if materialize:
-            canon = canon.persist()
             canon.count()
         return canon
-    if materialize:
-        canon = canon.persist()
     deg = (
         canon.select(F.explode(F.array("src", "dst")).alias("v"))
         .groupBy("v")
@@ -324,14 +329,20 @@ def clustering_coefficients(
     so the quadratic wedge volume stays inside row arrays and src_buckets
     bounds peak spill exactly as for the raw counts. Result is persisted +
     materialized (V rows) so the E-row closure cache frees here; callers
-    unpersist when done."""
-    canon = oriented_edges(edges, by_degree=False, materialize=True)
+    unpersist when done.
+
+    The closure is canonicalized once: the degrees (V rows, materialized
+    first) and the orientation both read the one persisted canonical set,
+    which the triangle count releases."""
+    canon = canonicalize(edges).persist()
     deg = (
         canon.select(F.explode(F.array("src", "dst")).alias("vid"))
         .groupBy("vid")
         .agg(F.count(F.lit(1)).alias("deg"))
+        .persist()
     )
-    tri = per_vertex_triangles(canon, by_degree=by_degree, src_buckets=src_buckets)
+    deg.count()
+    tri = _triangles_of(_orient(canon, by_degree, materialize=True), src_buckets)
     out = (
         deg.join(tri, "vid", "left")
         .select(
@@ -350,7 +361,7 @@ def clustering_coefficients(
     )
     out.count()
     tri.unpersist()
-    canon.unpersist()
+    deg.unpersist()
     return out
 
 
@@ -418,7 +429,12 @@ def per_vertex_triangles(
     Returned persisted + materialized (V rows) so the E-row oriented edge
     cache can be freed here instead of leaking; callers may unpersist the
     result when done."""
-    e = oriented_edges(edges, by_degree, materialize=True)
+    return _triangles_of(oriented_edges(edges, by_degree, materialize=True), src_buckets)
+
+
+def _triangles_of(e: DataFrame, src_buckets: int) -> DataFrame:
+    """per_vertex_triangles over the persisted oriented edge set ``e``,
+    which it unpersists."""
     if src_buckets > 1:
         adj = e.groupBy("src").agg(F.collect_list("dst").alias("nbrs")).persist()
         adj.count()

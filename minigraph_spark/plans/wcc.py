@@ -218,6 +218,12 @@ def run_wcc_incremental(
     ``edges`` is the graph before the delta; a Graph passes its settings
     on to the union graph (Graph.with_edges), whose engine this run builds
     and closes.
+
+    With a checkpoint_dir, the same call issued again on the same dir finds
+    its converged snapshot and returns it (iterations = the first call's,
+    metrics empty) without running a window: the min-label fixpoint is the
+    answer for any max_iter (SuperstepEngine.run). The returned state then
+    reads the snapshot's files, valid as long as checkpoint_dir is.
     """
     with as_graph(edges) as g, g.with_edges(
         g.edges.select("src", "dst").unionAll(delta_edges.select("src", "dst"))

@@ -8,6 +8,8 @@ Local-mode defaults mirror what we would submit cluster-side via
   (reference: minigraph/utility/paritioner/hybrid_cut_partitioner.h:162-260;
   the aggregation half is ours, see operators/partition.py).
 - Arrow enabled for the pandas-UDF CSR path.
+- DataFrame debugging (the per-Column Python call-site capture) off: plan
+  building is driver-bound, and the capture roughly triples its cost.
 - shuffle partitions sized to cores locally; on a real cluster this is set to
   2-3x total executor cores (or left to AQE coalescing from a high initial).
 """
@@ -117,6 +119,19 @@ def get_spark(
         # Plain stream reads scale; on a real cluster fetches are remote
         # and this setting is moot.
         .config("spark.storage.memoryMapThreshold", "512m")
+        # plan building: with DataFrame debugging on, PySpark wraps every
+        # F.* / Column call to record its Python call site
+        # (pyspark/errors/utils.py::_with_origin: getActiveSession, a conf
+        # read, a stack walk, a JVM origin set and clear); PySpark's own
+        # comment offers this flag "to reduce performance slowdown". Measured
+        # on a 4-core VM (PySpark 4.1.2, medians, two processes per value):
+        # F.col("a").alias("b") 2.0 -> 0.4 ms, plans.wcc's apply + scatter
+        # builders (_pick_apply, _make_scatter_label) 39 -> 12 ms. The
+        # cost is debug-only: DataFrame errors no longer name the Python
+        # call site. PySpark reads the flag ONCE per process
+        # (is_debugging_enabled caches it), so it is set here, before the
+        # first Column is built; extra_conf may turn it back on.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

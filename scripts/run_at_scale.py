@@ -119,7 +119,7 @@ def run_pr_resume(args) -> None:
     """North-rule resumability AT SCALE (the pytest kill-resume contract,
     tests/test_checkpoint.py, replayed on the evidence fixture): interrupt a
     converging PageRank after 2 sweeps, resume it in a FRESH JVM from the
-    parquet snapshot (per-partition lineage manifest + metrics.jsonl), and
+    parquet snapshot (lineage manifest + metrics.jsonl), and
     prove the resumed fixpoint is bit-identical to an uninterrupted control
     run. One subprocess per phase = one JVM per phase, the same boundary a
     spark-submit restart crosses."""

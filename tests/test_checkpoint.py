@@ -2,15 +2,20 @@
 
 Kill-and-resume: run K iterations with snapshots, restart from the
 checkpoint dir, assert the final state is identical to an uninterrupted
-run. Also checks the snapshot layout: per-iteration dirs, lineage.json
-with per-partition row counts + fingerprints (commit marker written last),
-and the metrics.jsonl sidecar."""
+run; a converged WCC snapshot is returned with no window. Also checks the
+snapshot layout: per-iteration dirs, lineage.json with the row count, the
+fingerprint and the converged flag (commit marker written last), one Spark
+job per snapshot, and the metrics.jsonl sidecar."""
 
 import json
+import operator
 import os
+from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pytest
+from pyspark.sql import functions as F
 
 from minigraph_spark import checkpoint as ckpt
 from minigraph_spark.fixtures import make_rmat_edges_np
@@ -82,18 +87,26 @@ def test_state_storage_ser_matches_deser(spark):
     )
 
 
-def _wcc_resume_exact(spark, tmp_path, run, killed_at=3):
+def _wcc_resume_exact(spark, tmp_path, run, killed_at=1):
     """``run(edges, max_iter, checkpoint_dir)`` is one WCC face; the killed
-    run stops after ``killed_at`` iterations, by which it has snapshotted."""
+    run stops after ``killed_at`` iterations, by which it has snapshotted.
+    Returns (killed, newest snapshot iteration, resumed); the resumed run
+    must end where the uninterrupted one does."""
     e = _edges(spark, seed=4).persist()
     ck = str(tmp_path / "wcc_ck")
     full = run(e, 50, None)
-    run(e, killed_at, ck)
+    killed = run(e, killed_at, ck)
     newest = ckpt.latest(ck)[0]
     resumed = run(e, 50, ck)
     assert _vals(full.state) == _vals(resumed.state)
     assert resumed.converged
-    # resume starts right after the newest snapshot
+    return killed, newest, resumed
+
+
+def _assert_mid_run_resume(killed, newest, resumed):
+    """The kill came before convergence, and the resume starts right after
+    the newest snapshot."""
+    assert not killed.converged
     assert resumed.metrics[0].iteration == newest + 1
 
 
@@ -106,24 +119,35 @@ def _run_wcc(kw):
 
 
 def test_wcc_resume_exact(spark, tmp_path):
-    _wcc_resume_exact(spark, tmp_path, _run_wcc({}))
+    """At width 1 one window always reaches WCC's fixpoint, so the killed
+    run has converged: the resume returns its snapshot with no window."""
+    ck = str(tmp_path / "wcc_ck")
+    killed, newest, resumed = _wcc_resume_exact(spark, tmp_path, _run_wcc({}), 3)
+    assert killed.converged
+    assert resumed.metrics == []
+    assert resumed.iterations == newest + 1
+    assert ckpt.latest(ck)[0] == newest
 
 
 def test_wcc_resume_exact_loop(spark, tmp_path):
-    _wcc_resume_exact(spark, tmp_path, _run_wcc(LOOP))
+    _assert_mid_run_resume(*_wcc_resume_exact(spark, tmp_path, _run_wcc(LOOP)))
 
 
-def test_wcc_csr_resume_exact(spark, tmp_path):
-    """The CSR path snapshots through the engine at its default cadence
-    (every 5 iterations, and at convergence), so a run capped at 5 rounds
-    always leaves one."""
-    _wcc_resume_exact(
+def test_wcc_csr_resume_exact(spark, tmp_path, monkeypatch):
+    """run_wcc_csr builds its own Graph; pinning its cadence to every
+    iteration lets a run killed after one round leave a snapshot before it
+    converges."""
+    from functools import partial
+
+    from minigraph_spark.operators import csr
+
+    monkeypatch.setattr(csr, "Graph", partial(Graph, checkpoint_every=1))
+    _assert_mid_run_resume(*_wcc_resume_exact(
         spark, tmp_path,
         lambda e, n, ck: run_wcc_csr(
             e, num_partitions=2, max_rounds=n, checkpoint_dir=ck
         ),
-        killed_at=5,
-    )
+    ))
 
 
 def test_bfs_resume_exact(spark, tmp_path):
@@ -135,15 +159,13 @@ def test_bfs_resume_exact(spark, tmp_path):
         with Graph(e, checkpoint_every=1) as g:
             return run_bfs(g, root, max_iter=n, checkpoint_dir=ck)
 
-    _wcc_resume_exact(spark, tmp_path, run, killed_at=2)
+    _assert_mid_run_resume(*_wcc_resume_exact(spark, tmp_path, run, killed_at=2))
 
 
 def test_resume_refuses_another_algos_snapshots(spark, tmp_path):
     """A checkpoint_dir holding WCC snapshots is not a BFS start state: the
     BFS run must refuse it, naming both algorithms, and leave the WCC
     snapshots resumable."""
-    import pytest
-
     e = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11)], "src long, dst long"
     )
@@ -169,8 +191,6 @@ def test_resume_refuses_another_inputs_snapshots(spark, tmp_path):
     state for the decremental run's subgraph WCC (6 closure rows against
     10): it must refuse, naming both counts. A resume over the same input
     still resumes."""
-    import pytest
-
     e = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11)], "src long, dst long"
     )
@@ -181,8 +201,13 @@ def test_resume_refuses_another_inputs_snapshots(spark, tmp_path):
     with pytest.raises(ValueError, match=r"10 edge rows.*6 edge rows"):
         run_wcc_decremental(e, dele, prev.state, checkpoint_dir=ck)
     assert ckpt.latest(ck) == newest
+    # the newest snapshot is WCC's fixpoint: the resume returns it and
+    # runs no window
     again = run_wcc(e, checkpoint_dir=ck)
-    assert again.metrics[0].iteration == newest[0] + 1
+    assert (again.metrics, again.iterations, again.converged) == (
+        [], newest[0] + 1, True
+    )
+    assert ckpt.latest(ck) == newest
     assert _vals(again.state) == _vals(prev.state)
 
 
@@ -190,8 +215,6 @@ def test_resume_refuses_other_edges_with_the_same_row_count(spark, tmp_path):
     """Two graphs with the same closure row count but other components: a
     run over B must not resume from A's snapshots (the edge fingerprint
     differs), and a run over A again still resumes."""
-    import pytest
-
     a = spark.createDataFrame([(0, 1), (2, 3)], "src long, dst long")
     b = spark.createDataFrame([(0, 2), (1, 3)], "src long, dst long")
     ck = str(tmp_path / "fp_ck")
@@ -202,7 +225,10 @@ def test_resume_refuses_other_edges_with_the_same_row_count(spark, tmp_path):
         run_wcc(b, checkpoint_dir=ck)
     assert ckpt.latest(ck) == newest
     again = run_wcc(a, checkpoint_dir=ck)
-    assert again.metrics[0].iteration == newest[0] + 1
+    assert (again.metrics, again.iterations, again.converged) == (
+        [], newest[0] + 1, True
+    )
+    assert ckpt.latest(ck) == newest
     assert _vals(again.state) == _vals(prev.state) == {0: 0, 1: 0, 2: 2, 3: 2}
 
 
@@ -212,8 +238,6 @@ def test_resume_refuses_other_plan_parameters(spark, tmp_path):
     over the same edges must refuse the old snapshots. A changed tol only
     moves where a run stops, so it resumes; so does a manifest written
     before parameters were recorded."""
-    import pytest
-
     g = Graph(_edges(spark, seed=5).persist(), checkpoint_every=1)
     d = str(tmp_path / "bfs_ck")
     run_bfs(g, 0, checkpoint_dir=d, max_iter=2)
@@ -282,10 +306,14 @@ def _snapshot_layout_and_lineage(spark, tmp_path, kw, mode):
     with open(os.path.join(ck, "iter=00003", "lineage.json")) as f:
         manifest = json.load(f)
     assert manifest["iteration"] == 3
-    assert manifest["num_rows"] > 0
-    assert manifest["partitions"] and all(
-        "rows" in p and "fingerprint" in p for p in manifest["partitions"]
-    )
+    # the write's observed count and fingerprint equal the files' own
+    snap = spark.read.parquet(os.path.join(ck, "iter=00003", "state.parquet"))
+    hashes = [r[0] for r in snap.select(
+        F.xxhash64(*[F.col(c).cast("string") for c in snap.columns])
+    ).collect()]
+    assert manifest["num_rows"] == len(hashes) > 0
+    assert manifest["fingerprint"] == reduce(operator.xor, hashes)
+    assert manifest["converged"] is False  # 4 sweeps do not reach tol=1e-9
     width = kw.get("num_partitions", 1)
     assert (manifest["mode"], manifest["num_partitions"]) == (mode, width)
     assert manifest["edge_rows"] == e.count()
@@ -313,3 +341,119 @@ def test_incomplete_snapshot_ignored(spark, tmp_path):
     # a torn snapshot (no lineage.json commit marker) must be skipped
     os.makedirs(os.path.join(ck, "iter=00009", "state.parquet"), exist_ok=True)
     assert ckpt.latest(ck)[0] == 1
+
+
+def _no_window(*args, **kwargs):
+    raise AssertionError("a converged fixpoint resume ran a window")
+
+
+@pytest.mark.parametrize("kw", [{}, LOOP], ids=["auto", "loop"])
+@pytest.mark.parametrize("face", ["batch", "incremental"])
+def test_converged_wcc_resumes_in_zero_windows(spark, tmp_path, monkeypatch, kw, face):
+    """The same converged WCC call issued twice on one dir (perfbench's
+    delta_wcc then resume): the second returns the first's labels from its
+    converged snapshot, runs no window and writes no snapshot."""
+    from minigraph_spark.operators.superstep import SuperstepEngine
+    from minigraph_spark.plans.wcc import run_wcc_incremental
+
+    arr = make_rmat_edges_np(9, 1500, seed=4)
+    base, delta = (
+        spark.createDataFrame(pd.DataFrame(part, columns=["src", "dst"]),
+                              schema="src long, dst long").persist()
+        for part in (arr[:1200], arr[1200:])
+    )
+    ck = str(tmp_path / "conv_ck")
+
+    def call():
+        with Graph(base, checkpoint_every=1, **kw) as g:
+            if face == "batch":
+                return run_wcc(g, checkpoint_dir=ck)
+            return run_wcc_incremental(g, delta, prev, checkpoint_dir=ck)
+
+    prev = run_wcc(base).state
+    first = call()
+    assert first.converged
+    snaps = sorted(os.listdir(ck))
+    monkeypatch.setattr(SuperstepEngine, "_run_fragment", _no_window)
+    monkeypatch.setattr(SuperstepEngine, "_run_loop", _no_window)
+    again = call()
+    assert (again.metrics, again.iterations, again.converged) == (
+        [], first.iterations, True
+    )
+    assert sorted(os.listdir(ck)) == snaps
+    assert _vals(again.state) == _vals(first.state)
+
+
+@pytest.mark.parametrize("kw", [{}, LOOP], ids=["auto", "loop"])
+def test_pagerank_converged_at_one_tol_resumes_at_another(spark, tmp_path, kw):
+    """PageRank's convergence depends on tol, which a resume may change: a
+    run converged at tol=1e-3 and resumed at tol=1e-9 runs on, and ends
+    where an uninterrupted tol=1e-9 run does."""
+    e = _edges(spark).persist()
+    ck = str(tmp_path / "pr_tol_ck")
+    with Graph(e, **kw) as g:
+        full = run_pagerank(g, tol=1e-9, max_iter=100)
+    with Graph(e, checkpoint_every=2, **kw) as g:
+        loose = run_pagerank(g, tol=1e-3, max_iter=100, checkpoint_dir=ck)
+        assert loose.converged
+        newest = ckpt.latest(ck)[0]
+        assert newest == loose.iterations - 1
+        resumed = run_pagerank(g, tol=1e-9, max_iter=100, checkpoint_dir=ck)
+    assert resumed.converged
+    assert resumed.metrics[0].iteration == newest + 1
+    assert resumed.iterations == full.iterations
+    a, b = _vals(full.state), _vals(resumed.state)
+    assert a.keys() == b.keys()
+    assert all(np.isclose(a[k], b[k], rtol=0, atol=1e-12) for k in a)
+
+
+def test_manifest_without_converged_resumes_with_a_window(spark, tmp_path):
+    """A snapshot written before the converged flag was recorded resumes
+    as before: one more window from the snapshot, the same labels."""
+    e = _edges(spark, seed=4).persist()
+    ck = str(tmp_path / "old_ck")
+    first = run_wcc(e, checkpoint_dir=ck)
+    newest = ckpt.latest(ck)
+    lineage = os.path.join(os.path.dirname(newest[1]), "lineage.json")
+    with open(lineage) as f:
+        manifest = json.load(f)
+    assert manifest.pop("converged") is True
+    with open(lineage, "w") as f:
+        json.dump(manifest, f)
+    again = run_wcc(e, checkpoint_dir=ck)
+    assert again.converged
+    assert again.metrics[0].iteration == newest[0] + 1
+    assert _vals(again.state) == _vals(first.state)
+
+
+def test_write_snapshot_is_one_spark_job(spark, tmp_path):
+    state = spark.range(300).select(
+        F.col("id").alias("vid"), (F.col("id") % 7).alias("value"),
+        F.lit(False).alias("active"),
+    ).localCheckpoint(eager=True)
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()  # the job list is filled from listener events
+    before = set(tracker.getJobIdsForGroup(None))
+    manifest = ckpt.write_snapshot(state, str(tmp_path / "one_job"), 0)
+    bus.waitUntilEmpty()
+    assert len(set(tracker.getJobIdsForGroup(None)) - before) == 1
+    assert manifest["num_rows"] == 300
+
+
+@pytest.mark.parametrize("kw", [{}, LOOP], ids=["auto", "loop"])
+def test_empty_state_snapshot_resumes(spark, tmp_path, kw):
+    """An empty graph's state writes num_rows 0 (no fingerprint over no
+    rows), and a rerun on the same dir resumes from it."""
+    e = spark.createDataFrame([], "src long, dst long")
+    ck = str(tmp_path / "empty_ck")
+    with Graph(e, **kw) as g:
+        first = run_wcc(g, checkpoint_dir=ck)
+        newest = ckpt.latest(ck)
+        with open(os.path.join(os.path.dirname(newest[1]), "lineage.json")) as f:
+            manifest = json.load(f)
+        assert (manifest["num_rows"], manifest["fingerprint"]) == (0, None)
+        again = run_wcc(g, checkpoint_dir=ck)
+    assert first.converged and again.converged
+    assert (again.metrics, again.iterations) == ([], newest[0] + 1)
+    assert again.state.count() == 0

@@ -520,6 +520,43 @@ def test_clustering_known_values(spark):
     assert abs(t["transitivity"] - 0.6) < 1e-12
 
 
+def test_clustering_canonicalizes_once(spark, monkeypatch):
+    """clustering_coefficients runs one canonicalize (one E-row distinct)
+    for its degrees and its triangle count, whatever the orientation or
+    bucketing, and matches per-vertex counts computed in Python."""
+    from minigraph_spark.plans import triangles
+    from minigraph_spark.plans.triangles import clustering_coefficients
+
+    arr = make_rmat_edges_np(power=8, num_edges=1500, seed=17)
+    nbrs: dict[int, set] = {}
+    for s, d in arr.tolist():
+        if s != d:
+            nbrs.setdefault(s, set()).add(d)
+            nbrs.setdefault(d, set()).add(s)
+    want = {}
+    for v, ns in nbrs.items():
+        t = sum(len(nbrs[u] & ns) for u in ns) // 2
+        k = len(ns)
+        want[v] = (k, t, round(2.0 * t / (k * (k - 1)), 9) if k >= 2 else 0.0)
+    calls = []
+    orig = triangles.canonicalize
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(triangles, "canonicalize", counted)
+    edges = _spark_edges(spark, arr)
+    for kw in ({}, {"by_degree": False}, {"src_buckets": 3}):
+        calls.clear()
+        cc = clustering_coefficients(edges, **kw)
+        got = {r["vid"]: (r["deg"], r["triangles"], round(r["lcc"], 9))
+               for r in cc.collect()}
+        cc.unpersist()
+        assert len(calls) == 1, kw
+        assert got == want, kw
+
+
 def test_adamic_adar_known_values_and_buckets(spark):
     import math
 
