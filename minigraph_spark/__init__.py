@@ -7,14 +7,15 @@ Re-expresses the query semantics of SICS-Fundamental-Research-Center/MiniGraph
 - PIE-style iterative algorithms (PageRank, WCC, LPA, SSSP/BFS, coloring,
   triangle counting) as superstep scatter-combine-apply loops
   (`minigraph_spark.plans`, `minigraph_spark.operators.superstep`).
-- Graph ETL (partitioning, CSR blocks, dense-id compaction, degree
-  statistics) as DataFrame/Arrow-UDF operators
-  (`minigraph_spark.operators`); skew salting is a standalone operator the
-  superstep engine does not use.
+- Graph ETL (partitioning, dense-id compaction, degree statistics) as
+  DataFrame operators (`minigraph_spark.operators`, `plans.stats`); the
+  superstep engine partitions each graph once and keeps it cached
+  (`operators.partition.prepartition_edges`, and one
+  `operators.superstep.Fragment` at width 1).
 - Transcript → edge-table projection for conversation/agent transcript tables
   (`minigraph_spark.operators.project`), the engine's primary input surface.
-- Training-data-pipeline operators (dedup, similarity search, text analysis,
-  multimodal plumbing) as first-class DataFrame ops.
+- Training-data-pipeline operators (dedup, similarity search, text analysis)
+  as first-class DataFrame ops.
 
 Everything here is built only on public Apache Spark / PySpark APIs; no code
 is copied from the reference. Reference citations (file:line) in docstrings

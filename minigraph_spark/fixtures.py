@@ -1,4 +1,4 @@
-"""Deterministic synthetic fixtures (FIXTURES.md F1-F5).
+"""Deterministic synthetic fixtures (FIXTURES.md F1-F4b).
 
 All generators are seeded NumPy — no wall clock, no external data. The
 transcript generator matches the shape demanded by BASELINE.json input_hint
@@ -126,21 +126,6 @@ def make_rmat_edges(
     e = make_rmat_edges_np(power, num_edges, seed)
     pdf = pd.DataFrame({"src": e[:, 0], "dst": e[:, 1]})
     return spark.createDataFrame(pdf, schema="src long, dst long")
-
-
-def make_hub_edges_np(num_vertices: int, num_edges: int, seed: int = 42) -> np.ndarray:
-    """Zipf-hub skew fixture (FIXTURES.md F5): vertex 0 owns ~20% of in-edges.
-
-    Validates the salted two-phase combine — mirrors the motivation of the
-    reference's split-largest-bucket skew handling
-    (edge_cut_partitioner.h:280-296).
-    """
-    rng = np.random.default_rng(seed)
-    src = rng.integers(0, num_vertices, size=num_edges)
-    hub_mask = rng.random(num_edges) < 0.2
-    dst = np.where(hub_mask, 0, rng.integers(1, num_vertices, size=num_edges))
-    edges = np.stack([src, dst], axis=1).astype(np.int64)
-    return edges[edges[:, 0] != edges[:, 1]]
 
 
 def tiny7_edges(spark: SparkSession) -> DataFrame:

@@ -6,7 +6,7 @@ value is computable in ANSI SQL engines (DuckDB:
 CAST('0x'||substr(md5(s),1,15) AS BIGINT)), which lets every hash-based
 operator (minhash, simhash, fingerprints) be verified against a SQL oracle.
 xxhash64 (JVM-side, faster) is used where cross-engine parity is not needed
-(vertex ids, salting).
+(vertex ids, partition ids, edge fingerprints).
 """
 
 from __future__ import annotations

@@ -1,20 +1,17 @@
-"""Partitioning, skew detection, and salted two-phase aggregation.
+"""Partitioning and the superstep combine.
 
 Maps the reference's partitioner family onto Spark:
 
 - hash partition on src  = vertex-cut (reference:
-  utility/paritioner/vertex_cut_partitioner.h:79-117) — Spark's hash shuffle.
+  utility/paritioner/vertex_cut_partitioner.h:79-117) — Spark's hash shuffle,
+  done once per engine by prepartition_edges.
 - range partition on vid = edge-cut (edge_cut_partitioner.h:251-254).
 - 2D (src,dst) grid      = 2DVC partitioner (2DVC_partitioner.h:84-202).
-- split-the-heaviest-bucket skew handling (hybrid_cut_partitioner.h:162-260,
-  edge_cut_partitioner.h:280-391) = explicit salting of hub keys in the
-  combine: AQE's skew-join splitting covers joins but NOT aggregations, so
-  the two-phase salted groupBy here is the custom piece the north rule calls
-  "explicit skew splitting of hub vertices".
 
-At 100 TB: heavy-hitter detection is one pass over the edge table (cheap,
-done once, broadcast of the tiny hot-key set); the salted partial agg bounds
-any single reducer's input to |edges(hot key)| / num_salts.
+The combine is one ``groupBy(dst).agg(...)``. Hub skew, which the reference
+handles by splitting the heaviest bucket (hybrid_cut_partitioner.h:162-260),
+is absorbed by Spark's map-side partial aggregation: every combiner is
+algebraic, so each map task ships at most one partial row per key.
 """
 
 from __future__ import annotations
@@ -22,165 +19,53 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# (spark_agg_partial, spark_agg_final) per combiner name — partial runs on
-# (key, salt) groups, final re-aggregates over key. All three reference
-# combiners write_min/write_max/write_add (utility/atomic.h:30-55) map to
-# algebraic Spark aggs, so two-phase is exact.
+# Spark aggregate per combiner name. The reference combiners
+# write_min/write_max/write_add (utility/atomic.h:30-55) map to algebraic
+# Spark aggs, so the map-side partial aggregation is exact.
 _COMBINERS = {
-    "min": (F.min, F.min),
-    "max": (F.max, F.max),
-    "sum": (F.sum, F.sum),
-    "count": (F.count, F.sum),
+    "min": F.min,
+    "max": F.max,
+    "sum": F.sum,
+    "count": F.count,
 }
 
+# prepartition_edges caches edges deserialized up to this optimizer size
+# estimate, serialized above it.
+_DESER_MAX_BYTES = 2 << 30
 
-def heavy_hitters(
-    edges: DataFrame, key: str = "dst", min_count: int | None = None, top_n: int = 64
-) -> list[int]:
-    """Find hub vertices: keys whose in-degree exceeds ``min_count``
-    (default: 8x the mean degree), capped at ``top_n`` hottest.
 
-    One aggregation pass; the result is tiny and meant to be embedded as a
-    literal IN-list / broadcast. Mirrors the reference's
-    GetBucketWithMaxSumOfDegree scan (edge_cut_partitioner.h:283-295) but per
-    key instead of per bucket.
+def make_combine_agg(key: str, value: str, combiner: str):
+    """``df -> df.groupBy(key).agg(combiner(value).alias("agg"))`` with the
+    Column expression prebuilt: the engine calls it every superstep, where
+    rebuilding the loop-invariant tree costs a py4j roundtrip per node."""
+    agg_col = _COMBINERS[combiner](value).alias("agg")
+    return lambda df: df.groupBy(key).agg(agg_col)
+
+
+def make_mode_agg(key: str, value: str):
+    """Most-frequent-value combiner (for classic LPA), ties broken by the
+    smallest value — deterministic, matching the oracle. Column trees are
+    prebuilt, as in make_combine_agg.
+
+    Not a Spark builtin with deterministic ties; built as count-by-(key,
+    value) followed by a windowless argmax: max(struct(cnt, -value)) picks
+    the highest count, then the smallest value. The reference has no mode
+    combiner (its LPA-analog uses write_min); SURVEY.md §2.4 derives LPA
+    from the same skeleton.
     """
-    counts = edges.groupBy(key).count()
-    if min_count is None:
-        stats = counts.agg(
-            F.avg("count").alias("avg"), F.count(F.lit(1)).alias("n")
-        ).collect()[0]
-        if stats["n"] == 0:
-            return []
-        min_count = max(int(stats["avg"] * 8), 1000)
-    rows = (
-        counts.filter(F.col("count") >= min_count)
-        .orderBy(F.desc("count"))
-        .limit(top_n)
-        .collect()
-    )
-    return [r[key] for r in rows]
-
-
-def make_salted_agg(
-    key: str,
-    value: str,
-    combiner: str,
-    hot_keys: list[int] | None,
-    num_salts: int = 32,
-    out: str = "agg",
-):
-    """Closure form of salted_agg with every Column expression prebuilt —
-    for per-superstep use, where rebuilding the (loop-invariant) trees
-    costs a py4j roundtrip per node every iteration. Identical plans."""
-    partial, final = _COMBINERS[combiner]
-    if not hot_keys:
-        agg_col = partial(value).alias(out)
-        return lambda df: df.groupBy(key).agg(agg_col)
-    salt = F.when(
-        F.col(key).isin(hot_keys),
-        F.pmod(F.xxhash64(F.col(value).cast("string"), F.lit(17)), F.lit(num_salts)),
-    ).otherwise(F.lit(0))
-    partial_col = partial(value).alias("_partial")
-    final_col = final("_partial").alias(out)
-
-    def _agg(df: DataFrame) -> DataFrame:
-        phase1 = (
-            df.withColumn("_salt", salt)
-            .groupBy(key, "_salt")
-            .agg(partial_col)
-        )
-        return phase1.groupBy(key).agg(final_col)
-
-    return _agg
-
-
-def salted_agg(
-    df: DataFrame,
-    key: str,
-    value: str,
-    combiner: str,
-    hot_keys: list[int] | None,
-    num_salts: int = 32,
-    out: str = "agg",
-) -> DataFrame:
-    """Two-phase aggregation with salting restricted to hub keys.
-
-    Phase 1 groups by (key, salt) where salt spreads only hot keys (others
-    get salt 0 — no extra fan-out for the long tail); phase 2 merges the
-    per-salt partials. Exact for algebraic combiners; semantics identical to
-    a plain ``groupBy(key).agg``.
-    """
-    return make_salted_agg(key, value, combiner, hot_keys, num_salts, out)(df)
-
-
-def make_mode_agg(
-    key: str,
-    value: str,
-    hot_keys: list[int] | None = None,
-    num_salts: int = 32,
-    out: str = "agg",
-):
-    """Closure form of mode_agg with prebuilt Column trees (same rationale
-    as make_salted_agg). Identical plans."""
-    # count per (key, value); salt spreads hot groups' MERGE work — counting
-    # is algebraic so two-phase is exact over any salt. Unlike salted_agg's
-    # value-hash (useless here: value is part of the phase-1 group key, so
-    # hashing it can't split a hot (key, value) pair), the salt must vary
-    # WITHIN the pair; hashing the map partition id does, costs one xxhash64
-    # per row (same idiom as salted_agg:86), and caps phase-1 output at one
-    # row per partition per pair — the per-row monotonically_increasing_id
-    # salt emitted up to num_salts rows per partition per pair.
-    if hot_keys:
-        salt = F.when(
-            F.col(key).isin(hot_keys),
-            F.pmod(F.xxhash64(F.spark_partition_id(), F.lit(17)), F.lit(num_salts)),
-        ).otherwise(F.lit(0))
-        c_col = F.count(F.lit(1)).alias("_c")
-        cnt_col = F.sum("_c").alias("cnt")
-    else:
-        cnt_col = F.count(F.lit(1)).alias("cnt")
+    cnt_col = F.count(F.lit(1)).alias("cnt")
     best_col = F.max(
         F.struct(F.col("cnt"), (-F.col(value)).alias("neg"))
     ).alias("_b")
     key_col = F.col(key)
-    out_col = (-F.col("_b.neg")).alias(out)
+    out_col = (-F.col("_b.neg")).alias("agg")
 
     def _agg(df: DataFrame) -> DataFrame:
-        base = df.select(key, value)
-        if hot_keys:
-            p1 = (
-                base.withColumn("_salt", salt)
-                .groupBy(key, value, "_salt")
-                .agg(c_col)
-            )
-            counts = p1.groupBy(key, value).agg(cnt_col)
-        else:
-            counts = base.groupBy(key, value).agg(cnt_col)
+        counts = df.select(key, value).groupBy(key, value).agg(cnt_col)
         best = counts.groupBy(key).agg(best_col)
         return best.select(key_col, out_col)
 
     return _agg
-
-
-def mode_agg(
-    df: DataFrame,
-    key: str,
-    value: str,
-    hot_keys: list[int] | None = None,
-    num_salts: int = 32,
-    out: str = "agg",
-) -> DataFrame:
-    """Most-frequent-value combiner (for classic LPA), ties broken by the
-    smallest value — deterministic, matching the oracle.
-
-    Not a Spark builtin with deterministic ties; built as salted
-    count-by-(key,value) followed by a windowless argmax:
-    max(struct(cnt, -value)) picks highest count then smallest value.
-    The reference has no mode combiner (its LPA-analog uses write_min);
-    SURVEY.md §2.4 derives LPA from the same skeleton.
-    """
-    return make_mode_agg(key, value, hot_keys, num_salts, out)(df)
 
 
 def edge_cut_pid(vid: Column, num_vertices: int, k: int) -> Column:
@@ -286,37 +171,21 @@ def prepartition_edges(
             # optimizer's pre-shuffle size estimate: parquet-backed edge
             # plans estimate from file bytes (accurate where it matters —
             # the at-scale graphs are parquet), and an unknown/huge
-            # estimate fails SAFE to serialized. Budget default 2 GiB of
-            # estimated input ≈ <=16 GB deserialized cache (~8x parquet
-            # blowup); production sets MG_EDGE_DESER_MAX_BYTES from
-            # executor_heap * safe_fraction / blowup, or pins
-            # MG_EDGE_STORAGE=ser|deser explicitly.
-            import os as _os
-
-            _mode = _os.environ.get("MG_EDGE_STORAGE", "auto")
-            if _mode == "deser":
-                _lvl = StorageLevel.MEMORY_AND_DISK_DESER
-            elif _mode == "ser":
-                _lvl = StorageLevel.MEMORY_AND_DISK
-            else:
-                try:
-                    _est = int(
-                        out._jdf.queryExecution()
-                        .optimizedPlan()
-                        .stats()
-                        .sizeInBytes()
-                    )
-                except Exception:
-                    _est = 1 << 62  # unknown -> serialized (safe)
-                _budget = int(
-                    _os.environ.get("MG_EDGE_DESER_MAX_BYTES", str(2 << 30))
+            # estimate fails SAFE to serialized. The budget, 2 GiB of
+            # estimated input, is about 16 GB of deserialized cache (~8x
+            # parquet blowup).
+            try:
+                est = int(
+                    out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
                 )
-                _lvl = (
-                    StorageLevel.MEMORY_AND_DISK_DESER
-                    if _est <= _budget
-                    else StorageLevel.MEMORY_AND_DISK
-                )
-            out = out.localCheckpoint(eager=True, storageLevel=_lvl)
+            except Exception:
+                est = _DESER_MAX_BYTES + 1  # unknown -> serialized (safe)
+            lvl = (
+                StorageLevel.MEMORY_AND_DISK_DESER
+                if est <= _DESER_MAX_BYTES
+                else StorageLevel.MEMORY_AND_DISK
+            )
+            out = out.localCheckpoint(eager=True, storageLevel=lvl)
     return out
 
 

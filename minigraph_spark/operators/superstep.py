@@ -54,7 +54,7 @@ from pyspark.sql import types as T
 
 from .. import checkpoint as ckpt
 from ..session import iterative_confs
-from .partition import make_mode_agg, make_salted_agg, prepartition_edges
+from .partition import make_combine_agg, make_mode_agg, prepartition_edges
 from .project import canonicalize_raw, symmetrize_raw
 
 # debug aid: MG_EXPLAIN=<k> prints the physical plan of superstep k (on the
@@ -716,7 +716,7 @@ class SuperstepEngine:
         elif combiner == "mode":
             combine_fn = make_mode_agg("dst", "msg")
         else:
-            combine_fn = make_salted_agg("dst", "msg", combiner, None)
+            combine_fn = make_combine_agg("dst", "msg", combiner)
 
         prev_extra: dict = {}
         if extra_agg:

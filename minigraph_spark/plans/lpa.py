@@ -8,7 +8,7 @@ oracle.lpa_labels exactly.
 
 The mode combiner is not a Spark builtin with deterministic ties; it is the
 count-by-(dst,label) + windowless argmax in operators/partition.py
-(make_mode_agg, no salting: map-side partial aggregation absorbs hubs) —
+(make_mode_agg; map-side partial aggregation absorbs hubs) —
 two small shuffles, both partial-aggregated map-side.
 """
 

@@ -21,10 +21,10 @@ emit MATERIALIZED CTEs — each round references the previous one 2-3x, and
 DuckDB's default inlining would expand a 50-round chain into an exponential
 tree of parquet scans.
 
-Seeded driver-side constants (LSH hyperplanes, fake/real media payloads)
-are re-derived at oracle-build time with the same NumPy code and emitted as
-SQL literals (VALUES tables), so candidate sets and media features are
-exactly checkable without sharing any runtime state with Spark.
+Seeded driver-side constants (LSH hyperplanes) are re-derived at
+oracle-build time with the same NumPy code and emitted as SQL literals
+(VALUES tables), so candidate sets are exactly checkable without sharing
+any runtime state with Spark.
 """
 
 from __future__ import annotations
@@ -859,95 +859,6 @@ FROM s a JOIN s b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.simhash, b.simhash)) <= 2
 """
 )
-
-
-def _media_features_sql(n: int, seed: int = 7) -> str:
-    """Precomputed VALUES oracle for media_features: the fake-media payloads
-    are seeded (operators/multimodal.py fake_media_rows), so the expected
-    (byte_len, mean, entropy) rows are derived from the same bytes with the
-    same pure NumPy kernel — independent of any Spark execution."""
-    import numpy as np
-
-    from .operators.multimodal import fake_media_rows, payload_stats
-
-    rows = []
-    for mid, payload, _meta in fake_media_rows(n, seed):
-        ln, mean, ent = payload_stats(bytes(payload))
-        rows.append(
-            f"({mid},{ln},{float(np.round(mean, 6)):.17e},{float(np.round(ent, 6)):.17e})"
-        )
-    return (
-        "SELECT CAST(media_id AS BIGINT) AS media_id, CAST(byte_len AS BIGINT) AS byte_len, "
-        "CAST(byte_mean AS DOUBLE) AS byte_mean, CAST(byte_entropy AS DOUBLE) AS byte_entropy "
-        "FROM (VALUES " + ",".join(rows) + ") AS t(media_id, byte_len, byte_mean, byte_entropy)"
-    )
-
-
-N_REAL_MEDIA = 18  # real-codec fixture size: 6 ppm + 6 bmp + 6 wav
-_REAL_MEDIA_SEED = 11
-
-
-def _decode_image_real_sql(n: int = N_REAL_MEDIA, seed: int = _REAL_MEDIA_SEED,
-                           out_h: int = 8, out_w: int = 8) -> str:
-    """Precomputed VALUES oracle for the REAL image decode: payloads are
-    seeded PPM/BMP encodings, so the expected pixel digests are derived
-    from the same bytes with the pure NumPy codecs — no Spark involved.
-    px_md5 is md5 of the canonical comma-joined pixel string (Spark computes
-    it JVM-side via F.md5; here via hashlib on identical bytes)."""
-    import hashlib
-
-    import numpy as np
-
-    from .operators.multimodal import (
-        _resize_nearest,
-        decode_bmp,
-        decode_ppm,
-        real_media_rows,
-    )
-
-    rows = []
-    for mid, payload, meta in real_media_rows(n, seed):
-        fmt = meta[1]
-        if fmt == "ppm":
-            img = decode_ppm(bytes(payload))
-        elif fmt == "bmp":
-            img = decode_bmp(bytes(payload))
-        else:
-            continue
-        px = _resize_nearest(img, out_h, out_w).ravel().astype(np.int64)
-        s = ",".join(str(int(x)) for x in px)
-        rows.append(
-            f"({mid},{out_h},{out_w},{int(px.sum())},"
-            f"'{hashlib.md5(s.encode()).hexdigest()}')"
-        )
-    return (
-        "SELECT CAST(media_id AS BIGINT) AS media_id, CAST(height AS INTEGER) AS height, "
-        "CAST(width AS INTEGER) AS width, CAST(px_sum AS BIGINT) AS px_sum, px_md5 "
-        "FROM (VALUES " + ",".join(rows) + ") AS t(media_id, height, width, px_sum, px_md5)"
-    )
-
-
-def _decode_audio_real_sql(n: int = N_REAL_MEDIA, seed: int = _REAL_MEDIA_SEED) -> str:
-    """Precomputed VALUES oracle for the REAL WAV decode (same pattern)."""
-    import numpy as np
-
-    from .operators.multimodal import decode_wav, real_media_rows
-
-    rows = []
-    for mid, payload, meta in real_media_rows(n, seed):
-        if meta[1] != "wav":
-            continue
-        sr, samples = decode_wav(bytes(payload))
-        x = samples.astype(np.float64)
-        mean_abs = float(np.round(np.abs(x).mean(), 6))
-        rms = float(np.round(np.sqrt((x * x).mean()), 6))
-        rows.append(f"({mid},{sr},{x.size},{mean_abs:.17e},{rms:.17e})")
-    return (
-        "SELECT CAST(media_id AS BIGINT) AS media_id, CAST(sample_rate AS INTEGER) AS sample_rate, "
-        "CAST(n_samples AS BIGINT) AS n_samples, CAST(mean_abs AS DOUBLE) AS mean_abs, "
-        "CAST(rms AS DOUBLE) AS rms "
-        "FROM (VALUES " + ",".join(rows) + ") AS t(media_id, sample_rate, n_samples, mean_abs, rms)"
-    )
 
 
 _STREAM_FIXTURE_CONVS = 120
@@ -2246,271 +2157,6 @@ def _q_ann_topk_ivf(spark, sf_dir):
     )
 
 
-N_MEDIA = 24  # fixed fake-media fixture size for the multimodal queries
-
-
-def _q_media_features(spark, sf_dir):
-    from .operators.multimodal import make_fake_media, media_features
-
-    return media_features(make_fake_media(spark, N_MEDIA, seed=7))
-
-
-def _q_decode_image_real(spark, sf_dir):
-    from .operators.multimodal import (
-        decode_image,
-        image_pixel_digest,
-        make_real_media,
-    )
-
-    media = make_real_media(spark, N_REAL_MEDIA, seed=_REAL_MEDIA_SEED)
-    decoded = decode_image(
-        media.filter(F.col("meta.media_type") == "image"),
-        out_h=8, out_w=8, fake=False,
-    )
-    return image_pixel_digest(decoded)
-
-
-def _q_decode_audio_real(spark, sf_dir):
-    from .operators.multimodal import decode_audio, make_real_media
-
-    return decode_audio(make_real_media(spark, N_REAL_MEDIA, seed=_REAL_MEDIA_SEED))
-
-
-def _q_frame_sample(spark, sf_dir):
-    from .operators.multimodal import frame_sample, make_fake_media
-
-    return frame_sample(make_fake_media(spark, N_MEDIA, seed=7), every_n=5, fake=True)
-
-
-FRAME_SAMPLE_SQL = f"""
-  WITH vids AS (
-    SELECT i AS media_id, (i % 30) + 1 AS n_frames
-    FROM range(0, {N_MEDIA}) t(i) WHERE i % 4 = 3)
-  SELECT media_id, CAST(unnest(range(0, n_frames, 5)) AS INTEGER) AS frame_idx
-  FROM vids
-"""
-
-
-N_REAL_VIDEO = 9  # real-y4m fixture: 3 each of C444/C422/C420jpeg
-_REAL_VIDEO_SEED = 13
-
-N_REAL_PNG = 12  # real-png fixture: 3 each of RGB/gray/palette/RGBA
-_REAL_PNG_SEED = 17
-
-
-def _q_decode_png_real(spark, sf_dir):
-    """REAL PNG decode end-to-end (stdlib zlib + NumPy codec — chunk walk,
-    CRC validation, inflate, all five unfilter paths, channel expansion),
-    digested per image exactly like decode_image_real."""
-    from .operators.multimodal import (
-        decode_image,
-        image_pixel_digest,
-        make_real_png,
-    )
-
-    pngs = make_real_png(spark, N_REAL_PNG, seed=_REAL_PNG_SEED)
-    return image_pixel_digest(decode_image(pngs, out_h=8, out_w=8, fake=False))
-
-
-def _image_digest_values_sql(rows_fn, decode_fn, n: int, seed: int,
-                             out_h: int = 8, out_w: int = 8) -> str:
-    """Precomputed VALUES oracle shared by every REAL still-image decode
-    key: run the SAME NumPy decode the Spark tasks run (no Spark involved),
-    resize, and emit the (media_id, h, w, px_sum, px_md5) digest rows —
-    the _decode_image_real_sql pattern, parameterized so the PNG and JPEG
-    oracles cannot drift apart."""
-    import hashlib
-
-    import numpy as np
-
-    from .operators.multimodal import _resize_nearest
-
-    rows = []
-    for mid, payload, _meta in rows_fn(n, seed):
-        px = (
-            _resize_nearest(decode_fn(bytes(payload)), out_h, out_w)
-            .ravel()
-            .astype(np.int64)
-        )
-        s = ",".join(str(int(x)) for x in px)
-        rows.append(
-            f"({mid},{out_h},{out_w},{int(px.sum())},"
-            f"'{hashlib.md5(s.encode()).hexdigest()}')"
-        )
-    return (
-        "SELECT CAST(media_id AS BIGINT) AS media_id, CAST(height AS INTEGER) AS height, "
-        "CAST(width AS INTEGER) AS width, CAST(px_sum AS BIGINT) AS px_sum, px_md5 "
-        "FROM (VALUES " + ",".join(rows) + ") AS t(media_id, height, width, px_sum, px_md5)"
-    )
-
-
-def _decode_png_real_sql(n: int = N_REAL_PNG, seed: int = _REAL_PNG_SEED,
-                         out_h: int = 8, out_w: int = 8) -> str:
-    from .operators.multimodal import decode_png, real_png_rows
-
-    return _image_digest_values_sql(real_png_rows, decode_png, n, seed,
-                                    out_h, out_w)
-
-
-N_REAL_JPEG = 12  # real-jpeg fixture: 3 each of RGB444/gray/RGB420/q4+RST
-_REAL_JPEG_SEED = 23
-
-
-def _q_decode_jpeg_real(spark, sf_dir):
-    """REAL baseline-JPEG decode end-to-end (pure-NumPy T.81 codec —
-    marker walk, in-stream Huffman tables, 4:4:4 + 4:2:0 sampling grids,
-    restart-marker predictor resets, dequant + IDCT + YCbCr->RGB),
-    digested per image exactly like decode_png_real."""
-    from .operators.multimodal import (
-        decode_image,
-        image_pixel_digest,
-        make_real_jpeg,
-    )
-
-    jpgs = make_real_jpeg(spark, N_REAL_JPEG, seed=_REAL_JPEG_SEED)
-    return image_pixel_digest(decode_image(jpgs, out_h=8, out_w=8, fake=False))
-
-
-def _decode_jpeg_real_sql(n: int = N_REAL_JPEG, seed: int = _REAL_JPEG_SEED,
-                          out_h: int = 8, out_w: int = 8) -> str:
-    from .operators.multimodal import decode_jpeg, real_jpeg_rows
-
-    return _image_digest_values_sql(real_jpeg_rows, decode_jpeg, n, seed,
-                                    out_h, out_w)
-
-
-def _q_decode_video_real(spark, sf_dir):
-    """REAL video decode end-to-end: Y4M container parse + chroma upsample
-    per frame, digested per video (all frames, every_n=1)."""
-    from .operators.multimodal import frame_sample, make_real_video, video_digest
-
-    vids = make_real_video(spark, N_REAL_VIDEO, seed=_REAL_VIDEO_SEED)
-    return video_digest(frame_sample(vids, every_n=1, fake=False))
-
-
-def _q_frame_sample_real(spark, sf_dir):
-    """REAL frame sampling: decode Y4M, keep every 2nd frame, digest each."""
-    from .operators.multimodal import (
-        frame_pixel_digest,
-        frame_sample,
-        make_real_video,
-    )
-
-    vids = make_real_video(spark, N_REAL_VIDEO, seed=_REAL_VIDEO_SEED)
-    return frame_pixel_digest(frame_sample(vids, every_n=2, fake=False))
-
-
-def _frame_digest_rows(n: int, seed: int, every_n: int) -> list:
-    """(media_id, frame_idx, h, w, px_sum, px_md5) tuples from the same
-    NumPy decode the Spark tasks run — no Spark involved (same precomputed-
-    VALUES pattern as _decode_image_real_sql)."""
-    import hashlib
-
-    import numpy as np
-
-    from .operators.multimodal import decode_y4m, real_video_rows
-
-    out = []
-    for mid, payload, _meta in real_video_rows(n, seed):
-        frames = decode_y4m(bytes(payload))
-        for fi in range(0, frames.shape[0], every_n):
-            px = frames[fi].ravel().astype(np.int64)
-            s = ",".join(str(int(x)) for x in px)
-            out.append(
-                (mid, fi, frames.shape[1], frames.shape[2], int(px.sum()),
-                 hashlib.md5(s.encode()).hexdigest())
-            )
-    return out
-
-
-N_REAL_MP4 = 8
-_REAL_MP4_SEED = 29
-
-
-def _q_decode_mp4_real(spark, sf_dir):
-    """REAL Motion-JPEG MP4 decode end-to-end: BMFF box walk (moov/trak/
-    stbl sample tables) + per-frame baseline-JPEG decode, digested per
-    video exactly like decode_video_real."""
-    from .operators.multimodal import frame_sample, make_real_mp4, video_digest
-
-    vids = make_real_mp4(spark, N_REAL_MP4, seed=_REAL_MP4_SEED)
-    return video_digest(frame_sample(vids, every_n=1, fake=False))
-
-
-def _decode_mp4_real_sql(n: int = N_REAL_MP4, seed: int = _REAL_MP4_SEED) -> str:
-    """Precomputed VALUES oracle for the REAL MP4 decode — same digest
-    derivation as _decode_video_real_sql, over the seeded MP4 fixture."""
-    import hashlib
-    from collections import defaultdict
-
-    import numpy as np
-
-    from .operators.multimodal import decode_mjpeg_mp4, real_mp4_rows
-
-    per_video: dict[int, list] = defaultdict(list)
-    for mid, payload, _meta in real_mp4_rows(n, seed):
-        frames = decode_mjpeg_mp4(bytes(payload))
-        for fi in range(frames.shape[0]):
-            px = frames[fi].ravel().astype(np.int64)
-            s = ",".join(str(int(x)) for x in px)
-            per_video[mid].append(
-                (fi, frames.shape[1], frames.shape[2], int(px.sum()),
-                 hashlib.md5(s.encode()).hexdigest())
-            )
-    rows = []
-    for mid in sorted(per_video):
-        fr = sorted(per_video[mid])
-        vmd5 = hashlib.md5(",".join(m for *_rest, m in fr).encode()).hexdigest()
-        rows.append(
-            f"({mid},{len(fr)},{fr[0][1]},{fr[0][2]},{sum(x[3] for x in fr)},'{vmd5}')"
-        )
-    return (
-        "SELECT CAST(media_id AS BIGINT) AS media_id, CAST(n_frames AS INTEGER) AS n_frames, "
-        "CAST(height AS INTEGER) AS height, CAST(width AS INTEGER) AS width, "
-        "CAST(px_sum AS BIGINT) AS px_sum, video_md5 "
-        "FROM (VALUES " + ",".join(rows)
-        + ") AS t(media_id, n_frames, height, width, px_sum, video_md5)"
-    )
-
-
-def _frame_sample_real_sql(n: int = N_REAL_VIDEO, seed: int = _REAL_VIDEO_SEED,
-                           every_n: int = 2) -> str:
-    rows = [
-        f"({mid},{fi},{h},{w},{ps},'{md5}')"
-        for mid, fi, h, w, ps, md5 in _frame_digest_rows(n, seed, every_n)
-    ]
-    return (
-        "SELECT CAST(media_id AS BIGINT) AS media_id, CAST(frame_idx AS INTEGER) AS frame_idx, "
-        "CAST(height AS INTEGER) AS height, CAST(width AS INTEGER) AS width, "
-        "CAST(px_sum AS BIGINT) AS px_sum, px_md5 "
-        "FROM (VALUES " + ",".join(rows)
-        + ") AS t(media_id, frame_idx, height, width, px_sum, px_md5)"
-    )
-
-
-def _decode_video_real_sql(n: int = N_REAL_VIDEO, seed: int = _REAL_VIDEO_SEED) -> str:
-    import hashlib
-    from collections import defaultdict
-
-    per_video: dict[int, list] = defaultdict(list)
-    for mid, fi, h, w, ps, md5 in _frame_digest_rows(n, seed, every_n=1):
-        per_video[mid].append((fi, h, w, ps, md5))
-    rows = []
-    for mid in sorted(per_video):
-        fr = sorted(per_video[mid])
-        vmd5 = hashlib.md5(",".join(m for *_rest, m in fr).encode()).hexdigest()
-        rows.append(
-            f"({mid},{len(fr)},{fr[0][1]},{fr[0][2]},{sum(x[3] for x in fr)},'{vmd5}')"
-        )
-    return (
-        "SELECT CAST(media_id AS BIGINT) AS media_id, CAST(n_frames AS INTEGER) AS n_frames, "
-        "CAST(height AS INTEGER) AS height, CAST(width AS INTEGER) AS width, "
-        "CAST(px_sum AS BIGINT) AS px_sum, video_md5 "
-        "FROM (VALUES " + ",".join(rows)
-        + ") AS t(media_id, n_frames, height, width, px_sum, video_md5)"
-    )
-
-
 def _q_coloring_mod(spark, sf_dir):
     from .plans.coloring import run_coloring
 
@@ -2922,7 +2568,7 @@ def _q_bfs_incremental_mod(spark, sf_dir):
 #            this round (regression canaries for the round's edits);
 #   tail:    everything verified green last round.
 # Every key is then driver-verified at least every other round, and the union
-# of any two consecutive CORRECTNESS files covers all 95 keys.
+# of any two consecutive CORRECTNESS files covers every key.
 #
 # Round-5 instance: block 1 = the 45 keys green only in r03 (rotated out of
 # the r04 window); block 2 = 5 r04-green keys exercising round-5 edits
@@ -2990,12 +2636,7 @@ QUERIES = {
     "ktruss4_kc": _q_ktruss,
     "wcc_decremental_snr": _q_wcc_decremental_snr,
     "bfs_decremental_mod": _q_bfs_decremental_mod,
-    "decode_video_real": _q_decode_video_real,
-    "frame_sample_real": _q_frame_sample_real,
     "sessionize_events": _q_sessionize,
-    "decode_png_real": _q_decode_png_real,
-    "decode_jpeg_real": _q_decode_jpeg_real,
-    "decode_mp4_real": _q_decode_mp4_real,
     "coreness_kc": _q_coreness,
     "katz3_kc": _q_katz,
     "user_day_cooccurrence": _q_user_day_cooc,
@@ -3013,12 +2654,8 @@ QUERIES = {
     "ann_cosine_topk_ivf": _q_ann_topk_ivf,
     "bfs_incremental_mod": _q_bfs_incremental_mod,
     "coloring_mod": _q_coloring_mod,
-    "decode_audio_real": _q_decode_audio_real,
-    "decode_image_real": _q_decode_image_real,
     "edge_csv_batch_convert": _q_edge_csv_batch_convert,
-    "frame_sample": _q_frame_sample,
     "lang_id": _q_lang_id,
-    "media_features": _q_media_features,
     "pagerank_mod_converged": _q_pagerank_converged,
     "quality_score": _q_quality,
     "sssp_incremental_mod": _q_sssp_incremental_mod,
@@ -3075,22 +2712,14 @@ def coloring_oracle_sql(sf_dir: str = _DRIVER_SF_DIR) -> str:
 @functools.cache
 def build_oracle_sql() -> dict[str, str]:
     """The driver's oracle map, built LAZILY and once (functools.cache):
-    several entries write fixture directories or run NumPy encode/decode
-    work, which must not run as an import side effect (a bare
-    `import relational` now touches no filesystem and does no codec work —
-    only the first queries()/oracle_sql() call pays)."""
+    several entries write fixture directories or run NumPy derivations,
+    which must not run as an import side effect (a bare
+    `import relational` touches no filesystem and derives nothing — only
+    the first queries()/oracle_sql() call pays)."""
     return dict(_ORACLE_SQL_STATIC, **{
         "embedding_near_dup_lsh": _embedding_dup_lsh_sql(),
         "ann_cosine_topk_lsh": _ann_lsh_sql(),
         "ann_cosine_topk_ivf": _ann_ivf_sql(),
-        "media_features": _media_features_sql(N_MEDIA, seed=7),
-        "decode_image_real": _decode_image_real_sql(),
-        "decode_png_real": _decode_png_real_sql(),
-        "decode_jpeg_real": _decode_jpeg_real_sql(),
-        "decode_mp4_real": _decode_mp4_real_sql(),
-        "decode_audio_real": _decode_audio_real_sql(),
-        "decode_video_real": _decode_video_real_sql(),
-        "frame_sample_real": _frame_sample_real_sql(),
         "stream_seq_edges": _stream_seq_sql(),
         "coloring_mod": coloring_oracle_sql(),
         "mis_kc": mis_oracle_sql(),
@@ -3339,7 +2968,6 @@ _ORACLE_SQL_STATIC = {
     """,
     "ann_cosine_topk": _ANN_TOPK_SQL,
     "ann_cosine_topk_mm": _ANN_TOPK_SQL,
-    "frame_sample": FRAME_SAMPLE_SQL,
     "wcc_seq_converged": _WCC_SEQ_SQL,
     # IncEval == PEval on the full graph for monotone kernels — batch oracles
     "wcc_incremental_snr": _WCC_SNR_SQL,

@@ -6,7 +6,8 @@ Local-mode defaults mirror what we would submit cluster-side via
 - AQE on (runtime skew-join splitting + partition coalescing), the built-in
   half of MiniGraph's split-largest-bucket skew handling
   (reference: minigraph/utility/paritioner/hybrid_cut_partitioner.h:162-260;
-  the aggregation half is ours, see operators/partition.py).
+  aggregations rely on map-side partial aggregation, see
+  operators/partition.py).
 - Arrow enabled for the pandas-UDF CSR path.
 - DataFrame debugging (the per-Column Python call-site capture) off: plan
   building is driver-bound, and the capture roughly triples its cost.
@@ -57,11 +58,8 @@ class iterative_confs:
         # R-MAT PageRank 34.9->26.0 s; 64M-edge steady-state per-iteration
         # parity (3.2-3.3 vs 3.3-3.4 s) with the compile-heavy first sweeps
         # 10.9->7.4 s. Scoped to loops only — one-shot relational queries
-        # keep WSCG. MG_LOOP_CODEGEN=true restores compilation for
-        # long-sweep at-scale runs where steady-state dominates.
-        "spark.sql.codegen.wholeStage": (
-            os.environ.get("MG_LOOP_CODEGEN", "false") or "false"
-        ),
+        # keep WSCG.
+        "spark.sql.codegen.wholeStage": "false",
         # Inside the loop every join is co-partitioned by design (edges
         # hash-partitioned+sorted once by prepartition_edges; state/agg both
         # hash-partitioned on vid by the previous superstep's combine), so a

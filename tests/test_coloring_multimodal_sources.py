@@ -1,19 +1,14 @@
-"""Greedy coloring (A5), multimodal binary-column plumbing, edge-list
-sources/sinks, and LSH ANN recall."""
+"""Greedy coloring (A5), edge-list sources/sinks, ANN search (exact, LSH,
+IVF, matmul), stratified and negative sampling, and text statistics.
+
+The file name is kept from when it also held the media-codec tests, so
+that the surviving tests keep their ids."""
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from minigraph_spark.fixtures import TINY7_EDGES, make_rmat_edges_np, tiny7_edges
-from minigraph_spark.operators.multimodal import (
-    decode_image,
-    frame_sample,
-    make_fake_media,
-    media_features,
-    resize_image,
-)
 from minigraph_spark.operators.similarity import cosine_topk, cosine_topk_lsh
 from minigraph_spark.plans.coloring import coloring_conflicts, run_coloring
 from minigraph_spark.schemas import EDGE_SCHEMA
@@ -52,42 +47,6 @@ def test_coloring_triangle_and_rmat(spark):
     res2 = run_coloring(e)
     assert res2.converged
     assert coloring_conflicts(e, res2.state) == 0
-
-
-# ----------------------------------------------------------- multimodal
-def test_media_features_deterministic(spark):
-    media = make_fake_media(spark, 16, seed=7, payload_bytes=1024)
-    feats = media_features(media).orderBy("media_id").collect()
-    assert len(feats) == 16
-    assert all(r["byte_len"] == 1024 for r in feats)
-    # near-uniform random bytes -> entropy close to 8 bits
-    assert all(7.5 < r["byte_entropy"] <= 8.0 for r in feats)
-    again = media_features(media).orderBy("media_id").collect()
-    assert [r.asDict() for r in feats] == [r.asDict() for r in again]
-
-
-def test_decode_image_fake_contract(spark):
-    # compressed-format payloads (png/jpeg) now fail inside the task (see
-    # test_decode_image_unsupported_format_raises); the fake decoder still
-    # provides the deterministic fixture path
-    media = make_fake_media(spark, 8, seed=7)
-    out = decode_image(media, out_h=8, out_w=8, fake=True).collect()
-    assert len(out) == 8
-    assert all(len(r["pixels"]) == 8 * 8 * 3 for r in out)
-
-
-def test_resize_and_frame_sample(spark):
-    media = make_fake_media(spark, 12, seed=7)
-    rs = resize_image(media, 4, 4, fake=True).collect()
-    assert all(len(r["pixels"]) == 4 * 4 * 3 for r in rs)
-    frames = frame_sample(media, every_n=5, fake=True)
-    pdf = frames.toPandas()
-    # only video rows produce frames; indices step by 5 within n_frames
-    vids = {r["media_id"]: r["meta"]["n_frames"] for r in media.collect()
-            if r["meta"]["media_type"] == "video"}
-    assert set(pdf["media_id"]) == set(vids)
-    for mid, grp in pdf.groupby("media_id"):
-        assert list(grp["frame_idx"]) == list(range(0, vids[mid], 5))
 
 
 # -------------------------------------------------------------- sources
@@ -210,361 +169,6 @@ def test_ivf_topk_all_probes_equals_exact_and_recall(spark):
     cents = ivf_centroids(emb, num_centroids=4, iters=2)
     assert [c for c, _ in cents] == [0, 1, 2, 3]
     assert cents == ivf_centroids(emb, num_centroids=4, iters=2)
-
-
-def test_real_codecs_roundtrip_and_spark_decode(spark):
-    """PPM/BMP/WAV round-trip through the pure-NumPy codecs, and
-    decode_image(fake=False) really decodes them through Spark: pixels out
-    of the Arrow UDF equal the locally decoded + resized reference."""
-    import numpy as np
-
-    from minigraph_spark.operators.multimodal import (
-        _resize_nearest,
-        decode_bmp,
-        decode_image,
-        decode_ppm,
-        decode_wav,
-        decode_audio,
-        make_real_media,
-        real_media_rows,
-    )
-    from pyspark.sql import functions as F
-
-    rows = real_media_rows(9, seed=11)
-    media = make_real_media(spark, 9, seed=11)
-    decoded = {
-        r["media_id"]: np.array(r["pixels"], dtype=np.int64)
-        for r in decode_image(
-            media.filter(F.col("meta.media_type") == "image"),
-            out_h=8, out_w=8, fake=False,
-        ).collect()
-    }
-    n_img = 0
-    for mid, payload, meta in rows:
-        fmt = meta[1]
-        if fmt == "wav":
-            continue
-        dec = decode_ppm if fmt == "ppm" else decode_bmp
-        want = _resize_nearest(dec(bytes(payload)), 8, 8).ravel().astype(np.int64)
-        assert np.array_equal(decoded[mid], want), (mid, fmt)
-        n_img += 1
-    assert n_img == 6 and len(decoded) == 6
-
-    audio = {r["media_id"]: r for r in decode_audio(media).collect()}
-    n_wav = 0
-    for mid, payload, meta in rows:
-        if meta[1] != "wav":
-            continue
-        sr, samples = decode_wav(bytes(payload))
-        got = audio[mid]
-        assert got["sample_rate"] == sr
-        assert got["n_samples"] == samples.size
-        x = samples.astype(np.float64)
-        assert got["rms"] == float(np.round(np.sqrt((x * x).mean()), 6))
-        n_wav += 1
-    assert n_wav == 3 and len(audio) == 3
-
-
-def test_decode_image_unsupported_format_raises(spark):
-    """Formats with no native codec raise inside the task; and rows LABELED
-    as a real format whose payload is garbage fail the codec's signature
-    check (jpeg/png), not silently."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from minigraph_spark.operators.multimodal import decode_image, make_fake_media
-
-    media = make_fake_media(spark, 4, seed=3)  # png/jpeg/wav/mp4 formats
-    tiff = media.withColumn(
-        "meta", F.col("meta").withField("format", F.lit("tiff"))
-    ).filter(F.col("meta.media_type") == "image")
-    # PySpark surfaces the worker-side NotImplementedError as the same type
-    with pytest.raises(Exception, match="external codec|NotImplementedError"):
-        decode_image(tiff, fake=False).collect()
-    fake_jpeg = media.filter(F.col("meta.format") == "jpeg")  # random bytes
-    with pytest.raises(Exception, match="not a JPEG"):
-        decode_image(fake_jpeg, fake=False).collect()
-    fake_png = media.filter(F.col("meta.format") == "png")
-    with pytest.raises(Exception, match="not a PNG"):
-        decode_image(fake_png, fake=False).collect()
-
-
-def test_png_codec_spec_and_roundtrip():
-    """PNG codec against the spec's filter algebra: every filter type
-    round-trips; a hand-assembled stream with known filtered bytes decodes
-    to the exact raw pixels; gray/palette/RGBA expand as documented;
-    multi-IDAT concatenates; chunk CRC corruption raises."""
-    import numpy as np
-    import pytest
-
-    from minigraph_spark.operators.multimodal import (
-        _png_assemble,
-        decode_png,
-        encode_png,
-    )
-
-    rng = np.random.default_rng(3)
-    arr = rng.integers(0, 256, size=(9, 7, 3), dtype=np.uint8)
-    for f in range(5):
-        assert np.array_equal(
-            decode_png(encode_png(arr, filters=[f] * 9)), arr
-        ), f"filter {f}"
-    # default mixed filters (y % 5) on assorted shapes incl. 1x1
-    for h, w in [(1, 1), (5, 3), (17, 23)]:
-        a = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        assert np.array_equal(decode_png(encode_png(a)), a)
-
-    # spec-level known-bytes case: 2x2 RGB, row 0 Sub-filtered, row 1
-    # Up-filtered — the unfilter recurrences Recon(x)=Filt(x)+Recon(x-bpp)
-    # and +Recon_prev(x) must reproduce the raw samples exactly
-    raw = np.array(
-        [[10, 20, 30, 250, 1, 2], [5, 5, 5, 7, 8, 9]], dtype=np.uint8
-    )
-    assert np.array_equal(
-        decode_png(_png_assemble(raw, 2, 2, 2, 3, filters=[1, 2])),
-        raw.reshape(2, 2, 3),
-    )
-
-    g = rng.integers(0, 256, size=(6, 5), dtype=np.uint8)
-    assert np.array_equal(
-        decode_png(_png_assemble(g, 5, 6, 0, 1)),
-        np.repeat(g[:, :, None], 3, axis=2),
-    )
-    plte = rng.integers(0, 256, size=(16, 3), dtype=np.uint8)
-    idx = rng.integers(0, 16, size=(6, 5), dtype=np.uint8)
-    assert np.array_equal(
-        decode_png(_png_assemble(idx, 5, 6, 3, 1, plte=plte)), plte[idx]
-    )
-    a4 = rng.integers(0, 256, size=(6, 5, 4), dtype=np.uint8)
-    assert np.array_equal(
-        decode_png(_png_assemble(a4.reshape(6, 20), 5, 6, 6, 4)), a4[:, :, :3]
-    )
-    assert np.array_equal(
-        decode_png(_png_assemble(arr.reshape(9, 21), 7, 9, 2, 3, idat_split=3)),
-        arr,
-    )
-
-    corrupted = bytearray(encode_png(arr))
-    corrupted[40] ^= 0xFF
-    with pytest.raises(ValueError, match="CRC"):
-        decode_png(bytes(corrupted))
-
-
-def test_png_spark_decode_matches_local(spark):
-    """decode_image(fake=False) really decodes the PNG fixture through the
-    Arrow UDF: pixels equal the locally decoded + resized reference for all
-    four color-type variants."""
-    import numpy as np
-
-    from minigraph_spark.operators.multimodal import (
-        _resize_nearest,
-        decode_image,
-        decode_png,
-        make_real_png,
-        real_png_rows,
-    )
-
-    rows = real_png_rows(8, seed=17)
-    got = {
-        r["media_id"]: np.array(r["pixels"], dtype=np.int64)
-        for r in decode_image(
-            make_real_png(spark, 8, seed=17), out_h=8, out_w=8, fake=False
-        ).collect()
-    }
-    assert len(got) == 8
-    for mid, payload, _meta in rows:
-        want = (
-            _resize_nearest(decode_png(bytes(payload)), 8, 8)
-            .ravel()
-            .astype(np.int64)
-        )
-        assert np.array_equal(got[mid], want), mid
-
-
-def test_jpeg_codec_spec_and_roundtrip():
-    """Baseline-JPEG codec (pure NumPy, T.81): marker structure, near-
-    lossless roundtrip at quant=1 for gray/444/420, restart-marker
-    equivalence, and honest raises for non-baseline streams."""
-    import numpy as np
-
-    from minigraph_spark.operators.multimodal import (
-        _JPEG_ZZ,
-        decode_jpeg,
-        encode_jpeg,
-    )
-
-    # derived zigzag equals the canonical T.81 sequence (spot ends + one diag)
-    assert list(_JPEG_ZZ[:10]) == [0, 1, 8, 16, 9, 2, 3, 10, 17, 24]
-    assert list(_JPEG_ZZ[-4:]) == [47, 55, 62, 63]
-
-    rng = np.random.default_rng(5)
-    g = rng.integers(0, 256, size=(24, 17), dtype=np.uint8)
-    enc = encode_jpeg(g, quant=1)
-    assert enc[:2] == b"\xff\xd8" and enc[-2:] == b"\xff\xd9"
-    assert b"\xff\xc0" in enc and b"\xff\xc4" in enc and b"\xff\xdb" in enc
-    out = decode_jpeg(enc)
-    assert out.shape == (24, 17, 3)
-    assert np.abs(out[:, :, 0].astype(int) - g.astype(int)).max() <= 2
-    assert (out[:, :, 0] == out[:, :, 1]).all()  # gray replicated
-
-    c = rng.integers(0, 256, size=(19, 26, 3), dtype=np.uint8)
-    out = decode_jpeg(encode_jpeg(c, quant=1))
-    assert np.abs(out.astype(int) - c.astype(int)).max() <= 4
-
-    # 4:2:0 with constant chroma per 2x2 (gray content): subsample lossless
-    base = np.repeat(rng.integers(0, 256, size=(24, 24), dtype=np.uint8)[:, :, None], 3, axis=2)
-    out = decode_jpeg(encode_jpeg(base, quant=1, sampling="420"))
-    assert np.abs(out.astype(int) - base.astype(int)).max() <= 3
-
-    # restart markers: stream contains RSTn and decodes identically
-    e_rst = encode_jpeg(c, quant=1, restart_interval=2)
-    assert any(bytes([0xFF, 0xD0 + i]) in e_rst for i in range(8))
-    assert (decode_jpeg(e_rst) == decode_jpeg(encode_jpeg(c, quant=1))).all()
-
-    # progressive (SOF2) honestly raises
-    sof2 = bytearray(encode_jpeg(g, quant=1))
-    sof2[sof2.index(b"\xff\xc0") + 1] = 0xC2
-    with pytest.raises(NotImplementedError, match="SOF2"):
-        decode_jpeg(bytes(sof2))
-
-
-def test_jpeg_spark_decode_matches_local(spark):
-    """decode_image(fake=False) really decodes the JPEG fixture through the
-    Arrow UDF: pixels equal the locally decoded + resized reference for all
-    four fixture variants (444/gray/420/q4+RST)."""
-    import numpy as np
-
-    from minigraph_spark.operators.multimodal import (
-        _resize_nearest,
-        decode_image,
-        decode_jpeg,
-        make_real_jpeg,
-        real_jpeg_rows,
-    )
-
-    rows = real_jpeg_rows(8, seed=23)
-    got = {
-        r["media_id"]: np.array(r["pixels"], dtype=np.int64)
-        for r in decode_image(
-            make_real_jpeg(spark, 8, seed=23), out_h=8, out_w=8, fake=False
-        ).collect()
-    }
-    assert len(got) == 8
-    for mid, payload, _meta in rows:
-        want = (
-            _resize_nearest(decode_jpeg(bytes(payload)), 8, 8)
-            .ravel()
-            .astype(np.int64)
-        )
-        assert np.array_equal(got[mid], want), mid
-
-
-def test_mjpeg_mp4_codec_and_real_frame_sample(spark):
-    """Motion-JPEG MP4 (ISO BMFF mux + per-frame baseline JPEG): box
-    structure, near-lossless roundtrip, wrong-codec raise, and the Spark
-    frame_sample(fake=False) path decoding the real container."""
-    import numpy as np
-
-    from minigraph_spark.operators.multimodal import (
-        decode_mjpeg_mp4,
-        encode_mjpeg_mp4,
-        frame_sample,
-        make_real_mp4,
-        real_mp4_rows,
-    )
-
-    rng = np.random.default_rng(9)
-    frames = rng.integers(0, 256, size=(5, 24, 16, 3), dtype=np.uint8)
-    mp4 = encode_mjpeg_mp4(frames, quant=1)
-    assert mp4[4:8] == b"ftyp" and b"moov" in mp4 and b"stsz" in mp4
-    out = decode_mjpeg_mp4(mp4)
-    assert out.shape == frames.shape
-    assert np.abs(out.astype(int) - frames.astype(int)).max() <= 4
-
-    bad = bytearray(mp4)
-    i = bad.find(b"jpeg", bad.find(b"stsd"))
-    bad[i : i + 4] = b"avc1"
-    with pytest.raises(NotImplementedError, match="avc1"):
-        decode_mjpeg_mp4(bytes(bad))
-
-    # Spark path: every 2nd frame of each fixture video, pixels equal local
-    rows = real_mp4_rows(6, seed=29)
-    got = {}
-    sampled = frame_sample(
-        make_real_mp4(spark, 6, seed=29), every_n=2, fake=False
-    ).collect()
-    for r in sampled:
-        got[(r["media_id"], r["frame_idx"])] = np.array(r["pixels"], np.int64)
-    n_expected = 0
-    for mid, payload, _meta in rows:
-        local = decode_mjpeg_mp4(bytes(payload))
-        for fi in range(0, local.shape[0], 2):
-            n_expected += 1
-            assert np.array_equal(
-                got[(mid, fi)], local[fi].ravel().astype(np.int64)
-            ), (mid, fi)
-    assert len(got) == n_expected
-
-
-def test_y4m_codec_and_real_frame_sample(spark):
-    """Y4M round-trips through the pure-NumPy container codec (C444
-    lossless; subsampled variants lossless on Y and deterministic on
-    chroma), and frame_sample(fake=False) really decodes through Spark:
-    pixels out of the Arrow UDF equal the local decode."""
-    import numpy as np
-    import pytest
-
-    from minigraph_spark.operators.multimodal import (
-        decode_y4m,
-        encode_y4m,
-        frame_sample,
-        make_fake_media,
-        make_real_video,
-        real_video_rows,
-        resize_image,
-        video_digest,
-    )
-
-    rng = np.random.default_rng(5)
-    fr = rng.integers(0, 256, size=(3, 9, 11, 3), dtype=np.uint8)
-    assert np.array_equal(decode_y4m(encode_y4m(fr, colorspace="C444")), fr)
-    for cs in ("C422", "C420jpeg"):
-        d = decode_y4m(encode_y4m(fr, colorspace=cs))
-        assert d.shape == fr.shape
-        assert np.array_equal(d[..., 0], fr[..., 0])  # luma is exact
-
-    rows = real_video_rows(6, seed=13)
-    vids = make_real_video(spark, 6, seed=13)
-    got = {
-        (r["media_id"], r["frame_idx"]): np.array(r["pixels"], dtype=np.int64)
-        for r in frame_sample(vids, every_n=2, fake=False).collect()
-    }
-    n_checked = 0
-    for mid, payload, _meta in rows:
-        frames = decode_y4m(bytes(payload))
-        for fi in range(0, frames.shape[0], 2):
-            want = frames[fi].ravel().astype(np.int64)
-            assert np.array_equal(got[(mid, fi)], want), (mid, fi)
-            n_checked += 1
-    assert n_checked == len(got) > 0
-
-    # per-video digest collapses to one row per video
-    dig = video_digest(frame_sample(vids, every_n=1, fake=False))
-    assert dig.count() == 6
-
-    # compressed video containers stay honestly stubbed
-    fakes = make_fake_media(spark, 4, seed=3)  # includes an mp4 row
-    with pytest.raises(Exception, match="NotImplementedError|decod"):
-        frame_sample(fakes, fake=False).collect()
-
-    # resize_image(fake=False) on a MIXED real media table: wav rows are
-    # filtered, ppm/bmp rows really decode + resize
-    from minigraph_spark.operators.multimodal import make_real_media
-
-    media = make_real_media(spark, 9, seed=11)
-    rs = resize_image(media, 4, 4, fake=False).collect()
-    assert len(rs) == 6  # 3 ppm + 3 bmp; 3 wav filtered
-    assert all(len(r["pixels"]) == 4 * 4 * 3 for r in rs)
 
 
 def test_stratified_sample_deterministic_and_balanced(spark):

@@ -1,14 +1,11 @@
 import pandas as pd
 from pyspark.sql import functions as F
 
-from minigraph_spark.fixtures import make_hub_edges_np
 from minigraph_spark.operators.partition import (
     border_vertices,
     communication_matrix,
     edge_cut_pid,
-    heavy_hitters,
-    mode_agg,
-    salted_agg,
+    make_mode_agg,
 )
 
 
@@ -18,40 +15,13 @@ def _edges(spark, arr):
     )
 
 
-def test_heavy_hitters_finds_hub(spark):
-    e = _edges(spark, make_hub_edges_np(200, 20_000, seed=42))
-    hot = heavy_hitters(e, "dst", min_count=1000)
-    assert 0 in hot  # vertex 0 owns ~20% of in-edges (FIXTURES.md F5)
-
-
-def test_salted_agg_equals_plain(spark):
-    """Salting must not change aggregation semantics (exactness of the
-    two-phase combine for algebraic combiners)."""
-    e = _edges(spark, make_hub_edges_np(100, 5_000, seed=1))
-    msgs = e.select("dst", F.col("src").alias("msg"))
-    for comb in ["min", "max", "sum", "count"]:
-        plain = {
-            r["dst"]: r["agg"]
-            for r in salted_agg(msgs, "dst", "msg", comb, hot_keys=None).collect()
-        }
-        salted = {
-            r["dst"]: r["agg"]
-            for r in salted_agg(
-                msgs, "dst", "msg", comb, hot_keys=[0, 5, 7], num_salts=8
-            ).collect()
-        }
-        assert plain == salted, comb
-
-
 def test_mode_agg_deterministic_ties(spark):
     rows = [(1, 10), (1, 10), (1, 5), (1, 5), (1, 7), (2, 3)]
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["dst", "msg"]),
                                schema="dst long, msg long")
-    got = {r["dst"]: r["agg"] for r in mode_agg(df, "dst", "msg").collect()}
+    got = {r["dst"]: r["agg"] for r in make_mode_agg("dst", "msg")(df).collect()}
     # counts: dst1 -> {10:2, 5:2, 7:1}; tie between 10 and 5 -> min = 5
     assert got == {1: 5, 2: 3}
-    salted = {r["dst"]: r["agg"] for r in mode_agg(df, "dst", "msg", hot_keys=[1]).collect()}
-    assert salted == got
 
 
 def test_edge_cut_pid_matches_reference_rule(spark):
